@@ -184,8 +184,17 @@ def _frame(keys: list, w_hops: Optional[int]) -> W:
     return w.rangeBetween(-w_hops, -1)
 
 
+def _tail_sfx(p, hop_ms: int) -> str:
+    """Tail IR column suffix: one set per (input, window in hops), so parts
+    that share an input and a window (COUNT/SUM/AVERAGE, ...) share one
+    sliding sum instead of each evaluating its own."""
+    w_hops = p.window.millis // hop_ms if p.window is not None else "all"
+    return f"{p.input_column}_w{w_hops}"
+
+
 def _tail_cols(parts: list, keys: list, hop_ms: int) -> list:
-    """Per-part tail-merged IR columns over the hop window frame."""
+    """Tail-merged IR columns over the hop window frames, deduped across
+    parts by (input, window)."""
     out: list[Column] = []
     seen: set = set()
 
@@ -199,7 +208,7 @@ def _tail_cols(parts: list, keys: list, hop_ms: int) -> list:
         op = p.operation
         w_hops = p.window.millis // hop_ms if p.window is not None else None
         fr = _frame(keys, w_hops)
-        sfx = f"{c}_{p.output_column}"
+        sfx = _tail_sfx(p, hop_ms)
         if op in _MOMENT_OPS:
             add(f"t_cnt_{sfx}", F.sum(f"i_cnt_{c}").over(fr))
             add(f"t_sum_{sfx}", F.sum(f"i_sum_{c}").over(fr))
@@ -563,7 +572,7 @@ def group_by_asof_hopped(
     for p in parts:
         c = p.input_column
         op = p.operation
-        sfx = f"{c}_{p.output_column}"
+        sfx = _tail_sfx(p, hop_ms)
         name = p.output_column
         if op in _MOMENT_OPS:
             cnt = F.coalesce(F.col(f"t_cnt_{sfx}"), F.lit(0)) + F.coalesce(

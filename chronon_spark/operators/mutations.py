@@ -136,6 +136,16 @@ def _w_aggs(tag: str, i: int, p, cond: Column, sign: Column) -> list:
     return out
 
 
+def ds_of(ts_ms: int) -> str:
+    """The UTC yyyy-MM-dd day of an epoch-millis ts: the day partition a
+    request (or, for a batch end, the serving day) falls in."""
+    import datetime as dt
+
+    return dt.datetime.fromtimestamp(
+        int(ts_ms) / 1000, tz=dt.timezone.utc
+    ).strftime("%Y-%m-%d")
+
+
 def _hop_of(ts: Column, hop: int) -> Column:
     """round(ts, hop) — the reference's TsUtils.round (floor to hop)."""
     return (F.floor(ts / F.lit(int(hop))) * F.lit(int(hop))).cast("long")
@@ -161,8 +171,17 @@ def entity_snapshot_scan(spark: SparkSession, src: EntitySource) -> DataFrame:
     return apply_query(load_table(spark, src.snapshot_table), snap_query)
 
 
-def _prep(spark: SparkSession, group_by: GroupBy):
-    """Shared validation + scans for the entity mutation paths."""
+def entity_mutation_scan(spark: SparkSession, src: EntitySource) -> DataFrame:
+    """The mutation-side scan of a mutating entity source: the source
+    Query over the mutation table, which must carry ``mutation_ts`` and
+    ``is_before``."""
+    muts = apply_query(load_table(spark, src.mutation_table), src.query)
+    assert "mutation_ts" in muts.columns and "is_before" in muts.columns, muts.columns
+    return muts
+
+
+def _prep(group_by: GroupBy):
+    """Shared validation for the entity mutation paths."""
     src = group_by.sources[0]
     assert isinstance(src, EntitySource) and src.mutation_table, (
         "temporal_entities needs an EntitySource with a mutation_table"
@@ -176,25 +195,20 @@ def _prep(spark: SparkSession, group_by: GroupBy):
                 f"{sorted(o.value for o in DELETABLE)} (reference splits the "
                 "Operation enum the same way)"
             )
-
-    pc = src.query.partition_column
-    snap = entity_snapshot_scan(spark, src)
-    muts = apply_query(load_table(spark, src.mutation_table), src.query)
-    assert "mutation_ts" in muts.columns and "is_before" in muts.columns, muts.columns
-
-    windowed = [p for p in parts if p.window is not None]
-    if windowed:
-        if TS not in snap.columns or TS not in muts.columns:
-            raise ValueError(
-                "windowed temporal-entities needs an event-time column "
-                f"'{TS}' on both the snapshot and mutation scans (set the "
-                "source Query's time mapping); missing on one side"
-            )
     wscal = [
         (i, p) for i, p in enumerate(parts)
         if p.window is not None and p.operation is not Operation.HISTOGRAM
     ]
-    return src, keys, parts, wscal, pc, snap, muts
+    return keys, parts, wscal, src.query.partition_column
+
+
+def _require_event_time(parts, scan: DataFrame) -> None:
+    if any(p.window is not None for p in parts) and TS not in scan.columns:
+        raise ValueError(
+            "windowed temporal-entities needs an event-time column "
+            f"'{TS}' on both the snapshot and mutation scans (set the "
+            "source Query's time mapping); missing on one side"
+        )
 
 
 def _batch_end_of(pc: str) -> Column:
@@ -233,11 +247,16 @@ def entity_batch_irs(
     spark: SparkSession,
     group_by: GroupBy,
     tail_buffer_ms: int = 2 * DAY_MS,
+    snapshot_df: Optional[DataFrame] = None,
 ) -> dict:
     """The query-INDEPENDENT batch side of the mutation replay — the
     entity analogue of GroupByUpload's FinalBatchIr
     (GroupByUpload.scala:64-130), keyed by ``(keys, __prev_ds)`` where
-    ``__prev_ds`` is the day the IRs SERVE (snapshot partition + 1 day):
+    ``__prev_ds`` is the snapshot partition: the end-of-day state that
+    serves the NEXT day's queries (serving day - 1).
+
+    ``snapshot_df``: the caller's :func:`entity_snapshot_scan` (possibly
+    partition-pruned); scanned from the source when absent. The frames:
 
     - ``"scalar"``: collapsed IRs — unwindowed ``s_cnt_/s_sum_/s_ssq_``
       plus windowed collapsed ``s_*_w{i}`` (None if no scalar parts),
@@ -247,7 +266,13 @@ def entity_batch_irs(
       histogram collapsed counts (long format),
     - ``"hist_hops"``: {part index: (..., __hop, __hval, __hc)}.
     """
-    _, keys, parts, wscal, pc, snap, _ = _prep(spark, group_by)
+    keys, parts, wscal, pc = _prep(group_by)
+    snap = (
+        entity_snapshot_scan(spark, group_by.sources[0])
+        if snapshot_df is None
+        else snapshot_df
+    )
+    _require_event_time(parts, snap)
     be_s = _batch_end_of(pc)
     prev_ds = F.col(pc).cast("string").alias("__prev_ds")
 
@@ -316,6 +341,7 @@ def temporal_entities(
     tail_buffer_ms: int = 2 * DAY_MS,
     batch_irs: Optional[dict] = None,
     mutations_df: Optional[DataFrame] = None,
+    snapshot_df: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Features at each distinct (keys, ts) over a mutating entity source.
 
@@ -329,15 +355,20 @@ def temporal_entities(
     (2 days).
 
     ``batch_irs``: precomputed/reloaded :func:`entity_batch_irs` frames
-    (the serving upload); built inline when absent. ``mutations_df``:
-    override of the mutation scan (serving passes only the fresh day's
-    mutations).
+    (the serving upload); built inline from ``snapshot_df`` (default: the
+    full :func:`entity_snapshot_scan`) when absent. ``mutations_df``:
+    override of the :func:`entity_mutation_scan` (serving passes only the
+    request days' mutations).
     """
-    _, keys, parts, wscal, pc, _, muts = _prep(spark, group_by)
-    if mutations_df is not None:
-        muts = mutations_df
+    keys, parts, wscal, pc = _prep(group_by)
+    muts = (
+        entity_mutation_scan(spark, group_by.sources[0])
+        if mutations_df is None
+        else mutations_df
+    )
+    _require_event_time(parts, muts)
     if batch_irs is None:
-        batch_irs = entity_batch_irs(spark, group_by, tail_buffer_ms)
+        batch_irs = entity_batch_irs(spark, group_by, tail_buffer_ms, snapshot_df)
 
     # queries with day + previous-day partition string + batch-end millis
     q = (

@@ -33,19 +33,12 @@ from pyspark.sql import functions as F
 from chronon_spark.api.types import GroupBy
 from chronon_spark.operators.mutations import (
     DAY_MS,
+    ds_of,
     entity_batch_irs,
+    entity_mutation_scan,
     temporal_entities,
 )
-from chronon_spark.sources.scan import TS, apply_query, load_table
-
-
-def _serving_ds(batch_end_ms: int) -> str:
-    """The day a batch end serves: queries in [batch_end, batch_end+1d)."""
-    import datetime as dt
-
-    return dt.datetime.fromtimestamp(
-        batch_end_ms / 1000, tz=dt.timezone.utc
-    ).strftime("%Y-%m-%d")
+from chronon_spark.sources.scan import TS
 
 
 def upload_temporal_entities(
@@ -62,10 +55,10 @@ def upload_temporal_entities(
     upload. Only rows with ``__prev_ds == serving day`` are written: the
     upload is ONE day's serving state, not all history."""
     assert batch_end_ms % DAY_MS == 0, "entity batch end must be a UTC midnight"
-    ds = _serving_ds(batch_end_ms)
+    ds = ds_of(batch_end_ms)
     # the frames' __prev_ds is the snapshot PARTITION (serving day - 1):
     # the end-of-day(d-1) state serves day d's queries
-    snap_ds = _serving_ds(batch_end_ms - DAY_MS)
+    snap_ds = ds_of(batch_end_ms - DAY_MS)
     irs = entity_batch_irs(spark, group_by, tail_buffer_ms)
     manifest: dict = {"serving_ds": ds, "frames": {}}
 
@@ -135,14 +128,12 @@ def fetch_temporal_entities(
         assert upload_dir is not None, "pass upload_dir or batch_irs"
         batch_irs, ds = load_entity_upload(spark, upload_dir)
     else:
-        ds = _serving_ds(batch_end_ms)
+        ds = ds_of(batch_end_ms)
 
     # partition-pruned fresh side: ONLY the serving day's mutations
     src = group_by.sources[0]
     pc = src.query.partition_column
-    fresh = apply_query(load_table(spark, src.mutation_table), src.query).where(
-        F.col(pc).cast("string") == ds
-    )
+    fresh = entity_mutation_scan(spark, src).where(F.col(pc).cast("string") == ds)
     return temporal_entities(
         spark,
         group_by,

@@ -62,8 +62,15 @@ class GroupByServingInfo:
 
 
 def group_by_serving_info(
-    spark: SparkSession, group_by: GroupBy, batch_end_ms: int, hop_ms: int
+    spark: SparkSession,
+    group_by: GroupBy,
+    batch_end_ms: int,
+    hop_ms: int,
+    events: Optional[DataFrame] = None,
 ) -> GroupByServingInfo:
+    """``events``: a frame of the GroupBy's event rows (e.g. the fresh
+    side a fetch already scanned) whose schema types the keys and values;
+    the source is scanned when absent."""
     assert batch_end_ms % hop_ms == 0, "batch end must align to a hop boundary"
     assert supports_hopped(group_by, hop_ms), (
         "fetcher serves hop-mergeable operations only "
@@ -73,7 +80,9 @@ def group_by_serving_info(
         "SNAPSHOT GroupBys are served straight from the daily snapshot "
         "table (plans/snapshot path), not the lambda merge"
     )
-    ev_schema = events_df_for_group_by(spark, group_by, None, None).schema
+    if events is None:
+        events = events_df_for_group_by(spark, group_by, None, None)
+    ev_schema = events.schema
     keys = T.StructType(
         [ev_schema[validate_identifier(k)] for k in group_by.key_columns]
     )
@@ -192,15 +201,17 @@ def _is_mutation_entity(group_by: GroupBy) -> bool:
     return isinstance(src, EntitySource) and bool(src.mutation_table)
 
 
-def _validate_requests(requests: DataFrame, batch_end_ms: int) -> None:
+def _validate_requests(requests: DataFrame, batch_end_ms: int) -> tuple:
     """One agg pass: the lambda read path can only serve ts >= batch end
-    (earlier heads live inside the pre-collapsed batch range)."""
-    min_req = requests.agg(F.min(TS)).first()[0]
+    (earlier heads live inside the pre-collapsed batch range). Returns the
+    (min, max) request ts, both None for no requests."""
+    min_req, max_req = requests.agg(F.min(TS), F.max(TS)).first()
     if min_req is not None and int(min_req) < batch_end_ms:
         raise ValueError(
             f"request ts {min_req} predates batch end {batch_end_ms}; "
             "the lambda read path serves ts >= batch end only"
         )
+    return min_req, max_req
 
 
 def fetch_group_by(
@@ -225,13 +236,15 @@ def fetch_group_by(
     ``fetch_join`` validates the requests ONCE and passes
     ``_requests_validated=True`` so an N-part join doesn't re-aggregate
     the request table N times."""
-    info = group_by_serving_info(spark, group_by, batch_end_ms, hop_ms)
+    if fresh_events is None:
+        fresh_events = events_df_for_group_by(spark, group_by, batch_end_ms, None)
+    info = group_by_serving_info(
+        spark, group_by, batch_end_ms, hop_ms, events=fresh_events
+    )
     if not _requests_validated:
         _validate_requests(requests, batch_end_ms)
     if upload is None:
         upload = upload_group_by(spark, group_by, batch_end_ms, hop_ms)
-    if fresh_events is None:
-        fresh_events = events_df_for_group_by(spark, group_by, batch_end_ms, None)
     parts = group_by.unpack()
     fresh_events = null_out_nans(
         fresh_events, list({p.input_column for p in parts})
@@ -304,7 +317,7 @@ def fetch_join(
     uploads = uploads or {}
     fresh_events = fresh_events or {}
     missing = missing or set()
-    _validate_requests(requests, batch_end_ms)
+    req_range = _validate_requests(requests, batch_end_ms)
     result = requests
     part_value_cols: list = []
     for jp in join_conf.join_parts:
@@ -322,13 +335,8 @@ def fetch_join(
                 # serving surface (GroupByUpload.scala:64-130). The
                 # `uploads` override carries a prebuilt entity_batch_irs
                 # dict (manifest-reloaded) rather than an event IR frame.
-                from chronon_spark.operators.mutations import temporal_entities
-
-                feats = temporal_entities(
-                    spark,
-                    gb,
-                    part_requests,
-                    batch_irs=uploads.get(gb.name),
+                feats = _fetch_entity_part(
+                    spark, gb, part_requests, uploads.get(gb.name), req_range
                 )
             else:
                 feats = fetch_group_by(
@@ -380,6 +388,48 @@ def fetch_join(
     return result
 
 
+def _fetch_entity_part(
+    spark: SparkSession,
+    group_by: GroupBy,
+    requests: DataFrame,
+    batch_irs: Optional[dict],
+    req_range: tuple,
+) -> DataFrame:
+    """Entity-mutation features at the request (keys, ts) rows, reading
+    only the request days: a day-d request joins the day-(d-1) snapshot
+    IRs and day-d mutations, so snapshot partitions outside
+    [first day - 1, last day - 1] and mutation partitions outside
+    [first day, last day] cannot contribute. Without ``batch_irs`` the
+    snapshot IRs are built from the pruned snapshot."""
+    from chronon_spark.operators.mutations import (
+        DAY_MS,
+        ds_of,
+        entity_mutation_scan,
+        entity_snapshot_scan,
+        temporal_entities,
+    )
+
+    src = group_by.sources[0]
+    muts = entity_mutation_scan(spark, src)
+    snap = None if batch_irs is not None else entity_snapshot_scan(spark, src)
+    lo, hi = req_range
+    if lo is not None:
+        pcol = F.col(src.query.partition_column).cast("string")
+        muts = muts.where(pcol.between(ds_of(lo), ds_of(hi)))
+        if snap is not None:
+            snap = snap.where(
+                pcol.between(ds_of(lo - DAY_MS), ds_of(hi - DAY_MS))
+            )
+    return temporal_entities(
+        spark,
+        group_by,
+        requests,
+        batch_irs=batch_irs,
+        mutations_df=muts,
+        snapshot_df=snap,
+    )
+
+
 def _serve_external_part(result: DataFrame, ep, frame: Optional[DataFrame]):
     """One external part onto the running fetch result. Returns
     (result, value column names). Contextual parts project request
@@ -389,13 +439,16 @@ def _serve_external_part(result: DataFrame, ep, frame: Optional[DataFrame]):
     src = ep.source
     out_names = [f"{ep.full_name}_{c}" for c in src.value_columns]
     if src.is_contextual:
-        missing = [c for c in src.value_columns if c not in result.columns]
-        if missing:
-            raise ValueError(
-                f"contextual external part needs request columns {missing}"
-            )
+        # a context column the request lacks serves null, like the
+        # reference's contextual fetch (Extensions.scala:804-808)
+        vt = src.value_types or {}
         for c, out in zip(src.value_columns, out_names):
-            result = result.withColumn(out, F.col(c))
+            val = (
+                F.col(c)
+                if c in result.columns
+                else F.lit(None).cast(vt.get(c, "string"))
+            )
+            result = result.withColumn(out, val)
         return result, out_names
     if frame is None:
         raise ValueError(
