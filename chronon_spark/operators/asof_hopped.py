@@ -184,12 +184,16 @@ def _frame(keys: list, w_hops: Optional[int]) -> W:
     return w.rangeBetween(-w_hops, -1)
 
 
-def _tail_sfx(p, hop_ms: int) -> str:
+def _w_hops(p, hop_ms: int) -> Optional[int]:
+    """A part's window in hops (None: unwindowed)."""
+    return p.window.millis // hop_ms if p.window is not None else None
+
+
+def _tail_sfx(c: str, w_hops: Optional[int]) -> str:
     """Tail IR column suffix: one set per (input, window in hops), so parts
     that share an input and a window (COUNT/SUM/AVERAGE, ...) share one
     sliding sum instead of each evaluating its own."""
-    w_hops = p.window.millis // hop_ms if p.window is not None else "all"
-    return f"{p.input_column}_w{w_hops}"
+    return f"{c}_w{'all' if w_hops is None else w_hops}"
 
 
 def _tail_cols(parts: list, keys: list, hop_ms: int) -> list:
@@ -206,9 +210,9 @@ def _tail_cols(parts: list, keys: list, hop_ms: int) -> list:
     for p in parts:
         c = p.input_column
         op = p.operation
-        w_hops = p.window.millis // hop_ms if p.window is not None else None
+        w_hops = _w_hops(p, hop_ms)
         fr = _frame(keys, w_hops)
-        sfx = _tail_sfx(p, hop_ms)
+        sfx = _tail_sfx(c, w_hops)
         if op in _MOMENT_OPS:
             add(f"t_cnt_{sfx}", F.sum(f"i_cnt_{c}").over(fr))
             add(f"t_sum_{sfx}", F.sum(f"i_sum_{c}").over(fr))
@@ -572,7 +576,7 @@ def group_by_asof_hopped(
     for p in parts:
         c = p.input_column
         op = p.operation
-        sfx = _tail_sfx(p, hop_ms)
+        sfx = _tail_sfx(c, _w_hops(p, hop_ms))
         name = p.output_column
         if op in _MOMENT_OPS:
             cnt = F.coalesce(F.col(f"t_cnt_{sfx}"), F.lit(0)) + F.coalesce(

@@ -341,7 +341,6 @@ def temporal_entities(
     tail_buffer_ms: int = 2 * DAY_MS,
     batch_irs: Optional[dict] = None,
     mutations_df: Optional[DataFrame] = None,
-    snapshot_df: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Features at each distinct (keys, ts) over a mutating entity source.
 
@@ -355,8 +354,7 @@ def temporal_entities(
     (2 days).
 
     ``batch_irs``: precomputed/reloaded :func:`entity_batch_irs` frames
-    (the serving upload); built inline from ``snapshot_df`` (default: the
-    full :func:`entity_snapshot_scan`) when absent. ``mutations_df``:
+    (the serving upload); built inline when absent. ``mutations_df``:
     override of the :func:`entity_mutation_scan` (serving passes only the
     request days' mutations).
     """
@@ -368,7 +366,7 @@ def temporal_entities(
     )
     _require_event_time(parts, muts)
     if batch_irs is None:
-        batch_irs = entity_batch_irs(spark, group_by, tail_buffer_ms, snapshot_df)
+        batch_irs = entity_batch_irs(spark, group_by, tail_buffer_ms)
 
     # queries with day + previous-day partition string + batch-end millis
     q = (

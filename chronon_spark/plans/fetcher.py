@@ -61,16 +61,8 @@ class GroupByServingInfo:
     value_schema: T.StructType
 
 
-def group_by_serving_info(
-    spark: SparkSession,
-    group_by: GroupBy,
-    batch_end_ms: int,
-    hop_ms: int,
-    events: Optional[DataFrame] = None,
-) -> GroupByServingInfo:
-    """``events``: a frame of the GroupBy's event rows (e.g. the fresh
-    side a fetch already scanned) whose schema types the keys and values;
-    the source is scanned when absent."""
+def _check_servable(group_by: GroupBy, batch_end_ms: int, hop_ms: int) -> None:
+    """The lambda merge's preconditions on a GroupBy and its batch end."""
     assert batch_end_ms % hop_ms == 0, "batch end must align to a hop boundary"
     assert supports_hopped(group_by, hop_ms), (
         "fetcher serves hop-mergeable operations only "
@@ -80,9 +72,13 @@ def group_by_serving_info(
         "SNAPSHOT GroupBys are served straight from the daily snapshot "
         "table (plans/snapshot path), not the lambda merge"
     )
-    if events is None:
-        events = events_df_for_group_by(spark, group_by, None, None)
-    ev_schema = events.schema
+
+
+def group_by_serving_info(
+    spark: SparkSession, group_by: GroupBy, batch_end_ms: int, hop_ms: int
+) -> GroupByServingInfo:
+    _check_servable(group_by, batch_end_ms, hop_ms)
+    ev_schema = events_df_for_group_by(spark, group_by, None, None).schema
     keys = T.StructType(
         [ev_schema[validate_identifier(k)] for k in group_by.key_columns]
     )
@@ -157,18 +153,8 @@ def join_codec(
         for lc in (ep.key_mapping or {k: k for k in ep.source.key_columns}):
             if lc not in key_cols:
                 key_cols.append(lc)
-        vt = ep.source.value_types or {}
         for vc in ep.source.value_columns:
-            if ep.source.is_contextual:
-                dt = left_schema[vc].dataType
-            else:
-                dt = (
-                    spark.createDataFrame(
-                        [], f"`{vc}` {vt[vc]}"
-                    ).schema[vc].dataType
-                    if vc in vt
-                    else T.StringType()
-                )
+            dt = _external_value_type(spark, ep.source, vc, left_schema)
             value_fields.append(
                 T.StructField(f"{ep.full_name}_{vc}", dt, True)
             )
@@ -190,6 +176,21 @@ def join_codec(
         "output_schema": out_schema,
         "schema_hash": schema_hash,
     }
+
+
+def _external_value_type(
+    spark: SparkSession, src, vc: str, request_schema: T.StructType
+) -> T.DataType:
+    """The served type of external value column ``vc``, shared by the codec
+    and the fetch: a contextual source echoes the request column when the
+    request has it; a service value, or a context column the request lacks
+    (served null), takes its ``value_types`` entry, default string."""
+    if src.is_contextual and vc in request_schema.names:
+        return request_schema[vc].dataType
+    vt = src.value_types or {}
+    if vc not in vt:
+        return T.StringType()
+    return spark.createDataFrame([], f"`{vc}` {vt[vc]}").schema[vc].dataType
 
 
 def _is_mutation_entity(group_by: GroupBy) -> bool:
@@ -236,15 +237,13 @@ def fetch_group_by(
     ``fetch_join`` validates the requests ONCE and passes
     ``_requests_validated=True`` so an N-part join doesn't re-aggregate
     the request table N times."""
-    if fresh_events is None:
-        fresh_events = events_df_for_group_by(spark, group_by, batch_end_ms, None)
-    info = group_by_serving_info(
-        spark, group_by, batch_end_ms, hop_ms, events=fresh_events
-    )
+    _check_servable(group_by, batch_end_ms, hop_ms)
     if not _requests_validated:
         _validate_requests(requests, batch_end_ms)
     if upload is None:
         upload = upload_group_by(spark, group_by, batch_end_ms, hop_ms)
+    if fresh_events is None:
+        fresh_events = events_df_for_group_by(spark, group_by, batch_end_ms, None)
     parts = group_by.unpack()
     fresh_events = null_out_nans(
         fresh_events, list({p.input_column for p in parts})
@@ -255,7 +254,7 @@ def fetch_group_by(
     # verification scans over both sides.
     return group_by_asof_hopped(
         spark,
-        info.group_by,
+        group_by,
         requests,
         hop_ms,
         events_df=fresh_events,
@@ -400,10 +399,11 @@ def _fetch_entity_part(
     IRs and day-d mutations, so snapshot partitions outside
     [first day - 1, last day - 1] and mutation partitions outside
     [first day, last day] cannot contribute. Without ``batch_irs`` the
-    snapshot IRs are built from the pruned snapshot."""
+    snapshot IRs are built here from the pruned snapshot."""
     from chronon_spark.operators.mutations import (
         DAY_MS,
         ds_of,
+        entity_batch_irs,
         entity_mutation_scan,
         entity_snapshot_scan,
         temporal_entities,
@@ -420,13 +420,10 @@ def _fetch_entity_part(
             snap = snap.where(
                 pcol.between(ds_of(lo - DAY_MS), ds_of(hi - DAY_MS))
             )
+    if batch_irs is None:
+        batch_irs = entity_batch_irs(spark, group_by, snapshot_df=snap)
     return temporal_entities(
-        spark,
-        group_by,
-        requests,
-        batch_irs=batch_irs,
-        mutations_df=muts,
-        snapshot_df=snap,
+        spark, group_by, requests, batch_irs=batch_irs, mutations_df=muts
     )
 
 
@@ -441,12 +438,15 @@ def _serve_external_part(result: DataFrame, ep, frame: Optional[DataFrame]):
     if src.is_contextual:
         # a context column the request lacks serves null, like the
         # reference's contextual fetch (Extensions.scala:804-808)
-        vt = src.value_types or {}
         for c, out in zip(src.value_columns, out_names):
             val = (
                 F.col(c)
                 if c in result.columns
-                else F.lit(None).cast(vt.get(c, "string"))
+                else F.lit(None).cast(
+                    _external_value_type(
+                        result.sparkSession, src, c, result.schema
+                    )
+                )
             )
             result = result.withColumn(out, val)
         return result, out_names

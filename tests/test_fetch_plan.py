@@ -28,7 +28,7 @@ from chronon_spark.api.types import (
     Window,
 )
 from chronon_spark.operators.mutations import temporal_entities
-from chronon_spark.plans.fetcher import fetch_join
+from chronon_spark.plans.fetcher import fetch_join, join_codec
 
 DAY_MS = 86_400_000
 T0 = 1_704_067_200_000  # 2024-01-01 UTC
@@ -201,10 +201,13 @@ def test_fetch_plan_reads_each_source_table_once(spark, tables):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     tracker = sc.statusTracker()
+    # the status store evicts skipped stages first (their completion time
+    # is -1), so a skipped stage can have no info left; it read nothing
     stages = [
-        tracker.getStageInfo(s)
+        info
         for j in tracker.getJobIdsForGroup(group)
         for s in tracker.getJobInfo(j).stageIds
+        if (info := tracker.getStageInfo(s)) is not None
     ]
     reads = [s.name for s in stages if s.name.startswith("parquet at")]
     assert len(reads) == 3, [s.name for s in stages]
@@ -215,9 +218,14 @@ def test_contextual_part_null_fills_missing_request_columns(spark, tables):
     ctx = ExternalSource(name="contextual", value_columns=("channel", "device"),
                          value_types={"device": "int"})
     req = spark.createDataFrame(requests)
-    out = fetch_join(spark, _join(paths, [], [ExternalPart(ctx)]), req,
-                     BATCH_END, DAY_MS)
+    join = _join(paths, [], [ExternalPart(ctx)])
+    out = fetch_join(spark, join, req, BATCH_END, DAY_MS)
     assert dict(out.dtypes)["ext_contextual_device"] == "int"
+    # the codec types each served column as the fetch does, although the
+    # join's left source lacks both context columns
+    codec = join_codec(spark, join)["base_value_schema"]
+    for f in codec.fields:
+        assert out.schema[f.name].dataType == f.dataType, f
     got = out.toPandas()
     assert (got["ext_contextual_channel"] == got["channel"]).all()
     assert got["ext_contextual_device"].isna().all()
