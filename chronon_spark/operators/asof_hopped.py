@@ -5,22 +5,24 @@ cogroup of queries × hop-IRs × head events on (key, headStart bucket);
 hop construction HopsAggregator.scala:150-159) re-expressed as DataFrame
 ops with whole-stage codegen end to end — no Python anywhere:
 
-1. **hop partials**: ``groupBy(keys, hop = ts div hop_ms)`` with partial
-   IRs (count/sum/ssq/min/max/(ts,v)-last/first, collect_set). The hot-key
+1. **hop partials**: ``groupBy(keys, hop = ts div hop_ms)`` with the
+   partial IRs of ``operators.hop_ir`` (the update). The hot-key
    problem dissolves here: a hot domain's events spread over its hops, and
    Spark's map-side partial aggregation absorbs per-partition repeats —
    this is "salting by time", the skew story the north rule asks for.
 2. **tail merge**: per key, a RANGE window frame over hop index merges the
    ``w_hops`` hop IRs preceding the query's hop
-   (``rangeBetween(-w_hops, -1)``). Rows per key = #hops (bounded by
-   range/hop), so the per-key window partition is tiny regardless of how
-   hot the key is. Query hops with no events get rows via union
-   (null-padded), the same trick as the main union kernel.
+   (``rangeBetween(-w_hops, -1)``) — ``hop_ir.merge`` as a window, the
+   same merge the upload and compaction run as an aggregate. Rows per
+   key = #hops (bounded by range/hop), so the per-key window partition is
+   tiny regardless of how hot the key is. Query hops with no events get
+   rows via union (null-padded), the same trick as the main union kernel.
 3. **exact head**: events of the query's own hop with ``e.ts <= q.ts``,
    aggregated per query via a (keys, hop) equi-join — the join is balanced
    because a single hop of even the hottest key is |key events|/#hops.
 4. **combine**: tail ⊕ head per op (sums add, min/max fold, last/first
-   compare (ts, v) structs).
+   compare (ts, v) structs, central moments ``hop_ir.shift`` to the
+   per-key offset, add and ``hop_ir.recenter``).
 
 Window-boundary semantics = the kernel's sawtooth mode (pinned by tests
 against chronon_spark.kernel.sawtooth with ``tail_hop_ms`` set): head
@@ -50,6 +52,7 @@ from chronon_spark.api.types import (
     Operation,
     validate_identifier,
 )
+from chronon_spark.operators import hop_ir
 from chronon_spark.operators.asof_join import (
     apply_derivations,
     events_df_for_group_by,
@@ -70,17 +73,6 @@ HOPPED_OPS = {
     Operation.UNIQUE_COUNT,
     Operation.APPROX_UNIQUE_COUNT,
 }
-
-# ops whose IRs are (count, sum[, higher central sums]) — share the scalar
-# merge spine in _ir_aggs/_tail_cols/finalize
-_MOMENT_OPS = (
-    Operation.COUNT,
-    Operation.SUM,
-    Operation.AVERAGE,
-    Operation.VARIANCE,
-    Operation.SKEW,
-    Operation.KURTOSIS,
-)
 
 
 # The per-part query-set checkpoints register in the shared plan-lifetime
@@ -104,79 +96,6 @@ def supports_hopped(group_by: GroupBy, hop_ms: int) -> bool:
     return True
 
 
-def _ir_aggs(parts: list) -> list:
-    """Partial-IR aggregate columns, deduped across parts."""
-    out: list[Column] = []
-    seen: set = set()
-
-    def add(name: str, col: Column):
-        if name not in seen:
-            seen.add(name)
-            out.append(col.alias(name))
-
-    for p in parts:
-        c = p.input_column
-        op = p.operation
-        if op in _MOMENT_OPS:
-            add(f"i_cnt_{c}", F.count(c))
-            add(f"i_sum_{c}", F.sum(F.col(c).cast("double")))
-            if op in (Operation.VARIANCE, Operation.SKEW, Operation.KURTOSIS):
-                # m2 = sum of squared deviations about the GROUP's own mean
-                # (var_pop is Welford-based in Catalyst — numerically stable,
-                # unlike raw sum(x^2) which cancels catastrophically for
-                # large-magnitude low-variance columns). Merged across hops
-                # with the shifted-moments / Chan formula in _tail_cols +
-                # finalize (reference uses a moments-based aggregator too).
-                add(f"i_m2_{c}", F.var_pop(F.col(c).cast("double")) * F.count(c))
-            if op in (Operation.SKEW, Operation.KURTOSIS):
-                # 3rd/4th central sums about the group's own mean, from
-                # Catalyst's stable skewness/kurtosis (central-moment
-                # update aggregates): M3 = skew * m2bar^1.5 * n,
-                # M4 = (excess_kurt + 3) * m2bar^2 * n; both are exactly 0
-                # for constant groups (m2bar = 0), where the quotient
-                # forms go NaN — hence the guard, not coalesce-blindness
-                d = F.col(c).cast("double")
-                m2bar = F.var_pop(d)
-                add(
-                    f"i_m3_{c}",
-                    F.coalesce(
-                        F.when(
-                            m2bar > 0,
-                            F.skewness(d) * F.pow(m2bar, 1.5) * F.count(c),
-                        ),
-                        F.lit(0.0),
-                    ),
-                )
-                if op is Operation.KURTOSIS:
-                    add(
-                        f"i_m4_{c}",
-                        F.coalesce(
-                            F.when(
-                                m2bar > 0,
-                                (F.kurtosis(d) + 3.0)
-                                * F.pow(m2bar, 2.0)
-                                * F.count(c),
-                            ),
-                            F.lit(0.0),
-                        ),
-                    )
-        elif op is Operation.MIN:
-            add(f"i_min_{c}", F.min(F.col(c).cast("double")))
-        elif op is Operation.MAX:
-            add(f"i_max_{c}", F.max(F.col(c).cast("double")))
-        elif op is Operation.LAST:
-            add(f"i_last_{c}", F.max_by(F.struct(F.col(TS).alias("t"), F.col(c).alias("v")), F.when(F.col(c).isNotNull(), F.col(TS))))
-        elif op is Operation.FIRST:
-            add(f"i_first_{c}", F.min_by(F.struct(F.col(TS).alias("t"), F.col(c).alias("v")), F.when(F.col(c).isNotNull(), F.col(TS))))
-        elif op is Operation.UNIQUE_COUNT:
-            add(f"i_set_{c}", F.collect_set(c))
-        elif op is Operation.APPROX_UNIQUE_COUNT:
-            add(f"i_hll_{c}", F.hll_sketch_agg(c))
-        else:  # pragma: no cover
-            raise NotImplementedError(op)
-    return out
-
-
 def _frame(keys: list, w_hops: Optional[int]) -> W:
     w = W.partitionBy(*keys).orderBy("__hop")
     if w_hops is None:
@@ -198,74 +117,21 @@ def _tail_sfx(c: str, w_hops: Optional[int]) -> str:
 
 def _tail_cols(parts: list, keys: list, hop_ms: int) -> list:
     """Tail-merged IR columns over the hop window frames, deduped across
-    parts by (input, window)."""
-    out: list[Column] = []
-    seen: set = set()
-
-    def add(name: str, col: Column):
-        if name not in seen:
-            seen.add(name)
-            out.append(col.alias(name))
-
+    parts by (input, window): ``t_{kind}_{sfx}`` is the IR's merge
+    (``hop_ir.merge``) as a window; moment kinds hold sums about the
+    per-key offset ``__k_{c}``, which rides along for the finalize."""
+    out: dict = {}
     for p in parts:
         c = p.input_column
-        op = p.operation
         w_hops = _w_hops(p, hop_ms)
         fr = _frame(keys, w_hops)
         sfx = _tail_sfx(c, w_hops)
-        if op in _MOMENT_OPS:
-            add(f"t_cnt_{sfx}", F.sum(f"i_cnt_{c}").over(fr))
-            add(f"t_sum_{sfx}", F.sum(f"i_sum_{c}").over(fr))
-            if op in (Operation.VARIANCE, Operation.SKEW, Operation.KURTOSIS):
-                # shifted-moments tail terms about the per-key offset
-                # __k_{c} (added in group_by_asof_hopped): within-hop m2
-                # plus each hop's n_h * (mean_h - K)^2 contribution — every
-                # term is O(n * sigma^2), no mu^2-scale cancellation.
-                add(f"t_m2_{sfx}", F.sum(f"i_m2_{c}").over(fr))
-                k = F.col(f"__k_{c}")
-                b_hop = F.when(
-                    F.col(f"i_cnt_{c}") > 0,
-                    F.pow(F.col(f"i_sum_{c}") - F.col(f"i_cnt_{c}") * k, 2)
-                    / F.col(f"i_cnt_{c}"),
-                )
-                add(f"t_b_{sfx}", F.sum(b_hop).over(fr))
-                add(f"__k_{c}", k)
-            if op in (Operation.SKEW, Operation.KURTOSIS):
-                # re-shift each hop's central sums from its own mean to K
-                # (exact polynomial transform; d_h = mean_h - K is
-                # O(sigma)-scale since K is the key's overall mean):
-                # S3K_h = M3_h + 3 d M2_h + n d^3
-                # S4K_h = M4_h + 4 d M3_h + 6 d^2 M2_h + n d^4
-                n_h = F.col(f"i_cnt_{c}")
-                d_h = F.when(n_h > 0, F.col(f"i_sum_{c}") / n_h - F.col(f"__k_{c}"))
-                m2_h, m3_h = F.col(f"i_m2_{c}"), F.col(f"i_m3_{c}")
-                s3k = m3_h + 3 * d_h * m2_h + n_h * F.pow(d_h, 3)
-                add(f"t_s3_{sfx}", F.sum(s3k).over(fr))
-                if op is Operation.KURTOSIS:
-                    m4_h = F.col(f"i_m4_{c}")
-                    s4k = (
-                        m4_h
-                        + 4 * d_h * m3_h
-                        + 6 * F.pow(d_h, 2) * m2_h
-                        + n_h * F.pow(d_h, 4)
-                    )
-                    add(f"t_s4_{sfx}", F.sum(s4k).over(fr))
-        elif op is Operation.MIN:
-            add(f"t_min_{sfx}", F.min(f"i_min_{c}").over(fr))
-        elif op is Operation.MAX:
-            add(f"t_max_{sfx}", F.max(f"i_max_{c}").over(fr))
-        elif op is Operation.LAST:
-            add(f"t_last_{sfx}", F.max(f"i_last_{c}").over(fr))
-        elif op is Operation.FIRST:
-            add(f"t_first_{sfx}", F.min(f"i_first_{c}").over(fr))
-        elif op is Operation.UNIQUE_COUNT:
-            add(
-                f"t_set_{sfx}",
-                F.array_distinct(F.flatten(F.collect_list(f"i_set_{c}").over(fr))),
-            )
-        elif op is Operation.APPROX_UNIQUE_COUNT:
-            add(f"t_hll_{sfx}", F.hll_union_agg(F.col(f"i_hll_{c}")).over(fr))
-    return out
+        for kind in hop_ir.kinds(p.operation):
+            if f"t_{kind}_{sfx}" not in out:
+                out[f"t_{kind}_{sfx}"] = hop_ir.merge(kind, c, fr)
+            if kind == "m2":
+                out[f"__k_{c}"] = F.col(f"__k_{c}")
+    return [col.alias(name) for name, col in out.items()]
 
 
 _ZERO_IS_EMPTY = {
@@ -352,7 +218,7 @@ def hop_irs_for(events: DataFrame, group_by: GroupBy, hop_ms: int) -> DataFrame:
     lambda architecture (reference GroupByUpload FinalBatchIr tail hops)."""
     keys = list(group_by.key_columns)
     ev = events.withColumn("__hop", (F.col(TS) / hop_ms).cast("long"))
-    return ev.groupBy(*keys, "__hop").agg(*_ir_aggs(group_by.unpack()))
+    return ev.groupBy(*keys, "__hop").agg(*hop_ir.update_aggs(group_by.unpack()))
 
 
 def group_by_asof_hopped(
@@ -475,7 +341,7 @@ def group_by_asof_hopped(
         events = events.repartition(*keys, "__hop")
 
     # 1. hop partial IRs (+ precomputed batch IRs for the lambda merge)
-    hop_irs = events.groupBy(*keys, "__hop").agg(*_ir_aggs(parts))
+    hop_irs = events.groupBy(*keys, "__hop").agg(*hop_ir.update_aggs(parts))
     if extra_hop_irs is not None:
         # enforce the disjointness contract loudly: overlapping hop ranges
         # would double-count (each (key, hop) must come from exactly one
@@ -504,22 +370,9 @@ def group_by_asof_hopped(
     hop_grid = hop_irs.join(
         q_hops.withColumn("__isq", F.lit(1)), on=keys + ["__hop"], how="full"
     )
-    # per-key variance offset K = overall mean of the key's events, computed
-    # from the hop IRs themselves (full-partition window — same shuffle as
+    # per-key moment offset K, from the hop IRs themselves (same shuffle as
     # the tail window, no extra pass over raw events)
-    var_inputs = sorted({
-        p.input_column
-        for p in parts
-        if p.operation in (Operation.VARIANCE, Operation.SKEW, Operation.KURTOSIS)
-    })
-    if var_inputs:
-        wk = W.partitionBy(*keys).rowsBetween(
-            W.unboundedPreceding, W.unboundedFollowing
-        )
-        for c in var_inputs:
-            hop_grid = hop_grid.withColumn(
-                f"__k_{c}", F.sum(f"i_sum_{c}").over(wk) / F.sum(f"i_cnt_{c}").over(wk)
-            )
+    hop_grid = hop_ir.with_offsets(hop_grid, keys, hop_ir.moment_inputs(parts))
     tails = hop_grid.select(
         *keys, "__hop", F.col("__isq"), *_tail_cols(parts, keys, hop_ms)
     )
@@ -551,7 +404,7 @@ def group_by_asof_hopped(
         *[F.col(f"__e.{c}") for c in head_needed],
     )
     heads = head_join.groupBy(*keys, "__qts", "__hop").agg(
-        F.count(F.col(TS)).alias("__h_n"), *_ir_aggs(parts)
+        F.count(F.col(TS)).alias("__h_n"), *hop_ir.update_aggs(parts)
     )
     # no-event query rows must expose NULL head IRs (identical to the old
     # inner-join shape where the row was simply absent) — an empty
@@ -578,7 +431,7 @@ def group_by_asof_hopped(
         op = p.operation
         sfx = _tail_sfx(c, _w_hops(p, hop_ms))
         name = p.output_column
-        if op in _MOMENT_OPS:
+        if op in hop_ir.MOMENT_OPS:
             cnt = F.coalesce(F.col(f"t_cnt_{sfx}"), F.lit(0)) + F.coalesce(
                 F.col(f"h_cnt_{c}"), F.lit(0)
             )
@@ -593,71 +446,37 @@ def group_by_asof_hopped(
                 out_cols.append(s.alias(name))
             elif op is Operation.AVERAGE:
                 out_cols.append((s / cnt).alias(name))
-            elif op in (Operation.SKEW, Operation.KURTOSIS):
-                # shifted-moments merge extended to 3rd/4th order: all
-                # sums are about the per-key offset K, then re-centered
-                # to the window's own mean (delta = mean - K)
+            else:  # VARIANCE/SKEW/KURTOSIS (population, excess): head and
+                # tail sums about the per-key offset K add, then re-center
+                # to the window's own mean
                 k = F.col(f"__k_{c}")
-                h_n = F.coalesce(F.col(f"h_cnt_{c}"), F.lit(0))
-                d_hd = F.when(h_n > 0, F.col(f"h_sum_{c}") / h_n - k)
-                h_m2 = F.coalesce(F.col(f"h_m2_{c}"), F.lit(0.0))
-                h_m3 = F.coalesce(F.col(f"h_m3_{c}"), F.lit(0.0))
-                s2k = (
-                    F.coalesce(F.col(f"t_m2_{sfx}"), F.lit(0.0))
-                    + F.coalesce(F.col(f"t_b_{sfx}"), F.lit(0.0))
-                    + F.coalesce(h_m2 + h_n * F.pow(d_hd, 2), F.lit(0.0))
+                kinds = hop_ir.kinds(op)
+                head = hop_ir.shift(
+                    F.col(f"h_cnt_{c}"),
+                    F.col(f"h_sum_{c}"),
+                    *[F.col(f"h_{m}_{c}") if m in kinds else None for m in hop_ir.MOMENTS],
+                    k,
                 )
-                s3k = F.coalesce(F.col(f"t_s3_{sfx}"), F.lit(0.0)) + F.coalesce(
-                    h_m3 + 3 * d_hd * h_m2 + h_n * F.pow(d_hd, 3), F.lit(0.0)
-                )
-                delta = s / cnt - k
-                m2t = s2k - cnt * F.pow(delta, 2)
-                m3t = s3k - 3 * delta * s2k + 2 * cnt * F.pow(delta, 3)
-                m2bar = m2t / cnt
-                if op is Operation.SKEW:
-                    val = (m3t / cnt) / F.pow(m2bar, 1.5)
+                sums = [
+                    None
+                    if h is None
+                    else F.coalesce(F.col(f"t_{m}_{sfx}"), F.lit(0.0))
+                    + F.coalesce(h, F.lit(0.0))
+                    for m, h in zip(hop_ir.MOMENTS, head)
+                ]
+                m2, m3, m4 = hop_ir.recenter(cnt, s, *sums, k)
+                m2bar = m2 / cnt
+                if op is Operation.VARIANCE:
+                    val = F.when(cnt > 0, F.greatest(m2bar, F.lit(0.0)))
                 else:
-                    h_m4 = F.coalesce(F.col(f"h_m4_{c}"), F.lit(0.0))
-                    s4k = F.coalesce(
-                        F.col(f"t_s4_{sfx}"), F.lit(0.0)
-                    ) + F.coalesce(
-                        h_m4
-                        + 4 * d_hd * h_m3
-                        + 6 * F.pow(d_hd, 2) * h_m2
-                        + h_n * F.pow(d_hd, 4),
-                        F.lit(0.0),
+                    val = (
+                        (m3 / cnt) / F.pow(m2bar, 1.5)
+                        if op is Operation.SKEW
+                        else (m4 / cnt) / F.pow(m2bar, 2.0) - 3.0
                     )
-                    m4t = (
-                        s4k
-                        - 4 * delta * s3k
-                        + 6 * F.pow(delta, 2) * s2k
-                        - 3 * cnt * F.pow(delta, 4)
-                    )
-                    val = (m4t / cnt) / F.pow(m2bar, 2.0) - 3.0
-                # kernel null rule: defined only for n > 1 and m2 > 0
-                out_cols.append(
-                    F.when((cnt > 1) & (m2bar > 0), val).alias(name)
-                )
-            else:  # VARIANCE (population) — shifted-moments merge:
-                # M2_total = sum(m2_g) + sum(n_g*(mean_g-K)^2) - A^2/N,
-                # A = S - N*K (Chan's parallel variance about a per-key
-                # offset K; all terms O(N*sigma^2), so no catastrophic
-                # cancellation at mu >> sigma production magnitudes)
-                k = F.col(f"__k_{c}")
-                m2 = F.coalesce(F.col(f"t_m2_{sfx}"), F.lit(0.0)) + F.coalesce(
-                    F.col(f"h_m2_{c}"), F.lit(0.0)
-                )
-                h_b = F.when(
-                    F.col(f"h_cnt_{c}") > 0,
-                    F.pow(F.col(f"h_sum_{c}") - F.col(f"h_cnt_{c}") * k, 2)
-                    / F.col(f"h_cnt_{c}"),
-                )
-                b = F.coalesce(F.col(f"t_b_{sfx}"), F.lit(0.0)) + F.coalesce(
-                    h_b, F.lit(0.0)
-                )
-                a = s - cnt * k
-                var = (m2 + b - F.pow(a, 2) / cnt) / cnt
-                out_cols.append(F.when(cnt > 0, F.greatest(var, F.lit(0.0))).alias(name))
+                    # kernel null rule: defined only for n > 1 and m2 > 0
+                    val = F.when((cnt > 1) & (m2bar > 0), val)
+                out_cols.append(val.alias(name))
         elif op is Operation.MIN:
             out_cols.append(F.least(f"t_min_{sfx}", f"h_min_{c}").alias(name))
         elif op is Operation.MAX:

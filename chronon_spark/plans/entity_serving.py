@@ -36,6 +36,7 @@ from chronon_spark.operators.mutations import (
     ds_of,
     entity_batch_irs,
     entity_mutation_scan,
+    entity_snapshot_scan,
     temporal_entities,
 )
 from chronon_spark.sources.scan import TS
@@ -52,19 +53,24 @@ def upload_temporal_entities(
 
     Each frame lands as a parquet table under ``out_dir`` with a
     manifest naming them — the offline stand-in for the reference's KV
-    upload. Only rows with ``__prev_ds == serving day`` are written: the
-    upload is ONE day's serving state, not all history."""
+    upload. Only the snapshot partition serving that day is scanned, so
+    every frame's ``__prev_ds`` is that partition: the upload is ONE
+    day's serving state, not all history."""
     assert batch_end_ms % DAY_MS == 0, "entity batch end must be a UTC midnight"
     ds = ds_of(batch_end_ms)
     # the frames' __prev_ds is the snapshot PARTITION (serving day - 1):
     # the end-of-day(d-1) state serves day d's queries
     snap_ds = ds_of(batch_end_ms - DAY_MS)
-    irs = entity_batch_irs(spark, group_by, tail_buffer_ms)
+    src = group_by.sources[0]
+    snap = entity_snapshot_scan(spark, src).where(
+        F.col(src.query.partition_column).cast("string") == snap_ds
+    )
+    irs = entity_batch_irs(spark, group_by, tail_buffer_ms, snapshot_df=snap)
     manifest: dict = {"serving_ds": ds, "frames": {}}
 
     def _write(name: str, df: DataFrame):
         path = os.path.join(out_dir, name)
-        df.where(F.col("__prev_ds") == snap_ds).write.mode("overwrite").parquet(path)
+        df.write.mode("overwrite").parquet(path)
         manifest["frames"][name] = path
 
     if irs["scalar"] is not None:

@@ -45,7 +45,7 @@ from chronon_spark.operators.asof_join import (
     null_out_nans,
     part_output_field,
 )
-from chronon_spark.plans.upload import upload_group_by
+from chronon_spark.plans.upload import check_tile_range, upload_group_by
 from chronon_spark.sources.scan import TS
 
 
@@ -506,16 +506,9 @@ def fetch_group_by_tiled(
     """
     batch_end_hop = batch_end_ms // hop_ms
     assert batch_end_ms % hop_ms == 0, "batch end must align to a hop"
-    bounds = tile_irs.agg(F.min("__hop"), F.max("__hop")).first()
+    _, max_tile = check_tile_range(tile_irs, batch_end_hop, live_hop, "the live hop")
     if live_hop is None:
-        live_hop = (int(bounds[1]) + 1) if bounds[1] is not None else batch_end_hop
-    if bounds[0] is not None:
-        assert bounds[0] >= batch_end_hop, (
-            f"tile hop {bounds[0]} overlaps the batch range (< {batch_end_hop})"
-        )
-        assert bounds[1] < live_hop, (
-            f"tile hop {bounds[1]} at/after the live hop {live_hop}"
-        )
+        live_hop = (int(max_tile) + 1) if max_tile is not None else batch_end_hop
     min_req = requests.agg(F.min(TS)).first()[0]
     if min_req is not None and int(min_req) < live_hop * hop_ms:
         raise ValueError(

@@ -26,7 +26,8 @@ last-writer-wins upsert of per-micro-batch lists would drop earlier
 batches' entries. Produce closed-hop tiles with a per-hop batch job
 after the hop closes (the pattern the tests pin), or a foreachBatch
 upsert that MERGES the stored list with the batch's (the same
-``_merge`` expression) before writing.
+``_remerge``) before writing. The collapse, the tile guards and the
+live-hop read are ``plans.upload``'s shared semilattice scaffolding.
 
 Entries are ``struct(negcnt=-count, v=item)`` sorted ASCENDING —
 lexicographic (-count ASC, item ASC) = (count DESC, item ASC) — so the
@@ -40,10 +41,10 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronon_spark.plans.upload import COLLAPSED_HOP
+from chronon_spark.plans.upload import collapse, compaction_end_hop, fetch_live_hop
 from chronon_spark.sources.scan import TS
 
 
@@ -76,6 +77,18 @@ def _remerge(df: DataFrame, grain: list, m: int) -> DataFrame:
     return _entries_from_counts(counts, grain, m)
 
 
+def _lift(rows: DataFrame, grain: list, item_col: str, m: int) -> DataFrame:
+    """(grain..., entries): exact item counts per grain truncated to the
+    top ``m`` — the IR of one hop (tiles) or one request's head."""
+    counts = (
+        rows.select(*grain, F.col(item_col).alias("__item"))
+        .where(F.col("__item").isNotNull())
+        .groupBy(*grain, "__item")
+        .agg(F.count(F.lit(1)).alias("__cnt"))
+    )
+    return _entries_from_counts(counts, grain, m)
+
+
 def freq_hop_irs(
     events: DataFrame,
     keys: Sequence[str],
@@ -85,18 +98,12 @@ def freq_hop_irs(
 ) -> DataFrame:
     """(keys..., __hop, entries): per-hop exact item counts truncated to
     the top ``m`` — the tile AND upload payload."""
-    keys = list(keys)
-    counts = (
-        events.select(
-            *keys,
-            (F.col(TS) / F.lit(hop_ms)).cast("long").alias("__hop"),
-            F.col(item_col).alias("__item"),
-        )
-        .where(F.col("__item").isNotNull())
-        .groupBy(*keys, "__hop", "__item")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
+    return _lift(
+        events.withColumn("__hop", (F.col(TS) / F.lit(hop_ms)).cast("long")),
+        list(keys) + ["__hop"],
+        item_col,
+        m,
     )
-    return _entries_from_counts(counts, keys + ["__hop"], m)
 
 
 def compact_freq_upload(
@@ -111,33 +118,14 @@ def compact_freq_upload(
 ) -> DataFrame:
     """Advance the batch end; pre-tail rows merge into one COLLAPSED
     top-m list per key. Same double-count guards as compact_tiles."""
-    assert old_batch_end_ms % hop_ms == 0 and new_batch_end_ms % hop_ms == 0, (
-        "batch ends must align to hop boundaries"
-    )
-    assert new_batch_end_ms >= old_batch_end_ms, "batch end cannot move backward"
     keys = list(keys)
-    old_hop, new_hop = old_batch_end_ms // hop_ms, new_batch_end_ms // hop_ms
-    bounds = tile_irs.agg(F.min("__hop"), F.max("__hop")).first()
-    if bounds[0] is not None:
-        if int(bounds[0]) < old_hop:
-            raise ValueError(
-                f"tile hop {bounds[0]} inside the old batch range (< {old_hop}): "
-                "already counted in the upload"
-            )
-        if int(bounds[1]) >= new_hop:
-            raise ValueError(
-                f"tile hop {bounds[1]} at/after the new batch end ({new_hop}): "
-                "compact it in the next cycle"
-            )
-    tail_start = new_hop - int(tail_hops)
-    merged = upload.unionByName(tile_irs)
-    tails = merged.where(F.col("__hop") >= tail_start)
-    collapsed = (
-        _remerge(merged.where(F.col("__hop") < tail_start), keys, m)
-        .withColumn("__hop", F.lit(COLLAPSED_HOP))
-        .select(*tails.columns)
+    new_hop = compaction_end_hop(tile_irs, old_batch_end_ms, new_batch_end_ms, hop_ms)
+    return collapse(
+        upload.unionByName(tile_irs),
+        keys,
+        new_hop - int(tail_hops),
+        lambda old: _remerge(old, keys, m),
     )
-    return tails.unionByName(collapsed)
 
 
 def fetch_freq_topk(
@@ -163,75 +151,32 @@ def fetch_freq_topk(
     most-frequent first, count ties broken by smaller item)."""
     keys = list(keys)
     m = int(m if m is not None else 4 * k)
-    q = requests.select(
-        *keys, F.col(TS).alias("__qts"),
-        (F.col(TS) / F.lit(hop_ms)).cast("long").alias("__qhop"),
-    ).distinct()
-    bounds = q.agg(F.min("__qhop"), F.max("__qhop")).first()
-    if bounds[0] is None:
-        return q.select(*keys, F.col("__qts").alias(TS)).withColumn(
-            out_col,
-            F.lit(None).cast(f"array<{live_events.schema[item_col].dataType.simpleString()}>"),
-        )
-    assert bounds[0] == bounds[1], "all requests must sit in one live hop"
-    live_hop = int(bounds[0])
-    if verify_disjoint:
-        ir_max = irs.agg(
-            F.max(F.when(F.col("__hop") != COLLAPSED_HOP, F.col("__hop")))
-        ).first()[0]
-        if ir_max is not None and int(ir_max) >= live_hop:
-            raise ValueError(
-                f"IR hop {ir_max} at/after the live hop {live_hop}: double count"
+
+    def merge(contrib: DataFrame) -> DataFrame:
+        merged = _remerge(contrib, keys + ["__qts"], m)
+        if histogram:
+            # exact HISTOGRAM finalize: item -> count map, item-sorted for
+            # deterministic rendering (exact when m covers every item)
+            ent = F.sort_array(
+                F.transform(
+                    "entries",
+                    lambda e: F.struct(
+                        e["v"].alias("key"), (-e["negcnt"]).alias("value")
+                    ),
+                )
             )
-
-    lv = live_events.where(
-        (F.col(TS) / F.lit(hop_ms)).cast("long") == live_hop
-    ).select(
-        *keys, F.col(TS).cast("long").alias("__ets"),
-        F.col(item_col).alias("__item"),
-    ).where(F.col("__item").isNotNull())
-    head_counts = (
-        q.join(lv, on=keys, how="inner")
-        .where(F.col("__ets") <= F.col("__qts"))
-        .groupBy(*keys, "__qts", "__item")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-    )
-    head = _entries_from_counts(head_counts, keys + ["__qts"], m)
-
-    if n_hops is None:
-        tail = irs.join(q.select(*keys, "__qts").distinct(), on=keys, how="inner")
-    else:
-        if n_hops < 1:
-            raise ValueError("n_hops must be >= 1 (the head alone is hop 0)")
-        tail = irs.where(
-            (F.col("__hop") != COLLAPSED_HOP)
-            & (F.col("__hop") >= live_hop - int(n_hops))
-            & (F.col("__hop") < live_hop)
-        ).join(q.select(*keys, "__qts").distinct(), on=keys, how="inner")
-
-    contrib = head.select(*keys, "__qts", "entries").unionByName(
-        tail.select(*keys, "__qts", "entries")
-    )
-    merged = _remerge(contrib, keys + ["__qts"], m)
-    if histogram:
-        # exact HISTOGRAM finalize: item -> count map, item-sorted for
-        # deterministic rendering (exact when m covers every item)
-        ent = F.sort_array(
-            F.transform(
-                "entries",
-                lambda e: F.struct(
-                    e["v"].alias("key"), (-e["negcnt"]).alias("value")
-                ),
-            )
-        )
-        out = merged.withColumn(out_col, F.map_from_entries(ent)).drop("entries")
-    else:
-        out = merged.withColumn(
+            return merged.withColumn(out_col, F.map_from_entries(ent)).drop("entries")
+        return merged.withColumn(
             out_col, F.slice(F.transform("entries", lambda e: e["v"]), 1, int(k))
         ).drop("entries")
-    return q.select(*keys, "__qts").join(
-        out, on=keys + ["__qts"], how="left"
-    ).withColumnRenamed("__qts", TS)
+
+    item_type = live_events.schema[item_col].dataType.simpleString()
+    return fetch_live_hop(
+        requests, irs, live_events, keys, hop_ms, n_hops, verify_disjoint,
+        lambda rows: _lift(rows, keys + ["__qts"], item_col, m),
+        merge,
+        {out_col: f"array<{item_type}>"},
+    )
 
 
 def fetch_histogram(

@@ -4,9 +4,11 @@ Reference parity: the reference serves its K-type operations online
 because the GroupBy IRs carry bounded item sketches end-to-end
 (aggregator TopK/LastK IRs; FetcherUniqueTopKTest exercises the read
 path). This engine's exact Arrow kernel computes K-ops in batch, but
-the hopped/upload path (plans/upload.py HOPPED_OPS) is scalar-only —
-without this module a LAST_K feature could not ride
-upload ⊕ tiles ⊕ live-hop serving.
+the hopped/upload path (``operators.asof_hopped.HOPPED_OPS``) is
+scalar-only — without this module a LAST_K feature could not ride
+upload ⊕ tiles ⊕ live-hop serving. The collapse, the tile guards and
+the live-hop read are ``plans.upload``'s shared semilattice scaffolding;
+this module supplies the lift, the merge and the finalize.
 
 The IR is an exact k-bounded list — a semilattice, not an approximation:
 every entry is ``struct(o1, o2, v)`` with ``(o1, o2)`` the DESCENDING
@@ -45,7 +47,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronon_spark.plans.upload import COLLAPSED_HOP
+from chronon_spark.plans.upload import collapse, compaction_end_hop, fetch_live_hop
 from chronon_spark.sources.scan import TS
 
 _MODES = ("last_k", "top_k", "first_k", "bottom_k", "unique_top_k")
@@ -98,6 +100,16 @@ def _merge(col: Column, k: int, unique: bool = False, asc: bool = False) -> Colu
     return F.slice(merged, 1, k)
 
 
+def _lift(rows: DataFrame, grain: list, mode: str, ts: Column, value_col: str) -> DataFrame:
+    """(grain..., __e): one ranked entry per event; events missing the
+    value or a rank drop out."""
+    return rows.select(*grain, _entry(mode, ts, F.col(value_col)).alias("__e")).where(
+        F.col("__e.v").isNotNull()
+        & F.col("__e.o1").isNotNull()
+        & F.col("__e.o2").isNotNull()
+    )
+
+
 def klist_hop_irs(
     events: DataFrame,
     keys: Sequence[str],
@@ -112,16 +124,12 @@ def klist_hop_irs(
     than salt × k entries per (key, hop)."""
     keys = list(keys)
     unique = mode == "unique_top_k"
-    ev = events.select(
-        *keys,
-        (F.col(TS) / F.lit(hop_ms)).cast("long").alias("__hop"),
-        _entry(mode, F.col(TS).cast("long"), F.col(value_col)).alias(
-            "__e"
-        ),
-    ).where(
-        F.col("__e.v").isNotNull()
-        & F.col("__e.o1").isNotNull()
-        & F.col("__e.o2").isNotNull()
+    ev = _lift(
+        events.withColumn("__hop", (F.col(TS) / F.lit(hop_ms)).cast("long")),
+        keys + ["__hop"],
+        mode,
+        F.col(TS).cast("long"),
+        value_col,
     )
     # salt on the full rank pair: (o1) alone would put a hot VALUE's
     # top_k entries in one bucket; (o1, o2) is unique per event
@@ -161,40 +169,18 @@ def compact_klist_upload(
     """Advance the k-list upload's batch end: closed tiles fold in, rows
     older than the retained tail merge into one COLLAPSED k-list per key
     (read only by unbounded fetches). Same guards as compact_tiles."""
-    assert old_batch_end_ms % hop_ms == 0 and new_batch_end_ms % hop_ms == 0, (
-        "batch ends must align to hop boundaries"
-    )
-    assert new_batch_end_ms >= old_batch_end_ms, "batch end cannot move backward"
     keys = list(keys)
-    old_hop, new_hop = old_batch_end_ms // hop_ms, new_batch_end_ms // hop_ms
-    bounds = tile_irs.agg(F.min("__hop"), F.max("__hop")).first()
-    if bounds[0] is not None:
-        if int(bounds[0]) < old_hop:
-            raise ValueError(
-                f"tile hop {bounds[0]} inside the old batch range (< {old_hop}): "
-                "already counted in the upload"
-            )
-        if int(bounds[1]) >= new_hop:
-            raise ValueError(
-                f"tile hop {bounds[1]} at/after the new batch end ({new_hop}): "
-                "compact it in the next cycle"
-            )
-    tail_start = new_hop - int(tail_hops)
-    merged = upload.unionByName(tile_irs)
-    tails = merged.where(F.col("__hop") >= tail_start)
-    collapsed = (
-        merged.where(F.col("__hop") < tail_start)
-        .groupBy(*keys)
-        .agg(
+    new_hop = compaction_end_hop(tile_irs, old_batch_end_ms, new_batch_end_ms, hop_ms)
+    return collapse(
+        upload.unionByName(tile_irs),
+        keys,
+        new_hop - int(tail_hops),
+        lambda old: old.groupBy(*keys).agg(
             _merge(
-                F.collect_list("entries"), int(k), mode == "unique_top_k",
-                _asc(mode),
+                F.collect_list("entries"), int(k), mode == "unique_top_k", _asc(mode)
             ).alias("entries")
-        )
-        .withColumn("__hop", F.lit(COLLAPSED_HOP))
-        .select(*tails.columns)
+        ),
     )
-    return tails.unionByName(collapsed)
 
 
 def fetch_klist(
@@ -219,76 +205,29 @@ def fetch_klist(
     (array of the value column's own type, rank order; NULL when nothing
     is in the window)."""
     keys = list(keys)
-    q = requests.select(
-        *keys, F.col(TS).alias("__qts"),
-        (F.col(TS) / F.lit(hop_ms)).cast("long").alias("__qhop"),
-    ).distinct()
-    bounds = q.agg(F.min("__qhop"), F.max("__qhop")).first()
-    if bounds[0] is None:
-        return q.select(*keys, F.col("__qts").alias(TS)).withColumn(
-            out_col,
-            F.lit(None).cast(
-                f"array<{live_events.schema[value_col].dataType.simpleString()}>"
-            ),
-        )
-    assert bounds[0] == bounds[1], "all requests must sit in one live hop"
-    live_hop = int(bounds[0])
-    if verify_disjoint:
-        ir_max = irs.agg(
-            F.max(F.when(F.col("__hop") != COLLAPSED_HOP, F.col("__hop")))
-        ).first()[0]
-        if ir_max is not None and int(ir_max) >= live_hop:
-            raise ValueError(
-                f"IR hop {ir_max} at/after the live hop {live_hop}: double count"
+    unique, asc = mode == "unique_top_k", _asc(mode)
+
+    def head(rows: DataFrame) -> DataFrame:
+        return (
+            _lift(rows, keys + ["__qts"], mode, F.col("__ets"), value_col)
+            .groupBy(*keys, "__qts")
+            .agg(
+                _merge(F.array(F.collect_list("__e")), int(k), unique, asc).alias(
+                    "entries"
+                )
             )
-
-    lv = live_events.where(
-        (F.col(TS) / F.lit(hop_ms)).cast("long") == live_hop
-    ).select(
-        *keys, F.col(TS).cast("long").alias("__ets"),
-        _entry(mode, F.col(TS).cast("long"), F.col(value_col)).alias(
-            "__e"
-        ),
-    ).where(
-        F.col("__e.v").isNotNull()
-        & F.col("__e.o1").isNotNull()
-        & F.col("__e.o2").isNotNull()
-    )
-    head = (
-        q.join(lv, on=keys, how="inner")
-        .where(F.col("__ets") <= F.col("__qts"))
-        .groupBy(*keys, "__qts")
-        .agg(
-            _merge(
-                F.array(F.collect_list("__e")), int(k),
-                mode == "unique_top_k", _asc(mode),
-            ).alias("entries")
         )
-    )
 
-    if n_hops is None:
-        tail = irs.join(q.select(*keys, "__qts").distinct(), on=keys, how="inner")
-    else:
-        if n_hops < 1:
-            raise ValueError("n_hops must be >= 1 (the head alone is hop 0)")
-        tail = irs.where(
-            (F.col("__hop") != COLLAPSED_HOP)
-            & (F.col("__hop") >= live_hop - int(n_hops))
-            & (F.col("__hop") < live_hop)
-        ).join(q.select(*keys, "__qts").distinct(), on=keys, how="inner")
+    def merge(contrib: DataFrame) -> DataFrame:
+        merged = contrib.groupBy(*keys, "__qts").agg(
+            _merge(F.collect_list("entries"), int(k), unique, asc).alias("__m")
+        )
+        return merged.withColumn(
+            out_col, F.transform(F.col("__m"), lambda e: e["v"])
+        ).drop("__m")
 
-    contrib = head.select(*keys, "__qts", "entries").unionByName(
-        tail.select(*keys, "__qts", "entries")
+    value_type = live_events.schema[value_col].dataType.simpleString()
+    return fetch_live_hop(
+        requests, irs, live_events, keys, hop_ms, n_hops, verify_disjoint,
+        head, merge, {out_col: f"array<{value_type}>"},
     )
-    merged = contrib.groupBy(*keys, "__qts").agg(
-        _merge(
-            F.collect_list("entries"), int(k), mode == "unique_top_k",
-            _asc(mode),
-        ).alias("__m")
-    )
-    out = merged.withColumn(
-        out_col, F.transform(F.col("__m"), lambda e: e["v"])
-    ).drop("__m")
-    return q.select(*keys, "__qts").join(
-        out, on=keys + ["__qts"], how="left"
-    ).withColumnRenamed("__qts", TS)

@@ -17,15 +17,15 @@ serving payload:
 - ``compact_sketch_upload``: the batch-end advance — closed tiles fold
   into the upload by plain SUM per (keys, hop|collapsed, bucket); rows
   older than the retained tail collapse to one COLLAPSED row per
-  (keys, bucket) for unbounded-window serving. Same double-count guards
-  as ``plans.upload.compact_tiles``.
-- ``fetch_percentile_sketch``: the read path. Windowed (sawtooth: exact
-  ``ts <= query_ts`` head over live-hop events, hop-rounded far edge
-  ``n_hops`` back) or unbounded (collapsed ∪ tails ∪ head). Tail
-  fan-out happens on the COMPACT IR table (explode of 1..n_hops serve
-  offsets — the ``label_sawtooth`` pattern), never on raw events, and
-  the quantile walk is the shared higher-order-function fold
-  (``quantiles_from_sketch``) — zero Python, zero driver collect.
+  (keys, bucket) for unbounded-window serving. The double-count guards
+  and the collapse are ``plans.upload``'s, shared with ``compact_tiles``.
+- ``fetch_percentile_sketch``: the read path (``plans.upload.
+  fetch_live_hop``). Windowed (sawtooth: exact ``ts <= query_ts`` head
+  over live-hop events, hop-rounded far edge ``n_hops`` back) or
+  unbounded (collapsed ∪ tails ∪ head). The tail is a hop slice of the
+  COMPACT IR table, never raw events, and the quantile walk is the
+  shared higher-order-function fold (``quantiles_from_sketch``) — zero
+  Python, zero driver collect.
 
 Scale: per (key, hop) the IR is bounded by the distinct-bucket count
 (~2·log_gamma(max/min), independent of event volume), so a hot key's
@@ -45,8 +45,24 @@ from chronon_spark.operators.ddsketch import (
     bucket_expr,
     quantiles_from_sketch,
 )
-from chronon_spark.plans.upload import COLLAPSED_HOP
+from chronon_spark.plans.upload import collapse, compaction_end_hop, fetch_live_hop
 from chronon_spark.sources.scan import TS
+
+
+def _lift(rows: DataFrame, grain: list, value_col: str, alpha: float) -> DataFrame:
+    """(grain..., bucket, count): the value column's DDSketch bucket
+    counts per grain — the IR of one hop (tiles) or one request's head."""
+    return (
+        rows.select(*grain, bucket_expr(value_col, alpha).alias("bucket"))
+        .where(F.col("bucket").isNotNull())
+        .groupBy(*grain, "bucket")
+        .agg(F.count(F.lit(1)).alias("count"))
+    )
+
+
+def _merge(rows: DataFrame, grain: list) -> DataFrame:
+    """Merge sketch rows down to ``grain``: SUM counts per bucket."""
+    return rows.groupBy(*grain, "bucket").agg(F.sum("count").alias("count"))
 
 
 def sketch_hop_irs(
@@ -58,12 +74,11 @@ def sketch_hop_irs(
 ) -> DataFrame:
     """(keys..., __hop, bucket, count) DDSketch IR rows — one aggregation,
     batch or streaming (the same duality as stream_hop_irs)."""
-    return (
-        events.withColumn("__hop", (F.col(TS) / F.lit(hop_ms)).cast("long"))
-        .withColumn("bucket", bucket_expr(value_col, alpha))
-        .where(F.col("bucket").isNotNull())
-        .groupBy(*keys, "__hop", "bucket")
-        .agg(F.count(F.lit(1)).alias("count"))
+    return _lift(
+        events.withColumn("__hop", (F.col(TS) / F.lit(hop_ms)).cast("long")),
+        list(keys) + ["__hop"],
+        value_col,
+        alpha,
     )
 
 
@@ -84,35 +99,14 @@ def compact_sketch_upload(
     result is row-for-row what ``sketch_hop_irs`` over full history plus
     the same collapse would produce (pinned in tests).
     """
-    assert old_batch_end_ms % hop_ms == 0 and new_batch_end_ms % hop_ms == 0, (
-        "batch ends must align to hop boundaries"
-    )
-    assert new_batch_end_ms >= old_batch_end_ms, "batch end cannot move backward"
     keys = list(keys)
-    old_hop, new_hop = old_batch_end_ms // hop_ms, new_batch_end_ms // hop_ms
-    bounds = tile_irs.agg(F.min("__hop"), F.max("__hop")).first()
-    if bounds[0] is not None:
-        if int(bounds[0]) < old_hop:
-            raise ValueError(
-                f"tile hop {bounds[0]} inside the old batch range (< {old_hop}): "
-                "already counted in the upload"
-            )
-        if int(bounds[1]) >= new_hop:
-            raise ValueError(
-                f"tile hop {bounds[1]} at/after the new batch end ({new_hop}): "
-                "compact it in the next cycle"
-            )
-    tail_start = new_hop - int(tail_hops)
-    merged = upload.unionByName(tile_irs)
-    tails = merged.where(F.col("__hop") >= tail_start)
-    collapsed = (
-        merged.where(F.col("__hop") < tail_start)
-        .groupBy(*keys, "bucket")
-        .agg(F.sum("count").alias("count"))
-        .withColumn("__hop", F.lit(COLLAPSED_HOP))
-        .select(*tails.columns)
+    new_hop = compaction_end_hop(tile_irs, old_batch_end_ms, new_batch_end_ms, hop_ms)
+    return collapse(
+        upload.unionByName(tile_irs),
+        keys,
+        new_hop - int(tail_hops),
+        lambda old: _merge(old, keys),
     )
-    return tails.unionByName(collapsed)
 
 
 def fetch_percentile_sketch(
@@ -140,75 +134,19 @@ def fetch_percentile_sketch(
     Output: requests' columns + one ``{prefix}{q*100}`` per q.
     """
     keys = list(keys)
-    q = requests.select(
-        *keys, F.col(TS).alias("__qts"),
-        (F.col(TS) / F.lit(hop_ms)).cast("long").alias("__qhop"),
-    ).distinct()
 
-    live_hop_row = q.agg(F.min("__qhop"), F.max("__qhop")).first()
-    if live_hop_row[0] is None:
-        empty = q.select(*keys, F.col("__qts").alias(TS))
-        for p in qs:
-            empty = empty.withColumn(f"{prefix}{int(p * 100)}", F.lit(None).cast("double"))
-        return empty
-    assert live_hop_row[0] == live_hop_row[1], (
-        "all requests must sit in one live hop"
-    )
-    live_hop = int(live_hop_row[0])
-    if verify_disjoint:
-        # the guard re-aggregates the IR frame — skip it when the caller
-        # built the IRs from a structurally pre-live slice (the same
-        # escape hatch as fetch_group_by_tiled's verify_disjoint)
-        ir_max = irs.agg(
-            F.max(F.when(F.col("__hop") != COLLAPSED_HOP, F.col("__hop")))
-        ).first()[0]
-        if ir_max is not None and int(ir_max) >= live_hop:
-            raise ValueError(
-                f"IR hop {ir_max} at/after the live hop {live_hop}: double count"
-            )
-
-    # exact head: live-hop events at-or-before each request ts. Key-join
-    # then ts filter — fan-out bounded by ONE hop's events per key, the
-    # same head bound as the main engine.
-    lv = live_events.where(
-        (F.col(TS) / F.lit(hop_ms)).cast("long") == live_hop
-    ).select(
-        *keys, F.col(TS).alias("__ets"), bucket_expr(value_col, alpha).alias("bucket")
-    ).where(F.col("bucket").isNotNull())
-    head = (
-        q.join(lv, on=keys, how="inner")
-        .where(F.col("__ets") <= F.col("__qts"))
-        .groupBy(*keys, "__qts", "bucket")
-        .agg(F.count(F.lit(1)).alias("count"))
-    )
-
-    if n_hops is None:
-        tail = irs.join(q.select(*keys, "__qts").distinct(), on=keys, how="inner").select(
-            *keys, "__qts", "bucket", "count"
+    def merge(contrib: DataFrame) -> DataFrame:
+        return quantiles_from_sketch(
+            _merge(contrib, keys + ["__qts"]),
+            keys + ["__qts"],
+            list(qs),
+            alpha=alpha,
+            prefix=prefix,
         )
-    else:
-        # all requests share the live hop (contract above), so the tail
-        # window is a static hop slice of the compact IR table — no
-        # fan-out at all (the explode pattern is only needed when query
-        # hops vary, as in label_sawtooth)
-        if n_hops < 1:
-            raise ValueError("n_hops must be >= 1 (the head alone is hop 0)")
-        served = irs.where(
-            (F.col("__hop") != COLLAPSED_HOP)
-            & (F.col("__hop") >= live_hop - int(n_hops))
-            & (F.col("__hop") < live_hop)
-        ).select(*keys, "bucket", "count")
-        tail = served.join(q.select(*keys, "__qts").distinct(), on=keys, how="inner")
 
-    contrib = head.select(*keys, "__qts", "bucket", "count").unionByName(tail)
-    out = quantiles_from_sketch(
-        contrib.groupBy(*keys, "__qts", "bucket").agg(F.sum("count").alias("count")),
-        keys + ["__qts"],
-        list(qs),
-        alpha=alpha,
-        prefix=prefix,
+    return fetch_live_hop(
+        requests, irs, live_events, keys, hop_ms, n_hops, verify_disjoint,
+        lambda rows: _lift(rows, keys + ["__qts"], value_col, alpha),
+        merge,
+        {f"{prefix}{int(p * 100)}": "double" for p in qs},
     )
-    # left-join back so zero-history requests survive with NULL quantiles
-    return q.select(*keys, "__qts").join(
-        out, on=keys + ["__qts"], how="left"
-    ).withColumnRenamed("__qts", TS)

@@ -14,16 +14,24 @@ batch lambda merge: ``group_by_asof_hopped(..., events_df=fresh rows,
 extra_hop_irs=upload)`` — a RANGE window frame naturally reads the
 collapsed row only for unbounded frames (its hop index is far below any
 windowed frame's lower bound).
+
+The tile-merge scaffolding lives here once, for the scalar IRs
+(``operators.hop_ir``) and the serving semilattices
+(``plans.sketch_serving``, ``klist_serving``, ``freq_serving``) alike:
+the tile-range guard (:func:`check_tile_range`), the collapse of old rows
+into the COLLAPSED row (:func:`collapse`) and the live-hop read
+(:func:`fetch_live_hop`).
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronon_spark.api.types import GroupBy, Operation
+from chronon_spark.api.types import GroupBy
+from chronon_spark.operators import hop_ir
 from chronon_spark.operators.asof_hopped import hop_irs_for, supports_hopped
 from chronon_spark.operators.asof_join import events_df_for_group_by, null_out_nans
 from chronon_spark.sources.scan import TS
@@ -31,81 +39,144 @@ from chronon_spark.sources.scan import TS
 COLLAPSED_HOP = -(10**9)  # far below any real hop index
 
 
-def _merge_aggs(parts: list) -> list:
-    """Second-level MERGE aggregators over i_* IR columns (IRs are
-    mergeable by construction — SURVEY.md §1.4)."""
-    out: list[Column] = []
-    seen: set = set()
+def check_tile_range(
+    tile_irs: DataFrame,
+    lo_hop: int,
+    hi_hop: Optional[int] = None,
+    hi_name: str = "the new batch end",
+) -> tuple:
+    """The double-count guard of every tile merge: tile hops must lie in
+    ``[lo_hop, hi_hop)`` — a tile before ``lo_hop`` is already in the
+    upload, one at/after ``hi_hop`` belongs to a later merge (no upper
+    check when ``hi_hop`` is None). Returns the (min, max) tile hop,
+    both None for no tiles."""
+    lo, hi = tile_irs.agg(F.min("__hop"), F.max("__hop")).first()
+    if lo is not None and int(lo) < lo_hop:
+        raise ValueError(
+            f"tile hop {lo} overlaps the batch range (< {lo_hop}): a tile "
+            "inside the old batch range is already counted in the upload"
+        )
+    if hi is not None and hi_hop is not None and int(hi) >= hi_hop:
+        raise ValueError(
+            f"tile hop {hi} at/after {hi_name} ({hi_hop}): it belongs to a "
+            "later merge"
+        )
+    return lo, hi
 
-    def add(name: str, col: Column):
-        if name not in seen:
-            seen.add(name)
-            out.append(col.alias(name))
 
-    for p in parts:
-        c = p.input_column
-        op = p.operation
-        if op in (Operation.COUNT, Operation.SUM, Operation.AVERAGE, Operation.VARIANCE,
-                  Operation.SKEW, Operation.KURTOSIS):
-            add(f"i_cnt_{c}", F.sum(f"i_cnt_{c}"))
-            add(f"i_sum_{c}", F.sum(f"i_sum_{c}"))
-            if op in (Operation.VARIANCE, Operation.SKEW, Operation.KURTOSIS):
-                # shifted-moments merge about the per-key offset __k_{c}
-                # (joined in upload_group_by); finalized to a single i_m2
-                # post-agg: i_m2 = sum(m2_h) + sum(n_h*(mean_h-K)^2) - A^2/N
-                add(f"__m2s_{c}", F.sum(f"i_m2_{c}"))
-                add(
-                    f"__b_{c}",
-                    F.sum(
-                        F.when(
-                            F.col(f"i_cnt_{c}") > 0,
-                            F.pow(
-                                F.col(f"i_sum_{c}")
-                                - F.col(f"i_cnt_{c}") * F.col(f"__k_{c}"),
-                                2,
-                            )
-                            / F.col(f"i_cnt_{c}"),
-                        )
-                    ),
-                )
-                add(f"__k_{c}", F.first(f"__k_{c}"))
-            if op in (Operation.SKEW, Operation.KURTOSIS):
-                # per-row (hop) re-shift of the 3rd/4th central sums to K,
-                # then plain SUM — the same exact polynomial transform the
-                # hopped tail uses (asof_hopped._tail_cols)
-                n_h = F.col(f"i_cnt_{c}")
-                d_h = F.when(n_h > 0, F.col(f"i_sum_{c}") / n_h - F.col(f"__k_{c}"))
-                m2_h, m3_h = F.col(f"i_m2_{c}"), F.col(f"i_m3_{c}")
-                add(
-                    f"__s3_{c}",
-                    F.sum(m3_h + 3 * d_h * m2_h + n_h * F.pow(d_h, 3)),
-                )
-                if op is Operation.KURTOSIS:
-                    m4_h = F.col(f"i_m4_{c}")
-                    add(
-                        f"__s4_{c}",
-                        F.sum(
-                            m4_h
-                            + 4 * d_h * m3_h
-                            + 6 * F.pow(d_h, 2) * m2_h
-                            + n_h * F.pow(d_h, 4)
-                        ),
-                    )
-        elif op is Operation.MIN:
-            add(f"i_min_{c}", F.min(f"i_min_{c}"))
-        elif op is Operation.MAX:
-            add(f"i_max_{c}", F.max(f"i_max_{c}"))
-        elif op is Operation.LAST:
-            add(f"i_last_{c}", F.max(f"i_last_{c}"))
-        elif op is Operation.FIRST:
-            add(f"i_first_{c}", F.min(f"i_first_{c}"))
-        elif op is Operation.UNIQUE_COUNT:
-            add(f"i_set_{c}", F.array_distinct(F.flatten(F.collect_list(f"i_set_{c}"))))
-        elif op is Operation.APPROX_UNIQUE_COUNT:
-            add(f"i_hll_{c}", F.hll_union_agg(f"i_hll_{c}"))
-        else:  # pragma: no cover
-            raise NotImplementedError(op)
-    return out
+def compaction_end_hop(
+    tile_irs: DataFrame, old_batch_end_ms: int, new_batch_end_ms: int, hop_ms: int
+) -> int:
+    """Check a compaction's batch ends and tile range (see
+    :func:`check_tile_range`); returns the new batch end's hop."""
+    assert old_batch_end_ms % hop_ms == 0 and new_batch_end_ms % hop_ms == 0, (
+        "batch ends must align to hop boundaries"
+    )
+    assert new_batch_end_ms >= old_batch_end_ms, "batch end cannot move backward"
+    new_hop = new_batch_end_ms // hop_ms
+    check_tile_range(tile_irs, old_batch_end_ms // hop_ms, new_hop)
+    return new_hop
+
+
+def collapse(
+    irs: DataFrame,
+    keys: list,
+    tail_start_hop: int,
+    merge: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Fold every IR row older than ``tail_start_hop`` (including a prior
+    COLLAPSED row — its hop sits below any real hop) into one COLLAPSED
+    row per key; rows at/after the boundary pass through untouched.
+    ``merge`` maps the old rows to one merged row per key (per key and
+    bucket for the percentile sketch) with the IR columns — the shared
+    step of GroupByUpload, tile compaction and the serving semilattices."""
+    tails = irs.where(F.col("__hop") >= tail_start_hop)
+    collapsed = (
+        merge(irs.where(F.col("__hop") < tail_start_hop))
+        .withColumn("__hop", F.lit(COLLAPSED_HOP))
+        .select(*tails.columns)
+    )
+    return tails.unionByName(collapsed)
+
+
+def fetch_live_hop(
+    requests: DataFrame,
+    irs: DataFrame,
+    live_events: DataFrame,
+    keys: list,
+    hop_ms: int,
+    n_hops: Optional[int],
+    verify_disjoint: bool,
+    head: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+    empty: dict,
+) -> DataFrame:
+    """The read path of a serving semilattice: per request, the exact
+    ``ts <= request ts`` head over the live hop's raw events ⊕ the tail
+    IR rows — the ``n_hops`` whole hops before the live hop, or with
+    ``n_hops=None`` every row incl. the COLLAPSED one.
+
+    Requests must all sit in one live hop (the tiled-accuracy contract —
+    a closed hop's raw events are compacted away); ``irs`` holds upload ⊕
+    closed-tile rows for hops BEFORE it (checked unless
+    ``verify_disjoint`` is False, for callers whose IRs are structurally
+    pre-live). The semilattice supplies:
+
+    - ``head(rows)``: live-hop event rows joined to their requests
+      (keys, ``__qts``, ``__ets`` + the event columns, ``__ets <= __qts``)
+      -> head IR rows (keys, ``__qts``, IR columns),
+    - ``merge(contrib)``: head ∪ tail IR rows -> (keys, ``__qts``, output
+      columns), one row per request,
+    - ``empty``: {output column: type} of the result when there are no
+      requests.
+
+    Output: keys + ts + the output columns, NULL where a request has no
+    history."""
+    keys = list(keys)
+    q = requests.select(
+        *keys, F.col(TS).alias("__qts"),
+        (F.col(TS) / F.lit(hop_ms)).cast("long").alias("__qhop"),
+    ).distinct()
+    bounds = q.agg(F.min("__qhop"), F.max("__qhop")).first()
+    if bounds[0] is None:
+        return q.select(
+            *keys, F.col("__qts").alias(TS),
+            *[F.lit(None).cast(t).alias(c) for c, t in empty.items()],
+        )
+    assert bounds[0] == bounds[1], "all requests must sit in one live hop"
+    live_hop = int(bounds[0])
+    if verify_disjoint:
+        ir_max = irs.agg(
+            F.max(F.when(F.col("__hop") != COLLAPSED_HOP, F.col("__hop")))
+        ).first()[0]
+        if ir_max is not None and int(ir_max) >= live_hop:
+            raise ValueError(
+                f"IR hop {ir_max} at/after the live hop {live_hop}: double count"
+            )
+
+    # exact head: key-join then ts filter — fan-out bounded by ONE hop's
+    # events per key, the same head bound as the main engine
+    lv = live_events.where(
+        (F.col(TS) / F.lit(hop_ms)).cast("long") == live_hop
+    ).withColumn("__ets", F.col(TS).cast("long"))
+    hd = head(q.join(lv, on=keys, how="inner").where(F.col("__ets") <= F.col("__qts")))
+
+    if n_hops is not None:
+        if n_hops < 1:
+            raise ValueError("n_hops must be >= 1 (the head alone is hop 0)")
+        # all requests share the live hop, so the window is a static hop
+        # slice of the IR table — no per-request fan-out
+        irs = irs.where(
+            (F.col("__hop") != COLLAPSED_HOP)
+            & (F.col("__hop") >= live_hop - int(n_hops))
+            & (F.col("__hop") < live_hop)
+        )
+    tail = irs.join(q.select(*keys, "__qts").distinct(), on=keys, how="inner")
+    out = merge(hd.unionByName(tail.select(*hd.columns)))
+    # left-join back so zero-history requests survive with NULL outputs
+    return q.select(*keys, "__qts").join(
+        out, on=keys + ["__qts"], how="left"
+    ).withColumnRenamed("__qts", TS)
 
 
 def upload_group_by(
@@ -146,71 +217,35 @@ def _tail_start_hop(parts: list, batch_end_ms: int, hop_ms: int) -> int:
 def collapse_irs(
     irs: DataFrame, keys: list, parts: list, tail_start_hop: int
 ) -> DataFrame:
-    """Fold every IR row older than ``tail_start_hop`` (including a prior
-    COLLAPSED row — its hop sits below any real hop) into one collapsed
-    row per key; rows at/after the boundary pass through untouched. The
-    shared merge step of GroupByUpload and tile compaction."""
-    tails = irs.where(F.col("__hop") >= tail_start_hop)
-    old = irs.where(F.col("__hop") < tail_start_hop)
-    # highest central-moment order needed per input column
-    order_of: dict = {}
-    for p in parts:
-        o = {Operation.VARIANCE: 2, Operation.SKEW: 3, Operation.KURTOSIS: 4}.get(
-            p.operation, 0
+    """:func:`collapse` with the scalar IR merge (``hop_ir``): moment
+    columns merge as sums about the per-key offset and re-center to the
+    collapsed group's own mean, so the row is a regular hop-style IR."""
+    cols = hop_ir.ir_columns(parts)
+    moment_inputs = hop_ir.moment_inputs(parts)
+
+    def merge(old: DataFrame) -> DataFrame:
+        merged = (
+            hop_ir.with_offsets(old, keys, moment_inputs)
+            .groupBy(*keys)
+            .agg(
+                *[hop_ir.merge(k, c).alias(f"i_{k}_{c}") for k, c in cols],
+                *[F.first(f"__k_{c}").alias(f"__k_{c}") for c in moment_inputs],
+            )
         )
-        if o:
-            order_of[p.input_column] = max(order_of.get(p.input_column, 0), o)
-    var_cols = sorted(order_of)
-    if var_cols:
-        # per-key offset for the stable variance merge — one cheap agg over
-        # IR rows (not raw events), shuffle-joined back on the same keys
-        # (AQE broadcasts it when it is small; never force at 10^9 keys)
-        kdf = old.groupBy(*keys).agg(
-            *[
-                (F.sum(f"i_sum_{c}") / F.sum(f"i_cnt_{c}")).alias(f"__k_{c}")
-                for c in var_cols
+        recentered: dict = {}
+        for c in moment_inputs:
+            n = F.col(f"i_cnt_{c}")
+            sums = [
+                F.col(f"i_{m}_{c}") if (m, c) in cols else None
+                for m in hop_ir.MOMENTS
             ]
-        )
-        old = old.join(kdf, on=keys, how="left")
-    collapsed = old.groupBy(*keys).agg(*_merge_aggs(parts))
-    for c in var_cols:
-        n = F.col(f"i_cnt_{c}")
-        a = F.col(f"i_sum_{c}") - n * F.col(f"__k_{c}")
-        s2k = F.col(f"__m2s_{c}") + F.col(f"__b_{c}")
-        delta = a / n
-        collapsed = collapsed.withColumn(
-            f"i_m2_{c}", F.when(n > 0, s2k - n * F.pow(delta, 2))
-        )
-        drops = [f"__m2s_{c}", f"__b_{c}", f"__k_{c}"]
-        if order_of[c] >= 3:
-            # re-center the collapsed 3rd/4th sums from K to the collapsed
-            # group's own mean — the result is a regular hop-style IR
-            s3k = F.col(f"__s3_{c}")
-            collapsed = collapsed.withColumn(
-                f"i_m3_{c}",
-                F.when(
-                    n > 0, s3k - 3 * delta * s2k + 2 * n * F.pow(delta, 3)
-                ),
-            )
-            drops.append(f"__s3_{c}")
-        if order_of[c] >= 4:
-            s4k = F.col(f"__s4_{c}")
-            collapsed = collapsed.withColumn(
-                f"i_m4_{c}",
-                F.when(
-                    n > 0,
-                    s4k
-                    - 4 * delta * F.col(f"__s3_{c}")
-                    + 6 * F.pow(delta, 2) * s2k
-                    - 3 * n * F.pow(delta, 4),
-                ),
-            )
-            drops.append(f"__s4_{c}")
-        collapsed = collapsed.drop(*drops)
-    collapsed = collapsed.withColumn("__hop", F.lit(COLLAPSED_HOP)).select(
-        *tails.columns
-    )
-    return tails.unionByName(collapsed)
+            moments = hop_ir.recenter(n, F.col(f"i_sum_{c}"), *sums, F.col(f"__k_{c}"))
+            for m, v in zip(hop_ir.MOMENTS, moments):
+                if v is not None:
+                    recentered[f"i_{m}_{c}"] = F.when(n > 0, v)
+        return merged.withColumns(recentered)
+
+    return collapse(irs, keys, tail_start_hop, merge)
 
 
 def compact_tiles(
@@ -242,25 +277,9 @@ def compact_tiles(
     frame must not carry a collapsed row. Scale: one groupBy over
     (keys × tail hops) IR rows — input-size independent.
     """
-    assert old_batch_end_ms % hop_ms == 0 and new_batch_end_ms % hop_ms == 0, (
-        "batch ends must align to hop boundaries"
-    )
-    assert new_batch_end_ms >= old_batch_end_ms, "batch end cannot move backward"
+    compaction_end_hop(tile_irs, old_batch_end_ms, new_batch_end_ms, hop_ms)
     keys = list(group_by.key_columns)
     parts = [p for p in group_by.unpack() if p.bucket is None]
-    old_hop, new_hop = old_batch_end_ms // hop_ms, new_batch_end_ms // hop_ms
-    bounds = tile_irs.agg(F.min("__hop"), F.max("__hop")).first()
-    if bounds[0] is not None:
-        if int(bounds[0]) < old_hop:
-            raise ValueError(
-                f"tile hop {bounds[0]} inside the old batch range (< {old_hop}): "
-                "already counted in the upload"
-            )
-        if int(bounds[1]) >= new_hop:
-            raise ValueError(
-                f"tile hop {bounds[1]} at/after the new batch end ({new_hop}): "
-                "compact it in the next cycle"
-            )
     # STRICT union: a tile frame missing an IR column would silently
     # null-fill and corrupt the merge (e.g. a VARIANCE part's i_m2);
     # stream_hop_irs is pinned to the exact batch IR shape, so any

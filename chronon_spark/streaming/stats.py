@@ -76,12 +76,14 @@ class StreamingStats:
         has_ts = TS in batch_df.columns
         lat_rows = None
         if has_ts:
-            lat = (F.lit(now_ms) - F.col(TS).cast("long")).cast("double")
+            # clamped to >= 1 ms for both the mean and the sketch (a
+            # future-dated event has no negative latency)
+            lat = F.greatest(
+                (F.lit(now_ms) - F.col(TS).cast("long")).cast("double"), F.lit(1.0)
+            )
             aggs.append(F.sum(lat).alias("lat_total"))
             lat_rows = (
-                batch_df.select(
-                    bucket_expr(F.greatest(lat, F.lit(1.0))).alias("bucket")
-                )
+                batch_df.select(bucket_expr(lat).alias("bucket"))
                 .groupBy("bucket")
                 .count()
                 .collect()

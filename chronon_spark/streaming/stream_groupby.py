@@ -62,16 +62,16 @@ def partial_ir_aggs(group_by: GroupBy) -> list:
             add(f"ir_cnt_{c}", F.count(c))
             add(f"ir_sum_{c}", F.sum(F.col(c).cast("double")))
             if op is Operation.VARIANCE:
-                # per-tile m2 (Welford-stable), matching the batch hop IRs
-                # (asof_hopped._ir_aggs) for the lambda merge
+                # per-tile m2 (Welford-stable), the same update as the
+                # batch hop IRs (operators.hop_ir)
                 add(f"ir_m2_{c}", F.var_pop(F.col(c).cast("double")) * F.count(c))
         elif op is Operation.MIN:
             add(f"ir_min_{c}", F.min(c))
         elif op is Operation.MAX:
             add(f"ir_max_{c}", F.max(c))
         elif op is Operation.LAST:
-            # null-skipping order key mirrors the batch hop IRs
-            # (asof_hopped._ir_aggs) so batch==stream tile IR equality holds
+            # null-skipping order key, as in the batch hop IRs
+            # (operators.hop_ir), so batch==stream tile IR equality holds
             # when the newest value in a tile is null
             add(f"ir_last_{c}", F.max_by(c, F.when(F.col(c).isNotNull(), F.col("ts"))))
         elif op is Operation.FIRST:
@@ -245,7 +245,7 @@ def stream_hop_irs(
     the last-writer-wins KV upsert (``run_untiled_upsert`` keyed on
     keys + __hop) correct under late events and replays.
     """
-    from chronon_spark.operators.asof_hopped import _ir_aggs
+    from chronon_spark.operators import hop_ir
 
     keys = list(group_by.key_columns)
     wet = events.withColumn("__event_time", F.timestamp_millis(F.col("ts")))
@@ -253,7 +253,7 @@ def stream_hop_irs(
         wet = wet.withWatermark("__event_time", watermark)
     agg = wet.groupBy(
         F.window("__event_time", f"{hop_ms} milliseconds").alias("__w"), *keys
-    ).agg(*_ir_aggs(group_by.unpack()))
+    ).agg(*hop_ir.update_aggs(group_by.unpack()))
     return agg.select(
         *keys,
         (F.unix_millis(F.col("__w.start")) / hop_ms).cast("long").alias("__hop"),

@@ -1,9 +1,9 @@
 """Property test for the compaction algebra: folding any prefix collapse
 plus a tile slice must equal the one-shot collapse — i.e. collapse_irs
-is associative over arbitrary batch-end splits, including the VARIANCE
-shifted-moment re-merge of an already-collapsed row. Adversarial draws:
-duplicate timestamps, null values, keys missing from one side of the
-split, empty slices."""
+is associative over arbitrary batch-end splits, including the shifted
+central-moment re-merge (2nd to 4th order: VARIANCE, SKEW, KURTOSIS) of
+an already-collapsed row. Adversarial draws: duplicate timestamps, null
+values, keys missing from one side of the split, empty slices."""
 
 import numpy as np
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -33,6 +33,8 @@ def _gb():
             Aggregation("v", Operation.SUM, windows=(Window.hours(4),)),
             Aggregation("v", Operation.COUNT),
             Aggregation("v", Operation.VARIANCE),
+            Aggregation("v", Operation.SKEW, windows=(Window.hours(4),)),
+            Aggregation("v", Operation.KURTOSIS),
             Aggregation("v", Operation.LAST),
             Aggregation("v", Operation.MIN),
             Aggregation("v", Operation.UNIQUE_COUNT, windows=(Window.hours(4),)),
@@ -96,7 +98,7 @@ def test_split_collapse_equals_one_shot(spark, case):
                 g[c].map(lambda s: tuple(sorted(s)))
                 == e[c].map(lambda s: tuple(sorted(s)))
             ).all(), c
-        elif c.startswith("i_m2"):
+        elif c.startswith(("i_m2", "i_m3", "i_m4")):
             assert np.allclose(
                 g[c].astype(float).fillna(-1), e[c].astype(float).fillna(-1)
             ), c

@@ -634,6 +634,46 @@ def test_entity_upload_fetch_equals_recompute(spark, wfixture, tmp_path):
             assert (a == b).all(), c
 
 
+def test_entity_upload_scans_only_its_snapshot_partition(
+    spark, wfixture, tmp_path, monkeypatch
+):
+    """upload_temporal_entities builds its batch IRs from the ONE snapshot
+    partition serving the batch end's day (day - 1), not from every
+    partition: the snapshot scan carries that partition predicate."""
+    from chronon_spark.api.types import Window
+    from chronon_spark.plans import entity_serving
+
+    seen = []
+    real = entity_serving.entity_batch_irs
+
+    def spy(spark_, group_by, tail_buffer_ms=2 * DAY_MS, snapshot_df=None):
+        seen.append(snapshot_df)
+        return real(spark_, group_by, tail_buffer_ms, snapshot_df=snapshot_df)
+
+    monkeypatch.setattr(entity_serving, "entity_batch_irs", spy)
+    snap_path, mut_path, _, _, _ = wfixture
+    gb = _w_gb(
+        snap_path, mut_path,
+        (Aggregation("price", Operation.SUM, windows=(Window.days(7),)),),
+    )
+    batch_end = T0 + 5 * DAY_MS
+    entity_serving.upload_temporal_entities(
+        spark, gb, batch_end, str(tmp_path / "up_pruned")
+    )
+
+    assert len(seen) == 1 and seen[0] is not None
+    snap_ds = pd.Timestamp(batch_end - DAY_MS, unit="ms").strftime("%Y-%m-%d")
+    # plan strings cut scan metadata at maxMetadataStringLength chars
+    prev_len = spark.conf.get("spark.sql.maxMetadataStringLength")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
+    try:
+        plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.maxMetadataStringLength", prev_len)
+    scans = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+    assert scans and all(snap_ds in ln for ln in scans), scans
+
+
 def test_entity_fetch_rejects_out_of_day_requests(spark, wfixture, tmp_path):
     from chronon_spark.plans.entity_serving import (
         fetch_temporal_entities,

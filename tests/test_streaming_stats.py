@@ -50,6 +50,30 @@ def test_streaming_stats_accumulates_across_batches(spark):
     assert out["writes"] == 2 and out["total_value_bytes"] == 4
 
 
+def test_streaming_stats_clamps_future_dated_latency(spark):
+    """A future-dated event counts as 1 ms of latency in the mean, as it
+    does in the latency sketch, so the mean stays within the percentiles."""
+    from chronon_spark.streaming.stats import StreamingStats
+
+    import time
+
+    st = StreamingStats(publish_delay_seconds=0)
+    now = int(time.time() * 1000)
+    batch = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "user_id": [1, 2, 3, 4],
+                "v": ["a", "b", "c", "d"],
+                "ts": [now - 1000, now - 1000, now - 1000, now + 1_000_000],
+            }
+        )
+    )
+    out = st.observe(batch, ["user_id"], ["v"], now_ms=now)
+    assert out["avg_latency_ms"] >= 1
+    assert out["avg_latency_ms"] <= out["p99_latency_ms"]
+    assert out["avg_latency_ms"] == pytest.approx((3 * 1000 + 1) / 4, abs=1)
+
+
 def test_topic_partitions_file_twin(spark, tmp_path):
     from chronon_spark.streaming.kafka import encode_kafka_records
     from chronon_spark.streaming.stats import topic_partitions

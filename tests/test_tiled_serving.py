@@ -145,7 +145,7 @@ def test_tiled_serve_refuses_closed_hop_requests_and_overlap(spark, sf_dir):
     # tiles reaching into the batch range are refused (double-count guard)
     bad_tiles = hop_irs_for(ev, gb, DAY_MS)  # covers pre-boundary hops too
     reqs = ev.where(F.col("ts") >= live_start).select("user_id", "ts").limit(5)
-    with pytest.raises(AssertionError, match="overlaps the batch range"):
+    with pytest.raises(ValueError, match="overlaps the batch range"):
         fetch_group_by_tiled(
             spark, gb, reqs, BOUNDARY, DAY_MS, upload, bad_tiles, live_events
         )
