@@ -20,9 +20,10 @@ ops with whole-stage codegen end to end — no Python anywhere:
 3. **exact head**: events of the query's own hop with ``e.ts <= q.ts``,
    aggregated per query via a (keys, hop) equi-join — the join is balanced
    because a single hop of even the hottest key is |key events|/#hops.
-4. **combine**: tail ⊕ head per op (sums add, min/max fold, last/first
-   compare (ts, v) structs, central moments ``hop_ir.shift`` to the
-   per-key offset, add and ``hop_ir.recenter``).
+4. **combine**: tail ⊕ head per IR kind (sums add, min/max fold,
+   last/first compare (ts, v) structs, central moments ``hop_ir.shift``
+   to the per-key offset and add), then ``hop_ir.finalize`` — the same
+   finalize as the serving read (``plans.fetcher``).
 
 Window-boundary semantics = the kernel's sawtooth mode (pinned by tests
 against chronon_spark.kernel.sawtooth with ``tail_hop_ms`` set): head
@@ -213,6 +214,43 @@ def _bucketed_maps(spark, group_by, queries, hop_ms, query_range, prune_keys):
     return maps_df
 
 
+def _head_plus_tail(p, hop_ms: int) -> tuple:
+    """(kind -> tail ⊕ head IR, offset K) of one part, for
+    ``hop_ir.finalize``: the tail's ``t_*`` merge with the head's ``h_*``
+    IR — sums add (the head's central moments shifted to the per-key
+    offset K first), min/max/first/last fold, sets and sketches union."""
+    c = p.input_column
+    sfx = _tail_sfx(c, _w_hops(p, hop_ms))
+    own = hop_ir.kinds(p.operation)
+    k = F.col(f"__k_{c}") if "m2" in own else None
+
+    def h(kind: str) -> Column:
+        return F.col(f"h_{kind}_{c}")
+
+    shifted = {}
+    if k is not None:
+        moments = hop_ir.shift(
+            h("cnt"), h("sum"), *[h(m) if m in own else None for m in hop_ir.MOMENTS], k
+        )
+        shifted = dict(zip(hop_ir.MOMENTS, moments))
+
+    def ir(kind: str) -> Column:
+        t = F.col(f"t_{kind}_{sfx}")
+        if kind == "cnt" or kind == "sum" or kind in hop_ir.MOMENTS:
+            zero = F.lit(0) if kind == "cnt" else F.lit(0.0)
+            return F.coalesce(t, zero) + F.coalesce(shifted.get(kind, h(kind)), zero)
+        if kind in ("min", "first"):
+            return F.least(t, h(kind))
+        if kind in ("max", "last"):
+            return F.greatest(t, h(kind))
+        a, b = F.coalesce(t, h(kind)), F.coalesce(h(kind), t)
+        if kind == "set":
+            return F.array_distinct(F.array_union(a, b))
+        return F.hll_union(a, b, True)
+
+    return ir, k
+
+
 def hop_irs_for(events: DataFrame, group_by: GroupBy, hop_ms: int) -> DataFrame:
     """(keys, __hop, i_* partial IRs) — the batch-side upload shape of the
     lambda architecture (reference GroupByUpload FinalBatchIr tail hops)."""
@@ -320,12 +358,18 @@ def group_by_asof_hopped(
     events = null_out_nans(events, list({p.input_column for p in parts}))
     # Same upfront null-key/ts drop as q: a null-key event groups under a
     # key no query can match, a null-ts event has no hop — both contribute
-    # nothing. Filtering here equalizes the hop-IR and exact-head branches'
-    # pushed filters so the shared repartition below is REUSED (one events
-    # scan + one shuffle per part) instead of re-planned per consumer.
+    # nothing. The explicit ``__hop IS NOT NULL`` is the predicate the
+    # exact-head join would otherwise infer on its own branch only; stated
+    # here, both branches push the same filters below the repartition, so
+    # its exchange is planned once and REUSED. Reuse needs the two
+    # subtrees to match after column pruning too: it holds when the head
+    # reads every column the hop IRs read (a LAST/FIRST part reads ts), and
+    # not when the hop-IR branch prunes ts away (COUNT/SUM/MAX only), which
+    # then scans the events a second time.
     for _c in list(keys) + [TS]:
         events = events.where(F.col(_c).isNotNull())
     events = events.withColumn("__hop", (F.col(TS) / hop_ms).cast("long"))
+    events = events.where(F.col("__hop").isNotNull())
     # ONE shuffle of the big side: repartition on (keys, hop) satisfies the
     # distribution requirement of BOTH consumers — the hop-IR aggregation
     # (map-side combine still applies within partitions) and the exact-head
@@ -347,8 +391,8 @@ def group_by_asof_hopped(
         # would double-count (each (key, hop) must come from exactly one
         # side). Driver-side check on the hop boundaries — costs one agg
         # pass over EACH side, so callers that enforce disjointness
-        # structurally (plans/fetcher.py filters fresh rows to
-        # ts >= batch_end before calling) pass verify_disjoint=False.
+        # structurally (fresh rows filtered to ts >= a hop-aligned batch
+        # end) pass verify_disjoint=False.
         if verify_disjoint:
             max_extra = extra_hop_irs.agg(F.max("__hop")).first()[0]
             min_fresh = events.agg(F.min("__hop")).first()[0]
@@ -425,84 +469,10 @@ def group_by_asof_hopped(
     #    completes the sawtooth — q itself is not consumed again.
     joined = heads.join(tails, on=keys + ["__hop"], how="left")
 
-    out_cols: list[Column] = []
-    for p in parts:
-        c = p.input_column
-        op = p.operation
-        sfx = _tail_sfx(c, _w_hops(p, hop_ms))
-        name = p.output_column
-        if op in hop_ir.MOMENT_OPS:
-            cnt = F.coalesce(F.col(f"t_cnt_{sfx}"), F.lit(0)) + F.coalesce(
-                F.col(f"h_cnt_{c}"), F.lit(0)
-            )
-            s = F.when(
-                cnt > 0,
-                F.coalesce(F.col(f"t_sum_{sfx}"), F.lit(0.0))
-                + F.coalesce(F.col(f"h_sum_{c}"), F.lit(0.0)),
-            )
-            if op is Operation.COUNT:
-                out_cols.append(cnt.alias(name))
-            elif op is Operation.SUM:
-                out_cols.append(s.alias(name))
-            elif op is Operation.AVERAGE:
-                out_cols.append((s / cnt).alias(name))
-            else:  # VARIANCE/SKEW/KURTOSIS (population, excess): head and
-                # tail sums about the per-key offset K add, then re-center
-                # to the window's own mean
-                k = F.col(f"__k_{c}")
-                kinds = hop_ir.kinds(op)
-                head = hop_ir.shift(
-                    F.col(f"h_cnt_{c}"),
-                    F.col(f"h_sum_{c}"),
-                    *[F.col(f"h_{m}_{c}") if m in kinds else None for m in hop_ir.MOMENTS],
-                    k,
-                )
-                sums = [
-                    None
-                    if h is None
-                    else F.coalesce(F.col(f"t_{m}_{sfx}"), F.lit(0.0))
-                    + F.coalesce(h, F.lit(0.0))
-                    for m, h in zip(hop_ir.MOMENTS, head)
-                ]
-                m2, m3, m4 = hop_ir.recenter(cnt, s, *sums, k)
-                m2bar = m2 / cnt
-                if op is Operation.VARIANCE:
-                    val = F.when(cnt > 0, F.greatest(m2bar, F.lit(0.0)))
-                else:
-                    val = (
-                        (m3 / cnt) / F.pow(m2bar, 1.5)
-                        if op is Operation.SKEW
-                        else (m4 / cnt) / F.pow(m2bar, 2.0) - 3.0
-                    )
-                    # kernel null rule: defined only for n > 1 and m2 > 0
-                    val = F.when((cnt > 1) & (m2bar > 0), val)
-                out_cols.append(val.alias(name))
-        elif op is Operation.MIN:
-            out_cols.append(F.least(f"t_min_{sfx}", f"h_min_{c}").alias(name))
-        elif op is Operation.MAX:
-            out_cols.append(F.greatest(f"t_max_{sfx}", f"h_max_{c}").alias(name))
-        elif op is Operation.LAST:
-            st = F.greatest(F.col(f"t_last_{sfx}"), F.col(f"h_last_{c}"))
-            out_cols.append(st["v"].alias(name))
-        elif op is Operation.FIRST:
-            st = F.least(F.col(f"t_first_{sfx}"), F.col(f"h_first_{c}"))
-            out_cols.append(st["v"].alias(name))
-        elif op is Operation.UNIQUE_COUNT:
-            t_set, h_set = F.col(f"t_set_{sfx}"), F.col(f"h_set_{c}")
-            merged = F.array_distinct(
-                F.array_union(F.coalesce(t_set, h_set), F.coalesce(h_set, t_set))
-            )
-            out_cols.append(
-                F.when(t_set.isNull() & h_set.isNull(), F.lit(0))
-                .otherwise(F.size(merged))
-                .cast("long")
-                .alias(name)
-            )
-        elif op is Operation.APPROX_UNIQUE_COUNT:
-            est = F.hll_sketch_estimate(
-                F.hll_union(F.col(f"t_hll_{sfx}"), F.col(f"h_hll_{c}"), True)
-            )
-            out_cols.append(est.alias(name))
+    out_cols = [
+        hop_ir.finalize(p.operation, *_head_plus_tail(p, hop_ms)).alias(p.output_column)
+        for p in parts
+    ]
     out = joined.select(*keys, TS, *out_cols)
     if group_by.derivations:
         out = apply_derivations(out, group_by.derivations, keys + [TS])

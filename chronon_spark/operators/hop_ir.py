@@ -1,9 +1,10 @@
-"""The scalar hop-IR algebra: one (update, merge, shift/recenter) per
-``Operation``, shared by the hopped backfill (hop IRs, tail windows,
-head ⊕ tail finalize), the batch upload and tile compaction
-(``plans.upload.collapse_irs``) and the streaming tiles
-(``streaming.stream_groupby.stream_hop_irs``) — the reference's
-``SimpleAggregators`` / ``RowAggregator`` written once.
+"""The scalar hop-IR algebra: one (update, merge, shift/recenter,
+finalize) per ``Operation``, shared by the hopped backfill (hop IRs, tail
+windows, head ⊕ tail finalize), the batch upload and tile compaction
+(``plans.upload.collapse_irs``), the streaming tiles
+(``streaming.stream_groupby.stream_hop_irs``) and the serving read
+(``plans.fetcher``) — the reference's ``SimpleAggregators`` /
+``RowAggregator`` written once.
 
 An IR column is ``i_{kind}_{input}``; an operation's kinds are:
 
@@ -23,7 +24,7 @@ the merged group's own mean. Every term is O(n·sigma^2).
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
@@ -201,3 +202,44 @@ def merge(kind: str, c: str, over: Optional[W] = None) -> Column:
     if kind == "set":
         return F.array_distinct(F.flatten(agg(F.collect_list(ir))))
     return agg(F.hll_union_agg(ir))
+
+
+def finalize(
+    op: Operation, ir: Callable[[str], Column], k: Optional[Column] = None
+) -> Column:
+    """Merged IR -> feature value: the one finalize of the backfill's
+    head ⊕ tail combine and the serving read. ``ir(kind)`` is the merged
+    IR column of that kind (null: nothing merged); moment kinds hold sums
+    about the offset ``k``, recentered here. Empty windows give 0 for the
+    counting ops and null for everything else (the kernel's rule)."""
+    if op in MOMENT_OPS:
+        n = F.coalesce(ir("cnt"), F.lit(0))
+        s = F.when(n > 0, ir("sum"))
+        if op is Operation.COUNT:
+            return n
+        if op is Operation.SUM:
+            return s
+        if op is Operation.AVERAGE:
+            return s / n
+        own = kinds(op)
+        m2, m3, m4 = recenter(
+            n, s, *[ir(m) if m in own else None for m in MOMENTS], k
+        )
+        m2bar = m2 / n
+        if op is Operation.VARIANCE:
+            return F.when(n > 0, F.greatest(m2bar, F.lit(0.0)))
+        val = (
+            (m3 / n) / F.pow(m2bar, 1.5)
+            if op is Operation.SKEW
+            else (m4 / n) / F.pow(m2bar, 2.0) - 3.0
+        )
+        # population skew / excess kurtosis: defined for n > 1 and m2 > 0
+        return F.when((n > 1) & (m2bar > 0), val)
+    kind = _KIND[op]
+    if kind in ("min", "max"):
+        return ir(kind)
+    if kind in ("last", "first"):
+        return ir(kind)["v"]
+    if kind == "set":
+        return F.when(ir(kind).isNull(), F.lit(0)).otherwise(F.size(ir(kind))).cast("long")
+    return F.coalesce(F.hll_sketch_estimate(ir(kind)), F.lit(0).cast("long"))

@@ -16,15 +16,18 @@ traffic. The lambda contract is identical:
 - batch side: the FinalBatchIr upload table (``plans/upload.py`` —
   collapsed row + tail hops at a hop-aligned ``batch_end_ms``),
 - fresh side: only rows with ``ts >= batch_end_ms`` (streaming tiles),
-- merge: ``group_by_asof_hopped(..., events_df=fresh,
-  extra_hop_irs=upload)`` — tails stitch batch hops with fresh tiles,
-  heads are event-exact. Sawtooth accuracy, same as the reference's
-  online results, which is exactly what its offline backfill reproduces.
+- merge: request-first (``plans.upload.fetch_live_hop``, the reference's
+  per-request FinalBatchIr ⊕ tiles merge). Each request reads its own
+  key's upload ⊕ fresh hop-IR rows before its hop (the tail) and its own
+  hop's events up to its ts (the exact head); one aggregation per request
+  merges them, each window keeping the rows inside it, and
+  ``hop_ir.finalize`` turns the merged IRs into features. Sawtooth
+  accuracy, identical to ``group_by_asof_hopped`` over full history.
 
-Scale: requests shuffle once per join part on (mapped keys, ts) — the
-same fold as ``join_asof`` — and the fresh-event scan is bounded below
-by ``batch_end_ms``, so a day of serving traffic reads one day of
-events plus the upload table, never full history.
+Scale: a request's tail is bounded by the upload's shape (one collapsed
+row + the largest window's hops + the fresh hops per key), so the merge
+grows with the requests and their keys' rows, not with the whole upload;
+the fresh-event scan is bounded below by ``batch_end_ms``.
 """
 
 from __future__ import annotations
@@ -37,7 +40,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from chronon_spark.api.types import Accuracy, GroupBy, Join, validate_identifier
-from chronon_spark.operators.asof_hopped import group_by_asof_hopped, supports_hopped
+from chronon_spark.operators import hop_ir
+from chronon_spark.operators.asof_hopped import (
+    _tail_sfx,
+    _w_hops,
+    hop_irs_for,
+    supports_hopped,
+)
 from chronon_spark.operators.asof_join import (
     _jp_out_cols,
     apply_derivations,
@@ -45,7 +54,7 @@ from chronon_spark.operators.asof_join import (
     null_out_nans,
     part_output_field,
 )
-from chronon_spark.plans.upload import check_tile_range, upload_group_by
+from chronon_spark.plans.upload import check_tile_range, fetch_live_hop, upload_group_by
 from chronon_spark.sources.scan import TS
 
 
@@ -63,15 +72,27 @@ class GroupByServingInfo:
 
 def _check_servable(group_by: GroupBy, batch_end_ms: int, hop_ms: int) -> None:
     """The lambda merge's preconditions on a GroupBy and its batch end."""
-    assert batch_end_ms % hop_ms == 0, "batch end must align to a hop boundary"
-    assert supports_hopped(group_by, hop_ms), (
-        "fetcher serves hop-mergeable operations only "
-        "(reference serving set; see asof_hopped.HOPPED_OPS)"
-    )
-    assert group_by.accuracy is Accuracy.TEMPORAL, (
-        "SNAPSHOT GroupBys are served straight from the daily snapshot "
-        "table (plans/snapshot path), not the lambda merge"
-    )
+    if batch_end_ms % hop_ms:
+        raise ValueError("batch end must align to a hop boundary")
+    if group_by.aggregations is None:
+        raise ValueError(
+            "no-agg GroupBys are SNAPSHOT entity passthroughs; the fetcher "
+            "serves explicit aggregations"
+        )
+    if not supports_hopped(group_by, hop_ms):
+        raise ValueError(
+            "fetcher serves hop-mergeable operations only "
+            "(reference serving set; see asof_hopped.HOPPED_OPS)"
+        )
+    if any(p.bucket is not None for p in group_by.unpack()):
+        raise ValueError(
+            "bucketed aggregations are not served by the lambda read path"
+        )
+    if group_by.accuracy is not Accuracy.TEMPORAL:
+        raise ValueError(
+            "SNAPSHOT GroupBys are served straight from the daily snapshot "
+            "table (plans/snapshot path), not the lambda merge"
+        )
 
 
 def group_by_serving_info(
@@ -250,17 +271,80 @@ def fetch_group_by(
     ).where(F.col(TS) >= batch_end_ms)
     # disjointness holds structurally: fresh rows are filtered to
     # ts >= batch_end above, and upload_group_by only emits hops strictly
-    # below the (hop-aligned) batch end — skip the hopped plan's extra
-    # verification scans over both sides.
-    return group_by_asof_hopped(
-        spark,
-        group_by,
-        requests,
-        hop_ms,
-        events_df=fresh_events,
-        extra_hop_irs=upload,
-        verify_disjoint=False,
-    )
+    # below the (hop-aligned) batch end
+    return _serve_hop_irs(group_by, requests, upload, fresh_events, hop_ms)
+
+
+def _serve_hop_irs(
+    group_by: GroupBy,
+    requests: DataFrame,
+    batch_irs: DataFrame,
+    events: DataFrame,
+    hop_ms: int,
+) -> DataFrame:
+    """Scalar-IR features at each distinct request (keys, ts) through
+    ``fetch_live_hop``: the tail reads ``batch_irs`` ∪ the hop IRs of
+    ``events`` (all of whose hops come after ``batch_irs``'), the head
+    reads ``events``. One aggregation per request merges each part's IR
+    over the rows inside its window (``hop >= qhop - window``; every row
+    for an unbounded window), moment IRs about the request's own offset K,
+    and ``hop_ir.finalize`` turns them into features."""
+    keys = [validate_identifier(k) for k in group_by.key_columns]
+    parts = group_by.unpack()
+    windows = {_w_hops(p, hop_ms) for p in parts}
+    n_hops = None if None in windows else max(windows)
+    irs = batch_irs.unionByName(hop_irs_for(events, group_by, hop_ms))
+    # null keys/ts can never match an event or an IR row
+    requests = requests.select(*keys, F.col(TS).cast("long").alias(TS)).dropna()
+
+    def head(rows: DataFrame) -> DataFrame:
+        return rows.groupBy(*keys, "__qts").agg(*hop_ir.update_aggs(parts))
+
+    def merge(contrib: DataFrame) -> DataFrame:
+        contrib = hop_ir.with_offsets(
+            contrib, keys + ["__qts"], hop_ir.moment_inputs(parts)
+        )
+        # a part's window is its own IR column set ``i_{kind}_{sfx}``: the
+        # IR where the row lies inside the window, null elsewhere
+        windowed: dict = {}
+        for p in parts:
+            c, w = p.input_column, _w_hops(p, hop_ms)
+            sfx = _tail_sfx(c, w)
+            inside = None if w is None else F.col("__hop") >= F.col("__qhop") - w
+            for kind in hop_ir.kinds(p.operation):
+                ir = F.col(f"i_{kind}_{c}")
+                windowed[(kind, sfx)] = ir if inside is None else F.when(inside, ir)
+                if kind == "m2":
+                    windowed[("k", sfx)] = F.col(f"__k_{c}")
+        merged = contrib.select(
+            *keys,
+            "__qts",
+            *[
+                v.alias(f"__k_{sfx}" if kind == "k" else f"i_{kind}_{sfx}")
+                for (kind, sfx), v in windowed.items()
+            ],
+        ).groupBy(*keys, "__qts").agg(
+            *[
+                F.first(f"__k_{sfx}").alias(f"__k_{sfx}")
+                if kind == "k"
+                else hop_ir.merge(kind, sfx).alias(f"i_{kind}_{sfx}")
+                for kind, sfx in windowed
+            ]
+        )
+        feats = []
+        for p in parts:
+            sfx = _tail_sfx(p.input_column, _w_hops(p, hop_ms))
+            k = F.col(f"__k_{sfx}") if ("k", sfx) in windowed else None
+            value = hop_ir.finalize(
+                p.operation, lambda kind, sfx=sfx: F.col(f"i_{kind}_{sfx}"), k
+            )
+            feats.append(value.alias(p.output_column))
+        return merged.select(*keys, "__qts", *feats)
+
+    out = fetch_live_hop(requests, irs, events, keys, hop_ms, n_hops, head, merge)
+    if group_by.derivations:
+        out = apply_derivations(out, group_by.derivations, keys + [TS])
+    return out
 
 
 def fetch_join(
@@ -504,8 +588,8 @@ def fetch_group_by_tiled(
     batch end are refused (double-count guard), and live events are
     clipped to ``ts >= live_hop * hop_ms``.
     """
+    _check_servable(group_by, batch_end_ms, hop_ms)
     batch_end_hop = batch_end_ms // hop_ms
-    assert batch_end_ms % hop_ms == 0, "batch end must align to a hop"
     _, max_tile = check_tile_range(tile_irs, batch_end_hop, live_hop, "the live hop")
     if live_hop is None:
         live_hop = (int(max_tile) + 1) if max_tile is not None else batch_end_hop
@@ -519,13 +603,7 @@ def fetch_group_by_tiled(
     live = null_out_nans(live_events, list({p.input_column for p in parts})).where(
         F.col(TS) >= live_hop * hop_ms
     )
+    # disjointness enforced structurally above: upload < batch end <= tiles
+    # < live hop <= live events
     merged = upload.unionByName(tile_irs, allowMissingColumns=True)
-    return group_by_asof_hopped(
-        spark,
-        group_by,
-        requests,
-        hop_ms,
-        events_df=live,
-        extra_hop_irs=merged,
-        verify_disjoint=False,  # disjointness enforced structurally above
-    )
+    return _serve_hop_irs(group_by, requests, merged, live, hop_ms)

@@ -44,7 +44,12 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronon_spark.plans.upload import collapse, compaction_end_hop, fetch_live_hop
+from chronon_spark.plans.upload import (
+    check_live_hop,
+    collapse,
+    compaction_end_hop,
+    fetch_live_hop,
+)
 from chronon_spark.sources.scan import TS
 
 
@@ -170,12 +175,11 @@ def fetch_freq_topk(
             out_col, F.slice(F.transform("entries", lambda e: e["v"]), 1, int(k))
         ).drop("entries")
 
-    item_type = live_events.schema[item_col].dataType.simpleString()
+    check_live_hop(requests, irs, hop_ms, verify_disjoint)
     return fetch_live_hop(
-        requests, irs, live_events, keys, hop_ms, n_hops, verify_disjoint,
+        requests, irs, live_events, keys, hop_ms, n_hops,
         lambda rows: _lift(rows, keys + ["__qts"], item_col, m),
         merge,
-        {out_col: f"array<{item_type}>"},
     )
 
 

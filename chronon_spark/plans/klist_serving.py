@@ -47,7 +47,12 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronon_spark.plans.upload import collapse, compaction_end_hop, fetch_live_hop
+from chronon_spark.plans.upload import (
+    check_live_hop,
+    collapse,
+    compaction_end_hop,
+    fetch_live_hop,
+)
 from chronon_spark.sources.scan import TS
 
 _MODES = ("last_k", "top_k", "first_k", "bottom_k", "unique_top_k")
@@ -226,8 +231,7 @@ def fetch_klist(
             out_col, F.transform(F.col("__m"), lambda e: e["v"])
         ).drop("__m")
 
-    value_type = live_events.schema[value_col].dataType.simpleString()
+    check_live_hop(requests, irs, hop_ms, verify_disjoint)
     return fetch_live_hop(
-        requests, irs, live_events, keys, hop_ms, n_hops, verify_disjoint,
-        head, merge, {out_col: f"array<{value_type}>"},
+        requests, irs, live_events, keys, hop_ms, n_hops, head, merge
     )

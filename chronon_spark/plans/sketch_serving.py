@@ -45,7 +45,12 @@ from chronon_spark.operators.ddsketch import (
     bucket_expr,
     quantiles_from_sketch,
 )
-from chronon_spark.plans.upload import collapse, compaction_end_hop, fetch_live_hop
+from chronon_spark.plans.upload import (
+    check_live_hop,
+    collapse,
+    compaction_end_hop,
+    fetch_live_hop,
+)
 from chronon_spark.sources.scan import TS
 
 
@@ -144,9 +149,9 @@ def fetch_percentile_sketch(
             prefix=prefix,
         )
 
+    check_live_hop(requests, irs, hop_ms, verify_disjoint)
     return fetch_live_hop(
-        requests, irs, live_events, keys, hop_ms, n_hops, verify_disjoint,
+        requests, irs, live_events, keys, hop_ms, n_hops,
         lambda rows: _lift(rows, keys + ["__qts"], value_col, alpha),
         merge,
-        {f"{prefix}{int(p * 100)}": "double" for p in qs},
     )

@@ -9,18 +9,20 @@ batch job uploads
   mergeable per-hop IRs that windowed features stitch at query time.
 
 Here the "KV store" is a parquet/Iceberg table keyed by (keys, __hop),
-with the collapsed row at ``__hop = COLLAPSED_HOP``. Serving == the
-batch lambda merge: ``group_by_asof_hopped(..., events_df=fresh rows,
-extra_hop_irs=upload)`` — a RANGE window frame naturally reads the
-collapsed row only for unbounded frames (its hop index is far below any
-windowed frame's lower bound).
+with the collapsed row at ``__hop = COLLAPSED_HOP``. Serving reads it
+request-first (:func:`fetch_live_hop`, the reference's per-request
+FinalBatchIr ⊕ tiles merge): each request joins only its own key's rows
+before its hop, and a window's merge keeps the rows with
+``hop >= qhop - window`` — the collapsed row sits below every bounded
+window, so only unbounded windows read it.
 
 The tile-merge scaffolding lives here once, for the scalar IRs
 (``operators.hop_ir``) and the serving semilattices
 (``plans.sketch_serving``, ``klist_serving``, ``freq_serving``) alike:
 the tile-range guard (:func:`check_tile_range`), the collapse of old rows
-into the COLLAPSED row (:func:`collapse`) and the live-hop read
-(:func:`fetch_live_hop`).
+into the COLLAPSED row (:func:`collapse`) and the request-driven read
+(:func:`fetch_live_hop`; the semilattices' one-live-hop contract is
+:func:`check_live_hop`).
 """
 
 from __future__ import annotations
@@ -69,10 +71,10 @@ def compaction_end_hop(
 ) -> int:
     """Check a compaction's batch ends and tile range (see
     :func:`check_tile_range`); returns the new batch end's hop."""
-    assert old_batch_end_ms % hop_ms == 0 and new_batch_end_ms % hop_ms == 0, (
-        "batch ends must align to hop boundaries"
-    )
-    assert new_batch_end_ms >= old_batch_end_ms, "batch end cannot move backward"
+    if old_batch_end_ms % hop_ms or new_batch_end_ms % hop_ms:
+        raise ValueError("batch ends must align to hop boundaries")
+    if new_batch_end_ms < old_batch_end_ms:
+        raise ValueError("batch end cannot move backward")
     new_hop = new_batch_end_ms // hop_ms
     check_tile_range(tile_irs, old_batch_end_ms // hop_ms, new_hop)
     return new_hop
@@ -99,6 +101,31 @@ def collapse(
     return tails.unionByName(collapsed)
 
 
+def check_live_hop(
+    requests: DataFrame, irs: DataFrame, hop_ms: int, verify_disjoint: bool
+) -> None:
+    """The tiled-accuracy contract of a serving semilattice's fetch: its
+    requests sit in one live hop (a closed hop's raw events are compacted
+    away) and, unless ``verify_disjoint`` is False (callers whose IRs are
+    structurally pre-live), ``irs`` holds only hops before it."""
+    qhop = (F.col(TS) / F.lit(hop_ms)).cast("long")
+    lo, hi = requests.agg(F.min(qhop), F.max(qhop)).first()
+    if lo is None:
+        return
+    if lo != hi:
+        raise ValueError(
+            f"requests span hops {lo}..{hi}: all requests must sit in one live hop"
+        )
+    if verify_disjoint:
+        ir_max = irs.agg(
+            F.max(F.when(F.col("__hop") != COLLAPSED_HOP, F.col("__hop")))
+        ).first()[0]
+        if ir_max is not None and int(ir_max) >= lo:
+            raise ValueError(
+                f"IR hop {ir_max} at/after the live hop {lo}: double count"
+            )
+
+
 def fetch_live_hop(
     requests: DataFrame,
     irs: DataFrame,
@@ -106,77 +133,72 @@ def fetch_live_hop(
     keys: list,
     hop_ms: int,
     n_hops: Optional[int],
-    verify_disjoint: bool,
     head: Callable[[DataFrame], DataFrame],
     merge: Callable[[DataFrame], DataFrame],
-    empty: dict,
 ) -> DataFrame:
-    """The read path of a serving semilattice: per request, the exact
-    ``ts <= request ts`` head over the live hop's raw events ⊕ the tail
-    IR rows — the ``n_hops`` whole hops before the live hop, or with
-    ``n_hops=None`` every row incl. the COLLAPSED one.
+    """The request-driven serving read, shared by the scalar IRs
+    (``plans.fetcher``) and the serving semilattices. Per request
+    (keys, ts), with ``qhop = ts div hop_ms``:
 
-    Requests must all sit in one live hop (the tiled-accuracy contract —
-    a closed hop's raw events are compacted away); ``irs`` holds upload ⊕
-    closed-tile rows for hops BEFORE it (checked unless
-    ``verify_disjoint`` is False, for callers whose IRs are structurally
-    pre-live). The semilattice supplies:
+    - head: ``live_events`` of ``qhop`` with ``ts <= request ts`` (the
+      condition sits inside a LEFT join, so every request reaches
+      ``head``),
+    - tail: the key's ``irs`` rows with ``hop < qhop`` — also
+      ``hop >= qhop - n_hops`` when ``n_hops`` is given, and every row
+      incl. the COLLAPSED one when it is None,
 
-    - ``head(rows)``: live-hop event rows joined to their requests
-      (keys, ``__qts``, ``__ets`` + the event columns, ``__ets <= __qts``)
-      -> head IR rows (keys, ``__qts``, IR columns),
-    - ``merge(contrib)``: head ∪ tail IR rows -> (keys, ``__qts``, output
-      columns), one row per request,
-    - ``empty``: {output column: type} of the result when there are no
-      requests.
+    and the two merge in one aggregation per request. Only the request's
+    own key's IR rows and its own hop's events are read, so the work
+    scales with the requests, not with the IR table's other keys.
+
+    The caller supplies:
+
+    - ``head(rows)``: request rows LEFT-joined to their head events (keys,
+      ``__qts``, ``__qhop`` + the event columns and ``__ets``, all null for
+      a request without head events) -> head IR rows (keys, ``__qts``, IR
+      columns),
+    - ``merge(contrib)``: head ∪ tail IR rows (keys, ``__qts``,
+      ``__qhop``, ``__hop`` + IR columns; a head row's ``__hop`` is its
+      ``__qhop``) -> (keys, ``__qts``, output columns), one row per
+      request.
 
     Output: keys + ts + the output columns, NULL where a request has no
     history."""
+    if n_hops is not None and n_hops < 1:
+        raise ValueError("n_hops must be >= 1 (the head alone is hop 0)")
     keys = list(keys)
-    q = requests.select(
-        *keys, F.col(TS).alias("__qts"),
-        (F.col(TS) / F.lit(hop_ms)).cast("long").alias("__qhop"),
-    ).distinct()
-    bounds = q.agg(F.min("__qhop"), F.max("__qhop")).first()
-    if bounds[0] is None:
-        return q.select(
-            *keys, F.col("__qts").alias(TS),
-            *[F.lit(None).cast(t).alias(c) for c, t in empty.items()],
-        )
-    assert bounds[0] == bounds[1], "all requests must sit in one live hop"
-    live_hop = int(bounds[0])
-    if verify_disjoint:
-        ir_max = irs.agg(
-            F.max(F.when(F.col("__hop") != COLLAPSED_HOP, F.col("__hop")))
-        ).first()[0]
-        if ir_max is not None and int(ir_max) >= live_hop:
-            raise ValueError(
-                f"IR hop {ir_max} at/after the live hop {live_hop}: double count"
-            )
 
-    # exact head: key-join then ts filter — fan-out bounded by ONE hop's
-    # events per key, the same head bound as the main engine
-    lv = live_events.where(
-        (F.col(TS) / F.lit(hop_ms)).cast("long") == live_hop
-    ).withColumn("__ets", F.col(TS).cast("long"))
-    hd = head(q.join(lv, on=keys, how="inner").where(F.col("__ets") <= F.col("__qts")))
+    def hop_of(ts: str):
+        return (F.col(ts) / F.lit(hop_ms)).cast("long")
 
+    # distinct on (keys, ts) alone: its partitioning then serves the head
+    # aggregation and the merge, which group by (keys, ts) too
+    q = requests.select(*keys, F.col(TS).alias("__qts")).distinct()
+    q = q.select("*", hop_of("__qts").alias("__qhop"))
+    lv = live_events.withColumn("__ets", F.col(TS).cast("long"))
+    cond = (F.col("__e.__ets") <= F.col("__q.__qts")) & (
+        hop_of(f"__e.{TS}") == F.col("__q.__qhop")
+    )
+    for k in keys:
+        cond = cond & (F.col(f"__q.{k}") == F.col(f"__e.{k}"))
+    rows = q.alias("__q").join(lv.alias("__e"), on=cond, how="left").select(
+        "__q.*", *[F.col(f"__e.{c}") for c in lv.columns if c not in keys]
+    )
+    qhop = hop_of("__qts")
+    hd = head(rows).select("*", qhop.alias("__qhop"), qhop.alias("__hop"))
+
+    in_range = F.col("__hop") < F.col("__qhop")
     if n_hops is not None:
-        if n_hops < 1:
-            raise ValueError("n_hops must be >= 1 (the head alone is hop 0)")
-        # all requests share the live hop, so the window is a static hop
-        # slice of the IR table — no per-request fan-out
-        irs = irs.where(
-            (F.col("__hop") != COLLAPSED_HOP)
-            & (F.col("__hop") >= live_hop - int(n_hops))
-            & (F.col("__hop") < live_hop)
-        )
-    tail = irs.join(q.select(*keys, "__qts").distinct(), on=keys, how="inner")
-    out = merge(hd.unionByName(tail.select(*hd.columns)))
-    # left-join back so zero-history requests survive with NULL outputs
-    return q.select(*keys, "__qts").join(
-        out, on=keys + ["__qts"], how="left"
-    ).withColumnRenamed("__qts", TS)
+        in_range = in_range & (F.col("__hop") >= F.col("__qhop") - int(n_hops))
+    tail = irs.join(q, on=keys).where(in_range).select(*hd.columns)
+    out = merge(hd.unionByName(tail))
+    # left-join back so zero-history requests survive with NULL outputs.
+    # ``out`` is grouped by (keys, ts), so it is already partitioned like
+    # q: a sort-merge join needs no exchange, where a broadcast of ``out``
+    # (chosen for a small request batch) adds a stage of its own
+    values = [c for c in out.columns if c not in keys and c != "__qts"]
+    served = q.join(out.hint("shuffle_merge"), on=keys + ["__qts"], how="left")
+    return served.select(*keys, F.col("__qts").alias(TS), *values)
 
 
 def upload_group_by(
@@ -188,8 +210,13 @@ def upload_group_by(
 ) -> DataFrame:
     """Build (and optionally write) the FinalBatchIr table at a batch end
     aligned to a hop boundary."""
-    assert batch_end_ms % hop_ms == 0, "batch end must align to a hop boundary"
-    assert supports_hopped(group_by, hop_ms)
+    if batch_end_ms % hop_ms:
+        raise ValueError("batch end must align to a hop boundary")
+    if not supports_hopped(group_by, hop_ms):
+        raise ValueError(
+            "upload serves hop-mergeable operations with hop-multiple windows "
+            "only (see asof_hopped.HOPPED_OPS)"
+        )
     keys = list(group_by.key_columns)
     parts = [p for p in group_by.unpack() if p.bucket is None]
 

@@ -178,7 +178,7 @@ def test_group_by_serving_info_schemas(spark, sf_dir):
         "value_last",
         "value_unique_count_7d",
     ]
-    with pytest.raises(AssertionError, match="hop boundary"):
+    with pytest.raises(ValueError, match="hop boundary"):
         group_by_serving_info(spark, _gb(sf_dir), BOUNDARY + 1, DAY_MS)
 
 
