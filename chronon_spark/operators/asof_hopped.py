@@ -104,34 +104,16 @@ def _frame(keys: list, w_hops: Optional[int]) -> W:
     return w.rangeBetween(-w_hops, -1)
 
 
-def _w_hops(p, hop_ms: int) -> Optional[int]:
-    """A part's window in hops (None: unwindowed)."""
-    return p.window.millis // hop_ms if p.window is not None else None
-
-
-def _tail_sfx(c: str, w_hops: Optional[int]) -> str:
-    """Tail IR column suffix: one set per (input, window in hops), so parts
-    that share an input and a window (COUNT/SUM/AVERAGE, ...) share one
-    sliding sum instead of each evaluating its own."""
-    return f"{c}_w{'all' if w_hops is None else w_hops}"
-
-
 def _tail_cols(parts: list, keys: list, hop_ms: int) -> list:
     """Tail-merged IR columns over the hop window frames, deduped across
     parts by (input, window): ``t_{kind}_{sfx}`` is the IR's merge
     (``hop_ir.merge``) as a window; moment kinds hold sums about the
     per-key offset ``__k_{c}``, which rides along for the finalize."""
     out: dict = {}
-    for p in parts:
-        c = p.input_column
-        w_hops = _w_hops(p, hop_ms)
-        fr = _frame(keys, w_hops)
-        sfx = _tail_sfx(c, w_hops)
-        for kind in hop_ir.kinds(p.operation):
-            if f"t_{kind}_{sfx}" not in out:
-                out[f"t_{kind}_{sfx}"] = hop_ir.merge(kind, c, fr)
-            if kind == "m2":
-                out[f"__k_{c}"] = F.col(f"__k_{c}")
+    for (kind, sfx), (c, w) in hop_ir.windowed_ir_columns(parts, hop_ms).items():
+        out[f"t_{kind}_{sfx}"] = hop_ir.merge(kind, c, _frame(keys, w))
+        if kind == "m2":
+            out[f"__k_{c}"] = F.col(f"__k_{c}")
     return [col.alias(name) for name, col in out.items()]
 
 
@@ -220,7 +202,7 @@ def _head_plus_tail(p, hop_ms: int) -> tuple:
     IR — sums add (the head's central moments shifted to the per-key
     offset K first), min/max/first/last fold, sets and sketches union."""
     c = p.input_column
-    sfx = _tail_sfx(c, _w_hops(p, hop_ms))
+    sfx = hop_ir.window_suffix(c, hop_ir.window_hops(p, hop_ms))
     own = hop_ir.kinds(p.operation)
     k = F.col(f"__k_{c}") if "m2" in own else None
 

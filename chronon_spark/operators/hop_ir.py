@@ -15,6 +15,9 @@ An IR column is ``i_{kind}_{input}``; an operation's kinds are:
   ``(t, v)`` struct ordered by event time,
 - UNIQUE_COUNT: ``set`` (exact set union); APPROX_UNIQUE_COUNT: ``hll``.
 
+A merge over a window is named per (input, window in hops) by
+:func:`window_suffix`; :func:`windowed_ir_columns` lists those merges.
+
 Central sums of groups with different means do not add. They merge as
 sums about a per-key offset ``K`` (column ``__k_{input}``, the key's
 overall mean from :func:`with_offsets`): :func:`shift` moves one group's
@@ -75,6 +78,31 @@ def ir_columns(parts: list) -> list:
 def moment_inputs(parts: list) -> list:
     """Input columns that carry central sums (need an offset K)."""
     return sorted({c for k, c in ir_columns(parts) if k == "m2"})
+
+
+def window_hops(p, hop_ms: int) -> Optional[int]:
+    """A part's window in hops (None: unwindowed)."""
+    return p.window.millis // hop_ms if p.window is not None else None
+
+
+def window_suffix(c: str, w_hops: Optional[int]) -> str:
+    """Suffix of the IR columns merged over one (input, window in hops)."""
+    return f"{c}_w{'all' if w_hops is None else w_hops}"
+
+
+def windowed_ir_columns(parts: list, hop_ms: int) -> dict:
+    """``(kind, window_suffix) -> (input column, window in hops)`` per IR
+    column merged over a window, deduped across parts by (input, window)
+    in part order: parts that share an input and a window
+    (COUNT/SUM/AVERAGE, ...) share one merged IR instead of each merging
+    its own. The backfill's tail frames and the serving read's windowed
+    merge both iterate it."""
+    out: dict = {}
+    for p in parts:
+        c, w = p.input_column, window_hops(p, hop_ms)
+        for kind in kinds(p.operation):
+            out.setdefault((kind, window_suffix(c, w)), (c, w))
+    return out
 
 
 def _update(kind: str, c: str) -> Column:

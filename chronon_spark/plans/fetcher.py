@@ -41,12 +41,7 @@ from pyspark.sql import types as T
 
 from chronon_spark.api.types import Accuracy, GroupBy, Join, validate_identifier
 from chronon_spark.operators import hop_ir
-from chronon_spark.operators.asof_hopped import (
-    _tail_sfx,
-    _w_hops,
-    hop_irs_for,
-    supports_hopped,
-)
+from chronon_spark.operators.asof_hopped import hop_irs_for, supports_hopped
 from chronon_spark.operators.asof_join import (
     _jp_out_cols,
     apply_derivations,
@@ -291,7 +286,7 @@ def _serve_hop_irs(
     and ``hop_ir.finalize`` turns them into features."""
     keys = [validate_identifier(k) for k in group_by.key_columns]
     parts = group_by.unpack()
-    windows = {_w_hops(p, hop_ms) for p in parts}
+    windows = {hop_ir.window_hops(p, hop_ms) for p in parts}
     n_hops = None if None in windows else max(windows)
     irs = batch_irs.unionByName(hop_irs_for(events, group_by, hop_ms))
     # null keys/ts can never match an event or an IR row
@@ -307,15 +302,13 @@ def _serve_hop_irs(
         # a part's window is its own IR column set ``i_{kind}_{sfx}``: the
         # IR where the row lies inside the window, null elsewhere
         windowed: dict = {}
-        for p in parts:
-            c, w = p.input_column, _w_hops(p, hop_ms)
-            sfx = _tail_sfx(c, w)
-            inside = None if w is None else F.col("__hop") >= F.col("__qhop") - w
-            for kind in hop_ir.kinds(p.operation):
-                ir = F.col(f"i_{kind}_{c}")
-                windowed[(kind, sfx)] = ir if inside is None else F.when(inside, ir)
-                if kind == "m2":
-                    windowed[("k", sfx)] = F.col(f"__k_{c}")
+        for (kind, sfx), (c, w) in hop_ir.windowed_ir_columns(parts, hop_ms).items():
+            ir = F.col(f"i_{kind}_{c}")
+            windowed[(kind, sfx)] = (
+                ir if w is None else F.when(F.col("__hop") >= F.col("__qhop") - w, ir)
+            )
+            if kind == "m2":
+                windowed[("k", sfx)] = F.col(f"__k_{c}")
         merged = contrib.select(
             *keys,
             "__qts",
@@ -333,7 +326,7 @@ def _serve_hop_irs(
         )
         feats = []
         for p in parts:
-            sfx = _tail_sfx(p.input_column, _w_hops(p, hop_ms))
+            sfx = hop_ir.window_suffix(p.input_column, hop_ir.window_hops(p, hop_ms))
             k = F.col(f"__k_{sfx}") if ("k", sfx) in windowed else None
             value = hop_ir.finalize(
                 p.operation, lambda kind, sfx=sfx: F.col(f"i_{kind}_{sfx}"), k

@@ -45,10 +45,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chronon_spark.plans.upload import (
-    check_live_hop,
     collapse,
     compaction_end_hop,
     fetch_live_hop,
+    slice_live_hop,
 )
 from chronon_spark.sources.scan import TS
 
@@ -175,7 +175,9 @@ def fetch_freq_topk(
             out_col, F.slice(F.transform("entries", lambda e: e["v"]), 1, int(k))
         ).drop("entries")
 
-    check_live_hop(requests, irs, hop_ms, verify_disjoint)
+    irs, live_events = slice_live_hop(
+        requests, irs, live_events, hop_ms, n_hops, verify_disjoint
+    )
     return fetch_live_hop(
         requests, irs, live_events, keys, hop_ms, n_hops,
         lambda rows: _lift(rows, keys + ["__qts"], item_col, m),

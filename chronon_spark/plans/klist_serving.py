@@ -48,10 +48,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chronon_spark.plans.upload import (
-    check_live_hop,
     collapse,
     compaction_end_hop,
     fetch_live_hop,
+    slice_live_hop,
 )
 from chronon_spark.sources.scan import TS
 
@@ -231,7 +231,9 @@ def fetch_klist(
             out_col, F.transform(F.col("__m"), lambda e: e["v"])
         ).drop("__m")
 
-    check_live_hop(requests, irs, hop_ms, verify_disjoint)
+    irs, live_events = slice_live_hop(
+        requests, irs, live_events, hop_ms, n_hops, verify_disjoint
+    )
     return fetch_live_hop(
         requests, irs, live_events, keys, hop_ms, n_hops, head, merge
     )

@@ -46,10 +46,10 @@ from chronon_spark.operators.ddsketch import (
     quantiles_from_sketch,
 )
 from chronon_spark.plans.upload import (
-    check_live_hop,
     collapse,
     compaction_end_hop,
     fetch_live_hop,
+    slice_live_hop,
 )
 from chronon_spark.sources.scan import TS
 
@@ -149,7 +149,9 @@ def fetch_percentile_sketch(
             prefix=prefix,
         )
 
-    check_live_hop(requests, irs, hop_ms, verify_disjoint)
+    irs, live_events = slice_live_hop(
+        requests, irs, live_events, hop_ms, n_hops, verify_disjoint
+    )
     return fetch_live_hop(
         requests, irs, live_events, keys, hop_ms, n_hops,
         lambda rows: _lift(rows, keys + ["__qts"], value_col, alpha),

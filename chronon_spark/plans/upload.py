@@ -21,8 +21,8 @@ The tile-merge scaffolding lives here once, for the scalar IRs
 (``plans.sketch_serving``, ``klist_serving``, ``freq_serving``) alike:
 the tile-range guard (:func:`check_tile_range`), the collapse of old rows
 into the COLLAPSED row (:func:`collapse`) and the request-driven read
-(:func:`fetch_live_hop`; the semilattices' one-live-hop contract is
-:func:`check_live_hop`).
+(:func:`fetch_live_hop`; the semilattices' one-live-hop contract, and
+the static cut of their inputs to that hop, is :func:`slice_live_hop`).
 """
 
 from __future__ import annotations
@@ -101,17 +101,29 @@ def collapse(
     return tails.unionByName(collapsed)
 
 
-def check_live_hop(
-    requests: DataFrame, irs: DataFrame, hop_ms: int, verify_disjoint: bool
-) -> None:
-    """The tiled-accuracy contract of a serving semilattice's fetch: its
-    requests sit in one live hop (a closed hop's raw events are compacted
-    away) and, unless ``verify_disjoint`` is False (callers whose IRs are
-    structurally pre-live), ``irs`` holds only hops before it."""
+def slice_live_hop(
+    requests: DataFrame,
+    irs: DataFrame,
+    live_events: DataFrame,
+    hop_ms: int,
+    n_hops: Optional[int],
+    verify_disjoint: bool,
+) -> tuple:
+    """The tiled-accuracy contract of a serving semilattice's fetch, and
+    its inputs cut to what that contract lets a fetch read. The requests
+    sit in one live hop (a closed hop's raw events are compacted away)
+    and, unless ``verify_disjoint`` is False (callers whose IRs are
+    structurally pre-live), ``irs`` holds only hops before it.
+
+    Returns ``(irs, live_events)`` for :func:`fetch_live_hop`: the live
+    hop's events, and the IR rows in ``[live - n_hops, live)`` (every
+    row, COLLAPSED included, when ``n_hops`` is None). The cut is static,
+    so the head join reads one hop of events and each request joins at
+    most ``n_hops`` tail rows of its key, however long the history."""
     qhop = (F.col(TS) / F.lit(hop_ms)).cast("long")
     lo, hi = requests.agg(F.min(qhop), F.max(qhop)).first()
     if lo is None:
-        return
+        return irs.where(F.lit(False)), live_events.where(F.lit(False))
     if lo != hi:
         raise ValueError(
             f"requests span hops {lo}..{hi}: all requests must sit in one live hop"
@@ -124,6 +136,12 @@ def check_live_hop(
             raise ValueError(
                 f"IR hop {ir_max} at/after the live hop {lo}: double count"
             )
+    live = int(lo)
+    if n_hops is not None:
+        irs = irs.where(
+            (F.col("__hop") >= live - int(n_hops)) & (F.col("__hop") < live)
+        )
+    return irs, live_events.where(qhop == live)
 
 
 def fetch_live_hop(
@@ -147,9 +165,13 @@ def fetch_live_hop(
       ``hop >= qhop - n_hops`` when ``n_hops`` is given, and every row
       incl. the COLLAPSED one when it is None,
 
-    and the two merge in one aggregation per request. Only the request's
-    own key's IR rows and its own hop's events are read, so the work
-    scales with the requests, not with the IR table's other keys.
+    and the two merge in one aggregation per request. The hop conditions
+    are per request, but Spark applies them after the key equi-join, so a
+    request's work is every row of its key in ``irs`` and
+    ``live_events``: callers pass inputs already bounded per key (the
+    scalar fetch: a compacted upload, collapsed row + tail hops, and the
+    fresh events from the batch end on; the semilattices: the live-hop
+    cut of :func:`slice_live_hop`).
 
     The caller supplies:
 

@@ -187,6 +187,42 @@ def test_hopped_null_values_match_kernel(spark, tmp_path):
     assert pd.isna(a[a.k == 2]["v_last"].iloc[0])
 
 
+def test_hopped_approx_unique_count_head_or_tail_only_matches_kernel(spark, tmp_path):
+    """APPROX_UNIQUE_COUNT merges its head and tail sketches in the shared
+    finalize: a window with only head events, only tail events, or none
+    must count like the kernel's exact distinct count (0 when empty), not
+    go NULL because one side has no sketch."""
+    import pandas as pd
+
+    m = 60_000  # one-minute hops
+    ev = pd.DataFrame(
+        [
+            (1, 5 * m + 100, 1), (1, 5 * m + 200, 2), (1, 5 * m + 300, 2),  # head only
+            (2, 2 * m + 100, 1), (2, 3 * m + 100, 2), (2, 4 * m + 100, 3),  # tail only
+            (2, 5 * m + 900, 9),  # after the query, in its hop
+            (3, 100, 5), (3, 5 * m + 900, 6),  # windowed: empty; unbounded: tail
+            (5, 4 * m + 100, 1), (5, 5 * m + 100, 2),  # head and tail
+        ],
+        columns=["k", "ts", "v"],
+    )
+    d = str(tmp_path / "ev")
+    spark.createDataFrame(ev).write.parquet(d)
+    src = EventSource(table=d, query=Query(selects={"k": "k", "v": "v"}, time_column="ts"))
+    gb = GroupBy(
+        (src,), ("k",),
+        (Aggregation("v", Operation.APPROX_UNIQUE_COUNT, windows=(Window.minutes(3),)),
+         Aggregation("v", Operation.APPROX_UNIQUE_COUNT)),
+        name="approx",
+    )
+    q = spark.createDataFrame(pd.DataFrame({"k": [1, 2, 3, 4, 5], "ts": [5 * m + 500] * 5}))
+    a = _norm2(group_by_asof_hopped(spark, gb, q, hop_ms=m).toPandas())
+    b = _norm2(group_by_asof(spark, gb, q, tail_hop_ms=m).toPandas())
+    assert a.equals(b)
+    windowed, unbounded = (p.output_column for p in gb.unpack())
+    assert a[windowed].tolist() == [2, 3, 0, 0, 2]
+    assert a[unbounded].tolist() == [2, 3, 1, 0, 2]
+
+
 def _norm2(df):
     return df.sort_values(["k", "ts"]).reset_index(drop=True)
 

@@ -12,6 +12,9 @@ the edge cases of that read:
 - a request whose hop holds only events after its ts (tail kept, head
   empty; with no tail either, it still gets its zero counts),
 - a key with no events at all.
+
+The semilattice fetches (sketch, k-list, frequency) run the same read
+after ``slice_live_hop`` cuts their inputs to the one live hop.
 """
 
 import re
@@ -155,3 +158,38 @@ def test_fetch_plan_has_no_window(spark, tables):
     assert not re.search(r"\bWindow\b", plan(plain))
     moments = plan(_gb(path, (Window.days(2),)))
     assert "RangeFrame" not in moments
+
+
+def test_slice_live_hop_cuts_inputs_to_the_live_hop(spark):
+    """The semilattice fetches read one hop of events and at most
+    ``n_hops`` tail rows per key: ``slice_live_hop`` cuts both inputs
+    before the per-request join, and keeps its contract checks."""
+    from chronon_spark.plans.upload import COLLAPSED_HOP, slice_live_hop
+
+    hop = 10
+    irs = spark.createDataFrame(
+        [(1, h) for h in [COLLAPSED_HOP] + list(range(1, 8))], "k long, __hop long"
+    )
+    events = spark.createDataFrame([(1, t) for t in range(0, 100, 5)], "k long, ts long")
+    req = spark.createDataFrame([(1, 81), (1, 89)], "k long, ts long")
+
+    def hops(df, col="__hop"):
+        return sorted(r[0] for r in df.select(col).collect())
+
+    tail, live = slice_live_hop(req, irs, events, hop, 3, True)
+    assert hops(tail) == [5, 6, 7]
+    assert sorted(r[0] for r in live.select("ts").collect()) == [80, 85]
+    tail, live = slice_live_hop(req, irs, events, hop, None, True)
+    assert hops(tail) == [COLLAPSED_HOP] + list(range(1, 8))
+    assert live.count() == 2
+
+    empty = req.where("ts < 0")
+    tail, live = slice_live_hop(empty, irs, events, hop, 3, True)
+    assert tail.count() == live.count() == 0
+    with pytest.raises(ValueError, match="one live hop"):
+        slice_live_hop(req.union(req.selectExpr("k", "ts - 10")), irs, events, hop, 3, True)
+    late = irs.union(spark.createDataFrame([(1, 8)], "k long, __hop long"))
+    with pytest.raises(ValueError, match="at/after the live hop"):
+        slice_live_hop(req, late, events, hop, 3, True)
+    tail, _ = slice_live_hop(req, late, events, hop, 3, False)
+    assert hops(tail) == [5, 6, 7]
