@@ -103,35 +103,6 @@ class Operation(str, Enum):
 # thrift/api.thrift:195-227 comment block.
 DELETABLE_OPS = {Operation.COUNT, Operation.SUM, Operation.AVERAGE, Operation.HISTOGRAM}
 
-# Ops whose IR depends on event time ordering, not just the multiset of values.
-TIMED_OPS = {Operation.FIRST, Operation.LAST, Operation.FIRST_K, Operation.LAST_K}
-
-# Ops returning collection types (arrays / maps).
-COLLECTION_OPS = {
-    Operation.FIRST_K,
-    Operation.LAST_K,
-    Operation.TOP_K,
-    Operation.BOTTOM_K,
-    Operation.HISTOGRAM,
-    Operation.APPROX_FREQUENT_K,
-    Operation.APPROX_HEAVY_HITTERS_K,
-    Operation.UNIQUE_TOP_K,
-}
-
-# Ops with a subtractable prefix-sum IR — these vectorize to O(log n) per
-# query via prefix aggregates in the kernel (sum can be "deleted" off the
-# front of the window). Superset of DELETABLE_OPS because variance/moments
-# are subtractable in the exact-batch setting even though the reference
-# treats them as update-only (SimpleAggregators.scala:173-256).
-PREFIX_SUBTRACTABLE_OPS = {
-    Operation.COUNT,
-    Operation.SUM,
-    Operation.AVERAGE,
-    Operation.VARIANCE,
-    Operation.SKEW,
-    Operation.KURTOSIS,
-}
-
 
 class Accuracy(str, Enum):
     """TEMPORAL = point-in-time exact at each query ts; SNAPSHOT = as of the

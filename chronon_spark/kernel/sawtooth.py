@@ -47,8 +47,6 @@ import pandas as pd
 
 from chronon_spark.api.types import AggregationPart, Operation
 
-_LOG2 = None  # lazily sized log-table cache
-
 
 def _round_down(ts: np.ndarray, hop: int) -> np.ndarray:
     return (ts // hop) * hop

@@ -328,8 +328,8 @@ def group_by_asof_hopped(
     # (spark/.../JoinPartJob.scala writes the part table before use).
     # Lazy local checkpoint: first consumer computes, BlockManager block
     # locks make races single-compute; the cached copy lives as long as the
-    # returned plan (caller-release exempt, same contract as stage() in
-    # examples/webtext_curation.py).
+    # returned plan (released by the session owner through
+    # release_query_checkpoints, see chronon_spark/checkpoint.py).
     q = register_plan_checkpoint(q.localCheckpoint(eager=False))
     if prune_keys:
         from chronon_spark.operators.join_utils import prune_events_by_keys

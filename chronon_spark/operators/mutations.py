@@ -87,7 +87,6 @@ DELETABLE = {
     Operation.VARIANCE,
     Operation.HISTOGRAM,
 }
-_SCALAR_DELETABLE = DELETABLE - {Operation.HISTOGRAM}
 
 
 def _ir_aggs(parts, signed: bool) -> list:

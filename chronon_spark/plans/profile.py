@@ -52,17 +52,3 @@ def profile(df: DataFrame, columns: list | None = None, exact_distinct: bool = F
             )
         )
     return wide.select(F.explode(F.array(*rows)).alias("s")).select("s.*")
-
-
-def hot_keys(df: DataFrame, key_cols: list, top_n: int = 20) -> DataFrame:
-    """Top-N hottest key values with their row share — the skew pre-check
-    that decides between the kernel and the hopped plan (or skew_keys
-    exclusion) before a backfill."""
-    n = df.count()
-    return (
-        df.groupBy(*key_cols)
-        .count()
-        .orderBy(F.col("count").desc(), *key_cols)
-        .limit(top_n)
-        .withColumn("share", F.col("count") / F.lit(n))
-    )
