@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 Each ``queries()`` entry is one implemented operator from SURVEY.md §2 (or a
-north-rule extension), run at ``sf_dir``; the matching ``oracle_sql()``
-entry is an independent DuckDB formulation of the same semantics (the
-reference's own test strategy — SQL-oracle goldens, SURVEY.md §5).
+north-rule / training-data-pipeline extension), run at ``sf_dir``; the
+matching ``oracle_sql()`` entry is an independent DuckDB formulation of the
+same semantics (the reference's own test strategy — SQL-oracle goldens,
+SURVEY.md §5).
 
 Determinism notes (so value-hashes match across engines):
 - every computed double is rounded via ``floor(x*1e6 + 0.5)/1e6`` on BOTH
@@ -25,7 +26,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 def _r6(col):
     """Portable half-up rounding to 6 decimals: floor(x*1e6 + 0.5)/1e6.
@@ -94,6 +94,8 @@ def _dds_sql():
 DAY_MS = 86_400_000
 GAP_MS = 30 * 60 * 1000  # sessionization inactivity gap
 SNAP_START, SNAP_END = "2024-01-05", "2024-01-25"
+JACCARD_THRESHOLD = 0.04
+LSH_THRESHOLD = 0.04
 
 
 def _events_source(sf_dir: str, cents: bool = False):
@@ -759,9 +761,187 @@ FROM t GROUP BY user_id, session_id
 
 
 # ---------------------------------------------------------------------------
-# Corpus split (documents)
+# Dedup family (documents)
 # ---------------------------------------------------------------------------
 
+def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from chronon_spark.operators.dedup import exact_dedup
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return exact_dedup(docs, "doc_id").select("doc_id", "dup_count")
+
+
+_EXACT_DEDUP_ORACLE = r"""
+WITH h AS (
+  SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS hh
+  FROM documents
+)
+SELECT min(doc_id) AS doc_id, count(*) AS dup_count FROM h GROUP BY hh
+"""
+
+
+_DUCK_SHINGLES = r"""
+  SELECT doc_id,
+         list_distinct([array_to_string(w[i:i+2], ' ')
+                        for i in generate_series(1, greatest(len(w)-3, 0)+1)]) AS sh
+  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents)
+"""
+
+
+def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Runs on a deterministic md5 half-sample of the corpus: the oracle's
+    verification is an O(n^2) brute-force pair join (that's what makes it
+    an independent check of the PPJoin prefix filter), so halving docs
+    quarters oracle pairs and keeps the 73-query driver suite inside its
+    budget. Membership is a pure function of doc_id — identical in both
+    engines."""
+    from chronon_spark.operators.dedup import ngram_jaccard_pairs
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
+        F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 1) < "8"
+    )
+    out = ngram_jaccard_pairs(docs, "doc_id", k=3, threshold=JACCARD_THRESHOLD)
+    return out.select("id_a", "id_b", _r6("jaccard").alias("jaccard"))
+
+
+# md5 half-sample twin of _DUCK_SHINGLES (see q_ngram_jaccard docstring)
+_DUCK_SHINGLES_HALF = _DUCK_SHINGLES.replace(
+    "FROM documents)", "FROM documents WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < '8')"
+)
+
+_NGRAM_JACCARD_ORACLE = f"""
+WITH s AS ({_DUCK_SHINGLES_HALF}),
+pairs AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+     CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+       / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS j
+  FROM s a JOIN s b ON a.doc_id < b.doc_id
+)
+SELECT id_a, id_b, round(j, 6) AS jaccard FROM pairs WHERE j >= {JACCARD_THRESHOLD}
+"""
+
+
+def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from chronon_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    out = minhash_lsh_pairs(
+        docs, "doc_id", n_hashes=16, bands=4, shingle_k=3, verify_threshold=LSH_THRESHOLD
+    )
+    return out.select("id_a", "id_b", _r6("jaccard").alias("jaccard"))
+
+
+def _minhash_oracle() -> str:
+    from chronon_spark.operators.dedup import minhash_params
+
+    mixes = ", ".join(
+        f"list_min(list_transform(hs, h -> xor(({a} * (h & 1073741823)"
+        f" + (({a} * (h >> 30)) & 1073741823) * 1073741824)"
+        f" & 1152921504606846975, {c}::BIGINT)))"
+        for a, c in minhash_params(16)
+    )
+    return f"""
+WITH s AS ({_DUCK_SHINGLES}),
+hashed AS (
+  SELECT doc_id, sh,
+     list_transform(sh, x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)) AS hs
+  FROM s
+),
+sig AS (
+  SELECT doc_id, sh, [{mixes}] AS sg
+  FROM hashed
+),""" + _MINHASH_ORACLE_TAIL
+
+
+_MINHASH_ORACLE_TAIL = f"""
+banded AS (
+  SELECT doc_id, sh,
+         unnest(range(0, 4)) AS band,
+         unnest([md5(array_to_string(sg[b*4+1:b*4+4], ',')) for b in range(0, 4)]) AS bucket
+  FROM sig
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sh AS sh_a, b.sh AS sh_b
+  FROM banded a JOIN banded b
+    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+),
+scored AS (
+  SELECT id_a, id_b,
+     CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
+       / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))) AS j
+  FROM cand
+)
+SELECT id_a, id_b, round(j, 6) AS jaccard FROM scored WHERE j >= {LSH_THRESHOLD}
+"""
+
+
+def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pair resolution: hash-min connected components over the
+    MinHash-LSH pairs -> (id, cluster_id=min id of the component). The
+    oracle recomputes the same pairs bit-exactly (the minhash SQL mirror)
+    and closes them transitively with a recursive CTE."""
+    from chronon_spark.operators.dedup import duplicate_clusters, minhash_lsh_pairs
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    pairs = minhash_lsh_pairs(
+        docs, "doc_id", n_hashes=16, bands=4, shingle_k=3, verify_threshold=LSH_THRESHOLD
+    )
+    return duplicate_clusters(pairs).select("id", "cluster_id")
+
+
+def _dedup_clusters_oracle() -> str:
+    return f"""
+WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM ({_minhash_oracle()})),
+e AS (
+  SELECT id_a AS src, id_b AS dst FROM pairs
+  UNION
+  SELECT id_b AS src, id_a AS dst FROM pairs
+),
+reach AS (
+  SELECT src, dst FROM e
+  UNION
+  SELECT r.src, e2.dst FROM reach r JOIN e e2 ON r.dst = e2.src
+)
+SELECT src AS id, least(src, min(dst)) AS cluster_id FROM reach GROUP BY src
+"""
+
+
+def q_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic hash sampling: per-stratum (lang) fractions + exact
+    top-k-per-key quality selection — membership is a pure function of
+    (seed, doc_id), identical across partitionings and engines (Spark's
+    Bernoulli sample is not)."""
+    from chronon_spark.operators.sampling import stratified_sample, top_k_per_key
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "lang", "n_chars"
+    )
+    st = stratified_sample(docs, "lang", {"en": 0.5, "de": 0.2}, "doc_id", seed=7)
+    best = top_k_per_key(docs, "lang", 5, "doc_id", order_col="n_chars").select(
+        F.col("doc_id").alias("best_doc_id"), F.col("lang").alias("best_lang")
+    )
+    return st.select("doc_id", "lang").join(
+        best, st["doc_id"] == best["best_doc_id"], "full"
+    ).select("doc_id", "lang", "best_doc_id", "best_lang")
+
+
+_DOC_SAMPLE_ORACLE = """
+WITH docs AS (SELECT doc_id, lang, n_chars FROM documents),
+st AS (
+  SELECT doc_id, lang FROM docs
+  WHERE (CAST('0x' || substr(md5('7:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 1000000)
+      < CAST((CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.2 ELSE 0.0 END) * 1000000 AS BIGINT)
+),
+best AS (
+  SELECT doc_id AS best_doc_id, lang AS best_lang FROM (
+    SELECT doc_id, lang,
+       row_number() OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id ASC) AS rn
+    FROM docs
+  ) WHERE rn <= 5
+)
+SELECT st.doc_id, st.lang, best.best_doc_id, best.best_lang
+FROM st FULL JOIN best ON st.doc_id = best.best_doc_id
+"""
 
 def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/val/test split: membership is a pure function
@@ -786,6 +966,880 @@ FROM (
        % 1000000 AS b
   FROM documents
 )
+"""
+
+
+def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-scaled language mix (count^alpha target mass,
+    alpha=0.5 — the multilingual pretraining sampling knob): head
+    languages are hash-downsampled toward the damped distribution, the
+    smallest kept whole. Oracle recomputes the per-key acceptance
+    fractions in SQL with the identical FP operations."""
+    from chronon_spark.operators.sampling import temperature_mix
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang")
+    return temperature_mix(docs, "lang", alpha=0.5, id_col="doc_id", seed=13).select(
+        "doc_id", "lang"
+    )
+
+
+_TEMPERATURE_MIX_ORACLE = """
+WITH counts AS (
+  SELECT lang, CAST(COUNT(*) AS DOUBLE) AS c FROM documents
+  WHERE lang IS NOT NULL GROUP BY lang
+),
+raw AS (SELECT lang, pow(c, -0.5) AS r FROM counts),
+fr AS (SELECT lang, least(1.0, r / (SELECT max(r) FROM raw)) AS f FROM raw)
+SELECT d.doc_id, d.lang
+FROM documents d JOIN fr ON d.lang = fr.lang
+WHERE (CAST('0x' || substr(md5('13:' || CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+     % 1000000) < CAST(floor(f * 1000000) AS BIGINT)
+"""
+
+
+def q_temperature_mix_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TOKEN-mass temperature mix (the published definition: mT5's
+    p_k ∝ tokens_k^alpha, not docs^alpha): per-language mass measured
+    as sum(n_chars) via temperature_mix(weight_col=...), acceptance
+    still doc-level. Oracle recomputes the per-key fractions over the
+    identical summed mass with the identical FP operations."""
+    from chronon_spark.operators.sampling import temperature_mix
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "lang", "n_chars"
+    )
+    return temperature_mix(
+        docs, "lang", alpha=0.5, id_col="doc_id", seed=13, weight_col="n_chars"
+    ).select("doc_id", "lang")
+
+
+_TEMPERATURE_MIX_TOKENS_ORACLE = """
+WITH counts AS (
+  SELECT lang, CAST(SUM(n_chars) AS DOUBLE) AS c FROM documents
+  WHERE lang IS NOT NULL GROUP BY lang HAVING SUM(n_chars) > 0
+),
+raw AS (SELECT lang, pow(c, -0.5) AS r FROM counts),
+fr AS (SELECT lang, least(1.0, r / (SELECT max(r) FROM raw)) AS f FROM raw)
+SELECT d.doc_id, d.lang
+FROM documents d JOIN fr ON d.lang = fr.lang
+WHERE (CAST('0x' || substr(md5('13:' || CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+     % 1000000) < CAST(floor(f * 1000000) AS BIGINT)
+"""
+
+
+def q_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic training-order shuffle without a global sort:
+    shard = hash % 8, pos = hash rank within shard — one shuffle on the
+    shard key + local sort (vs a range-partitioned orderBy over the whole
+    corpus)."""
+    from chronon_spark.operators.sampling import shuffle_shards
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    return shuffle_shards(docs, "doc_id", n_shards=8, seed=5).select(
+        "doc_id", "shard", "pos"
+    )
+
+
+_SHARD_SHUFFLE_ORACLE = """
+WITH h AS (
+  SELECT doc_id,
+     CAST('0x' || substr(md5('5:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) AS hh
+  FROM documents
+)
+SELECT doc_id, CAST(hh % 8 AS INTEGER) AS shard,
+   CAST(row_number() OVER (PARTITION BY hh % 8 ORDER BY hh ASC, doc_id ASC)
+     AS INTEGER) AS pos
+FROM h
+"""
+
+
+_PACK_MAX = 4096
+_PACK_SHARDS = 8
+
+
+def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sequence packing (next-fit into max-token bins per hash shard) —
+    the fixed-context-window training-row assembler. The oracle replays
+    the identical sequential semantics with a lockstep recursive CTE."""
+    from chronon_spark.operators.packing import pack_sequences
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+        "doc_id", "length(text) div 4 AS n_tok"
+    )
+    out = pack_sequences(docs, "doc_id", "n_tok", _PACK_MAX, n_shards=_PACK_SHARDS)
+    return out.select("id", "tokens", "shard", "bin", "oversize")
+
+
+_PACK_ORACLE = f"""
+WITH RECURSIVE t AS (
+  SELECT doc_id AS id, CAST(length(text) // 4 AS BIGINT) AS tokens,
+     CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % {_PACK_SHARDS} AS shard
+  FROM documents
+),
+rk AS (SELECT *, row_number() OVER (PARTITION BY shard ORDER BY id) AS r FROM t),
+rec AS (
+  SELECT shard, r, id, tokens, CAST(0 AS BIGINT) AS bin, tokens AS fill FROM rk WHERE r = 1
+  UNION ALL
+  SELECT rk.shard, rk.r, rk.id, rk.tokens,
+     CASE WHEN rec.fill > 0 AND rec.fill + rk.tokens > {_PACK_MAX}
+          THEN rec.bin + 1 ELSE rec.bin END,
+     CASE WHEN rec.fill > 0 AND rec.fill + rk.tokens > {_PACK_MAX}
+          THEN rk.tokens ELSE rec.fill + rk.tokens END
+  FROM rec JOIN rk ON rk.shard = rec.shard AND rk.r = rec.r + 1
+)
+SELECT id, tokens, shard, bin, tokens > {_PACK_MAX} AS oversize FROM rec
+"""
+
+
+def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benchmark decontamination (published n-gram-overlap method): flag
+    training docs sharing any word 4-gram with the eval subset
+    (doc_id % 50 == 0). Eval gram hashes broadcast; corpus side prunes
+    via the broadcast semi-join before any shuffle."""
+    from chronon_spark.operators.dedup import benchmark_contamination
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    eval_df = docs.where("doc_id % 50 = 0")
+    out = benchmark_contamination(docs, eval_df, "doc_id", k=4)
+    return out.select("id", "n_hits", "contaminated")
+
+
+_DECONTAM_ORACLE = r"""
+WITH corpus AS (
+  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents
+),
+g AS (
+  SELECT doc_id,
+     unnest(CASE WHEN len(w) >= 4
+            THEN list_distinct([array_to_string(w[i:i+3], ' ')
+                                for i in generate_series(1, len(w) - 3)])
+            ELSE [array_to_string(w, ' ')] END) AS gram
+  FROM corpus
+),
+gh AS (SELECT doc_id, CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) AS h FROM g),
+ev AS (SELECT DISTINCT h FROM gh WHERE doc_id % 50 = 0),
+hits AS (
+  SELECT gh.doc_id, count(DISTINCT gh.h) AS n_hits
+  FROM gh JOIN ev ON gh.h = ev.h GROUP BY gh.doc_id
+)
+SELECT c.doc_id AS id,
+   COALESCE(h.n_hits, 0) AS n_hits,
+   COALESCE(h.n_hits, 0) >= 1 AS contaminated
+FROM (SELECT DISTINCT doc_id FROM documents) c
+LEFT JOIN hits h ON c.doc_id = h.doc_id
+"""
+
+
+def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental-crawl dedup: the new batch (doc_id % 3 != 0) deduped
+    against the existing snapshot (doc_id % 3 == 0) — exact hash anti-join
+    + banded-MinHash collisions verified at Jaccard >= 0.85. Output: the
+    surviving new doc ids."""
+    from chronon_spark.operators.dedup import incremental_dedup
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    snap = docs.where("doc_id % 3 = 0")
+    new = docs.where("doc_id % 3 != 0")
+    out = incremental_dedup(
+        new, snap, "doc_id", snapshot_id_col="doc_id", jaccard_threshold=0.85
+    )
+    return out.select("doc_id")
+
+
+def _incremental_oracle() -> str:
+    from chronon_spark.operators.dedup import minhash_params
+
+    mixes = ", ".join(
+        f"list_min(list_transform(hs, h -> xor(({a} * (h & 1073741823)"
+        f" + (({a} * (h >> 30)) & 1073741823) * 1073741824)"
+        f" & 1152921504606846975, {c}::BIGINT)))"
+        for a, c in minhash_params(16)
+    )
+    return f"""
+WITH s AS ({_DUCK_SHINGLES}),
+hashed AS (
+  SELECT doc_id, sh,
+     list_transform(sh, x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)) AS hs
+  FROM s
+),
+sig AS (SELECT doc_id, sh, [{mixes}] AS sg FROM hashed),
+banded AS (
+  SELECT doc_id,
+         unnest(range(0, 4)) AS band,
+         unnest([md5(array_to_string(sg[b*4+1:b*4+4], ',')) for b in range(0, 4)]) AS bucket
+  FROM sig
+),
+ex AS (
+  SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS hh
+  FROM documents
+),
+surv AS (
+  SELECT e.doc_id FROM ex e WHERE e.doc_id % 3 <> 0
+  AND NOT EXISTS (SELECT 1 FROM ex p WHERE p.doc_id % 3 = 0 AND p.hh = e.hh)
+),
+dup AS (
+  SELECT DISTINCT a.doc_id
+  FROM banded a
+  JOIN banded b ON a.band = b.band AND a.bucket = b.bucket
+  JOIN surv sv ON sv.doc_id = a.doc_id
+  JOIN s sa ON sa.doc_id = a.doc_id
+  JOIN s sb ON sb.doc_id = b.doc_id
+  WHERE b.doc_id % 3 = 0
+    AND CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+        / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.85
+)
+SELECT doc_id FROM surv WHERE doc_id NOT IN (SELECT doc_id FROM dup)
+"""
+
+
+def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet-style corpus-LM scoring: per-doc mean negative log-prob
+    under a self-trained unigram LM (per-token -logp quantized to 1e-6
+    units so the per-doc aggregate is exact integer arithmetic)."""
+    from chronon_spark.operators.textstats import unigram_logprob_score
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return unigram_logprob_score(docs, "doc_id")
+
+
+_UNIGRAM_ORACLE = r"""
+WITH nt AS (
+  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
+  FROM documents
+),
+tk AS (SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM nt),
+c AS (SELECT token, count(*) AS c FROM tk GROUP BY token),
+tot AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM c),
+q AS (
+  SELECT tk.doc_id,
+     CAST(floor((-(ln(CAST(c.c AS DOUBLE)) - ln(tot.n))) * 1000000 + 0.5) AS BIGINT) AS qn
+  FROM tk JOIN c USING (token) CROSS JOIN tot
+)
+SELECT doc_id AS id, count(*) AS n_tokens,
+   CAST(sum(qn) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1000000.0 AS mean_neg_logp
+FROM q GROUP BY doc_id
+"""
+
+
+def q_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bigram Stupid Backoff LM scoring (Brants et al. 2007 — the
+    published web-scale LM: every quantity a raw count, sharded joins):
+    per-doc mean negative log-score with a REAL context model, plus the
+    backoff count (unusual-word-order signal). Self-trained; per-position
+    scores quantized to integer micro-nats so the per-doc aggregate is
+    exact integer arithmetic (textstats.stupid_backoff_score)."""
+    from chronon_spark.operators.textstats import stupid_backoff_score
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return stupid_backoff_score(docs, "doc_id")
+
+
+_STUPID_BACKOFF_ORACLE = r"""
+WITH nt AS (
+  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
+  FROM documents
+),
+ta AS (SELECT doc_id, string_split(t, ' ') AS toks FROM nt),
+tok AS (
+  SELECT doc_id, p.pos, p.w2,
+         CASE WHEN p.pos = 1 THEN NULL ELSE toks[p.pos - 1] END AS w1
+  FROM ta, LATERAL (
+    SELECT unnest(toks) AS w2, generate_subscripts(toks, 1) AS pos) p
+),
+uc AS (SELECT w2 AS token, count(*) AS c FROM tok GROUP BY 1),
+bc AS (SELECT w1, w2, count(*) AS b FROM tok WHERE w1 IS NOT NULL GROUP BY 1, 2),
+tot AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM uc),
+q AS (
+  SELECT tok.doc_id,
+    CASE
+      WHEN tok.w1 IS NULL THEN
+        CAST(floor((-(ln(CAST(coalesce(c2.c, 1) AS DOUBLE)) - ln(tot.n)))
+             * 1000000 + 0.5) AS BIGINT)
+      WHEN bc.b IS NOT NULL AND c1.c IS NOT NULL THEN
+        CAST(floor((-(ln(CAST(bc.b AS DOUBLE)) - ln(CAST(c1.c AS DOUBLE))))
+             * 1000000 + 0.5) AS BIGINT)
+      ELSE
+        CAST(floor((-(ln(CAST(coalesce(c2.c, 1) AS DOUBLE)) - ln(tot.n)))
+             * 1000000 + 0.5) AS BIGINT) + 916291
+    END AS qn,
+    CASE WHEN tok.w1 IS NOT NULL AND (bc.b IS NULL OR c1.c IS NULL)
+         THEN 1 ELSE 0 END AS bo
+  FROM tok
+  LEFT JOIN uc c2 ON c2.token = tok.w2
+  LEFT JOIN uc c1 ON c1.token = tok.w1
+  LEFT JOIN bc ON bc.w1 = tok.w1 AND bc.w2 = tok.w2
+  CROSS JOIN tot
+)
+SELECT doc_id AS id, count(*) AS n_tokens,
+   CAST(sum(bo) AS BIGINT) AS n_backoff,
+   CAST(sum(qn) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1000000.0
+     AS mean_neg_logscore
+FROM q GROUP BY doc_id
+"""
+
+
+def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet head/middle/tail (Wenzek et al. 2020): per-language equal-
+    count perplexity tiers under the self-trained unigram LM. mode="auto"
+    measures max per-language mass and routes rank vs rank_scaled —
+    identical output either way (pytest-pinned); at sf0.01 it picks the
+    lazy exact-ntile rank plan."""
+    from chronon_spark.operators.textstats import ccnet_buckets
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return ccnet_buckets(docs, "doc_id", mode="auto")
+
+
+# Same integer-exact score CTE as _UNIGRAM_ORACLE, then SQL-standard
+# ntile within language (identical remainder-to-lower-tiles semantics in
+# Spark and DuckDB; the (score, id) order is total so tiles are unique).
+_CCNET_ORACLE = r"""
+WITH nt AS (
+  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
+  FROM documents
+),
+tk AS (SELECT doc_id, unnest(string_split(t, ' ')) AS token FROM nt),
+c AS (SELECT token, count(*) AS c FROM tk GROUP BY token),
+tot AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM c),
+q AS (
+  SELECT tk.doc_id,
+     CAST(floor((-(ln(CAST(c.c AS DOUBLE)) - ln(tot.n))) * 1000000 + 0.5) AS BIGINT) AS qn
+  FROM tk JOIN c USING (token) CROSS JOIN tot
+),
+sc AS (
+  SELECT doc_id AS id, count(*) AS n_tokens,
+     CAST(sum(qn) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1000000.0 AS mean_neg_logp
+  FROM q GROUP BY doc_id
+),
+b AS (
+  SELECT sc.id, d.lang, sc.n_tokens, sc.mean_neg_logp,
+     ntile(3) OVER (PARTITION BY d.lang
+                    ORDER BY sc.mean_neg_logp ASC, sc.id ASC) AS bucket
+  FROM sc JOIN documents d ON sc.id = d.doc_id
+)
+SELECT id, lang, n_tokens, mean_neg_logp, CAST(bucket AS INT) AS bucket,
+   CASE bucket WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS label
+FROM b
+"""
+
+
+def q_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-INTERNAL exact-substring duplication at doc granularity
+    (Lee et al. 2022 ExactSubstr signal): per doc, how many of its
+    normalized word 8-grams appear in >= 2 documents."""
+    from chronon_spark.operators.dedup import duplicated_span_flags
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return duplicated_span_flags(docs, "doc_id", k=8).select(
+        "id", "n_spans", "n_dup_spans", "dup_span_frac", "flagged"
+    )
+
+
+def q_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ExactSubstr span REMOVAL (Lee et al. 2022): cut every token run
+    covered by a cross-document-duplicated word 8-gram out of the
+    normalized text; unique prose survives verbatim."""
+    from chronon_spark.operators.dedup import remove_duplicated_spans
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return remove_duplicated_spans(docs, "doc_id", k=8).select(
+        "id", "clean_text", "n_tokens", "n_removed", "removed_frac", "flagged"
+    )
+
+
+# Independent DuckDB formulation: positioned 8-grams via a list
+# comprehension, doc-frequency on DISTINCT (doc, gram-hash), covered
+# token positions as the union of [pos, pos+8) per duplicated gram,
+# rebuild via ORDER BY string_agg over the anti-joined token list.
+_SPAN_REMOVAL_ORACLE = r"""
+WITH nt AS (
+  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
+  FROM documents
+),
+c AS (SELECT doc_id, regexp_split_to_array(trim(t), '\s+') AS w FROM nt),
+g AS (
+  SELECT doc_id,
+     unnest([{'pos': i - 1,
+              'h': CAST('0x' || substr(md5(array_to_string(w[i:i+7], ' ')), 1, 15)
+                    AS BIGINT)}
+             for i in generate_series(1, len(w) - 7)],
+            recursive := true)
+  FROM c WHERE len(w) >= 8
+),
+dup AS (
+  SELECT h FROM (SELECT DISTINCT doc_id, h FROM g) GROUP BY h
+  HAVING count(*) >= 2
+),
+cov AS (
+  SELECT DISTINCT g.doc_id, g.pos + d.d AS tpos
+  FROM g JOIN dup USING (h)
+  CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS d) d
+),
+tok AS (
+  SELECT doc_id,
+     unnest([{'tpos': i - 1, 'tok': w[i]} for i in generate_series(1, len(w))],
+            recursive := true)
+  FROM c
+),
+kept AS (
+  SELECT tok.doc_id, tok.tpos, tok.tok
+  FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.tpos = cov.tpos
+  WHERE cov.tpos IS NULL
+),
+reb AS (
+  SELECT doc_id, string_agg(tok, ' ' ORDER BY tpos) AS ct, count(*) AS nk
+  FROM kept GROUP BY doc_id
+),
+fl AS (SELECT DISTINCT doc_id FROM cov)
+SELECT c.doc_id AS id,
+   CASE WHEN fl.doc_id IS NULL THEN nt.t ELSE COALESCE(reb.ct, '') END AS clean_text,
+   CAST(len(c.w) AS BIGINT) AS n_tokens,
+   CAST(CASE WHEN fl.doc_id IS NULL THEN 0
+             ELSE len(c.w) - COALESCE(reb.nk, 0) END AS BIGINT) AS n_removed,
+   CAST(CASE WHEN fl.doc_id IS NULL THEN 0
+             ELSE len(c.w) - COALESCE(reb.nk, 0) END AS DOUBLE)
+     / CAST(len(c.w) AS DOUBLE) AS removed_frac,
+   (CASE WHEN fl.doc_id IS NULL THEN 0
+         ELSE len(c.w) - COALESCE(reb.nk, 0) END) > 0 AS flagged
+FROM c
+JOIN nt USING (doc_id)
+LEFT JOIN fl ON c.doc_id = fl.doc_id
+LEFT JOIN reb ON c.doc_id = reb.doc_id
+"""
+
+
+_DUP_SPANS_ORACLE = r"""
+WITH nt AS (
+  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
+  FROM documents
+),
+c AS (SELECT doc_id, regexp_split_to_array(trim(t), '\s+') AS w FROM nt),
+g AS (
+  SELECT doc_id,
+     unnest(CASE WHEN len(w) >= 8
+            THEN list_distinct([array_to_string(w[i:i+7], ' ')
+                                for i in generate_series(1, len(w) - 7)])
+            ELSE [array_to_string(w, ' ')] END) AS gram
+  FROM c
+),
+gh AS (SELECT doc_id, CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) AS h FROM g),
+dup AS (SELECT h FROM gh GROUP BY h HAVING count(*) >= 2),
+per AS (SELECT doc_id, count(*) AS n_spans FROM gh GROUP BY doc_id),
+dupd AS (
+  SELECT gh.doc_id, count(*) AS n_dup FROM gh JOIN dup USING (h) GROUP BY gh.doc_id
+)
+SELECT p.doc_id AS id, p.n_spans, COALESCE(d.n_dup, 0) AS n_dup_spans,
+   CAST(COALESCE(d.n_dup, 0) AS DOUBLE) / p.n_spans AS dup_span_frac,
+   COALESCE(d.n_dup, 0) > 0 AS flagged
+FROM per p LEFT JOIN dupd d ON p.doc_id = d.doc_id
+"""
+
+
+def _plant_pii(docs: DataFrame) -> DataFrame:
+    """Documents with deterministically PLANTED PII (the testdata docs
+    carry none): every doc gets an email + phone appended, every 7th an
+    IPv4, every 11th a card number. Shared by q_pii_redact and
+    q_stream_curation; `_PII_PLANTED_CTE` is the SQL twin."""
+    return docs.select(
+        "doc_id",
+        F.concat(
+            F.col("text"),
+            F.lit(" contact user"),
+            F.col("doc_id").cast("string"),
+            F.lit("@example.com or 555-123-"),
+            F.lpad(F.pmod(F.col("doc_id"), 10000).cast("string"), 4, "0"),
+            F.when(
+                F.pmod(F.col("doc_id"), 7) == 0,
+                F.concat(
+                    F.lit(" from 10.0."),
+                    F.pmod(F.col("doc_id"), 256).cast("string"),
+                    F.lit("."),
+                    F.pmod(F.col("doc_id"), 100).cast("string"),
+                ),
+            ).otherwise(F.lit("")),
+            F.when(
+                F.pmod(F.col("doc_id"), 11) == 0,
+                F.lit(" card 4012-8888-8888-1881"),
+            ).otherwise(F.lit("")),
+        ).alias("text"),
+    )
+
+
+def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PII scrub over the corpus with planted PII (see _plant_pii) so the
+    cascade's counts and the redacted text are all exercised. The oracle
+    evaluates the IDENTICAL RE2-safe pattern list (chronon_spark
+    operators/pii.py builds both sides from one table)."""
+    from chronon_spark.operators.pii import pii_scan
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return pii_scan(_plant_pii(docs), "doc_id")
+
+
+_PII_PLANTED_CTE = """
+planted AS (
+  SELECT doc_id,
+     text || ' contact user' || CAST(doc_id AS VARCHAR)
+          || '@example.com or 555-123-'
+          || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+          || CASE WHEN doc_id % 7 = 0
+                  THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR)
+                       || '.' || CAST(doc_id % 100 AS VARCHAR)
+                  ELSE '' END
+          || CASE WHEN doc_id % 11 = 0
+                  THEN ' card 4012-8888-8888-1881' ELSE '' END AS text
+  FROM documents
+)"""
+
+
+def _pii_oracle() -> str:
+    from chronon_spark.operators.pii import pii_oracle_sql
+
+    body = pii_oracle_sql(table="planted")
+    # splice the planted CTE in front of the generated WITH
+    return body.replace("WITH c AS", f"WITH {_PII_PLANTED_CTE},\nc AS", 1)
+
+
+def q_stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming corpus curation (streaming/curation.py) drained via
+    availableNow: quality gate -> PII redaction cascade -> watermark-
+    bounded exact dedup over a file-backed crawl stream with planted PII.
+    dropDuplicatesWithinWatermark keeps the FIRST-arriving duplicate
+    (partition-order-dependent), so the query emits only columns that are
+    functions of the surviving normalized text — which every member of a
+    duplicate class shares — making the result deterministic; the batch
+    oracle is one row per distinct surviving hash."""
+    import tempfile
+
+    from chronon_spark.streaming.curation import (
+        stream_dedup_exact,
+        stream_quality_filter,
+        stream_redact_pii,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = tempfile.mkdtemp(prefix="cur_src_")
+    (
+        _plant_pii(docs)
+        .withColumn(
+            "ts",
+            F.timestamp_millis(F.lit(1_700_000_000_000) + F.col("doc_id") * 1000),
+        )
+        .write.mode("overwrite")
+        .parquet(d)
+    )
+    stream = spark.readStream.schema(spark.read.parquet(d).schema).parquet(d)
+    cur = stream_quality_filter(stream, min_quality=0.3, min_tokens=20)
+    cur = stream_redact_pii(cur)
+    # Event times span minutes; a 30-day delay means the watermark never
+    # evicts dedup state mid-drain => exactly one survivor per hash no
+    # matter how availableNow batches the source files.
+    cur = stream_dedup_exact(cur, "ts", watermark_delay="30 days")
+    name = "drv_stream_curation"
+    q = (
+        cur.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
+    return spark.table(name).select(
+        F.md5(norm).alias("h"),
+        F.length(norm).cast("long").alias("n_chars_norm"),
+        F.size(F.split(norm, " ")).cast("long").alias("n_tok_norm"),
+    )
+
+
+def _stream_curation_oracle() -> str:
+    from chronon_spark.operators.pii import pii_redact_oracle_expr
+    from chronon_spark.operators.textstats import _STOPWORDS
+
+    stop = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS) + "]"
+    return rf"""
+WITH {_PII_PLANTED_CTE},
+tok AS (
+  SELECT doc_id, text,
+     string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks,
+     CAST(length(text) AS DOUBLE) AS n,
+     greatest(CAST(length(text) AS DOUBLE), 1.0) AS safe_n
+  FROM planted
+),
+q AS (
+  SELECT doc_id, text,
+     0.3 * least(n / 500.0, 1.0)
+   + 0.3 * (CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE) / safe_n)
+   + 0.2 * greatest(0.0, 1.0 - CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / safe_n * 5.0)
+   + 0.2 * least(CAST(len(list_filter(toks, t -> list_contains({stop}, t))) AS DOUBLE)
+                 / CAST(greatest(len(toks), 1) AS DOUBLE) * 5.0, 1.0) AS quality,
+     CASE WHEN length(trim(text)) = 0 THEN 0
+          ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tok
+  FROM tok
+),
+red AS (
+  SELECT {pii_redact_oracle_expr('text')} AS rt
+  FROM q WHERE quality >= 0.3 AND n_tok >= 20
+),
+nrm AS (SELECT regexp_replace(lower(trim(rt)), '\s+', ' ', 'g') AS norm FROM red)
+SELECT DISTINCT md5(norm) AS h,
+   CAST(length(norm) AS BIGINT) AS n_chars_norm,
+   CAST(len(string_split(norm, ' ')) AS BIGINT) AS n_tok_norm
+FROM nrm
+"""
+
+
+def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """max_hamming=3 is the exact-recall radius: with 4 chunks over a
+    60-bit hash, pigeonhole guarantees every pair within hamming<=3
+    collides on at least one chunk — the blocking is lossless at this
+    threshold (dedup.py:470-471). It also bounds the pair output (the
+    synthetic docs are heavily near-duplicated: hamming<=20 emitted 22.6k
+    pairs at sf0.01; <=3 emits 2.9k), keeping the correctness suite fast."""
+    from chronon_spark.operators.dedup import simhash_near_dups
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    out = simhash_near_dups(docs, "doc_id", max_hamming=3)
+    return out.select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
+
+
+# Bit-exact DuckDB mirror of dedup.simhash64 + the 15-bit chunk blocking:
+# same md5-prefix 60-bit token hash, same sign-of-count bit assembly, same
+# 4-chunk pigeonhole self-join (dedup.py:261-344).
+_SIMHASH_ORACLE = """
+WITH t AS (
+  SELECT doc_id, list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS toks
+  FROM documents
+),
+h AS (
+  SELECT doc_id,
+     list_transform(toks, x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)) AS hs
+  FROM t
+),
+sig AS (
+  SELECT doc_id,
+     CAST(list_sum([CASE WHEN 2 * len(list_filter(hs, v -> (v >> b) & 1 = 1)) > len(hs)
+                         THEN (CAST(1 AS BIGINT) << b) ELSE 0 END
+                    for b in range(0, 60)]) AS BIGINT) AS sh
+  FROM h
+),
+chunks AS (
+  SELECT doc_id, sh, unnest(range(0, 4)) AS chunk
+  FROM sig
+),
+keyed AS (
+  SELECT doc_id, sh, chunk, (sh >> CAST(chunk * 15 AS INTEGER)) & 32767 AS key
+  FROM chunks
+),
+pairs AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sh AS sh_a, b.sh AS sh_b
+  FROM keyed a JOIN keyed b
+    ON a.chunk = b.chunk AND a.key = b.key AND a.doc_id < b.doc_id
+)
+SELECT id_a, id_b, CAST(bit_count(xor(sh_a, sh_b)) AS BIGINT) AS hamming
+FROM pairs WHERE bit_count(xor(sh_a, sh_b)) <= 3
+"""
+
+
+# ---------------------------------------------------------------------------
+# Text analysis (documents)
+# ---------------------------------------------------------------------------
+
+def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from chronon_spark.operators.textstats import document_stats
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    out = document_stats(docs, "doc_id")
+    return out.select(
+        "doc_id",
+        "n_tokens",
+        "n_chars",
+        _r6("alpha_ratio").alias("alpha_ratio"),
+        _r6("digit_ratio").alias("digit_ratio"),
+        _r6("punct_ratio").alias("punct_ratio"),
+        _r6("mean_word_len").alias("mean_word_len"),
+        _r6("stopword_ratio").alias("stopword_ratio"),
+        _r6("quality").alias("quality"),
+        "lang_guess",
+        "fingerprint",
+    )
+
+
+def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C4-style boilerplate-line removal (dedup.boilerplate_lines). The
+    testdata docs are single-line, so the query PLANTS line structure
+    first — a newline after every 6th token (one deterministic regex both
+    engines apply identically) — then drops every line occurring in >= 2
+    distinct docs and rebuilds the docs in order."""
+    from chronon_spark.operators.dedup import boilerplate_lines
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id",
+        F.regexp_replace(
+            "text", r"([^ ]+ [^ ]+ [^ ]+ [^ ]+ [^ ]+ [^ ]+) ", "$1\n"
+        ).alias("text"),
+    )
+    return boilerplate_lines(docs, "doc_id", min_docs=2)
+
+
+_BOILERPLATE_ORACLE = r"""
+WITH p AS (
+  SELECT doc_id,
+     regexp_replace(text, '([^ ]+ [^ ]+ [^ ]+ [^ ]+ [^ ]+ [^ ]+) ',
+                    '\1' || chr(10), 'g') AS text
+  FROM documents
+),
+arr AS (SELECT doc_id, string_split(text, chr(10)) AS a FROM p),
+l AS (
+  SELECT doc_id, unnest(generate_series(1, len(a))) AS pos, unnest(a) AS line
+  FROM arr
+),
+h AS (
+  SELECT doc_id, pos, line,
+     md5(regexp_replace(lower(trim(line)), '\s+', ' ', 'g')) AS lh
+  FROM l
+),
+hot AS (SELECT lh FROM h GROUP BY lh HAVING count(DISTINCT doc_id) >= 2),
+kept AS (SELECT * FROM h WHERE lh NOT IN (SELECT lh FROM hot)),
+reb AS (
+  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text,
+     count(*) AS n_kept
+  FROM kept GROUP BY doc_id
+),
+tot AS (SELECT doc_id, count(*) AS n_lines FROM h GROUP BY doc_id)
+SELECT t.doc_id AS doc_id, COALESCE(r.clean_text, '') AS clean_text,
+   t.n_lines AS n_lines, t.n_lines - COALESCE(r.n_kept, 0) AS n_removed
+FROM tot t LEFT JOIN reb r ON t.doc_id = r.doc_id
+"""
+
+
+TFIDF_TOP_K = 3
+
+
+def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-k TF-IDF keywords per document (textstats.tfidf_top_terms);
+    scores rounded to 6 dp BEFORE the (score DESC, term ASC) ranking so
+    both engines rank identically."""
+    from chronon_spark.operators.textstats import tfidf_top_terms
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    out = tfidf_top_terms(docs, "doc_id", top_k=TFIDF_TOP_K)
+    return out.select("doc_id", "term", "rank", _r6("score").alias("score"))
+
+
+_TFIDF_ORACLE = rf"""
+WITH toks AS (
+  SELECT doc_id,
+     unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS term
+  FROM documents
+),
+tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term),
+dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
+scored AS (
+  SELECT tf.doc_id, tf.term,
+     floor(tf * (ln((n.n + 1.0) / (df + 1.0)) + 1.0) * 1e6 + 0.5) / 1e6 AS score
+  FROM tf JOIN dfreq USING (term), n
+),
+ranked AS (
+  SELECT doc_id, term, score,
+     row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rank
+  FROM scored
+)
+SELECT doc_id, term, CAST(rank AS INT) AS rank, round(score, 6) AS score
+FROM ranked WHERE rank <= {TFIDF_TOP_K}
+"""
+
+
+BLOCKED_DOMAINS = ("src3", "src7", "src11")
+BLOCKED_TERMS = ("slow", "skew")
+
+
+def q_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Domain + term blocklist flags (textstats.blocklist_flags): docs
+    from blocked sources or containing blocked tokens are flagged; the
+    term probe is arrays_overlap on the normalized token stream (InSet,
+    zero shuffle)."""
+    from chronon_spark.operators.textstats import blocklist_flags
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return blocklist_flags(
+        docs,
+        "doc_id",
+        domain_col="source",
+        blocked_domains=BLOCKED_DOMAINS,
+        blocked_terms=BLOCKED_TERMS,
+    )
+
+
+def _blocklist_oracle() -> str:
+    doms = ", ".join(f"'{d}'" for d in BLOCKED_DOMAINS)
+    terms = ", ".join(f"'{t}'" for t in BLOCKED_TERMS)
+    return rf"""
+WITH f AS (
+  SELECT doc_id,
+     source IN ({doms}) AS blocked_domain,
+     len(list_filter(
+       string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
+       t -> list_contains([{terms}], t))) > 0 AS blocked_term
+  FROM documents
+)
+SELECT doc_id, blocked_domain, blocked_term,
+   NOT (blocked_domain OR blocked_term) AS kept
+FROM f
+"""
+
+
+def _doc_stats_oracle() -> str:
+    from chronon_spark.operators.textstats import LANG_MARKERS, _STOPWORDS
+
+    stop = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS) + "]"
+    lang_structs = ", ".join(
+        "{'score': CAST(len(list_filter(toks, t -> list_contains(["
+        + ", ".join(f"'{m}'" for m in markers)
+        + "], t))) AS DOUBLE) / nn, 'lang': '" + lang + "'}"
+        for lang, markers in sorted(LANG_MARKERS.items())
+    )
+    return rf"""
+WITH base AS (
+  SELECT doc_id, text,
+     regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm,
+     CAST(length(text) AS DOUBLE) AS n,
+     greatest(CAST(length(text) AS DOUBLE), 1.0) AS safe_n
+  FROM documents
+),
+tok AS (
+  SELECT *, string_split(norm, ' ') AS toks,
+     greatest(len(string_split(norm, ' ')), 1) AS ntoks,
+     CAST(greatest(len(string_split(norm, ' ')), 1) AS DOUBLE) AS nn
+  FROM base
+),
+stats AS (
+  SELECT doc_id, text, norm, n, safe_n, toks, ntoks, nn,
+     CASE WHEN length(trim(text)) = 0 THEN 0
+          ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens,
+     CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE) / safe_n AS alpha_ratio,
+     CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / safe_n AS digit_ratio,
+     CAST(length(regexp_replace(text, '[^\.,;:!\?]', '', 'g')) AS DOUBLE) / safe_n AS punct_ratio,
+     CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / nn AS mean_word_len,
+     CAST(len(list_filter(toks, t -> list_contains({stop}, t))) AS DOUBLE) / nn AS stopword_ratio,
+     list_max([{lang_structs}]) AS best
+  FROM tok
+)
+SELECT doc_id,
+   CAST(n_tokens AS BIGINT) AS n_tokens,
+   CAST(n AS BIGINT) AS n_chars,
+   round(alpha_ratio, 6) AS alpha_ratio,
+   round(digit_ratio, 6) AS digit_ratio,
+   round(punct_ratio, 6) AS punct_ratio,
+   round(mean_word_len, 6) AS mean_word_len,
+   round(stopword_ratio, 6) AS stopword_ratio,
+   round(0.3 * least(n / 500.0, 1.0) + 0.3 * alpha_ratio
+       + 0.2 * greatest(0.0, 1.0 - digit_ratio * 5.0)
+       + 0.2 * least(stopword_ratio * 5.0, 1.0), 6) AS quality,
+   CASE WHEN best.score > 0 THEN best.lang ELSE 'und' END AS lang_guess,
+   md5(norm) AS fingerprint
+FROM stats
 """
 
 
@@ -2525,6 +3579,92 @@ FROM p
 """
 
 
+def q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL canonicalization (dedup-by-url prerequisite): messy URLs
+    synthesized deterministically from orders, canonicalized with
+    textstats.canonical_url — lowercased scheme/host, default ports
+    stripped, fragments dropped, tracking params removed, params sorted."""
+    from chronon_spark.operators.textstats import canonical_url
+
+    df = spark.sql(f"""
+        SELECT o_orderkey,
+           concat('HTTPS://Shop', CAST(o_custkey % 50 AS STRING),
+                  '.Example.COM', CASE WHEN o_orderkey % 3 = 0 THEN ':443' ELSE '' END,
+                  '/item/', CAST(o_orderkey AS STRING),
+                  CASE WHEN o_orderkey % 2 = 0 THEN '/' ELSE '' END,
+                  '?utm_source=mail&z=', CAST(o_orderkey % 7 AS STRING),
+                  '&a=1#sec', CAST(o_orderkey % 5 AS STRING)) AS url
+        FROM parquet.`{sf_dir}/orders.parquet`
+    """)
+    return df.select("o_orderkey", "url", canonical_url("url").alias("canonical"))
+
+
+_URL_CANONICAL_ORACLE = """
+WITH u AS (
+  SELECT o_orderkey,
+     concat('HTTPS://Shop', CAST(o_custkey % 50 AS VARCHAR),
+            '.Example.COM', CASE WHEN o_orderkey % 3 = 0 THEN ':443' ELSE '' END,
+            '/item/', CAST(o_orderkey AS VARCHAR),
+            CASE WHEN o_orderkey % 2 = 0 THEN '/' ELSE '' END,
+            '?utm_source=mail&z=', CAST(o_orderkey % 7 AS VARCHAR),
+            '&a=1#sec', CAST(o_orderkey % 5 AS VARCHAR)) AS url
+  FROM orders
+)
+SELECT u.o_orderkey, u.url,
+   concat('https://shop', CAST(o.o_custkey % 50 AS VARCHAR), '.example.com',
+          '/item/', CAST(u.o_orderkey AS VARCHAR),
+          '?a=1&z=', CAST(u.o_orderkey % 7 AS VARCHAR)) AS canonical
+FROM u JOIN orders o ON o.o_orderkey = u.o_orderkey
+"""
+
+
+def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher repetition rules (Rae et al. 2021): duplicate-line fraction +
+    top-bigram occupancy per document, with the published pass thresholds."""
+    from chronon_spark.operators.textstats import repetition_flags
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    out = repetition_flags(docs, "doc_id")
+    return out.select(
+        "doc_id",
+        _r6(F.col("dup_line_frac")).alias("dup_line_frac"),
+        _r6(F.col("top_bigram_frac")).alias("top_bigram_frac"),
+        "passes_repetition",
+    )
+
+
+_REPETITION_ORACLE = r"""
+WITH d AS (
+  SELECT doc_id,
+     list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)),
+                 x -> len(x) > 0) AS lines,
+     regexp_split_to_array(trim(text), '\s+') AS w
+  FROM documents
+),
+g AS (
+  SELECT doc_id, lines,
+     [array_to_string(w[i:i+1], ' ')
+      for i in generate_series(1, greatest(len(w) - 1, 0))] AS grams
+  FROM d
+),
+m AS (
+  SELECT doc_id,
+     CASE WHEN len(lines) > 0
+          THEN CAST(len(lines) - len(list_distinct(lines)) AS DOUBLE) / len(lines)
+          ELSE 0.0 END AS dup_line_frac,
+     CASE WHEN len(grams) > 0
+          THEN CAST(list_max(list_transform(list_distinct(grams),
+                    x -> len(list_filter(grams, y -> y = x)))) AS DOUBLE) / len(grams)
+          ELSE 0.0 END AS top_bigram_frac
+  FROM g
+)
+SELECT doc_id, round(dup_line_frac, 6) AS dup_line_frac,
+   round(top_bigram_frac, 6) AS top_bigram_frac,
+   dup_line_frac <= 0.3 AND top_bigram_frac <= 0.18 AS passes_repetition
+FROM m
+"""
+
+
 def q_eval_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled-execution pre-flight (plans/eval.py; reference
     batch/Eval.scala:147-220): three confs — healthy, ANSI-cast that only
@@ -3780,6 +4920,1331 @@ LEFT JOIN dom_f d ON d.domain = s.domain AND d.ts = s.ts
 
 
 # ---------------------------------------------------------------------------
+# Distributed BPE tokenizer (operators/tokenizer.py)
+# ---------------------------------------------------------------------------
+
+_BPE_MERGES = 8
+_BPE_MIN_COUNT = 2
+
+
+def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed BPE training (Sennrich et al. 2016) over the documents
+    corpus: 8 merges, bit-exact vs the unrolled SQL oracle (pair counts
+    weighted by word frequency, ties count DESC then pair ASC)."""
+    from chronon_spark.operators.tokenizer import bpe_train
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    merges = bpe_train(docs, num_merges=_BPE_MERGES, min_count=_BPE_MIN_COUNT)
+    return spark.createDataFrame(
+        [(i + 1, a, b, c) for i, (a, b, c) in enumerate(merges)],
+        "rank long, left_sym string, right_sym string, cnt long",
+    )
+
+
+def _bpe_train_oracle(num_merges: int = _BPE_MERGES, min_count: int = _BPE_MIN_COUNT) -> str:
+    """Unrolled-iteration SQL twin of bpe_train: one CTE trio per merge.
+    The merge application is the same `replace(w, ' a  b ', ' ab ')`
+    double-space algebra the engine uses (every symbol owns its leading
+    AND trailing space) — with it, SQL's left-to-right non-overlapping
+    replace IS the BPE greedy merge rule, shared boundaries included."""
+    ctes = [
+        r"""wf0 AS (
+  SELECT regexp_replace(word, '(.)', ' \1 ', 'g') AS w, CAST(count(*) AS BIGINT) AS cnt
+  FROM (
+    SELECT unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS word
+    FROM documents
+  )
+  WHERE word <> '' AND regexp_matches(word, '^[\x21-\x7e]+$')
+  GROUP BY 1
+)"""
+    ]
+    for k in range(num_merges):
+        ctes.append(
+            f"""p{k} AS (
+  SELECT p, CAST(sum(cnt) AS BIGINT) AS c FROM (
+    SELECT unnest(list_transform(generate_series(1, len(syms) - 1),
+                                 i -> syms[i] || ' ' || syms[i + 1])) AS p, cnt
+    FROM (SELECT string_split(trim(w), '  ') AS syms, cnt FROM wf{k})
+  ) GROUP BY p
+),
+t{k} AS (SELECT p, c FROM p{k} WHERE c >= {min_count} ORDER BY c DESC, p ASC LIMIT 1),
+wf{k + 1} AS (
+  SELECT replace(w, ' ' || replace(t.p, ' ', '  ') || ' ',
+                 ' ' || replace(t.p, ' ', '') || ' ') AS w, cnt
+  FROM wf{k}, t{k} t
+)"""
+        )
+    finals = [
+        f"SELECT CAST({k + 1} AS BIGINT) AS rank, split_part(p, ' ', 1) AS left_sym,"
+        f" split_part(p, ' ', 2) AS right_sym, c AS cnt FROM t{k}"
+        for k in range(num_merges)
+    ]
+    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL ".join(finals)
+
+
+# fixed literal merges for the encode gate (typical English BPE openers);
+# embedded identically in the Spark query and the SQL oracle
+_BPE_FIXED_MERGES = [
+    ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"), ("an", "d"),
+    ("e", "r"), ("o", "n"), ("r", "e"), ("a", "t"), ("e", "n"),
+    ("o", "r"), ("s", "t"),
+]
+
+
+def q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pure-Catalyst BPE encoding of every document with a fixed merge
+    table: per-doc token count + md5 fingerprint of the token stream."""
+    from chronon_spark.operators.tokenizer import bpe_token_stats
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return bpe_token_stats(docs, _BPE_FIXED_MERGES, "doc_id")
+
+
+def _bpe_tokens_oracle() -> str:
+    expr = "s"
+    for a, b in _BPE_FIXED_MERGES:
+        expr = f"replace({expr}, ' {a}  {b} ', ' {a}{b} ')"
+    return rf"""
+WITH enc AS (
+  SELECT doc_id,
+     array_to_string(
+       list_transform(
+         string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
+         w -> regexp_replace(w, '(.)', ' \1 ', 'g')),
+       ' § ') AS s
+  FROM documents
+),
+m AS (SELECT doc_id, {expr} AS s2 FROM enc),
+tk AS (
+  SELECT doc_id,
+     list_filter(string_split(trim(s2), ' '), t -> t <> '' AND t <> '§') AS toks
+  FROM m
+)
+SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
+   md5(array_to_string(toks, '')) AS tokens_fp
+FROM tk
+"""
+
+
+# ---------------------------------------------------------------------------
+# Quality-classifier distillation (operators/classifier.py)
+# ---------------------------------------------------------------------------
+
+_CLS_DIM = 128
+_CLS_EPOCHS = 3
+_CLS_LABEL = "IF(lang = 'en', 1, -1)"
+
+
+def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Integer-exact batch-perceptron distillation of a label heuristic
+    (lang='en') into hashed bag-of-words weights; outputs every doc's
+    integer score + prediction after 3 epochs."""
+    from chronon_spark.operators.classifier import quality_classifier
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return quality_classifier(
+        spark, docs, "doc_id", _CLS_LABEL, dim=_CLS_DIM, epochs=_CLS_EPOCHS
+    )
+
+
+def _classifier_oracle(dim: int = _CLS_DIM, epochs: int = _CLS_EPOCHS) -> str:
+    """Unrolled-epoch SQL twin of the batch perceptron. Every quantity is
+    integer arithmetic, so agreement is exact, not allclose."""
+    ctes = [
+        rf"""feats AS (
+  SELECT doc_id AS id, CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % {dim} AS f,
+     CAST(count(*) AS BIGINT) AS c
+  FROM (
+    SELECT doc_id, unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS tok
+    FROM documents
+  )
+  WHERE tok <> '' GROUP BY 1, 2
+)""",
+        "labels AS (SELECT doc_id AS id, CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS y FROM documents)",
+        # epoch 1: w=0 => every doc misclassified => w1 = sum over ALL docs
+        "w1 AS (SELECT f, CAST(sum(y * c) AS BIGINT) AS w FROM feats JOIN labels USING (id) GROUP BY f)",
+    ]
+    for t in range(1, epochs):
+        ctes.append(
+            f"""s{t} AS (
+  SELECT l.id, l.y, CAST(COALESCE(sum(w.w * fe.c), 0) AS BIGINT) AS s
+  FROM labels l LEFT JOIN feats fe ON fe.id = l.id LEFT JOIN w{t} w ON w.f = fe.f
+  GROUP BY l.id, l.y
+),
+m{t} AS (SELECT id, y FROM s{t} WHERE y * s <= 0),
+w{t + 1} AS (
+  SELECT COALESCE(a.f, b.f) AS f, CAST(COALESCE(a.w, 0) + COALESCE(b.d, 0) AS BIGINT) AS w
+  FROM w{t} a FULL OUTER JOIN (
+    SELECT f, sum(y * c) AS d FROM feats JOIN m{t} USING (id) GROUP BY f
+  ) b ON a.f = b.f
+)"""
+        )
+    final = f"""
+SELECT l.id, l.y,
+   CAST(COALESCE(sum(w.w * fe.c), 0) AS BIGINT) AS score,
+   CAST(CASE WHEN COALESCE(sum(w.w * fe.c), 0) > 0 THEN 1 ELSE -1 END AS INT) AS pred
+FROM labels l LEFT JOIN feats fe ON fe.id = l.id LEFT JOIN w{epochs} w ON w.f = fe.f
+GROUP BY l.id, l.y
+"""
+    return "WITH " + ",\n".join(ctes) + final
+
+
+def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Common-Crawl WARC ingestion round-trip (sources/warc.py): render the
+    documents table as gzip-multistream WARC archives (one ``.warc.gz``
+    per partition, written executor-side, content-addressed filenames),
+    read them back with the distributed WARC source, and emit per-doc
+    integrity facts — md5 over the crawled payload bytes, byte length,
+    and the parsed WARC-Date instant. The oracle computes the same
+    projection in DuckDB directly on the parquet source of truth, so a
+    single flipped byte anywhere in writer, gzip member walk, record
+    framing, or date parsing fails the gate."""
+    import hashlib as _hl
+    import os
+    import shutil
+
+    import pandas as pd
+
+    from chronon_spark.sources.warc import (
+        http_response_payload,
+        make_warc_bytes,
+        read_warc,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    out_dir = "/tmp/chronon_warc_" + _hl.md5(sf_dir.encode()).hexdigest()[:12]
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir, exist_ok=True)
+
+    def _write(parts):
+        chunks = [pdf[["doc_id", "text", "source"]] for pdf in parts]
+        pdf = pd.concat(chunks).sort_values("doc_id") if chunks else pd.DataFrame()
+        if not len(pdf):
+            return
+        base = pd.Timestamp("2020-01-01T00:00:00Z")
+        recs = []
+        for doc_id, text, source in zip(pdf["doc_id"], pdf["text"], pdf["source"]):
+            ts = (base + pd.to_timedelta(int(doc_id), unit="s")).strftime(
+                "%Y-%m-%dT%H:%M:%SZ"
+            )
+            headers = {
+                "WARC-Type": "response",
+                "WARC-Record-ID": f"<urn:doc:{int(doc_id)}>",
+                "WARC-Target-URI": f"https://crawl.test/{source}/{int(doc_id)}",
+                "WARC-Date": ts,
+                "Content-Type": "application/http; msgtype=response",
+            }
+            recs.append(
+                (headers, http_response_payload(text.encode("utf-8"),
+                                                "text/plain; charset=utf-8"))
+            )
+        data = make_warc_bytes(recs, gzip_members=True)
+        name = _hl.md5(data).hexdigest()[:16]
+        with open(os.path.join(out_dir, f"{name}.warc.gz"), "wb") as f:
+            f.write(data)
+        yield pd.DataFrame({"n": [len(recs)]})
+
+    # force the executor-side archive writes (tiny result: one row/partition)
+    docs.repartition(4, "doc_id").mapInPandas(_write, schema="n long").collect()
+
+    return read_warc(spark, out_dir).select(
+        F.element_at(F.split("url", "/"), -1).cast("long").alias("doc_id"),
+        F.col("url"),
+        F.md5("payload").alias("text_md5"),
+        F.length("payload").cast("long").alias("n_bytes"),
+        F.unix_timestamp("warc_ts").alias("ts_sec"),
+    )
+
+
+def _linkgraph_html(sf_dir: str, spark: SparkSession):
+    """Deterministic per-doc html with outgoing hrefs, identical algebra
+    in both engines: every doc links to a source domain (doc_id % 20),
+    a pure-sink .org domain (doc_id % 13 — exercises dangling mass), and
+    every third doc links to a hub; its own domain is source-derived so
+    some links are self-loops (exercises the edge filter)."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return docs.select(
+        F.concat(F.col("source"), F.lit(".example.com")).alias("src_domain"),
+        F.concat(
+            F.lit("<p>"),
+            F.col("text"),
+            F.lit('</p><a href="https://src'),
+            (F.col("doc_id") % 20).cast("string"),
+            F.lit('.example.com/p">'),
+            F.substring(F.col("text"), 1, 12),
+            F.lit('</a><a href="https://d'),
+            (F.col("doc_id") % 13).cast("string"),
+            F.lit('.example.org/q">b</a>'),
+            F.when(
+                F.col("doc_id") % 3 == 0,
+                F.lit('<a href="https://hub.example.net/r">c</a>'),
+            ).otherwise(F.lit("")),
+        ).alias("html"),
+    )
+
+
+def q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """href extraction + domain-edge aggregation (linkgraph.extract_links):
+    JVM-side regexp_extract_all projection, one groupBy shuffle. Counts
+    per (src_domain, dst_domain) INCLUDING self-loops — the raw
+    extraction fidelity is what's under test."""
+    from chronon_spark.operators.linkgraph import extract_links
+
+    links = extract_links(_linkgraph_html(sf_dir, spark))
+    return links.groupBy("src_domain", "dst_domain").agg(
+        F.count(F.lit(1)).alias("n_links")
+    )
+
+
+def q_domain_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Integer-exact damped PageRank over the distinct self-loop-free
+    domain graph (linkgraph.domain_pagerank, 4 iterations, d=0.85). The
+    oracle unrolls every iteration as CTEs — bit-exact BIGINT algebra."""
+    from chronon_spark.operators.linkgraph import (
+        domain_edges,
+        domain_pagerank,
+        extract_links,
+    )
+
+    links = extract_links(_linkgraph_html(sf_dir, spark))
+    return domain_pagerank(domain_edges(links), iters=4)
+
+
+def q_site_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Registered-domain (PSL-lite) host collapsing
+    (linkgraph.registered_domain): four synthetic host shapes per doc —
+    www-subdomain, blogspot platform suffix, deep co.uk subdomain, bare
+    two-label — roll up to site-level counts. The oracle derives each
+    registrable domain ARITHMETICALLY from the case id (it never splits
+    hostnames), so a suffix-logic bug cannot cancel out."""
+    from chronon_spark.operators.linkgraph import registered_domain
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    k = F.col("doc_id") % 4
+    host = (
+        F.when(k == 0, F.concat(F.lit("www."), F.col("source"), F.lit(".example.com")))
+        .when(k == 1, F.concat(F.col("source"), F.lit(".blogspot.com")))
+        .when(k == 2, F.concat(F.lit("a.b."), F.col("source"), F.lit(".co.uk")))
+        .otherwise(F.concat(F.lit("news."), F.col("source"), F.lit(".io")))
+    )
+    hosts = docs.select(host.alias("host"))
+    return (
+        hosts.select("host", registered_domain("host").alias("site"))
+        .groupBy("site")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.countDistinct("host").alias("n_hosts"),
+        )
+    )
+
+
+_SITE_COLLAPSE_ORACLE = """
+WITH d AS (
+  SELECT doc_id, source, doc_id % 4 AS k FROM documents),
+h AS (
+  SELECT CASE k WHEN 0 THEN 'www.' || source || '.example.com'
+                WHEN 1 THEN source || '.blogspot.com'
+                WHEN 2 THEN 'a.b.' || source || '.co.uk'
+                ELSE 'news.' || source || '.io' END AS host,
+         CASE k WHEN 0 THEN 'example.com'
+                WHEN 1 THEN source || '.blogspot.com'
+                WHEN 2 THEN source || '.co.uk'
+                ELSE source || '.io' END AS site
+  FROM d)
+SELECT site, count(*) AS n_rows,
+       CAST(count(DISTINCT host) AS BIGINT) AS n_hosts
+FROM h GROUP BY site
+"""
+
+
+def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Redirect-chain resolution (linkgraph.resolve_redirects): per-doc
+    synthetic 3xx edges form 4-hop chains within each 5-id block, with
+    every 97th id a self-loop trap (the degenerate cycle — must come
+    back 'unresolved' at the hop cap). The oracle unrolls every follow
+    step as CTEs — exact string algebra both sides."""
+    from chronon_spark.operators.linkgraph import resolve_redirects
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = F.col("doc_id")
+    edges = docs.where(d % 5 != 4).select(
+        F.concat(F.lit("https://r.example/u"), d).alias("src_url"),
+        F.when(
+            d % 97 == 0, F.concat(F.lit("https://r.example/u"), d)
+        ).otherwise(F.concat(F.lit("https://r.example/u"), d + 1)).alias("dst_url"),
+    )
+    return resolve_redirects(edges, max_hops=8)
+
+
+def _redirect_resolve_oracle() -> str:
+    from chronon_spark.operators.linkgraph import redirect_oracle_sql
+
+    edges_sql = """
+SELECT 'https://r.example/u' || CAST(doc_id AS VARCHAR) AS src_url,
+       CASE WHEN doc_id % 97 = 0
+            THEN 'https://r.example/u' || CAST(doc_id AS VARCHAR)
+            ELSE 'https://r.example/u' || CAST(doc_id + 1 AS VARCHAR) END
+         AS dst_url
+FROM documents WHERE doc_id % 5 <> 4
+"""
+    return redirect_oracle_sql(edges_sql, max_hops=8)
+
+
+def q_url_traps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Crawl-trap detection (indexing.url_trap_stats): per-source
+    synthetic URLs where every third source is a calendar trap (all its
+    URLs collapse to the /cal/N/N template) and the rest carry md5-slug
+    paths (distinct templates). Flags volume + template collapse with
+    integer-exact ratios."""
+    from chronon_spark.operators.indexing import url_trap_stats
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    k = F.substring("source", 4, 10).cast("int") % 3
+    urls = docs.select(
+        F.concat(
+            F.lit("https://"),
+            F.col("source"),
+            F.lit(".example.com"),
+            F.when(
+                k == 0,
+                F.concat(
+                    F.lit("/cal/"),
+                    (F.col("doc_id") % 97).cast("string"),
+                    F.lit("/"),
+                    ((F.col("doc_id") * 7) % 89).cast("string"),
+                ),
+            ).otherwise(F.concat(F.lit("/a/"), F.md5("text"))),
+        ).alias("url")
+    )
+    return url_trap_stats(urls, min_urls=20, min_urls_per_template=10)
+
+
+_URL_TRAPS_ORACLE = r"""
+WITH u AS (
+  SELECT CASE WHEN CAST(substr(source, 4) AS INT) % 3 = 0
+         THEN 'https://' || source || '.example.com/cal/'
+              || CAST(doc_id % 97 AS VARCHAR) || '/'
+              || CAST((doc_id * 7) % 89 AS VARCHAR)
+         ELSE 'https://' || source || '.example.com/a/' || md5(text)
+         END AS url
+  FROM documents),
+p AS (
+  SELECT lower(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/]+)', 1))
+           AS domain,
+         regexp_replace(regexp_replace(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*', ''),
+                        '[0-9]+', 'N', 'g') AS template
+  FROM u),
+t AS (SELECT domain, template, count(*) AS c FROM p GROUP BY 1, 2)
+SELECT domain,
+       CAST(sum(c) AS BIGINT) AS n_urls,
+       CAST(count(*) AS BIGINT) AS n_templates,
+       CAST(sum(c) AS BIGINT) // CAST(count(*) AS BIGINT) AS urls_per_template,
+       CAST(max(c) AS BIGINT) AS max_template_urls,
+       (CAST(sum(c) AS BIGINT) >= 20
+        AND CAST(sum(c) AS BIGINT) // CAST(count(*) AS BIGINT) >= 10) AS is_trap
+FROM t GROUP BY domain
+"""
+
+
+def q_trust_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TrustRank (Gyöngyi et al. 2004) over the same domain graph as
+    domain_rank: teleport restricted to three trusted seed domains
+    (linkgraph.domain_trustrank) — the published web-spam demotion
+    prior; domains unreachable from the seeds hold zero trust. The
+    oracle unrolls every iteration as CTEs — bit-exact BIGINT algebra."""
+    from chronon_spark.operators.linkgraph import (
+        domain_edges,
+        domain_trustrank,
+        extract_links,
+    )
+
+    links = extract_links(_linkgraph_html(sf_dir, spark))
+    seeds = spark.createDataFrame(
+        [("hub.example.net",), ("src1.example.com",), ("src7.example.com",)],
+        "domain string",
+    )
+    return domain_trustrank(domain_edges(links), seeds, iters=4)
+
+
+def _trust_rank_oracle() -> str:
+    from chronon_spark.operators.linkgraph import trustrank_oracle_sql
+
+    edges_sql = (
+        "WITH " + _LINKGRAPH_LINKS_SQL
+        + "SELECT DISTINCT src_domain, dst_domain FROM links"
+        + " WHERE src_domain <> dst_domain"
+    )
+    seeds_sql = (
+        "SELECT * FROM (VALUES ('hub.example.net'), ('src1.example.com'),"
+        " ('src7.example.com')) t(domain)"
+    )
+    return trustrank_oracle_sql(edges_sql, seeds_sql, iters=4)
+
+
+def q_hits_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Integer-exact HITS hubs/authorities over the same domain graph as
+    domain_rank (linkgraph.domain_hits, 3 iterations, divide-only L1
+    renormalization). Oracle unrolls every half-step as CTEs."""
+    from chronon_spark.operators.linkgraph import (
+        domain_edges,
+        domain_hits,
+        extract_links,
+    )
+
+    links = extract_links(_linkgraph_html(sf_dir, spark))
+    return domain_hits(domain_edges(links), iters=3)
+
+
+def q_harmonic_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Truncated harmonic centrality over the domain graph
+    (linkgraph.harmonic_centrality, exact all-sources-BFS mode, d<=3,
+    integer scale units) — the ranking Common Crawl publishes for its
+    host graph; the HyperBall HLL mode is the 10^8-domain scale path
+    (pytest-pinned within tolerance of exact). Edges REVERSED so the
+    score measures who can reach a domain (incoming reachability)."""
+    from chronon_spark.operators.linkgraph import (
+        domain_edges,
+        extract_links,
+        harmonic_centrality,
+    )
+
+    links = extract_links(_linkgraph_html(sf_dir, spark))
+    edges = domain_edges(links).select(
+        F.col("dst_domain").alias("src_domain"),
+        F.col("src_domain").alias("dst_domain"),
+    )
+    return harmonic_centrality(edges, max_dist=3, mode="exact")
+
+
+def _harmonic_rank_oracle() -> str:
+    from chronon_spark.operators.linkgraph import harmonic_oracle_sql
+
+    edges_sql = (
+        "WITH " + _LINKGRAPH_LINKS_SQL
+        + "SELECT DISTINCT dst_domain AS src_domain, src_domain AS dst_domain"
+        + " FROM links WHERE src_domain <> dst_domain"
+    )
+    return harmonic_oracle_sql(edges_sql, max_dist=3)
+
+
+def q_anchor_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 incoming anchor texts per target domain via the SALTED
+    two-phase exact top-k (linkgraph.anchor_top_k, salt_partitions=4) —
+    the oracle is a plain window row_number, so the salted plan is
+    verified against the unsalted semantics."""
+    from chronon_spark.operators.linkgraph import anchor_top_k, extract_anchors
+
+    anchors = extract_anchors(_linkgraph_html(sf_dir, spark))
+    out = anchor_top_k(anchors, k=3, salt_partitions=4)
+    return out.select(
+        "domain", "anchor", "n_links", F.col("rnk").cast("long").alias("rnk")
+    )
+
+
+_LINKGRAPH_LINKS_SQL = """
+h AS (
+  SELECT source || '.example.com' AS src_domain,
+         '<p>' || text || '</p><a href="https://src'
+           || CAST(doc_id % 20 AS VARCHAR)
+           || '.example.com/p">' || substr(text, 1, 12)
+           || '</a><a href="https://d'
+           || CAST(doc_id % 13 AS VARCHAR) || '.example.org/q">b</a>'
+           || CASE WHEN doc_id % 3 = 0
+                   THEN '<a href="https://hub.example.net/r">c</a>'
+                   ELSE '' END AS html
+  FROM documents),
+l AS (
+  SELECT src_domain,
+         unnest(regexp_extract_all(html, 'href="(https?://[^"]+)"', 1)) AS href
+  FROM h),
+links AS (
+  SELECT src_domain, regexp_extract(href, '^https?://([^/]+)', 1) AS dst_domain
+  FROM l)
+"""
+
+_LINK_GRAPH_ORACLE = (
+    "WITH " + _LINKGRAPH_LINKS_SQL
+    + "SELECT src_domain, dst_domain, count(*) AS n_links FROM links GROUP BY 1, 2"
+)
+
+
+_ANCHOR_TOPK_ORACLE = """
+WITH h AS (
+  SELECT source || '.example.com' AS src_domain,
+         '<p>' || text || '</p><a href="https://src'
+           || CAST(doc_id % 20 AS VARCHAR)
+           || '.example.com/p">' || substr(text, 1, 12)
+           || '</a><a href="https://d'
+           || CAST(doc_id % 13 AS VARCHAR) || '.example.org/q">b</a>'
+           || CASE WHEN doc_id % 3 = 0
+                   THEN '<a href="https://hub.example.net/r">c</a>'
+                   ELSE '' END AS html
+  FROM documents),
+el AS (
+  SELECT unnest(regexp_extract_all(html,
+           '<a href="(https?://[^"]+)"[^>]*>([^<]*)</a>', 0)) AS el
+  FROM h),
+a AS (
+  SELECT regexp_extract(regexp_extract(el,
+           '<a href="(https?://[^"]+)"[^>]*>([^<]*)</a>', 1),
+           '^https?://([^/]+)', 1) AS domain,
+         regexp_extract(el, '<a href="(https?://[^"]+)"[^>]*>([^<]*)</a>', 2)
+           AS anchor
+  FROM el),
+c AS (
+  SELECT domain, anchor, count(*) AS n_links
+  FROM a WHERE anchor <> '' GROUP BY 1, 2),
+r AS (
+  SELECT domain, anchor, n_links,
+         row_number() OVER (PARTITION BY domain
+                            ORDER BY n_links DESC, anchor ASC) AS rnk
+  FROM c)
+SELECT domain, anchor, CAST(n_links AS BIGINT) AS n_links,
+       CAST(rnk AS BIGINT) AS rnk
+FROM r WHERE rnk <= 3
+"""
+
+
+def _domain_rank_oracle() -> str:
+    from chronon_spark.operators.linkgraph import pagerank_oracle_sql
+
+    edges_sql = (
+        "WITH " + _LINKGRAPH_LINKS_SQL
+        + "SELECT DISTINCT src_domain, dst_domain FROM links"
+        + " WHERE src_domain <> dst_domain"
+    )
+    return pagerank_oracle_sql(edges_sql, iters=4, damping=85)
+
+
+def _hits_rank_oracle() -> str:
+    from chronon_spark.operators.linkgraph import hits_oracle_sql
+
+    edges_sql = (
+        "WITH " + _LINKGRAPH_LINKS_SQL
+        + "SELECT DISTINCT src_domain, dst_domain FROM links"
+        + " WHERE src_domain <> dst_domain"
+    )
+    return hits_oracle_sql(edges_sql, iters=3)
+
+
+_WARC_INGEST_ORACLE = """
+SELECT doc_id,
+       'https://crawl.test/' || source || '/' || CAST(doc_id AS VARCHAR) AS url,
+       md5(text) AS text_md5,
+       octet_length(encode(text)) AS n_bytes,
+       CAST(epoch(TIMESTAMP '2020-01-01 00:00:00' + to_seconds(doc_id)) AS BIGINT) AS ts_sec
+FROM documents
+"""
+
+
+def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vocabulary build over the corpus (indexing.term_stats): per-term
+    document frequency + total term frequency via a two-level map-side
+    combinable aggregate — stopword mass collapses per-partition before
+    either exchange. Oracle re-derives the table in DuckDB from an
+    unnest of the identical normalization."""
+    from chronon_spark.operators.indexing import term_stats, tokenize
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return term_stats(tokenize(docs))
+
+
+def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Search-based decontamination: every doc whose token stream contains
+    any probe phrase as a contiguous run (indexing.phrase_search — the
+    positional-intersection join; ALL phrases matched in ONE pass over
+    the token stream, phrase table broadcast). Probes are the first 3
+    normalized tokens of every doc_id % 31 == 0 document, so every probe
+    is guaranteed at least its own source hit plus whatever boilerplate
+    shares the prefix. The oracle is an INDEPENDENT formulation: a
+    padded-LIKE substring match over the normalized text."""
+    from chronon_spark.operators.indexing import norm_words, phrase_search, tokenize
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    phrases = (
+        docs.where(F.col("doc_id") % 31 == 0)
+        .select(
+            F.col("doc_id").alias("phrase_id"),
+            F.concat_ws(" ", F.slice(norm_words("text"), 1, 3)).alias("phrase"),
+        )
+        .where(F.col("phrase") != "")
+    )
+    return phrase_search(tokenize(docs), phrases)
+
+
+def q_crawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inter-crawl change report (indexing.crawl_diff): snapshot A is the
+    documents table keyed by crawl URL; snapshot B deterministically
+    deletes doc_id % 11 == 0, rewrites doc_id % 7 == 0 (appended
+    section), re-crawls the rest byte-identical, and adds a /v2 page for
+    doc_id % 13 == 0. Statuses by text equality; changed pages carry an
+    integer-exact distinct-word Jaccard. The oracle computes the same
+    report with DuckDB LIST algebra (list_distinct/list_intersect) vs
+    the engine's relational full-outer word join."""
+    from chronon_spark.operators.indexing import crawl_diff
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    url = F.concat(
+        F.lit("https://crawl.test/"), F.col("source"), F.lit("/"), F.col("doc_id")
+    )
+    old = docs.select(url.alias("url"), "text")
+    new_body = F.when(
+        F.col("doc_id") % 7 == 0,
+        F.concat(F.col("text"), F.lit(" updated section alpha beta gamma")),
+    ).otherwise(F.col("text"))
+    new = docs.where(F.col("doc_id") % 11 != 0).select(
+        url.alias("url"), new_body.alias("text")
+    )
+    added = docs.where(F.col("doc_id") % 13 == 0).select(
+        F.concat(url, F.lit("/v2")).alias("url"),
+        F.substring("text", 1, 40).alias("text"),
+    )
+    return crawl_diff(old, new.unionByName(added))
+
+
+def q_stream_phrase_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Phrase-level decontamination at INGEST time
+    (streaming/curation.stream_phrase_filter): the corpus replayed as a
+    file stream, dropping any doc that contains a probe phrase (the
+    %31 first-3-token probes, same as batch phrase_search) as a
+    contiguous token run — a stateless nested higher-order Catalyst
+    expression, zero streaming state, no Python. Oracle: the DuckDB
+    NOT-EXISTS padded-LIKE inverse of the phrase_search oracle, so the
+    streaming gate is verified against independent batch semantics."""
+    import tempfile
+
+    from chronon_spark.operators.indexing import norm_words
+    from chronon_spark.streaming.curation import stream_phrase_filter
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    phrases = (
+        docs.where(F.col("doc_id") % 31 == 0)
+        .select(
+            F.col("doc_id").alias("phrase_id"),
+            F.concat_ws(" ", F.slice(norm_words("text"), 1, 3)).alias("phrase"),
+        )
+        .where(F.col("phrase") != "")
+    )
+    d = tempfile.mkdtemp(prefix="phrase_src_")
+    docs.select("doc_id", "lang", "text").write.mode("overwrite").parquet(d)
+    stream = spark.readStream.schema(spark.read.parquet(d).schema).parquet(d)
+    kept = stream_phrase_filter(stream, phrases)
+    name = "drv_stream_phrase"
+    q = (
+        kept.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.table(name).select("doc_id", "lang")
+
+
+_STREAM_PHRASE_ORACLE = """
+WITH n AS (
+  SELECT doc_id, lang,
+         trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm
+  FROM documents),
+p AS (
+  SELECT array_to_string(list_slice(string_split(norm, ' '), 1, 3), ' ') AS phrase
+  FROM n WHERE doc_id % 31 = 0 AND norm <> '')
+SELECT doc_id, lang FROM n
+WHERE NOT EXISTS (
+  SELECT 1 FROM p WHERE ' ' || n.norm || ' ' LIKE '% ' || p.phrase || ' %')
+"""
+
+
+def q_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental index maintenance (indexing.merge_term_stats): the
+    vocabulary of yesterday's corpus (doc_id % 11 != 0) merged with the
+    increment's stats (doc_id % 11 == 0) by pure counter addition —
+    |vocab|-row cost, no corpus rescan. The oracle builds the FULL
+    corpus vocabulary from scratch, so the gate proves
+    incremental == batch."""
+    from chronon_spark.operators.indexing import (
+        merge_term_stats,
+        term_stats,
+        tokenize,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    base = term_stats(tokenize(docs.where(F.col("doc_id") % 11 != 0)))
+    delta = term_stats(tokenize(docs.where(F.col("doc_id") % 11 == 0)))
+    return merge_term_stats(base, delta)
+
+
+def q_recrawl_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recrawl-scheduling prior (indexing.recrawl_stats): three
+    deterministic synthetic crawls of the documents table (crawl 2
+    rewrites %7 and skips %11; crawl 3 rewrites %5 and skips %13) →
+    per-URL observation count, distinct-body count, and integer change
+    rate. One projection hashes bodies, one groupBy — the oracle counts
+    DISTINCT text directly (engine counts distinct md5), an independent
+    equivalence."""
+    from chronon_spark.operators.indexing import recrawl_stats
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    url = F.concat(
+        F.lit("https://crawl.test/"), F.col("source"), F.lit("/"), F.col("doc_id")
+    )
+    s1 = docs.select(url.alias("url"), "text")
+    s2 = docs.where(F.col("doc_id") % 11 != 0).select(
+        url.alias("url"),
+        F.when(
+            F.col("doc_id") % 7 == 0,
+            F.concat(F.col("text"), F.lit(" updated section alpha beta gamma")),
+        ).otherwise(F.col("text")).alias("text"),
+    )
+    s3 = docs.where(F.col("doc_id") % 13 != 0).select(
+        url.alias("url"),
+        F.when(
+            F.col("doc_id") % 5 == 0,
+            F.concat(F.col("text"), F.lit(" second revision")),
+        ).otherwise(F.col("text")).alias("text"),
+    )
+    return recrawl_stats(s1.unionByName(s2).unionByName(s3))
+
+
+_RECRAWL_ORACLE = """
+WITH base AS (
+  SELECT 'https://crawl.test/' || source || '/' || CAST(doc_id AS VARCHAR) AS url,
+         doc_id, text
+  FROM documents),
+snaps AS (
+  SELECT url, text FROM base
+  UNION ALL
+  SELECT url,
+         CASE WHEN doc_id % 7 = 0
+              THEN text || ' updated section alpha beta gamma'
+              ELSE text END AS text
+  FROM base WHERE doc_id % 11 <> 0
+  UNION ALL
+  SELECT url,
+         CASE WHEN doc_id % 5 = 0
+              THEN text || ' second revision'
+              ELSE text END AS text
+  FROM base WHERE doc_id % 13 <> 0)
+SELECT url,
+       CAST(count(*) AS BIGINT) AS n_obs,
+       CAST(count(DISTINCT text) AS BIGINT) AS n_versions,
+       CASE WHEN count(*) > 1
+            THEN CAST((1000000 * (count(DISTINCT text) - 1))
+                      // (count(*) - 1) AS BIGINT)
+            ELSE NULL END AS change_rate_micro
+FROM snaps GROUP BY url
+"""
+
+
+def q_crawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Crawl-frontier scheduling (indexing.crawl_priority): the recrawl
+    change-rate prior composed with the integer-exact domain PageRank —
+    priority_micro = (1+rate) * (1 + rank DIV 1e6). URLs live on the
+    same per-source domains as the link graph, so the rank join is a
+    broadcast of the |domains|-row table; the oracle nests the full
+    unrolled-PageRank CTE inside the recrawl SQL."""
+    from chronon_spark.operators.indexing import crawl_priority, recrawl_stats
+    from chronon_spark.operators.linkgraph import (
+        domain_edges,
+        domain_pagerank,
+        extract_links,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    url = F.concat(
+        F.lit("https://"), F.col("source"), F.lit(".example.com/"), F.col("doc_id")
+    )
+    s1 = docs.select(url.alias("url"), "text")
+    s2 = docs.where(F.col("doc_id") % 11 != 0).select(
+        url.alias("url"),
+        F.when(
+            F.col("doc_id") % 7 == 0,
+            F.concat(F.col("text"), F.lit(" updated section alpha beta gamma")),
+        ).otherwise(F.col("text")).alias("text"),
+    )
+    s3 = docs.where(F.col("doc_id") % 13 != 0).select(
+        url.alias("url"),
+        F.when(
+            F.col("doc_id") % 5 == 0,
+            F.concat(F.col("text"), F.lit(" second revision")),
+        ).otherwise(F.col("text")).alias("text"),
+    )
+    stats = recrawl_stats(s1.unionByName(s2).unionByName(s3))
+    ranks = domain_pagerank(
+        domain_edges(extract_links(_linkgraph_html(sf_dir, spark))), iters=4
+    )
+    return crawl_priority(stats, ranks)
+
+
+def _crawl_priority_oracle() -> str:
+    from chronon_spark.operators.linkgraph import pagerank_oracle_sql
+
+    edges_sql = (
+        "WITH " + _LINKGRAPH_LINKS_SQL
+        + "SELECT DISTINCT src_domain, dst_domain FROM links"
+        + " WHERE src_domain <> dst_domain"
+    )
+    pr = pagerank_oracle_sql(edges_sql, iters=4, damping=85)
+    return f"""
+WITH pr AS MATERIALIZED ({pr}),
+base AS (
+  SELECT 'https://' || source || '.example.com/' || CAST(doc_id AS VARCHAR) AS url,
+         doc_id, text
+  FROM documents),
+snaps AS (
+  SELECT url, text FROM base
+  UNION ALL
+  SELECT url,
+         CASE WHEN doc_id % 7 = 0
+              THEN text || ' updated section alpha beta gamma'
+              ELSE text END AS text
+  FROM base WHERE doc_id % 11 <> 0
+  UNION ALL
+  SELECT url,
+         CASE WHEN doc_id % 5 = 0
+              THEN text || ' second revision'
+              ELSE text END AS text
+  FROM base WHERE doc_id % 13 <> 0),
+st AS (
+  SELECT url,
+         CAST(count(*) AS BIGINT) AS n_obs,
+         CAST(count(DISTINCT text) AS BIGINT) AS n_versions,
+         CASE WHEN count(*) > 1
+              THEN CAST((1000000 * (count(DISTINCT text) - 1))
+                        // (count(*) - 1) AS BIGINT)
+              ELSE NULL END AS change_rate_micro
+  FROM snaps GROUP BY url),
+j AS (
+  SELECT st.*, regexp_extract(url, '^https?://([^/]+)', 1) AS domain FROM st)
+SELECT j.url, j.domain, j.n_obs, j.n_versions, j.change_rate_micro,
+   CAST(coalesce(pr.rank, 0) AS BIGINT) AS rank,
+   CAST((1 + coalesce(j.change_rate_micro, 500000))
+        * (1 + coalesce(pr.rank, 0) // 1000000) AS BIGINT) AS priority_micro
+FROM j LEFT JOIN pr ON j.domain = pr.domain
+"""
+
+
+def q_crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Politeness-slot assignment (indexing.schedule_crawl) over the
+    crawl_priority frontier: per-domain frontiers capped at 20 via the
+    SALTED exact top-k, ranked (priority desc, url asc), cut into
+    per_slot=5 fetch waves. Oracle ranks the same composed frontier with
+    a plain window — verifying the salted cap against unsalted
+    semantics AND the full priority composition underneath."""
+    from chronon_spark.operators.indexing import schedule_crawl
+
+    frontier = q_crawl_priority(spark, sf_dir).select(
+        "url", "domain", "priority_micro"
+    )
+    return schedule_crawl(
+        frontier,
+        per_slot=5,
+        max_frontier_per_domain=20,
+        salt_partitions=2,
+    ).select("url", "domain", "priority_micro", "rank", "slot")
+
+
+def _crawl_schedule_oracle() -> str:
+    inner = _crawl_priority_oracle()
+    return f"""
+WITH pri AS MATERIALIZED ({inner}),
+r AS (
+  SELECT url, domain, priority_micro,
+     row_number() OVER (PARTITION BY domain
+                        ORDER BY priority_micro DESC, url ASC) AS rank
+  FROM pri)
+SELECT url, domain, priority_micro, CAST(rank AS BIGINT) AS rank,
+   CAST((rank - 1) // 5 AS BIGINT) AS slot
+FROM r WHERE rank <= 20
+"""
+
+
+def q_robots_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Crawl-delay politeness rates end-to-end: per-source robots bodies
+    carry a '*'-group Crawl-delay of (k+1).5 seconds (ceil -> k+2), a
+    shadowed fastbot group BEFORE it (the Crawl-delay line between the
+    two User-agent lines must SEPARATE the groups), and every fourth
+    source a non-numeric value (ignored -> scheduler default 7).
+    parse_crawl_delay feeds schedule_crawl, whose not_before_sec =
+    (rank-1)*delay. The oracle derives every delay arithmetically — it
+    never parses."""
+    from chronon_spark.operators.indexing import schedule_crawl
+    from chronon_spark.operators.robots import parse_crawl_delay
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    k = F.substring("source", 4, 10).cast("int") % 4
+    robots = docs.select("source").distinct().select(
+        F.concat(F.col("source"), F.lit(".example.com")).alias("domain"),
+        F.concat(
+            F.lit("User-agent: fastbot\nCrawl-delay: 0\nUser-agent: *\nCrawl-delay: "),
+            F.when(k == 3, F.lit("soon")).otherwise(
+                F.concat((k + 1).cast("string"), F.lit(".5"))
+            ),
+            F.lit("\nDisallow: /private/\n"),
+        ).alias("robots_txt"),
+    )
+    frontier = docs.select(
+        F.concat(
+            F.lit("https://"), F.col("source"), F.lit(".example.com/d"),
+            F.col("doc_id"),
+        ).alias("url"),
+        F.concat(F.col("source"), F.lit(".example.com")).alias("domain"),
+        (F.col("doc_id") % 11).cast("long").alias("priority_micro"),
+    )
+    delays = parse_crawl_delay(robots, agent="*")
+    return schedule_crawl(
+        frontier, per_slot=4, delays=delays, default_delay_sec=7
+    ).select("url", "domain", "rank", "slot", "not_before_sec")
+
+
+_ROBOTS_DELAY_ORACLE = """
+WITH d AS (
+  SELECT doc_id, source, CAST(substr(source, 4) AS INT) % 4 AS k
+  FROM documents),
+f AS (
+  SELECT 'https://' || source || '.example.com/d' || CAST(doc_id AS VARCHAR) AS url,
+         source || '.example.com' AS domain,
+         doc_id % 11 AS priority_micro,
+         CASE WHEN k = 3 THEN 7 ELSE k + 2 END AS delay
+  FROM d),
+r AS (
+  SELECT url, domain, delay,
+     row_number() OVER (PARTITION BY domain
+                        ORDER BY priority_micro DESC, url ASC) AS rank
+  FROM f)
+SELECT url, domain, CAST(rank AS BIGINT) AS rank,
+   CAST((rank - 1) // 4 AS BIGINT) AS slot,
+   CAST((rank - 1) * delay AS BIGINT) AS not_before_sec
+FROM r
+"""
+
+
+def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """robots.txt crawl gate (operators/robots): per-source synthetic
+    robots bodies (a '*' group with Disallow /pK/ + Allow /pK/keep/, a
+    wildcard rule the literal-prefix subset must DROP, and a shadowing
+    badbot group that must not leak into '*') are PARSED from text and
+    applied to one URL per document with longest-prefix/allow-wins
+    semantics. The oracle is an independent formulation: it never
+    parses — it derives the intended verdict arithmetic directly, so a
+    parser bug cannot cancel out."""
+    from chronon_spark.operators.robots import apply_robots, parse_robots
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    k = F.substring("source", 4, 10).cast("int") % 5
+    robots = (
+        docs.select("source").distinct().select(
+            F.concat(F.col("source"), F.lit(".example.com")).alias("domain"),
+            F.concat(
+                F.lit("# policy\nUser-agent: *\nDisallow: /p"),
+                k,
+                F.lit("/\nAllow: /p"),
+                k,
+                F.lit("/keep/\nDisallow: /x*y\n\nUser-agent: badbot\nDisallow: /\n"),
+            ).alias("robots_txt"),
+        )
+    )
+    urls = docs.select(
+        F.concat(
+            F.lit("https://"),
+            F.col("source"),
+            F.lit(".example.com/p"),
+            F.col("doc_id") % 7,
+            F.when(F.col("doc_id") % 3 == 0, F.lit("/keep")).otherwise(F.lit("")),
+            F.lit("/d"),
+            F.col("doc_id"),
+        ).alias("url")
+    )
+    rules = parse_robots(robots, agent="*")
+    return apply_robots(urls, rules).select(
+        "url", "allowed", "matched_rule", "matched_prefix"
+    )
+
+
+_ROBOTS_FILTER_ORACLE = """
+WITH d AS (
+  SELECT doc_id, source,
+     CAST(substr(source, 4) AS INT) % 5 AS k,
+     doc_id % 7 AS p,
+     doc_id % 3 = 0 AS keep
+  FROM documents)
+SELECT
+  'https://' || source || '.example.com/p' || CAST(p AS VARCHAR)
+    || CASE WHEN keep THEN '/keep' ELSE '' END
+    || '/d' || CAST(doc_id AS VARCHAR) AS url,
+  (p <> k) OR keep AS allowed,
+  CASE WHEN p = k AND keep THEN 'allow'
+       WHEN p = k THEN 'disallow' END AS matched_rule,
+  CASE WHEN p = k AND keep THEN '/p' || CAST(k AS VARCHAR) || '/keep/'
+       WHEN p = k THEN '/p' || CAST(k AS VARCHAR) || '/' END AS matched_prefix
+FROM d
+"""
+
+
+def q_sitemap_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sitemap crawl discovery (robots.parse_sitemap): per-source XML
+    assembled from the documents table (lastmod on even ids, priority on
+    %4 ids, one index entry per source), parsed back to entry rows. The
+    oracle never parses XML — it derives each field arithmetically."""
+    from chronon_spark.operators.robots import parse_sitemap
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    el = F.concat(
+        F.lit("<url>\n  <loc> https://"),
+        F.col("source"),
+        F.lit(".example.com/d"),
+        F.col("doc_id"),
+        F.lit(" </loc>\n"),
+        F.when(
+            F.col("doc_id") % 2 == 0,
+            F.concat(
+                F.lit("  <lastmod>2024-01-"),
+                F.lpad((F.col("doc_id") % 28) + 1, 2, "0"),
+                F.lit("</lastmod>\n"),
+            ),
+        ).otherwise(F.lit("")),
+        F.when(
+            F.col("doc_id") % 4 == 0,
+            F.concat(
+                F.lit("  <priority>0."), F.col("doc_id") % 10, F.lit("</priority>\n")
+            ),
+        ).otherwise(F.lit("")),
+        F.lit("</url>"),
+    )
+    xml = (
+        docs.select("source", el.alias("el"))
+        .groupBy("source")
+        .agg(F.concat_ws("\n", F.collect_list("el")).alias("body"))
+        .select(
+            F.concat(F.col("source"), F.lit(".example.com")).alias("domain"),
+            F.concat(
+                F.lit("<urlset>\n"),
+                F.col("body"),
+                F.lit("\n</urlset>\n<sitemapindex><sitemap><loc>https://"),
+                F.col("source"),
+                F.lit(".example.com/sitemap-2.xml</loc></sitemap></sitemapindex>"),
+            ).alias("sitemap_xml"),
+        )
+    )
+    return parse_sitemap(xml)
+
+
+_SITEMAP_PARSE_ORACLE = """
+SELECT source || '.example.com' AS domain,
+       'url' AS kind,
+       'https://' || source || '.example.com/d' || CAST(doc_id AS VARCHAR) AS loc,
+       CASE WHEN doc_id % 2 = 0
+            THEN '2024-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') END AS lastmod,
+       CAST(CASE WHEN doc_id % 4 = 0 THEN (doc_id % 10) * 100 ELSE 500 END AS BIGINT)
+         AS priority_milli
+FROM documents
+UNION ALL
+SELECT DISTINCT source || '.example.com',
+       'sitemap',
+       'https://' || source || '.example.com/sitemap-2.xml',
+       NULL,
+       CAST(500 AS BIGINT)
+FROM documents
+"""
+
+
+def q_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-domain corpus prior (linkgraph.domain_rollup): doc counts,
+    corpus-wide duplicate-text counts, integer mean length, and the
+    4-iteration integer PageRank of the synthetic link graph — the table
+    a curation pipeline joins to weight a domain's contribution. One
+    hash groupBy + join for dup flags, one per-domain aggregate, one
+    broadcast join against the |domains|-row rank table."""
+    from chronon_spark.operators.linkgraph import (
+        domain_edges,
+        domain_pagerank,
+        domain_rollup,
+        extract_links,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.concat(F.col("source"), F.lit(".example.com")).alias("domain"),
+        "text",
+        "n_chars",
+    )
+    ranks = domain_pagerank(
+        domain_edges(extract_links(_linkgraph_html(sf_dir, spark))), iters=4
+    )
+    return domain_rollup(docs, ranks)
+
+
+def _domain_rollup_oracle() -> str:
+    from chronon_spark.operators.linkgraph import pagerank_oracle_sql
+
+    edges_sql = (
+        "WITH " + _LINKGRAPH_LINKS_SQL
+        + "SELECT DISTINCT src_domain, dst_domain FROM links"
+        + " WHERE src_domain <> dst_domain"
+    )
+    pr = pagerank_oracle_sql(edges_sql, iters=4, damping=85)
+    return rf"""
+WITH d AS (
+  SELECT source || '.example.com' AS domain,
+         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS hh,
+         n_chars
+  FROM documents),
+dup AS (SELECT hh, count(*) AS c FROM d GROUP BY 1),
+pd AS (
+  SELECT domain, count(*) AS n_docs,
+         sum(CASE WHEN dup.c > 1 THEN 1 ELSE 0 END) AS dup_docs,
+         sum(n_chars) // count(*) AS mean_chars
+  FROM d JOIN dup USING (hh) GROUP BY 1),
+pr AS ({pr})
+SELECT pd.domain,
+       CAST(n_docs AS BIGINT) AS n_docs,
+       CAST(dup_docs AS BIGINT) AS dup_docs,
+       CAST(mean_chars AS BIGINT) AS mean_chars,
+       CAST(coalesce(pr.rank, 0) AS BIGINT) AS rank
+FROM pd LEFT JOIN pr ON pd.domain = pr.domain
+"""
+
+
+def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Okapi BM25 top-5 retrieval (indexing.bm25_topk) for keyword
+    queries drawn deterministically from the corpus (the distinct first-4
+    tokens of every doc_id % 101 == 0 document). Scoring is integer
+    micro/milli BM25 (k1=1.2, b=0.75; idf clamped at 0) so the DuckDB
+    oracle is bit-exact; corpus scalars ride a broadcast single-row
+    aggregate, postings are restricted to the query vocabulary BEFORE
+    aggregation, and the ranking takes the SALTED two-phase top-k path
+    (salt_partitions=4) — the oracle is a plain window, so the salted
+    plan is verified against unsalted semantics."""
+    from chronon_spark.operators.indexing import bm25_topk, tokenize
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    toks = tokenize(docs)
+    qdf = (
+        toks.where((F.col("doc_id") % 101 == 0) & (F.col("pos") <= 4))
+        .select(F.col("doc_id").alias("query_id"), "term")
+        .distinct()
+    )
+    return bm25_topk(toks, qdf, k=5, salt_partitions=4)
+
+
+# normalized token-list CTE shared by the index oracles; string_split on
+# a trimmed collapsed string yields [''] for token-less docs — the WHERE
+# term <> '' filter below restores the true empty stream
+_INDEX_TOKENS_SQL = """
+nt AS (
+  SELECT doc_id,
+         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
+                      ' ') AS toks
+  FROM documents),
+tok AS (
+  SELECT doc_id, t.term, t.pos
+  FROM nt, LATERAL (
+    SELECT unnest(toks) AS term, generate_subscripts(toks, 1) AS pos) t
+  WHERE t.term <> '')
+"""
+
+_INVERTED_INDEX_ORACLE = (
+    "WITH " + _INDEX_TOKENS_SQL
+    + """, pd AS (
+  SELECT term, doc_id, count(*) AS tf FROM tok GROUP BY 1, 2)
+SELECT term, CAST(count(*) AS BIGINT) AS df, CAST(sum(tf) AS BIGINT) AS total_tf
+FROM pd GROUP BY term"""
+)
+
+_BM25_ORACLE = (
+    "WITH " + _INDEX_TOKENS_SQL
+    + """, dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY 1),
+corpus AS (SELECT count(*) AS n_docs, sum(dl) AS total_tokens FROM dl),
+q AS (
+  SELECT DISTINCT doc_id AS query_id, term
+  FROM tok WHERE doc_id % 101 = 0 AND pos <= 4),
+qv AS (SELECT DISTINCT term FROM q),
+p AS (
+  SELECT t.term, t.doc_id, count(*) AS tf
+  FROM tok t JOIN qv USING (term) GROUP BY 1, 2),
+dfr AS (SELECT term, count(*) AS df FROM p GROUP BY 1),
+idf AS (
+  SELECT term,
+         greatest(0, CAST(floor(ln((2*n_docs - 2*df + 1) / (2*df + 1))
+                                * 1000000 + 0.5) AS BIGINT)) AS idf_micro
+  FROM dfr, corpus),
+sc AS (
+  SELECT q.query_id, p.doc_id,
+         sum((idf.idf_micro * p.tf * 2200) // (
+           p.tf * 1000 + (120 * (250
+             + (750 * ((dl.dl * corpus.n_docs * 1000) // corpus.total_tokens))
+               // 1000)) // 100)) AS score_micro
+  FROM p
+  JOIN idf USING (term)
+  JOIN q USING (term)
+  JOIN dl ON p.doc_id = dl.doc_id, corpus
+  GROUP BY 1, 2),
+r AS (
+  SELECT query_id, doc_id, CAST(score_micro AS BIGINT) AS score_micro,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY score_micro DESC, doc_id ASC) AS rnk
+  FROM sc)
+SELECT query_id, doc_id, score_micro, CAST(rnk AS BIGINT) AS rnk
+FROM r WHERE rnk <= 5"""
+)
+
+_PHRASE_SEARCH_ORACLE = """
+WITH n AS (
+  SELECT doc_id,
+         trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm
+  FROM documents),
+p AS (
+  SELECT doc_id AS phrase_id,
+         array_to_string(list_slice(string_split(norm, ' '), 1, 3), ' ') AS phrase
+  FROM n WHERE doc_id % 31 = 0 AND norm <> '')
+SELECT p.phrase_id, n.doc_id
+FROM p JOIN n ON ' ' || n.norm || ' ' LIKE '% ' || p.phrase || ' %'
+"""
+
+_CRAWL_DIFF_ORACLE = """
+WITH base AS (
+  SELECT 'https://crawl.test/' || source || '/' || CAST(doc_id AS VARCHAR) AS url,
+         doc_id, text
+  FROM documents),
+old AS (SELECT url, text FROM base),
+new AS (
+  SELECT url,
+         CASE WHEN doc_id % 7 = 0
+              THEN text || ' updated section alpha beta gamma'
+              ELSE text END AS text
+  FROM base WHERE doc_id % 11 <> 0
+  UNION ALL
+  SELECT url || '/v2' AS url, substr(text, 1, 40) AS text
+  FROM base WHERE doc_id % 13 = 0),
+j AS (
+  SELECT coalesce(o.url, n.url) AS url, o.text AS ta, n.text AS tb
+  FROM old o FULL OUTER JOIN new n ON o.url = n.url),
+w AS (
+  SELECT url, ta, tb,
+         list_filter(list_distinct(string_split(
+           trim(regexp_replace(lower(coalesce(ta, '')), '[^a-z0-9]+', ' ', 'g')),
+           ' ')), x -> x <> '') AS wa,
+         list_filter(list_distinct(string_split(
+           trim(regexp_replace(lower(coalesce(tb, '')), '[^a-z0-9]+', ' ', 'g')),
+           ' ')), x -> x <> '') AS wb
+  FROM j),
+m AS (
+  SELECT url, ta, tb,
+         length(list_intersect(wa, wb)) AS ni,
+         length(wa) + length(wb) - length(list_intersect(wa, wb)) AS nu
+  FROM w)
+SELECT url,
+       CASE WHEN ta IS NULL THEN 'added'
+            WHEN tb IS NULL THEN 'deleted'
+            WHEN ta = tb THEN 'unchanged'
+            ELSE 'changed' END AS status,
+       CASE WHEN ta IS NULL OR tb IS NULL THEN NULL
+            WHEN nu = 0 THEN CAST(1000000 AS BIGINT)
+            ELSE CAST((1000000 * ni) // nu AS BIGINT) END AS jaccard_micro
+FROM m
+"""
+
+
+# ---------------------------------------------------------------------------
 # Driver contract
 # ---------------------------------------------------------------------------
 
@@ -3857,16 +6322,46 @@ def _query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "label_snapshot": q_label_snapshot,
         "target_encode": q_target_encode,
         "training_set": q_training_set,
+        "stupid_backoff": q_stupid_backoff,
         "kv_fetch": q_kv_fetch,
+        "hits_rank": q_hits_rank,
         "tiled_fetch": q_tiled_fetch,
+        "harmonic_rank": q_harmonic_rank,
+        "crawl_priority": q_crawl_priority,
+        "robots_filter": q_robots_filter,
+        "sitemap_parse": q_sitemap_parse,
+        "crawl_schedule": q_crawl_schedule,
+        "inverted_index": q_inverted_index,
+        "phrase_search": q_phrase_search,
+        "crawl_diff": q_crawl_diff,
+        "domain_rollup": q_domain_rollup,
+        "bm25_topk": q_bm25_topk,
+        "incremental_index": q_incremental_index,
+        "stream_phrase_decontam": q_stream_phrase_decontam,
+        "recrawl_stats": q_recrawl_stats,
+        "warc_ingest": q_warc_ingest,
+        "link_graph": q_link_graph,
+        "domain_rank": q_domain_rank,
+        "trust_rank": q_trust_rank,
+        "url_traps": q_url_traps,
+        "robots_delay": q_robots_delay,
+        "redirect_resolve": q_redirect_resolve,
+        "site_collapse": q_site_collapse,
+        "temperature_mix_tokens": q_temperature_mix_tokens,
+        "anchor_topk": q_anchor_topk,
         "eval_preflight": q_eval_preflight,
+        "bpe_tokens": q_bpe_tokens,
         "model_transforms": q_model_transforms,
         "drift_dist": q_drift_dist,
+        "bpe_train": q_bpe_train,
         "consistency": q_consistency,
+        "quality_classifier": q_quality_classifier,
         "decayed_sum": q_decayed_sum,
         "scd2_intervals": q_scd2_intervals,
         "clustered_asof": q_clustered_asof,
         # -- green in r1/r2 but skipped by the round-3 budget --------------
+        "url_canonical": q_url_canonical,
+        "repetition_quality": q_repetition_quality,
         "cumulative_scan": q_cumulative_scan,
         "sketch_percentile": q_sketch_percentile,
         "asof_multisource": q_asof_multisource,
@@ -3883,8 +6378,10 @@ def _query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bootstrap_join": q_bootstrap_join,
         "backfill_resume": q_backfill_resume,
         # -- round-3 green, cheapest first ----------------------------------
+        "blocklist": q_blocklist,
         "json_extract": q_json_extract,
         "entity_snapshot": q_entity_snapshot,
+        "shard_shuffle": q_shard_shuffle,
         "lag_lead": q_lag_lead,
         "corpus_split": q_corpus_split,
         "tpch_q3": q_tpch_q3,
@@ -3893,22 +6390,41 @@ def _query_defs() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "compare_job": q_compare_job,
         "compare_seq": q_compare_seq,
         "staging_q1": q_staging_q1,
+        "doc_stats": q_doc_stats,
+        "boilerplate_lines": q_boilerplate_lines,
+        "tfidf_topk": q_tfidf_topk,
+        "temperature_mix": q_temperature_mix,
         "asof_moments": q_asof_moments,
         "asof_histogram": q_asof_histogram,
         "feature_summary": q_feature_summary,
+        "doc_sample": q_doc_sample,
         "stream_sessions": q_stream_sessions,
+        "unigram_logprob": q_unigram_logprob,
         "snapshot_join": q_snapshot_join,
         "asof_lastk_topk": q_asof_lastk_topk,
+        "ccnet_buckets": q_ccnet_buckets,
+        "pack_sequences": q_pack_sequences,
         "asof_sawtooth": q_asof_sawtooth,
+        "exact_dedup": q_exact_dedup,
+        "pii_redact": q_pii_redact,
         "asof_percentile": q_asof_percentile,
         "chained_join": q_chained_join,
         "fetch_join": q_fetch_join,
         "external_fetch": q_external_fetch,
         "spj_merge": q_spj_merge,
         "webtext_flagship": q_webtext_flagship,
+        "decontaminate": q_decontaminate,
+        "duplicated_spans": q_duplicated_spans,
+        "span_removal": q_span_removal,
         "asof_join_multipart": q_asof_join_multipart,
         "asof_bucketed": q_asof_bucketed,
         "snapshot_groupby": q_snapshot_groupby,
+        "dedup_clusters": q_dedup_clusters,
+        "ngram_jaccard": q_ngram_jaccard,
+        "minhash_lsh": q_minhash_lsh,
+        "incremental_dedup": q_incremental_dedup,
+        "stream_curation": q_stream_curation,
+        "simhash_near_dups": q_simhash_near_dups,
         "asof_groupby": q_asof_groupby,
     }
 
@@ -3920,6 +6436,7 @@ def oracle_sql() -> dict[str, str]:
 def _raw_oracles() -> dict[str, str]:
     return {
         "kv_fetch": _KV_FETCH_ORACLE,
+        "hits_rank": _hits_rank_oracle(),
         "tiled_fetch": _TILED_FETCH_ORACLE,
         "tile_compaction": _TILED_FETCH_ORACLE,  # fetch ≡ regardless of
         # when compaction last ran — the invariant IS the oracle
@@ -3928,6 +6445,19 @@ def _raw_oracles() -> dict[str, str]:
         "klist_serve": _KLIST_SERVE_ORACLE,
         "freq_serve": _FREQ_SERVE_ORACLE,
         "hist_serve": _HIST_SERVE_ORACLE,
+        "harmonic_rank": _harmonic_rank_oracle(),
+        "crawl_priority": _crawl_priority_oracle(),
+        "robots_filter": _ROBOTS_FILTER_ORACLE,
+        "sitemap_parse": _SITEMAP_PARSE_ORACLE,
+        "crawl_schedule": _crawl_schedule_oracle(),
+        "inverted_index": _INVERTED_INDEX_ORACLE,
+        "phrase_search": _PHRASE_SEARCH_ORACLE,
+        "crawl_diff": _CRAWL_DIFF_ORACLE,
+        "domain_rollup": _domain_rollup_oracle(),
+        "bm25_topk": _BM25_ORACLE,
+        "incremental_index": _INVERTED_INDEX_ORACLE,
+        "stream_phrase_decontam": _STREAM_PHRASE_ORACLE,
+        "recrawl_stats": _RECRAWL_ORACLE,
         "asof_groupby": _ASOF_ORACLE,
         "asof_join_multipart": _ASOF_JOIN_ORACLE,
         "asof_bucketed": _ASOF_BUCKETED_ORACLE,
@@ -3940,8 +6470,30 @@ def _raw_oracles() -> dict[str, str]:
         "target_encode": _TARGET_ENCODE_ORACLE,
         "training_set": _TRAINING_SET_ORACLE,
         "sessionize": _SESSIONIZE_ORACLE,
+        "exact_dedup": _EXACT_DEDUP_ORACLE,
+        "ngram_jaccard": _NGRAM_JACCARD_ORACLE,
+        "minhash_lsh": _minhash_oracle(),
+        "dedup_clusters": _dedup_clusters_oracle(),
+        "doc_sample": _DOC_SAMPLE_ORACLE,
         "corpus_split": _CORPUS_SPLIT_ORACLE,
+        "temperature_mix": _TEMPERATURE_MIX_ORACLE,
+        "shard_shuffle": _SHARD_SHUFFLE_ORACLE,
+        "pack_sequences": _PACK_ORACLE,
+        "decontaminate": _DECONTAM_ORACLE,
+        "duplicated_spans": _DUP_SPANS_ORACLE,
+        "span_removal": _SPAN_REMOVAL_ORACLE,
+        "ccnet_buckets": _CCNET_ORACLE,
+        "stupid_backoff": _STUPID_BACKOFF_ORACLE,
+        "incremental_dedup": _incremental_oracle(),
+        "unigram_logprob": _UNIGRAM_ORACLE,
+        "pii_redact": _pii_oracle(),
+        "stream_curation": _stream_curation_oracle(),
+        "simhash_near_dups": _SIMHASH_ORACLE,
         "webtext_flagship": _WEBTEXT_ORACLE,
+        "doc_stats": _doc_stats_oracle(),
+        "boilerplate_lines": _BOILERPLATE_ORACLE,
+        "tfidf_topk": _TFIDF_ORACLE,
+        "blocklist": _blocklist_oracle(),
         "asof_sawtooth": _SAWTOOTH_ORACLE,
         # same SQL on purpose: the clustered STORAGE layout must be
         # invisible in the results
@@ -3961,6 +6513,16 @@ def _raw_oracles() -> dict[str, str]:
         "asof_lastk_topk": _LASTK_ORACLE,
         "json_extract": _JSON_ORACLE,
         "profile": _PROFILE_ORACLE,
+        "warc_ingest": _WARC_INGEST_ORACLE,
+        "link_graph": _LINK_GRAPH_ORACLE,
+        "domain_rank": _domain_rank_oracle(),
+        "trust_rank": _trust_rank_oracle(),
+        "url_traps": _URL_TRAPS_ORACLE,
+        "robots_delay": _ROBOTS_DELAY_ORACLE,
+        "redirect_resolve": _redirect_resolve_oracle(),
+        "site_collapse": _SITE_COLLAPSE_ORACLE,
+        "temperature_mix_tokens": _TEMPERATURE_MIX_TOKENS_ORACLE,
+        "anchor_topk": _ANCHOR_TOPK_ORACLE,
         "eval_preflight": _EVAL_PREFLIGHT_ORACLE,
         "compare_job": _COMPARE_ORACLE,
         "compare_seq": _COMPARE_SEQ_ORACLE,
@@ -3978,11 +6540,16 @@ def _raw_oracles() -> dict[str, str]:
         "mutation_windowed": _MUTATION_WINDOWED_ORACLE,
         "mutation_fetch": _mutation_fetch_oracle(),
         "sketch_percentile": _sketch_oracle(),
+        "url_canonical": _URL_CANONICAL_ORACLE,
+        "repetition_quality": _REPETITION_ORACLE,
         "stream_tiles": _STREAM_TILES_ORACLE,
         "kafka_tiles": _KAFKA_TILES_ORACLE,
         "skew_join": _SKEW_ORACLE,
         "consistency": _consistency_oracle(),
         "model_transforms": _MODEL_TRANSFORMS_ORACLE,
+        "bpe_train": _bpe_train_oracle(),
+        "bpe_tokens": _bpe_tokens_oracle(),
+        "quality_classifier": _classifier_oracle(),
     }
 
 

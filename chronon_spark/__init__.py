@@ -10,8 +10,8 @@ Re-implements the batch GroupBy/Join semantics of the reference system
 - an Arrow-vectorized point-in-time ("as-of") join kernel
   (``chronon_spark.kernel``) run through cogrouped ``applyInPandas`` —
   no per-row Python anywhere,
-- point-in-time label joins, serving (upload, tile compaction, fetch) and
-  streaming tiles built on the same IR algebra.
+- training-data-pipeline operators (dedup, text stats, link graphs)
+  built on the same primitives.
 
 Everything here derives from public knowledge only: the PySpark API and the
 reference repo's observable behavior.

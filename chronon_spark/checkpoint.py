@@ -5,17 +5,19 @@ removes entries created by ``DataFrame.persist()`` — it does NOT touch
 the RDD-level persistence that ``localCheckpoint()`` creates (verified
 empirically on Spark 4.1: after ``ck = df.localCheckpoint();
 ck.unpersist()`` the checkpoint RDD is still in
-``sc.getPersistentRDDs``). Without an explicit release, checkpoints of
-shared sub-plans (the hopped path's query sets) are freed only when the
-JVM-side ``ContextCleaner`` notices the RDD is weakly unreachable — which,
-driven from Python, waits on BOTH the py4j finalizer cycle and the JVM GC,
-i.e. is nondeterministic and unbounded. This helper makes the release a
-deterministic step between top-level materializations.
+``sc.getPersistentRDDs``). Without an explicit release, superseded
+checkpoints in iterative loops (connected components, PageRank, BPE
+training, the staged curation pipeline) are freed only when the JVM-side
+``ContextCleaner`` notices the RDD is weakly unreachable — which, driven
+from Python, waits on BOTH the py4j finalizer cycle and the JVM GC, i.e.
+is nondeterministic and unbounded. At 100 TB an iterative job can hold
+many corpus-scale block sets hostage to GC timing; this helper makes the
+release a deterministic part of the loop.
 
 CONTRACT: a released checkpoint is UNREADABLE — ``localCheckpoint``
 truncates lineage, so the cached blocks are the ONLY copy and there is
 nothing to recompute from. Release strictly after the last consumer has
-materialized.
+materialized (in a loop: after the NEXT eager checkpoint exists).
 """
 
 from __future__ import annotations

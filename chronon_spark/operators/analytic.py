@@ -22,7 +22,7 @@ time slices of the key, carry the slice-boundary state through a tiny
 per-(key, slice) summary table whose per-key cardinality is bounded by the
 TIME RANGE (not event volume) — and ``mode="auto"`` routes on measured max
 per-key mass (memoized map-side-combined pre-check, the
-asof_join._max_key_volume pattern). Identical
+asof_join._max_key_volume / textstats._max_lang_mass pattern). Identical
 output either way; only the physical plan changes. Residual honest bound:
 a burst inside ONE slice still lands in one task — shrink ``slice_ms``
 to taste; the slice summary stays time-bounded.

@@ -6,7 +6,7 @@ Common-Crawl-derived corpora weight by harmonic/PageRank centrality;
 domain rank also feeds crawl-frontier prioritisation and seed-list
 construction). The reference engine has no graph operator; this module is
 part of the training-data surface built on the same DuckDB-oracle
-discipline as the rest of the repo (cf. ``clustering.kmeans_cluster``).
+discipline as the rest of the repo.
 
 Design for scale (10^12 pages, ~10^8 domains):
 - ``extract_links`` is a pure projection + ``explode`` of a JVM-side

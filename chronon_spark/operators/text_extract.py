@@ -53,3 +53,37 @@ def extract_text(html_col: str | Column = "html") -> Column:
     col = F.col(html_col) if isinstance(html_col, str) else html_col
     return udf(col)
 
+
+# Block-level elements whose boundaries become line breaks — how
+# C4/trafilatura-style extractors recover line structure from html so
+# line-level ops (boilerplate removal) have lines to act on.
+_BLOCK = re.compile(
+    rb"(?is)</?(p|div|br|li|ul|ol|h[1-6]|tr|table|section|article|"
+    rb"header|footer|nav|blockquote)\b[^>]*>"
+)
+_HWS = re.compile(r"[^\S\n]+")  # horizontal whitespace only
+
+
+def extract_text_lines_bytes(html: bytes) -> str:
+    """Like extract_text_bytes but block-tag boundaries become newlines;
+    each line is internally whitespace-collapsed, empty lines dropped."""
+    if html is None:
+        return None
+    stripped = _TAG.sub(b" ", _BLOCK.sub(b"\n", _SCRIPT.sub(b" ", html)))
+    s = stripped.decode("utf-8", errors="replace")
+    for ent, ch in _ENTITIES:
+        s = s.replace(ent, ch)
+    lines = (_HWS.sub(" ", ln).strip() for ln in s.split("\n"))
+    return "\n".join(ln for ln in lines if ln)
+
+
+def _extract_lines_series(html: pd.Series) -> pd.Series:
+    return html.map(extract_text_lines_bytes)
+
+
+def extract_text_lines(html_col: str | Column = "html") -> Column:
+    """Column expression: line-preserving text extraction (see
+    extract_text_lines_bytes)."""
+    udf = pandas_udf(_extract_lines_series, "string")
+    col = F.col(html_col) if isinstance(html_col, str) else html_col
+    return udf(col)

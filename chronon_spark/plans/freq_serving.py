@@ -17,7 +17,7 @@ way is bounded by the dropped tail of each hop. With ``m`` a few times
 ``k`` the served top-``k`` matches the exact top-``k`` whenever hop
 distributions are not adversarially flat — and every step is
 deterministic, so the DuckDB oracle replays the algebra bit-for-bit
-(the same honesty contract as the sketch-percentile oracles).
+(the same honesty contract as the BPE / CCNet oracles).
 
 Streaming production note: unlike ``sketch_serving``'s (bucket,count)
 rows — which a single cumulative streaming aggregation emits directly —

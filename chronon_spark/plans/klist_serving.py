@@ -36,7 +36,7 @@ upsert that MERGES the stored list with the batch's (the same
 
 Scale: per (key, hop) state is ≤ k entries after the salted two-phase
 aggregation (phase 1 bounds per-task state at salt × k — the repo's
-standard hot-key treatment); every join is
+standard hot-key treatment, sampling.py's top-k pattern); every join is
 a keyed equi-join, zero Python anywhere.
 """
 

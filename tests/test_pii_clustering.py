@@ -1,5 +1,4 @@
-"""Tests for PII redaction, corpus-internal duplicated spans, and
-embedding k-means / SemDeDup clustering."""
+"""Tests for PII redaction and corpus-internal duplicated spans."""
 
 import duckdb
 import pandas as pd
@@ -92,86 +91,3 @@ def test_duplicated_span_case_whitespace_insensitive(spark):
     out = {r["id"]: r for r in duplicated_span_flags(df, "doc_id", k=8).collect()}
     assert out[1]["flagged"] and out[2]["flagged"]
 
-
-# ---------------------------------------------------------------------------
-# k-means + SemDeDup
-# ---------------------------------------------------------------------------
-
-def _emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def test_kmeans_assignment_valid_and_deterministic(spark, sf_dir):
-    from chronon_spark.operators.clustering import kmeans_cluster
-
-    out = kmeans_cluster(_emb(spark, sf_dir), k=4, iters=2).toPandas()
-    n = _emb(spark, sf_dir).count()
-    assert len(out) == n
-    assert set(out.cell) <= set(range(4))
-    assert out.sim.between(-1.0, 1.0).all()
-    # every cell non-empty on this data
-    assert out.cell.nunique() == 4
-
-
-def test_kmeans_parallelism_invariance(spark, sf_dir):
-    """Shuffle-partition count must not change assignments: quantized
-    integer update sums are order-free and the rounded argmax absorbs
-    float noise."""
-    from chronon_spark.operators.clustering import kmeans_cluster
-
-    def run(nparts):
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-        try:
-            return (
-                kmeans_cluster(_emb(spark, sf_dir), k=4, iters=2)
-                .toPandas()
-                .sort_values("id")
-                .reset_index(drop=True)
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    a, b = run(2), run(16)
-    assert a.equals(b)
-
-
-def test_semdedup_subset_of_global_pairs(spark, sf_dir):
-    """Within-cluster pairs are exactly the global near-dup pairs whose
-    endpoints share a cluster (blocking loses only cross-cluster pairs)."""
-    from chronon_spark.operators.clustering import (
-        kmeans_assign,
-        kmeans_fit,
-        semdedup_pairs,
-    )
-    from chronon_spark.operators.similarity import embedding_near_dups
-
-    emb = _emb(spark, sf_dir)
-    got = semdedup_pairs(emb, k=4, iters=2, threshold=0.3).toPandas()
-    cents = kmeans_fit(emb, k=4, iters=2)
-    cells = kmeans_assign(emb, cents).toPandas().set_index("id").cell
-    glob = embedding_near_dups(emb, threshold=0.3).toPandas()
-    same_cell = glob[
-        glob.apply(lambda r: cells[r.id_a] == cells[r.id_b], axis=1)
-    ] if len(glob) else glob
-    assert set(map(tuple, got[["id_a", "id_b"]].values)) == set(
-        map(tuple, same_cell[["id_a", "id_b"]].values)
-    )
-    assert len(got) > 0
-
-
-def test_semdedup_planted_cluster(spark):
-    """Ten near-identical vectors + scattered noise: all 45 planted pairs
-    survive the cluster blocking (they must co-cluster)."""
-    import numpy as np
-
-    from chronon_spark.operators.clustering import semdedup_pairs
-
-    rng = np.random.RandomState(7)
-    base = rng.randn(16)
-    rows = [(i, (base + rng.randn(16) * 0.01).tolist()) for i in range(10)]
-    rows += [(100 + i, rng.randn(16).tolist()) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    out = semdedup_pairs(df, k=4, iters=2, threshold=0.95).toPandas()
-    planted = {(a, b) for a in range(10) for b in range(10) if a < b}
-    assert planted <= set(map(tuple, out[["id_a", "id_b"]].values))

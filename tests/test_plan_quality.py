@@ -213,9 +213,11 @@ def test_digest_invariants_flagship_and_groupby(spark, tmp_path_factory):
 
 
 def test_digest_invariants_round3_queries(spark):
-    """Pin round-3 query plan shapes: model inference adds exactly its
-    mapInPandas stages (no row-Python); drift distances and the serving
-    read path stay pure Catalyst."""
+    """Pin round-3 query plan shapes: packing is ONE shuffle + one Arrow
+    stage; model inference adds exactly its mapInPandas stages (no
+    row-Python); drift distances stay pure Catalyst; cluster labels come
+    back as a checkpointed scan (bounded plan — the unchecked iterative
+    lineage doubled per round)."""
     import sys
 
     sys.path.insert(0, "/root/repo")
@@ -225,11 +227,20 @@ def test_digest_invariants_round3_queries(spark):
     qs = E.queries()
     sf = "/root/testdata/sf0.001"
 
+    d = bench.plan_digest(qs["pack_sequences"](spark, sf))
+    assert d["exchanges"] <= 1 and d["python_stages"] == 1, d
+
     d = bench.plan_digest(qs["model_transforms"](spark, sf))
     assert d["python_stages"] <= 2 and d["exchanges"] <= 2, d
 
     d = bench.plan_digest(qs["drift_dist"](spark, sf))
     assert d["python_stages"] == 0, d
+
+    d = bench.plan_digest(qs["dedup_clusters"](spark, sf))
+    assert d["exchanges"] <= 2 and d["python_stages"] == 0, d
+
+    d = bench.plan_digest(qs["decontaminate"](spark, sf))
+    assert d["python_stages"] == 0 and d["broadcast_joins"] >= 1, d
 
     # serving lambda read path: pure Catalyst end-to-end (request-driven
     # upload ⊕ fresh-hop merge + fold join + derivation), bounded
@@ -238,11 +249,46 @@ def test_digest_invariants_round3_queries(spark):
     d = bench.plan_digest(qs["fetch_join"](spark, sf))
     assert d["python_stages"] == 0 and d["exchanges"] <= 9, d
 
+    # PII is a pure projection: no shuffle may ever appear
+    d = bench.plan_digest(qs["pii_redact"](spark, sf))
+    assert d["exchanges"] == 0 and d["python_stages"] == 0, d
+
+    # internal span dedup: bounded shuffles, no Python
+    d = bench.plan_digest(qs["duplicated_spans"](spark, sf))
+    assert d["exchanges"] <= 4 and d["python_stages"] == 0, d
+
+    # snapshot dedup: filters push to the scan, no Python anywhere
+    d = bench.plan_digest(qs["incremental_dedup"](spark, sf))
+    assert d["python_stages"] == 0 and d["has_pushed_filters"], d
+
+    d = bench.plan_digest(qs["unigram_logprob"](spark, sf))
+    assert d["exchanges"] <= 3 and d["python_stages"] == 0, d
+
+    # BPE encode is a pure projection (nested string replaces): no shuffle,
+    # no Python may ever appear in the per-row path
+    d = bench.plan_digest(qs["bpe_tokens"](spark, sf))
+    assert d["exchanges"] == 0 and d["python_stages"] == 0, d
+
+    # BPE training's per-iteration plan (pair counts over the word-freq
+    # table) is one map-side-combined aggregation, zero Python
+    from chronon_spark.operators.tokenizer import _pair_counts, _spaced, word_frequencies
+    from pyspark.sql import functions as F
+
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    wf = word_frequencies(docs).select(_spaced(F.col("word")).alias("w"), "cnt")
+    d = bench.plan_digest(_pair_counts(wf))
+    assert d["python_stages"] == 0 and d["exchanges"] <= 2, d
+
+    # classifier scoring: Catalyst-only — weights ride a broadcast join
+    d = bench.plan_digest(qs["quality_classifier"](spark, sf))
+    assert d["python_stages"] == 0, d
+    assert d["broadcast_joins"] >= 1, d
+
 
 def test_round3_ops_parallelism_invariant(spark):
     """Results must be identical across shuffle-partition settings
-    (the repo's standing probe for every new operator): drift
-    distances."""
+    (the repo's standing probe for every new operator): packing, cluster
+    resolution, sampling, drift distances."""
     import sys
 
     sys.path.insert(0, "/root/repo")
@@ -256,7 +302,18 @@ def test_round3_ops_parallelism_invariant(spark):
         for parts in ("3", "17"):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
             for name in (
+                "pack_sequences",
+                "dedup_clusters",
+                "doc_sample",
                 "drift_dist",
+                "duplicated_spans",
+                "span_removal",
+                "ccnet_buckets",
+                "incremental_dedup",
+                "unigram_logprob",
+                "bpe_train",
+                "bpe_tokens",
+                "quality_classifier",
             ):
                 df = qs[name](spark, sf).toPandas()
                 key = sorted(df.columns)
@@ -281,9 +338,63 @@ def test_round3_ops_parallelism_invariant(spark):
         assert a == b, f"{name} differs across shuffle partitionings"
 
 
+def test_linkgraph_plan_quality(spark):
+    """Link extraction stays a JVM-side projection: zero Python stages,
+    ONE exchange (the edge-count groupBy), and the scan reads only the
+    columns the html synthesis needs — a regression to a Python UDF or a
+    second shuffle fails here, not in a 100 TB run."""
+    import sys
+
+    sys.path.insert(0, "/root/repo")
+    import bench
+    import __spark_entry__ as E
+
+    lg = E.queries()["link_graph"](spark, "/root/testdata/sf0.001")
+    d = bench.plan_digest(lg)
+    assert d["python_stages"] == 0, d
+    assert d["exchanges"] <= 1, d
+
+    # anchor extraction + salted top-k: still Python-free; bounded
+    # exchanges (count agg + two window phases)
+    at = E.queries()["anchor_topk"](spark, "/root/testdata/sf0.001")
+    d2 = bench.plan_digest(at)
+    assert d2["python_stages"] == 0, d2
+    assert d2["exchanges"] <= 4, d2
+
+
+def test_digest_invariants_round4_index_queries(spark):
+    """Pin the round-4 web-index plan shapes at sf0.001: everything stays
+    Python-free with bounded exchanges; bm25 keeps its broadcast-heavy
+    shape (query vocab, idf, query terms, corpus scalars all broadcast)."""
+    import sys
+
+    sys.path.insert(0, "/root/repo")
+    import bench
+    import __spark_entry__ as E
+
+    qs = E.queries()
+    bounds = {
+        # name: (max exchanges, min broadcast joins)
+        "inverted_index": (2, 0),
+        "phrase_search": (4, 2),
+        "crawl_diff": (5, 0),
+        "domain_rollup": (3, 1),
+        "bm25_topk": (12, 4),
+        "incremental_index": (4, 0),
+        "recrawl_stats": (2, 0),
+    }
+    for name, (max_ex, min_bc) in bounds.items():
+        d = bench.plan_digest(qs[name](spark, "/root/testdata/sf0.001"))
+        assert d["python_stages"] == 0, (name, d)
+        assert d["exchanges"] <= max_ex, (name, d)
+        assert d["broadcast_joins"] >= min_bc, (name, d)
+
+
 def test_digest_invariants_round4_late_queries(spark):
-    """Pin the round-4 late additions: the KV fetch keeps the
-    lambda-merge Python-free with its pruned bucketed scan underneath."""
+    """Pin the round-4 late additions: the HITS result is a bounded
+    checkpointed scan (iterative lineage folded);
+    the KV fetch keeps the lambda-merge Python-free with its pruned
+    bucketed scan underneath."""
     import sys
 
     sys.path.insert(0, "/root/repo")
@@ -293,11 +404,58 @@ def test_digest_invariants_round4_late_queries(spark):
     qs = E.queries()
     sf = "/root/testdata/sf0.001"
 
+    d = bench.plan_digest(qs["hits_rank"](spark, sf))
+    assert d["python_stages"] == 0 and d["exchanges"] <= 3, d
+
+    # exact-mode harmonic folds the BFS into one result checkpoint
+    d = bench.plan_digest(qs["harmonic_rank"](spark, sf))
+    assert d["python_stages"] == 0 and d["exchanges"] == 0, d
+
+    # priority composition broadcasts the rank table: no SMJ on URLs
+    d = bench.plan_digest(qs["crawl_priority"](spark, sf))
+    assert d["python_stages"] == 0 and d["broadcast_joins"] >= 1, d
+    assert d["sort_merge_joins"] == 0, d
+
     kv = qs["kv_fetch"](spark, sf)  # build once: the call writes the KV table
     d = bench.plan_digest(kv)
     assert d["python_stages"] == 0, d
     plan = kv._jdf.queryExecution().executedPlan().toString()
     assert "SelectedBucketsCount:" in plan, "point lookup must prune buckets"
+
+
+def test_digest_invariants_stupid_backoff(spark):
+    """The bigram backoff LM: token stream through three model joins +
+    one aggregate — zero Python anywhere, bounded exchanges (model
+    tables localCheckpoint once, so the digest sees scans, not
+    re-aggregations of the corpus per join)."""
+    import sys
+
+    sys.path.insert(0, "/root/repo")
+    import bench
+    import __spark_entry__ as E
+
+    qs = E.queries()
+    d = bench.plan_digest(qs["stupid_backoff"](spark, "/root/testdata/sf0.001"))
+    assert d["python_stages"] == 0, d
+    assert d["exchanges"] <= 5, d
+
+    # TrustRank folds the iterative lineage into one result checkpoint
+    d = bench.plan_digest(qs["trust_rank"](spark, "/root/testdata/sf0.001"))
+    assert d["python_stages"] == 0 and d["exchanges"] == 0, d
+
+    # crawl-trap detection: one projection + two-level aggregate, no joins
+    d = bench.plan_digest(qs["url_traps"](spark, "/root/testdata/sf0.001"))
+    assert d["python_stages"] == 0 and d["exchanges"] <= 2, d
+    assert d["sort_merge_joins"] == 0 and d["broadcast_joins"] == 0, d
+
+    # redirect resolution folds the follow loop into one result checkpoint
+    d = bench.plan_digest(qs["redirect_resolve"](spark, "/root/testdata/sf0.001"))
+    assert d["python_stages"] == 0 and d["exchanges"] == 0, d
+
+    # registered-domain collapse is a literal CASE cascade: no joins
+    d = bench.plan_digest(qs["site_collapse"](spark, "/root/testdata/sf0.001"))
+    assert d["python_stages"] == 0 and d["exchanges"] <= 2, d
+    assert d["sort_merge_joins"] == 0 and d["broadcast_joins"] == 0, d
 
 
 def test_digest_invariants_label_and_target_queries(spark):
