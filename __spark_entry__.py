@@ -2251,7 +2251,6 @@ def q_tiled_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: direct sawtooth SQL over full history for the same requests
     — the tiled topology's consistency guarantee."""
     from chronon_spark.api.types import Aggregation, GroupBy, Operation, Window
-    from chronon_spark.operators.asof_hopped import hop_irs_for
     from chronon_spark.plans.fetcher import fetch_group_by_tiled
     from chronon_spark.plans.upload import upload_group_by
 
@@ -4537,8 +4536,8 @@ def q_kafka_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_available_now(stream_tile_aggregate(stream, gb), ck, "drv_kafka_tiles")
     return out.select(
         "user_id", "tile_start", "tile_end",
-        F.col("ir_cnt_value"),
-        _r6(F.col("ir_sum_value") / 100).alias("ir_sum_value"),
+        F.col("i_cnt_value").alias("ir_cnt_value"),
+        _r6(F.col("i_sum_value") / 100).alias("ir_sum_value"),
     )
 
 
@@ -4587,9 +4586,9 @@ def q_stream_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_available_now(stream_tile_aggregate(stream, gb), ck, "drv_tiles")
     return out.select(
         "user_id", "tile_start", "tile_end",
-        F.col("ir_cnt_value"),
-        _r6(F.col("ir_sum_value") / 100).alias("ir_sum_value"),
-        _r6(F.col("ir_min_value") / 100).alias("ir_min_value"),
+        F.col("i_cnt_value").alias("ir_cnt_value"),
+        _r6(F.col("i_sum_value") / 100).alias("ir_sum_value"),
+        _r6(F.col("i_min_value") / 100).alias("ir_min_value"),
     )
 
 

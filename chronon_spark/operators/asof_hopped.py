@@ -20,7 +20,7 @@ ops with whole-stage codegen end to end — no Python anywhere:
 3. **exact head**: events of the query's own hop with ``e.ts <= q.ts``,
    aggregated per query via a (keys, hop) equi-join — the join is balanced
    because a single hop of even the hottest key is |key events|/#hops.
-4. **combine**: tail ⊕ head per IR kind (sums add, min/max fold,
+4. **combine**: tail ⊕ head per IR kind, ``hop_ir.plus`` (sums add, min/max fold,
    last/first compare (ts, v) structs, central moments ``hop_ir.shift``
    to the per-key offset and add), then ``hop_ir.finalize`` — the same
    finalize as the serving read (``plans.fetcher``).
@@ -199,8 +199,8 @@ def _bucketed_maps(spark, group_by, queries, hop_ms, query_range, prune_keys):
 def _head_plus_tail(p, hop_ms: int) -> tuple:
     """(kind -> tail ⊕ head IR, offset K) of one part, for
     ``hop_ir.finalize``: the tail's ``t_*`` merge with the head's ``h_*``
-    IR — sums add (the head's central moments shifted to the per-key
-    offset K first), min/max/first/last fold, sets and sketches union."""
+    IR by ``hop_ir.plus`` (the head's central moments shifted to the
+    per-key offset K first)."""
     c = p.input_column
     sfx = hop_ir.window_suffix(c, hop_ir.window_hops(p, hop_ms))
     own = hop_ir.kinds(p.operation)
@@ -217,18 +217,7 @@ def _head_plus_tail(p, hop_ms: int) -> tuple:
         shifted = dict(zip(hop_ir.MOMENTS, moments))
 
     def ir(kind: str) -> Column:
-        t = F.col(f"t_{kind}_{sfx}")
-        if kind == "cnt" or kind == "sum" or kind in hop_ir.MOMENTS:
-            zero = F.lit(0) if kind == "cnt" else F.lit(0.0)
-            return F.coalesce(t, zero) + F.coalesce(shifted.get(kind, h(kind)), zero)
-        if kind in ("min", "first"):
-            return F.least(t, h(kind))
-        if kind in ("max", "last"):
-            return F.greatest(t, h(kind))
-        a, b = F.coalesce(t, h(kind)), F.coalesce(h(kind), t)
-        if kind == "set":
-            return F.array_distinct(F.array_union(a, b))
-        return F.hll_union(a, b, True)
+        return hop_ir.plus(kind, F.col(f"t_{kind}_{sfx}"), shifted.get(kind, h(kind)))
 
     return ir, k
 

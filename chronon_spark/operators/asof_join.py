@@ -293,33 +293,18 @@ def group_by_asof(
     return out
 
 
-# mode="auto" skew pre-check memo: (sources, keys, range) -> max per-key
-# event count. Frozen-dataclass reprs are stable cache keys; the memo makes
-# the pre-check run ONCE per (source, key-set) per session instead of once
-# per join part per call — an N-part auto-mode join over one event table
-# no longer multiplies the scan I/O (r2 VERDICT item #7). Entries never
-# grow stale within a batch job (sources are immutable date-partitioned
-# scans); long-lived sessions can clear it explicitly.
-_skew_stats_cache: dict = {}
-
-
-def clear_skew_stats_cache() -> None:
-    _skew_stats_cache.clear()
-
-
 def _max_key_volume(spark: SparkSession, gb: GroupBy, query_range) -> Optional[int]:
-    # max_window affects the lookback-narrowed scan range, so it is part
-    # of the identity (different-window GroupBys see different row sets)
-    key = (repr(gb.sources), tuple(gb.key_columns), query_range, gb.max_window_millis)
-    if key not in _skew_stats_cache:
-        events = events_df_for_group_by(spark, gb, *(query_range or (None, None)))
-        _skew_stats_cache[key] = (
-            events.groupBy(*gb.key_columns)
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .agg(F.max("__c"))
-            .first()[0]
-        )
-    return _skew_stats_cache[key]
+    """The mode="auto" skew pre-check: the max per-key event count over the
+    part's (lookback-narrowed) scan. It runs once per fused part group
+    (``_fuse_join_parts`` merges parts over one source into one call) and
+    always reads the source as it is now."""
+    events = events_df_for_group_by(spark, gb, *(query_range or (None, None)))
+    return (
+        events.groupBy(*gb.key_columns)
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .agg(F.max("__c"))
+        .first()[0]
+    )
 
 
 def compute_join_part(
@@ -486,7 +471,6 @@ def _snapshot_part(spark: SparkSession, gb: GroupBy, part_queries: DataFrame) ->
     """SNAPSHOT-accuracy part: (keys, ts) -> features of the previous day's
     snapshot (PIT-at-midnight; reference MergeJob.scala:174-229)."""
     from chronon_spark.operators.snapshot_groupby import snapshot_group_by
-    from chronon_spark.plans.partition_range import shift_ds
 
     keys = list(gb.key_columns)
     q = part_queries.select(*keys, F.col(TS).cast("long").alias(TS)).dropna(

@@ -1,10 +1,17 @@
 """The scalar hop-IR algebra: one (update, merge, shift/recenter,
-finalize) per ``Operation``, shared by the hopped backfill (hop IRs, tail
-windows, head ⊕ tail finalize), the batch upload and tile compaction
-(``plans.upload.collapse_irs``), the streaming tiles
-(``streaming.stream_groupby.stream_hop_irs``) and the serving read
-(``plans.fetcher``) — the reference's ``SimpleAggregators`` /
-``RowAggregator`` written once.
+finalize) per ``Operation`` — the reference's ``SimpleAggregators`` /
+``RowAggregator`` written once. Its callers:
+
+- the hopped backfill (``operators.asof_hopped``: hop IRs, tail windows,
+  head ⊕ tail finalize),
+- the batch upload and tile compaction (``plans.upload.collapse_irs``),
+- the streaming tiles (``streaming.stream_groupby.stream_hop_irs`` and
+  ``stream_tile_aggregate``),
+- the serving read (``plans.fetcher``),
+- the mutation replay (``operators.mutations``: snapshot and tail-hop
+  updates, the signed same-day deltas, snapshot ⊕ tails ⊕ deltas),
+- the SNAPSHOT GroupBy (``operators.snapshot_groupby``: day IRs merged
+  over ROWS frames of day hops).
 
 An IR column is ``i_{kind}_{input}``; an operation's kinds are:
 
@@ -23,6 +30,12 @@ sums about a per-key offset ``K`` (column ``__k_{input}``, the key's
 overall mean from :func:`with_offsets`): :func:`shift` moves one group's
 sums to K, the merge SUMs them, :func:`recenter` moves the total back to
 the merged group's own mean. Every term is O(n·sigma^2).
+
+Deletable ops (COUNT/SUM/AVERAGE and the moments) also have a signed
+update (``update_aggs(parts, sign)``): each row's contribution times a
+sign, the central kinds written directly as sums about a K fixed before
+the update (:func:`offset`) — the form the merge produces — so deleting
+rows an update added cancels exactly.
 """
 
 from __future__ import annotations
@@ -142,9 +155,46 @@ def _update(kind: str, c: str) -> Column:
     return F.hll_sketch_agg(c)
 
 
-def update_aggs(parts: list) -> list:
-    """The update: partial-IR aggregate columns over raw events."""
-    return [_update(k, c).alias(f"i_{k}_{c}") for k, c in ir_columns(parts)]
+def update_aggs(parts: list, sign: Optional[Column] = None) -> list:
+    """The update: partial-IR aggregate columns over raw events.
+
+    With ``sign`` (+1 insert, -1 delete; deletable ops only) the update is
+    written in offset form: every IR column is a sum of each row's
+    contribution times ``sign``, the moment kinds sums about the offset
+    ``__k_{input}`` (a column of the rows). Offset-form IRs merge by
+    plain sums (``merge(..., offset_form=True)``, :func:`plus`), so a
+    delete of rows an update added sums them back out: delete∘update = id.
+    """
+    if sign is None:
+        return [_update(k, c).alias(f"i_{k}_{c}") for k, c in ir_columns(parts)]
+    out = []
+    for kind, c in ir_columns(parts):
+        x = F.col(c).cast("double")
+        if kind == "cnt":
+            col = F.sum(F.when(F.col(c).isNotNull(), sign).otherwise(F.lit(0)))
+        elif kind == "sum":
+            col = F.sum(x * sign)
+        elif kind in MOMENTS:
+            col = F.sum(sign * F.pow(x - F.col(f"__k_{c}"), MOMENTS.index(kind) + 2))
+        else:
+            raise NotImplementedError(f"the {kind} IR is not deletable")
+        out.append(col.alias(f"i_{kind}_{c}"))
+    return out
+
+
+def offset(c: str, over: Optional[W] = None) -> Column:
+    """The offset K of an offset-form update, as an aggregate over raw
+    rows (with ``over``: as a window over that frame): the group's mean
+    of ``c`` rounded to 20 significant bits (0 for a group without
+    values). A short K keeps every ``(x - K)^p`` of integer-valued inputs
+    exact, so offset-form sums — and a delete cancelling its insert — are
+    exact there. K is within 2^-21·|mean| of the mean, so the sums stay
+    O(n·sigma^2) while sigma is above ~1e-6 of the mean."""
+    mean = F.avg(F.col(c).cast("double"))
+    if over is not None:
+        mean = mean.over(over)
+    ulp = F.pow(F.lit(2.0), F.floor(F.log2(F.abs(mean))) - 20)
+    return F.coalesce(F.round(mean / ulp) * ulp, F.lit(0.0))
 
 
 def shift(
@@ -207,16 +257,19 @@ def with_offsets(df: DataFrame, keys: list, inputs: list) -> DataFrame:
     return df
 
 
-def merge(kind: str, c: str, over: Optional[W] = None) -> Column:
+def merge(
+    kind: str, c: str, over: Optional[W] = None, offset_form: bool = False
+) -> Column:
     """The merge of IR column ``i_{kind}_{c}``: an aggregate, or with
     ``over`` the same merge as a window over that frame. Moment kinds
-    merge to sums about ``__k_{c}`` (recenter them after)."""
+    merge to sums about ``__k_{c}`` (recenter them after); offset-form
+    IRs (a signed :func:`update_aggs`) already are, and just add."""
 
     def agg(a: Column) -> Column:
         return a if over is None else a.over(over)
 
     ir = F.col(f"i_{kind}_{c}")
-    if kind in ("cnt", "sum"):
+    if kind in ("cnt", "sum") or (offset_form and kind in MOMENTS):
         return agg(F.sum(ir))
     if kind in MOMENTS:
         i = MOMENTS.index(kind)
@@ -230,6 +283,22 @@ def merge(kind: str, c: str, over: Optional[W] = None) -> Column:
     if kind == "set":
         return F.array_distinct(F.flatten(agg(F.collect_list(ir))))
     return agg(F.hll_union_agg(ir))
+
+
+def plus(kind: str, a: Column, b: Column) -> Column:
+    """Two IR values of one kind merged row-wise (null: empty side) —
+    moment kinds must both be sums about the same offset K."""
+    if kind in ("cnt", "sum") or kind in MOMENTS:
+        zero = F.lit(0) if kind == "cnt" else F.lit(0.0)
+        return F.coalesce(a, zero) + F.coalesce(b, zero)
+    if kind in ("min", "first"):
+        return F.least(a, b)
+    if kind in ("max", "last"):
+        return F.greatest(a, b)
+    a, b = F.coalesce(a, b), F.coalesce(b, a)
+    if kind == "set":
+        return F.array_distinct(F.array_union(a, b))
+    return F.hll_union(a, b, True)
 
 
 def finalize(

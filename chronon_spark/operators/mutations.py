@@ -10,16 +10,23 @@ computed as
           ⊖ Σ before-rows (mutation_ts <= t)  -- day-d deletions/old values
 
 which is only sound for DELETABLE operations — the abelian-group subset
-(COUNT, SUM, AVERAGE; reference thrift/api.thrift:195-227 splits the enum
-exactly this way). Non-deletable ops (MIN/MAX/...) raise.
+(COUNT, SUM, AVERAGE, VARIANCE, HISTOGRAM; reference
+thrift/api.thrift:195-227 splits the enum exactly this way).
+Non-deletable ops (MIN/MAX/...) raise.
 
-Spark-first plan, no Python:
+Spark-first plan, no Python; the scalar IRs are ``operators.hop_ir``'s:
 1. per-(key, ds) snapshot partial IRs: one groupBy with map-side combine,
-2. signed day-d mutation deltas: ``sign = is_before ? -1 : +1``,
+   ``hop_ir.update_aggs`` in offset form (sign +1): moments are sums
+   about the key's snapshot mean K in that partition (``hop_ir.offset``,
+   a window over the same shuffle), not raw power sums,
+2. signed day-d mutation deltas: ``sign = is_before ? -1 : +1``, the
+   same offset-form update about the same K, so a delete cancels the
+   insert it reverses,
 3. queries join their day's mutations on (key, ds) with ``m_ts <= q_ts``
    and aggregate signed deltas per query — balanced because a day of even
    a hot key's mutations is |mutations|/#days,
-4. combine snapshot ⊕ deltas, finalize (avg = sum/count).
+4. combine snapshot ⊕ tails ⊕ deltas (``hop_ir.plus``) and finalize
+   (``hop_ir.finalize``).
 
 Mutation rows carry the same value columns as the snapshot plus
 ``mutation_ts`` (epoch millis) and ``is_before`` (the reversal flag,
@@ -60,9 +67,13 @@ bounded-fan-out hop join per distinct hop size (a query joins at most
 
 from __future__ import annotations
 
+from dataclasses import replace
+from functools import reduce
+from operator import or_
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from chronon_spark.api.types import (
@@ -72,13 +83,14 @@ from chronon_spark.api.types import (
     tail_hop_millis,
     validate_identifier,
 )
+from chronon_spark.operators import hop_ir
 from chronon_spark.sources.scan import TS, apply_query, load_table
 
 DAY_MS = 86_400_000
 # The full abelian-group subset of the Operation enum (reference
 # thrift/api.thrift:195-227 splits deletable vs non-deletable exactly this
-# way; VARIANCE deletes via signed power sums per
-# SimpleAggregators.scala:279-291, HISTOGRAM via zero-pruned map-count
+# way; VARIANCE deletes via signed sums about the key's offset K
+# (hop_ir.update_aggs with a sign), HISTOGRAM via zero-pruned map-count
 # decrements per SawtoothMutationAggregator.scala:117-133).
 DELETABLE = {
     Operation.COUNT,
@@ -89,50 +101,44 @@ DELETABLE = {
 }
 
 
-def _ir_aggs(parts, signed: bool) -> list:
-    out: list[Column] = []
-    seen: set = set()
-    sign = F.col("__sign") if signed else F.lit(1)
-
-    def add(name: str, col: Column):
-        if name not in seen:
-            seen.add(name)
-            out.append(col.alias(name))
-
-    for p in parts:
-        if p.operation is Operation.HISTOGRAM:
-            continue  # histogram IRs live in their own (key, ts, value) frame
-        c = p.input_column
-        add(f"cnt_{c}", F.sum(F.when(F.col(c).isNotNull(), sign).otherwise(F.lit(0))))
-        add(f"sum_{c}", F.sum(F.col(c).cast("double") * sign))
-        if p.operation is Operation.VARIANCE:
-            # raw (unshifted) power sums, like the reference's deletable
-            # variance IR — the replay cannot share a per-group shift
-            # between the snapshot pass and the mutation pass without an
-            # extra scan, so extreme-magnitude inputs should pre-center
-            # upstream via Query.selects
-            add(f"ssq_{c}", F.sum(F.col(c).cast("double") * F.col(c).cast("double") * sign))
-    return out
+def _wcol(p) -> str:
+    """A windowed part's masked input column: one per (input, window)."""
+    return hop_ir.window_suffix(p.input_column, p.window.millis)
 
 
-def _w_aggs(tag: str, i: int, p, cond: Column, sign: Column) -> list:
-    """Conditional IR aggs for ONE windowed scalar part: rows failing the
-    part's window condition contribute nothing (a per-part F.when inside
-    shared aggregations — one scan covers every windowed part)."""
-    c = F.col(p.input_column)
-    out = [
-        F.sum(
-            F.when(cond & c.isNotNull(), sign).otherwise(F.lit(0))
-        ).alias(f"{tag}cnt_w{i}"),
-        F.sum(F.when(cond, c.cast("double") * sign)).alias(f"{tag}sum_w{i}"),
-    ]
-    if p.operation is Operation.VARIANCE:
-        out.append(
-            F.sum(
-                F.when(cond, c.cast("double") * c.cast("double") * sign)
-            ).alias(f"{tag}ssq_w{i}")
-        )
-    return out
+def _mask(df: DataFrame, wparts: list, cond_of, irs: bool = False) -> tuple:
+    """``df`` with each windowed part's columns masked to null outside
+    ``cond_of(part)`` — its raw input into :func:`_wcol` (the offset
+    ``__k_`` riding along when ``df`` has one), or with ``irs`` its IR
+    columns ``i_*_{_wcol}`` in place — and the parts re-pointed at the
+    masked columns, so one update (or merge) over the frame covers every
+    windowed part in one pass."""
+    cols: dict = {}
+    for p in wparts:
+        wc, keep = _wcol(p), cond_of(p)
+        if irs:
+            for kind in hop_ir.kinds(p.operation):
+                cols[f"i_{kind}_{wc}"] = F.when(keep, F.col(f"i_{kind}_{wc}"))
+            continue
+        cols[wc] = F.when(keep, F.col(p.input_column))
+        if f"__k_{p.input_column}" in df.columns:
+            cols[f"__k_{wc}"] = F.col(f"__k_{p.input_column}")
+    return df.withColumns(cols), [replace(p, input_column=_wcol(p)) for p in wparts]
+
+
+def _snapshot_plus_deltas(p) -> tuple:
+    """(kind -> snapshot ⊕ tails ⊕ deltas IR, offset K) of one part, for
+    ``hop_ir.finalize``: all three are offset-form sums about K."""
+    c = p.input_column if p.window is None else _wcol(p)
+
+    def ir(kind: str) -> Column:
+        out = hop_ir.plus(kind, F.col(f"i_{kind}_{c}"), F.col(f"d_{kind}_{c}"))
+        if p.window is not None:
+            out = hop_ir.plus(kind, out, F.col(f"t_{kind}_{c}"))
+        return out
+
+    has_k = "m2" in hop_ir.kinds(p.operation)
+    return ir, F.col(f"__k_{p.input_column}") if has_k else None
 
 
 def ds_of(ts_ms: int) -> str:
@@ -155,8 +161,6 @@ def entity_snapshot_scan(spark: SparkSession, src: EntitySource) -> DataFrame:
     Query's selects minus the mutation meta columns, which exist only on
     the mutation table (reference: mutationTimeColumn/reversalColumn are
     mutation-side query fields, thrift/api.thrift:10-58)."""
-    from dataclasses import replace
-
     snap_query = src.query
     if src.query.selects:
         snap_query = replace(
@@ -175,16 +179,22 @@ def entity_mutation_scan(spark: SparkSession, src: EntitySource) -> DataFrame:
     Query over the mutation table, which must carry ``mutation_ts`` and
     ``is_before``."""
     muts = apply_query(load_table(spark, src.mutation_table), src.query)
-    assert "mutation_ts" in muts.columns and "is_before" in muts.columns, muts.columns
+    missing = [c for c in ("mutation_ts", "is_before") if c not in muts.columns]
+    if missing:
+        raise ValueError(
+            f"the mutation scan lacks {missing}; it has {muts.columns}"
+        )
     return muts
 
 
 def _prep(group_by: GroupBy):
-    """Shared validation for the entity mutation paths."""
+    """Shared validation for the entity mutation paths: (keys, parts, the
+    unwindowed and the windowed non-HISTOGRAM parts, partition column)."""
     src = group_by.sources[0]
-    assert isinstance(src, EntitySource) and src.mutation_table, (
-        "temporal_entities needs an EntitySource with a mutation_table"
-    )
+    if not (isinstance(src, EntitySource) and src.mutation_table):
+        raise ValueError(
+            "temporal_entities needs an EntitySource with a mutation_table"
+        )
     keys = [validate_identifier(k) for k in group_by.key_columns]
     parts = group_by.unpack()
     for p in parts:
@@ -194,11 +204,10 @@ def _prep(group_by: GroupBy):
                 f"{sorted(o.value for o in DELETABLE)} (reference splits the "
                 "Operation enum the same way)"
             )
-    wscal = [
-        (i, p) for i, p in enumerate(parts)
-        if p.window is not None and p.operation is not Operation.HISTOGRAM
-    ]
-    return keys, parts, wscal, src.query.partition_column
+    scal = [p for p in parts if p.operation is not Operation.HISTOGRAM]
+    flat = [p for p in scal if p.window is None]
+    wscal = [p for p in scal if p.window is not None]
+    return keys, parts, flat, wscal, src.query.partition_column
 
 
 def _require_event_time(parts, scan: DataFrame) -> None:
@@ -208,6 +217,14 @@ def _require_event_time(parts, scan: DataFrame) -> None:
             f"'{TS}' on both the snapshot and mutation scans (set the "
             "source Query's time mapping); missing on one side"
         )
+
+
+def _by_hop(wparts: list) -> dict:
+    """Windowed parts grouped by their tail hop size."""
+    out: dict = {}
+    for p in wparts:
+        out.setdefault(tail_hop_millis(p.window), []).append(p)
+    return out
 
 
 def _batch_end_of(pc: str) -> Column:
@@ -257,15 +274,17 @@ def entity_batch_irs(
     ``snapshot_df``: the caller's :func:`entity_snapshot_scan` (possibly
     partition-pruned); scanned from the source when absent. The frames:
 
-    - ``"scalar"``: collapsed IRs — unwindowed ``s_cnt_/s_sum_/s_ssq_``
-      plus windowed collapsed ``s_*_w{i}`` (None if no scalar parts),
-    - ``"hops"``: {hop_ms: (keys, __prev_ds, __hop, cnt_w{i}...)} —
+    - ``"scalar"``: collapsed ``hop_ir`` IRs — unwindowed ``i_*_{input}``
+      plus windowed collapsed ``i_*_{input}_w{window ms}``, and the
+      moment offset ``__k_{input}``: the key's mean over the whole
+      partition (None if no scalar parts),
+    - ``"hops"``: {hop_ms: (keys, __prev_ds, __hop, i_*_{input}_w...)} —
       windowed tail-hop IRs,
     - ``"hist"``: {part index: (keys, __prev_ds, __hval, __hc)} —
       histogram collapsed counts (long format),
     - ``"hist_hops"``: {part index: (..., __hop, __hval, __hc)}.
     """
-    keys, parts, wscal, pc = _prep(group_by)
+    keys, parts, flat, wscal, pc = _prep(group_by)
     snap = (
         entity_snapshot_scan(spark, group_by.sources[0])
         if snapshot_df is None
@@ -277,35 +296,36 @@ def entity_batch_irs(
 
     out: dict = {"scalar": None, "hops": {}, "hist": {}, "hist_hops": {}}
 
-    snap_aggs = _ir_aggs(parts, signed=False)
-    for i, p in wscal:
-        snap_aggs += _w_aggs("", i, p, _w_snap_cond(p, be_s, tail_buffer_ms), F.lit(1))
-    if snap_aggs:
-        snap_irs = snap.groupBy(*keys, pc).agg(*snap_aggs)
-        out["scalar"] = snap_irs.select(
-            *keys,
-            F.col(pc).cast("string").alias("__prev_ds"),
-            *[
-                F.col(c).alias(f"s_{c}")
-                for c in snap_irs.columns
-                if c not in keys + [pc]
-            ],
-        )
+    def collapsed(p):
+        return _w_snap_cond(p, be_s, tail_buffer_ms)
 
-    hops_by_size: dict[int, list] = {}
-    for i, p in wscal:
-        hops_by_size.setdefault(tail_hop_millis(p.window), []).append((i, p))
-    for hop_ms, group in hops_by_size.items():
-        any_tail = F.lit(False)
-        hop_aggs: list[Column] = []
-        for i, p in group:
-            any_tail = any_tail | _w_tail_cond(p, be_s, tail_buffer_ms)
-            hop_aggs += _w_aggs("", i, p, _w_tail_cond(p, be_s, tail_buffer_ms), F.lit(1))
-        out["hops"][hop_ms] = (
-            snap.where(any_tail)
-            .withColumn("__hop", _hop_of(F.col(TS).cast("long"), hop_ms))
-            .groupBy(*keys, prev_ds, "__hop")
-            .agg(*hop_aggs)
+    def tail(p):
+        return _w_tail_cond(p, be_s, tail_buffer_ms)
+
+    def irs(df: DataFrame, grain: list, parts: list) -> DataFrame:
+        # offset-form IRs (sign +1) per (keys, partition, grain), the
+        # partition renamed to __prev_ds
+        g = df.groupBy(*keys, pc, *grain).agg(*hop_ir.update_aggs(parts, F.lit(1)))
+        return g.select(*keys, prev_ds, *[c for c in g.columns if c not in keys + [pc]])
+
+    # the moment offset K of each row's (key, partition): the sums of the
+    # snapshot, the tail hops and the deltas are all taken about it
+    moments = hop_ir.moment_inputs(flat + wscal)
+    if moments:
+        kw = W.partitionBy(*keys, pc)
+        snap = snap.withColumns({f"__k_{c}": hop_ir.offset(c, kw) for c in moments})
+    if flat or wscal:
+        snap_m, wcoll = _mask(snap, wscal, collapsed)
+        out["scalar"] = irs(snap_m, [f"__k_{c}" for c in moments], flat + wcoll)
+
+    for hop_ms, group in _by_hop(wscal).items():
+        snap_t, wtail = _mask(snap, group, tail)
+        out["hops"][hop_ms] = irs(
+            snap_t.where(reduce(or_, map(tail, group))).withColumn(
+                "__hop", _hop_of(F.col(TS).cast("long"), hop_ms)
+            ),
+            ["__hop"],
+            wtail,
         )
 
     for i, p in enumerate(parts):
@@ -316,7 +336,7 @@ def entity_batch_irs(
         snap_in = snap.where(F.col(col).isNotNull())
         w = p.window.millis if p.window is not None else None
         snap_coll = (
-            snap_in.where(_w_snap_cond(p, be_s, tail_buffer_ms))
+            snap_in.where(collapsed(p))
             if w is not None
             else snap_in
         )
@@ -325,7 +345,7 @@ def entity_batch_irs(
         ).agg(F.count(F.lit(1)).alias("__hc"))
         if w is not None:
             out["hist_hops"][i] = (
-                snap_in.where(_w_tail_cond(p, be_s, tail_buffer_ms))
+                snap_in.where(tail(p))
                 .withColumn("__hop", _hop_of(F.col(TS).cast("long"), tail_hop_millis(p.window)))
                 .groupBy(*keys, prev_ds, "__hop", val.alias("__hval"))
                 .agg(F.count(F.lit(1)).alias("__hc"))
@@ -357,7 +377,7 @@ def temporal_entities(
     override of the :func:`entity_mutation_scan` (serving passes only the
     request days' mutations).
     """
-    keys, parts, wscal, pc = _prep(group_by)
+    keys, parts, flat, wscal, pc = _prep(group_by)
     muts = (
         entity_mutation_scan(spark, group_by.sources[0])
         if mutations_df is None
@@ -384,6 +404,27 @@ def temporal_entities(
         )
         .withColumn("__be", _hop_of(F.col(TS), DAY_MS))
     )
+    scalar = batch_irs["scalar"]
+    offsets = [f"__k_{c}" for c in hop_ir.moment_inputs(flat + wscal)]
+    if offsets:
+        # the moment offset K every query's snapshot, tail and delta sums
+        # meet about: the key's snapshot mean in the serving partition,
+        # 0 for a key without snapshot rows
+        q = q.join(
+            scalar.select(*keys, "__prev_ds", *offsets),
+            on=keys + ["__prev_ds"],
+            how="left",
+        ).fillna(0.0, subset=offsets)
+        scalar = scalar.drop(*offsets)
+
+    def in_window(p, t: Column) -> Column:
+        # reference row/hop-in-window test: t >= round(qt - W, hop)
+        return t >= _hop_of(q[TS] - F.lit(p.window.millis), tail_hop_millis(p.window))
+
+    def prefixed(df: DataFrame, tag: str) -> DataFrame:
+        return df.select(
+            *keys, TS, *[F.col(c).alias(tag + c[1:]) for c in df.columns if c.startswith("i_")]
+        )
 
     # signed same-day deltas up to each query ts; windowed parts add
     # the reference's row-in-window test on EVENT time
@@ -397,96 +438,57 @@ def temporal_entities(
         on=[*[q[k] == m[k] for k in keys]],
         how="inner",
     ).where((F.col("__m_ds") == F.col("__q_ds")) & (F.col("mutation_ts") < q[TS]))
-    delta_cols = _ir_aggs(parts, signed=True)
-    for i, p in wscal:
-        mt = F.col("__m_ts").cast("long")
-        in_w = (mt >= _hop_of(q[TS] - F.lit(p.window.millis),
-                              tail_hop_millis(p.window))) & (mt < q[TS])
-        delta_cols += _w_aggs("", i, p, in_w, F.col("__sign"))
+    mt = F.col("__m_ts").cast("long")
+    qm, wdelta = _mask(qm, wscal, lambda p: in_window(p, mt) & (mt < q[TS]))
     deltas = None
-    if delta_cols:
-        deltas = qm.groupBy(*[q[k] for k in keys], q[TS]).agg(*delta_cols)
-        deltas = deltas.select(
-            *keys, TS, *[F.col(c).alias(f"d_{c}") for c in deltas.columns if c not in keys + [TS]]
+    if flat or wscal:
+        deltas = prefixed(
+            qm.groupBy(*[q[k] for k in keys], q[TS]).agg(
+                *hop_ir.update_aggs(flat + wdelta, F.col("__sign"))
+            ),
+            "d",
         )
 
     # tail-hop merge: one bounded join per distinct hop size — a query
     # matches at most tail_buffer/hop hop rows per (key, day)
     tail_frames: list[DataFrame] = []
-    hops_by_size: dict[int, list] = {}
-    for i, p in wscal:
-        hops_by_size.setdefault(tail_hop_millis(p.window), []).append((i, p))
-    for hop_ms, group in hops_by_size.items():
-        hop_irs = batch_irs["hops"][hop_ms]
-        tj = q.join(hop_irs, on=keys + ["__prev_ds"], how="inner")
+    for hop_ms, group in _by_hop(wscal).items():
+        tj = q.join(batch_irs["hops"][hop_ms], on=keys + ["__prev_ds"], how="inner")
         # mergeTailHops acceptance: hopStart >= round(qt - W, hop) AND
         # hopStart < (batchEnd - W) + tailBuffer
-        t_aggs: list[Column] = []
-        for i, p in group:
-            w = p.window.millis
-            accept = (
-                F.col("__hop")
-                >= _hop_of(q[TS] - F.lit(w), tail_hop_millis(p.window))
-            ) & (F.col("__hop") < q["__be"] - F.lit(w) + F.lit(tail_buffer_ms))
-            t_aggs.append(
-                F.sum(F.when(accept, F.col(f"cnt_w{i}"))).alias(f"t_cnt_w{i}")
-            )
-            t_aggs.append(
-                F.sum(F.when(accept, F.col(f"sum_w{i}"))).alias(f"t_sum_w{i}")
-            )
-            if p.operation is Operation.VARIANCE:
-                t_aggs.append(
-                    F.sum(F.when(accept, F.col(f"ssq_w{i}"))).alias(f"t_ssq_w{i}")
-                )
-        tail_frames.append(
-            tj.groupBy(*[q[k] for k in keys], q[TS]).agg(*t_aggs)
+        hop = F.col("__hop")
+        tj, wtail = _mask(
+            tj,
+            group,
+            lambda p: in_window(p, hop)
+            & (hop < q["__be"] - F.lit(p.window.millis) + F.lit(tail_buffer_ms)),
+            irs=True,
         )
+        merged = tj.groupBy(*[q[k] for k in keys], q[TS]).agg(
+            *[
+                hop_ir.merge(k, c, offset_form=True).alias(f"i_{k}_{c}")
+                for k, c in hop_ir.ir_columns(wtail)
+            ]
+        )
+        tail_frames.append(prefixed(merged, "t"))
 
-    # combine + finalize
+    # combine snapshot ⊕ tails ⊕ deltas (all offset form) + finalize
     joined = q
-    if batch_irs["scalar"] is not None:
-        joined = joined.join(batch_irs["scalar"], on=keys + ["__prev_ds"], how="left")
+    if scalar is not None:
+        joined = joined.join(scalar, on=keys + ["__prev_ds"], how="left")
     if deltas is not None:
         joined = joined.join(deltas, on=keys + [TS], how="left")
     for tf in tail_frames:
         joined = joined.join(tf, on=keys + [TS], how="left")
-
-    def _zero(name: str) -> Column:
-        return F.coalesce(F.col(name), F.lit(0.0))
-
-    out_cols: list[Column] = []
-    for i, p in enumerate(parts):
-        if p.operation is Operation.HISTOGRAM:
-            continue
-        c = p.input_column
-        if p.window is not None:
-            cnt = (
-                F.coalesce(F.col(f"s_cnt_w{i}"), F.lit(0))
-                + F.coalesce(F.col(f"t_cnt_w{i}"), F.lit(0))
-                + F.coalesce(F.col(f"d_cnt_w{i}"), F.lit(0))
-            )
-            s = _zero(f"s_sum_w{i}") + _zero(f"t_sum_w{i}") + _zero(f"d_sum_w{i}")
-            ssq_cols = (f"s_ssq_w{i}", f"t_ssq_w{i}", f"d_ssq_w{i}")
-        else:
-            cnt = F.coalesce(F.col(f"s_cnt_{c}"), F.lit(0)) + F.coalesce(
-                F.col(f"d_cnt_{c}"), F.lit(0)
-            )
-            s = _zero(f"s_sum_{c}") + _zero(f"d_sum_{c}")
-            ssq_cols = (f"s_ssq_{c}", f"d_ssq_{c}")
-        name = p.output_column
-        if p.operation is Operation.COUNT:
-            out_cols.append(cnt.cast("long").alias(name))
-        elif p.operation is Operation.SUM:
-            out_cols.append(F.when(cnt > 0, s).alias(name))
-        elif p.operation is Operation.VARIANCE:
-            ssq = sum((_zero(n) for n in ssq_cols), F.lit(0.0))
-            # population variance (matches the kernel / Spark var_pop),
-            # clamped at 0 against fp cancellation in the signed sums
-            var = F.greatest(ssq / cnt - (s / cnt) * (s / cnt), F.lit(0.0))
-            out_cols.append(F.when(cnt > 0, var).alias(name))
-        else:  # AVERAGE
-            out_cols.append(F.when(cnt > 0, s / cnt).alias(name))
-    result = joined.select(*keys, TS, *out_cols)
+    result = joined.select(
+        *keys,
+        TS,
+        *[
+            hop_ir.finalize(p.operation, *_snapshot_plus_deltas(p)).alias(p.output_column)
+            for p in parts
+            if p.operation is not Operation.HISTOGRAM
+        ],
+    )
 
     for i, p in enumerate(parts):
         if p.operation is not Operation.HISTOGRAM:

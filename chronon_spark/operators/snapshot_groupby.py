@@ -8,12 +8,17 @@ ending at end-of-day. Daily resolution == sawtooth with a 1-day hop
 
 Spark-first plan (no RDDs, no UDFs — whole-stage codegen end to end):
 
-1. daily partial IRs per (key, day): one ``groupBy(keys, day)`` — Spark
-   does map-side partial aggregation automatically,
+1. daily partial IRs per (key, day): one ``groupBy(keys, day)`` of
+   ``operators.hop_ir``'s update (LAST_K/FIRST_K: ``plans.klist_serving``'s
+   k-bounded lists) — Spark does map-side partial aggregation
+   automatically,
 2. dense (key x day) grid for the backfill range (small dim cross join),
-3. window-merge: ``Window.partitionBy(keys).orderBy(day).rowsBetween(-(W-1), 0)``
-   over the dense grid merges day-hop IRs into each window — the hop-reuse
-   idea of the reference's HopsAggregator, expressed in Catalyst.
+3. window-merge: ``hop_ir.merge`` over
+   ``Window.partitionBy(keys).orderBy(day).rowsBetween(-(W-1), 0)`` on the
+   dense grid merges day-hop IRs into each window (moments about the
+   key's offset from ``hop_ir.with_offsets``) — the hop-reuse idea of the
+   reference's HopsAggregator, expressed in Catalyst — and
+   ``hop_ir.finalize`` turns them into features, as on the temporal path.
 
 Scale: the only wide exchange is the (key, day) groupBy; the grid join is
 broadcast; the window partition is (key), ordered by day — days-per-key is
@@ -27,10 +32,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from chronon_spark.api.types import AggregationPart, GroupBy, Operation, TimeUnit
+from chronon_spark.operators import hop_ir
 from chronon_spark.operators.asof_join import events_df_for_group_by
+from chronon_spark.plans.klist_serving import _asc, _entry, _merge
 from chronon_spark.sources.scan import TS
 
 DAY_MS = 86_400_000
+# k-list ops ride klist_serving's exact k-bounded lists; the rest are
+# hop_ir's scalar IRs
+_KLIST_MODES = {Operation.LAST_K: "last_k", Operation.FIRST_K: "first_k"}
 
 
 def _window_days(part: AggregationPart) -> int | None:
@@ -49,6 +59,19 @@ def _day_frame(keys: list, days: int | None) -> W:
     if days is None:
         return w.rowsBetween(W.unboundedPreceding, 0)
     return w.rowsBetween(-(days - 1), 0)
+
+
+def _klist_column(p: AggregationPart) -> str:
+    return f"__kl_{_KLIST_MODES[p.operation]}{p.k}_{p.input_column}"
+
+
+def _klist_update(p: AggregationPart) -> Column:
+    """A day's k-list of one LAST_K/FIRST_K part: ``klist_serving``'s
+    ranked ``(ts, v)`` entries, top-k of the day. Null inputs never update
+    the IR (reference DirectColumnAggregator)."""
+    mode, v = _KLIST_MODES[p.operation], F.col(p.input_column)
+    entries = F.collect_list(F.when(v.isNotNull(), _entry(mode, F.col(TS), v)))
+    return _merge(F.array(entries), p.k, asc=_asc(mode))
 
 
 def snapshot_group_by(
@@ -85,55 +108,12 @@ def snapshot_group_by(
     ev = events.withColumn("day_num", (F.col(TS) / DAY_MS).cast("long"))
 
     # ---- level 1: daily partial IRs -------------------------------------
-    partials: list[Column] = []
-    needed: set = set()
-    for p in parts:
-        c = p.input_column
-        op = p.operation
-        if op in (Operation.COUNT, Operation.SUM, Operation.AVERAGE, Operation.VARIANCE):
-            needed |= {f"d_cnt_{c}", f"d_sum_{c}"}
-            if op is Operation.VARIANCE:
-                needed.add(f"d_ssq_{c}")
-        elif op is Operation.MIN:
-            needed.add(f"d_min_{c}")
-        elif op is Operation.MAX:
-            needed.add(f"d_max_{c}")
-        elif op in (Operation.LAST, Operation.LAST_K):
-            needed.add(f"d_lastk_{c}_{p.k if op is Operation.LAST_K else 1}")
-        elif op in (Operation.FIRST, Operation.FIRST_K):
-            needed.add(f"d_firstk_{c}_{p.k if op is Operation.FIRST_K else 1}")
-        elif op in (Operation.UNIQUE_COUNT, Operation.APPROX_UNIQUE_COUNT):
-            needed.add(f"d_set_{c}")
-        else:
-            raise NotImplementedError(f"snapshot op {op}")
-
-    for name in sorted(needed):
-        _, kind, rest = name.split("_", 2)  # d_<kind>_<rest>
-        if kind == "cnt":
-            partials.append(F.count(F.col(rest)).alias(name))
-        elif kind == "sum":
-            partials.append(F.sum(F.col(rest).cast("double")).alias(name))
-        elif kind == "ssq":
-            partials.append(F.sum(F.pow(F.col(rest).cast("double"), 2)).alias(name))
-        elif kind == "min":
-            partials.append(F.min(F.col(rest).cast("double")).alias(name))
-        elif kind == "max":
-            partials.append(F.max(F.col(rest).cast("double")).alias(name))
-        elif kind == "set":
-            partials.append(F.collect_set(F.col(rest)).alias(name))
-        elif kind in ("lastk", "firstk"):
-            c, k = rest.rsplit("_", 1)
-            struct = F.struct(F.col(TS).alias("ts"), F.col(c).alias("v"))
-            # null inputs never update IRs (reference DirectColumnAggregator):
-            # filter before truncating to k.
-            collected = F.collect_list(F.when(F.col(c).isNotNull(), struct))
-            if kind == "lastk":
-                arr = F.reverse(F.array_sort(collected))  # most-recent first
-            else:
-                arr = F.array_sort(collected)
-            partials.append(F.slice(arr, 1, int(k)).alias(name))
-
-    daily = ev.groupBy(*keys, "day_num").agg(*partials)
+    scalar = [p for p in parts if p.operation not in _KLIST_MODES]
+    klists = {_klist_column(p): p for p in parts if p.operation in _KLIST_MODES}
+    daily = ev.groupBy(*keys, "day_num").agg(
+        *hop_ir.update_aggs(scalar),
+        *[_klist_update(p).alias(name) for name, p in klists.items()],
+    )
 
     # ---- dense (key x day) grid ------------------------------------------
     # The grid must reach back far enough that every window frame ending in
@@ -167,50 +147,42 @@ def snapshot_group_by(
     dense = grid.join(daily, on=keys + ["day_num"], how="left")
 
     # ---- level 2: window-merge over day hops ------------------------------
+    dense = hop_ir.with_offsets(dense, keys, hop_ir.moment_inputs(scalar))
+    merged = dense.select(
+        *keys,
+        "day_num",
+        *[F.col(f"__k_{c}") for c in hop_ir.moment_inputs(scalar)],
+        *[
+            hop_ir.merge(kind, c, over=_day_frame(keys, w)).alias(f"i_{kind}_{sfx}")
+            for (kind, sfx), (c, w) in hop_ir.windowed_ir_columns(scalar, DAY_MS).items()
+        ],
+        *[
+            _merge(
+                F.collect_list(name).over(_day_frame(keys, _window_days(p))),
+                p.k,
+                asc=_asc(_KLIST_MODES[p.operation]),
+            ).alias(name)
+            for name, p in klists.items()
+        ],
+    )
     out_cols: list[Column] = []
     for p in parts:
-        c, op, wd = p.input_column, p.operation, _window_days(p)
-        frame = _day_frame(keys, wd)
-        name = p.output_column
-        if op is Operation.COUNT:
-            out_cols.append(F.coalesce(F.sum(f"d_cnt_{c}").over(frame), F.lit(0)).alias(name))
-        elif op is Operation.SUM:
-            out_cols.append(F.sum(f"d_sum_{c}").over(frame).alias(name))
-        elif op is Operation.AVERAGE:
-            out_cols.append(
-                (F.sum(f"d_sum_{c}").over(frame) / F.sum(f"d_cnt_{c}").over(frame)).alias(name)
-            )
-        elif op is Operation.VARIANCE:
-            s = F.sum(f"d_sum_{c}").over(frame)
-            n = F.sum(f"d_cnt_{c}").over(frame)
-            ssq = F.sum(f"d_ssq_{c}").over(frame)
-            var = ssq / n - F.pow(s / n, 2)
-            out_cols.append(F.when(n > 0, F.greatest(var, F.lit(0.0))).alias(name))
-        elif op is Operation.MIN:
-            out_cols.append(F.min(f"d_min_{c}").over(frame).alias(name))
-        elif op is Operation.MAX:
-            out_cols.append(F.max(f"d_max_{c}").over(frame).alias(name))
-        elif op in (Operation.LAST, Operation.LAST_K, Operation.FIRST, Operation.FIRST_K):
-            kind = "lastk" if op in (Operation.LAST, Operation.LAST_K) else "firstk"
-            k = p.k if op in (Operation.LAST_K, Operation.FIRST_K) else 1
-            col = f"d_{kind}_{c}_{k}"
-            merged = F.flatten(F.collect_list(col).over(frame))
-            sorted_arr = (
-                F.reverse(F.array_sort(merged)) if kind == "lastk" else F.array_sort(merged)
-            )
-            topk = F.slice(sorted_arr, 1, k)
-            vals = F.transform(topk, lambda s: s.v)
-            if op in (Operation.LAST, Operation.FIRST):
-                out_cols.append(F.get(vals, 0).alias(name))  # null-safe on empty
-            else:
-                out_cols.append(F.when(F.size(vals) > 0, vals).alias(name))
-        elif op in (Operation.UNIQUE_COUNT, Operation.APPROX_UNIQUE_COUNT):
-            merged = F.array_distinct(F.flatten(F.collect_list(f"d_set_{c}").over(frame)))
-            out_cols.append(F.size(merged).cast("long").alias(name))
+        if p.operation in _KLIST_MODES:
+            vals = F.transform(F.col(_klist_column(p)), lambda e: e["v"])
+            out_cols.append(F.when(F.size(vals) > 0, vals).alias(p.output_column))
+            continue
+        c = p.input_column
+        sfx = hop_ir.window_suffix(c, hop_ir.window_hops(p, DAY_MS))
+        k = F.col(f"__k_{c}") if "m2" in hop_ir.kinds(p.operation) else None
+        out_cols.append(
+            hop_ir.finalize(
+                p.operation, lambda kind, sfx=sfx: F.col(f"i_{kind}_{sfx}"), k
+            ).alias(p.output_column)
+        )
 
     ds_col = F.date_format(F.date_from_unix_date(F.col("day_num").cast("int")), "yyyy-MM-dd")
     return (
-        dense.select(*keys, F.col("day_num"), ds_col.alias("ds"), *out_cols)
+        merged.select(*keys, F.col("day_num"), ds_col.alias("ds"), *out_cols)
         .where(F.col("day_num") >= start_day)
         .drop("day_num")
     )

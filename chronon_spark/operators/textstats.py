@@ -681,7 +681,7 @@ def blocklist_flags(
 
 # mode="auto" pre-check memo: semantic plan hash -> max per-language doc
 # count. One map-side-combined agg over the pruned lang column, run ONCE
-# per distinct input per session (the asof_join._max_key_volume pattern).
+# per distinct input per session.
 _lang_mass_cache: dict = {}
 
 

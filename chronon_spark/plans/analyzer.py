@@ -26,7 +26,7 @@ def _source_schema(spark: SparkSession, source) -> T.StructType:
     only — the reference Analyzer/Eval's no-job schema derivation)."""
     from dataclasses import replace
 
-    from chronon_spark.api.types import EntitySource, EventSource, JoinSource
+    from chronon_spark.api.types import EventSource, JoinSource
     from chronon_spark.operators.model_transforms import ModelTransforms
 
     if isinstance(source, JoinSource):

@@ -22,8 +22,6 @@ Iceberg runtime the writer switches to ``writeTo(t).overwritePartitions()``
 from __future__ import annotations
 
 import hashlib
-import json
-import os
 import re
 import time
 from dataclasses import dataclass

@@ -23,7 +23,7 @@ from __future__ import annotations
 from dataclasses import replace
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from chronon_spark.api.types import EventSource, Join, Query

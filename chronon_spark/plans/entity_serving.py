@@ -42,6 +42,13 @@ from chronon_spark.operators.mutations import (
 from chronon_spark.sources.scan import TS
 
 
+def _check_batch_end(batch_end_ms: int) -> None:
+    if batch_end_ms % DAY_MS != 0:
+        raise ValueError(
+            f"entity batch end must be a UTC midnight, got {batch_end_ms}"
+        )
+
+
 def upload_temporal_entities(
     spark: SparkSession,
     group_by: GroupBy,
@@ -56,7 +63,7 @@ def upload_temporal_entities(
     upload. Only the snapshot partition serving that day is scanned, so
     every frame's ``__prev_ds`` is that partition: the upload is ONE
     day's serving state, not all history."""
-    assert batch_end_ms % DAY_MS == 0, "entity batch end must be a UTC midnight"
+    _check_batch_end(batch_end_ms)
     ds = ds_of(batch_end_ms)
     # the frames' __prev_ds is the snapshot PARTITION (serving day - 1):
     # the end-of-day(d-1) state serves day d's queries
@@ -120,7 +127,7 @@ def fetch_temporal_entities(
     Requests outside ``[batch_end, batch_end + 1 day)`` are refused
     loudly — their state lives in a different day's upload (the same
     contract as the event-side fetcher's batch-end check)."""
-    assert batch_end_ms % DAY_MS == 0, "entity batch end must be a UTC midnight"
+    _check_batch_end(batch_end_ms)
     lo = requests.agg(F.min(TS), F.max(TS)).first()
     if lo[0] is not None and (
         int(lo[0]) < batch_end_ms or int(lo[1]) >= batch_end_ms + DAY_MS
@@ -131,7 +138,8 @@ def fetch_temporal_entities(
             "upload for exactly one day"
         )
     if batch_irs is None:
-        assert upload_dir is not None, "pass upload_dir or batch_irs"
+        if upload_dir is None:
+            raise ValueError("pass upload_dir or batch_irs")
         batch_irs, ds = load_entity_upload(spark, upload_dir)
     else:
         ds = ds_of(batch_end_ms)

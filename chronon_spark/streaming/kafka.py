@@ -19,7 +19,6 @@ exercised against the real contract.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

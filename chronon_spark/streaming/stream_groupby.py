@@ -6,10 +6,12 @@ Reference semantics re-expressed in Structured Streaming:
   a running partial-aggregate IR where tile size = the smallest tail hop of
   the GroupBy's windows (flink/.../FlinkGroupByStreamingJob.scala:125-204;
   tile sizing aggregator/.../windowing/Resolution.scala:65-86). Spark:
-  ``groupBy(window(ts, hop), keys).agg(partial IRs)`` in update mode. The
-  tiles are MERGEABLE IRs — the batch sawtooth kernel consumes the same
-  shapes (sum/count pairs, min/max, sets), which is what makes the
-  batch ⊕ streaming lambda merge sound (SawtoothOnlineAggregator.scala:84-165).
+  ``groupBy(window(ts, hop), keys).agg(hop_ir.update_aggs)`` in update
+  mode (:func:`stream_hop_irs`; :func:`stream_tile_aggregate` adds the
+  tile bounds). The tiles are ``operators.hop_ir``'s MERGEABLE ``i_*``
+  IRs — the shapes the batch upload, compaction and serving read merge,
+  which is what makes the batch ⊕ streaming lambda merge sound
+  (SawtoothOnlineAggregator.scala:84-165).
 - **Watermark / late data**: bounded out-of-orderness, late rows dropped by
   the engine and observable via ``observe`` metrics
   (flink/.../FlinkJob.scala:95-121 uses 5 min / side-output counter).
@@ -25,10 +27,11 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from chronon_spark.api.types import GroupBy, Operation, tail_hop_millis
+from chronon_spark.api.types import GroupBy, tail_hop_millis
+from chronon_spark.operators import hop_ir
 
 DEFAULT_WATERMARK = "5 minutes"  # reference FlinkJob.scala:95-113
 
@@ -40,58 +43,15 @@ def smallest_tail_hop_ms(group_by: GroupBy) -> int:
     return min(hops) if hops else 86_400_000
 
 
-def partial_ir_aggs(group_by: GroupBy) -> list:
-    """Mergeable partial-IR aggregate columns for every input column.
-
-    IR shapes (SURVEY.md §1.4): COUNT/SUM -> long/double sums, AVERAGE ->
-    (sum, count), MIN/MAX -> value, UNIQUE_COUNT -> collect_set,
-    LAST/FIRST -> (max_by/min_by ts). Sketch ops use Spark's mergeable HLL.
-    """
-    out: list[Column] = []
-    seen: set = set()
-
-    def add(name: str, col: Column):
-        if name not in seen:
-            seen.add(name)
-            out.append(col.alias(name))
-
-    for p in group_by.unpack():
-        c = p.input_column
-        op = p.operation
-        if op in (Operation.COUNT, Operation.SUM, Operation.AVERAGE, Operation.VARIANCE):
-            add(f"ir_cnt_{c}", F.count(c))
-            add(f"ir_sum_{c}", F.sum(F.col(c).cast("double")))
-            if op is Operation.VARIANCE:
-                # per-tile m2 (Welford-stable), the same update as the
-                # batch hop IRs (operators.hop_ir)
-                add(f"ir_m2_{c}", F.var_pop(F.col(c).cast("double")) * F.count(c))
-        elif op is Operation.MIN:
-            add(f"ir_min_{c}", F.min(c))
-        elif op is Operation.MAX:
-            add(f"ir_max_{c}", F.max(c))
-        elif op is Operation.LAST:
-            # null-skipping order key, as in the batch hop IRs
-            # (operators.hop_ir), so batch==stream tile IR equality holds
-            # when the newest value in a tile is null
-            add(f"ir_last_{c}", F.max_by(c, F.when(F.col(c).isNotNull(), F.col("ts"))))
-        elif op is Operation.FIRST:
-            add(f"ir_first_{c}", F.min_by(c, F.when(F.col(c).isNotNull(), F.col("ts"))))
-        elif op in (Operation.UNIQUE_COUNT,):
-            add(f"ir_set_{c}", F.collect_set(c))
-        elif op is Operation.APPROX_UNIQUE_COUNT:
-            add(f"ir_hll_{c}", F.hll_sketch_agg(c))
-        else:
-            raise NotImplementedError(f"streaming partial IR for {op}")
-    return out
-
-
 def stream_tile_aggregate(
     events: DataFrame,
     group_by: GroupBy,
     hop_ms: Optional[int] = None,
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
-    """(key, tile_start, tile_end, partial IRs...) from a streaming events DF.
+    """(key, tile_start, tile_end, i_* partial IRs) from a streaming
+    events DF: :func:`stream_hop_irs` at the tile size (default: the
+    smallest tail hop) with the tile bounds in epoch millis.
 
     ``events`` needs the GroupBy's key columns, a ``ts`` epoch-millis LONG
     column, and the aggregation inputs. Works identically on a batch DF
@@ -99,17 +59,12 @@ def stream_tile_aggregate(
     """
     hop = hop_ms or smallest_tail_hop_ms(group_by)
     keys = list(group_by.key_columns)
-    with_event_time = events.withColumn("__event_time", F.timestamp_millis(F.col("ts")))
-    if events.isStreaming:
-        with_event_time = with_event_time.withWatermark("__event_time", watermark)
-    tiled = with_event_time.groupBy(
-        F.window("__event_time", f"{hop} milliseconds").alias("__w"), *keys
-    ).agg(*partial_ir_aggs(group_by))
-    return tiled.select(
+    tiles = stream_hop_irs(events, group_by, hop, watermark)
+    return tiles.select(
         *keys,
-        F.unix_millis(F.col("__w.start")).alias("tile_start"),
-        F.unix_millis(F.col("__w.end")).alias("tile_end"),
-        *[c for c in tiled.columns if c.startswith("ir_")],
+        (F.col("__hop") * hop).alias("tile_start"),
+        ((F.col("__hop") + 1) * hop).alias("tile_end"),
+        *[c for c in tiles.columns if c.startswith("i_")],
     )
 
 
@@ -245,8 +200,6 @@ def stream_hop_irs(
     the last-writer-wins KV upsert (``run_untiled_upsert`` keyed on
     keys + __hop) correct under late events and replays.
     """
-    from chronon_spark.operators import hop_ir
-
     keys = list(group_by.key_columns)
     wet = events.withColumn("__event_time", F.timestamp_millis(F.col("ts")))
     if events.isStreaming:

@@ -11,7 +11,6 @@ import numpy as np
 import pandas as pd
 import pytest
 import duckdb
-from pyspark.sql import functions as F
 
 from chronon_spark.api.types import (
     Aggregation,
@@ -26,6 +25,47 @@ DAY_MS = 86_400_000
 T0 = 1_704_067_200_000  # 2024-01-01 UTC
 N_DAYS = 10
 FAR = T0 + 10_000 * DAY_MS
+
+
+def _derive(versions: pd.DataFrame) -> tuple:
+    """Snapshots and before/after mutation rows derived from entity
+    versions, so the two are mutually consistent."""
+    # snapshots: state at end of each day ds
+    snaps = []
+    for d in range(N_DAYS):
+        eod = T0 + (d + 1) * DAY_MS
+        ds = pd.Timestamp(T0 + d * DAY_MS, unit="ms").strftime("%Y-%m-%d")
+        live = versions[(versions.valid_from < eod) & (versions.valid_to >= eod)]
+        for r in live.itertuples():
+            snaps.append((r.store_id, r.item_id, r.price, int(r.valid_from), ds))
+    snap_df = pd.DataFrame(
+        snaps, columns=["store_id", "item_id", "price", "ts", "ds"]
+    )
+
+    # mutations: after-row per version start (except day-0 initials are also
+    # after-rows on day 0), before-row for the replaced version; a row's
+    # event time ts is its version's valid_from
+    muts = []
+    for item, gv in versions.sort_values("valid_from").groupby("item_id"):
+        gvl = list(gv.itertuples())
+        for i, v in enumerate(gvl):
+            ds = pd.Timestamp(v.valid_from, unit="ms").strftime("%Y-%m-%d")
+            muts.append(
+                (v.store_id, v.item_id, v.price, int(v.valid_from),
+                 int(v.valid_from), False, ds)
+            )
+            if i > 0:
+                prev = gvl[i - 1]
+                muts.append(
+                    (prev.store_id, prev.item_id, prev.price,
+                     int(prev.valid_from), int(v.valid_from), True, ds)
+                )
+    mut_df = pd.DataFrame(
+        muts,
+        columns=["store_id", "item_id", "price", "ts", "mutation_ts",
+                 "is_before", "ds"],
+    )
+    return snap_df, mut_df
 
 
 @pytest.fixture(scope="module")
@@ -45,39 +85,15 @@ def fixture(spark, tmp_path_factory):
     versions = pd.DataFrame(
         rows, columns=["store_id", "item_id", "price", "valid_from", "valid_to"]
     )
-
-    # snapshots: state at end of each day ds
-    snaps = []
-    for d in range(N_DAYS):
-        eod = T0 + (d + 1) * DAY_MS
-        ds = pd.Timestamp(T0 + d * DAY_MS, unit="ms").strftime("%Y-%m-%d")
-        live = versions[(versions.valid_from < eod) & (versions.valid_to >= eod)]
-        for r in live.itertuples():
-            snaps.append((r.store_id, r.item_id, r.price, ds))
-    snap_df = pd.DataFrame(snaps, columns=["store_id", "item_id", "price", "ds"])
-
-    # mutations: after-row per version start (except day-0 initials are also
-    # after-rows on day 0), before-row for the replaced version
-    muts = []
-    by_item = versions.sort_values("valid_from").groupby("item_id")
-    for item, gv in by_item:
-        gvl = list(gv.itertuples())
-        for i, v in enumerate(gvl):
-            ds = pd.Timestamp(v.valid_from, unit="ms").strftime("%Y-%m-%d")
-            muts.append((v.store_id, v.item_id, v.price, v.valid_from, False, ds))
-            if i > 0:
-                prev = gvl[i - 1]
-                muts.append((prev.store_id, prev.item_id, prev.price, v.valid_from, True, ds))
-    mut_df = pd.DataFrame(
-        muts, columns=["store_id", "item_id", "price", "mutation_ts", "is_before", "ds"]
-    )
+    snap_df, mut_df = _derive(versions)
 
     base = tmp_path_factory.mktemp("mut")
     snap_path = str(base / "snap.parquet")
     mut_path = str(base / "mut.parquet")
     ver_path = str(base / "versions.parquet")
-    spark.createDataFrame(snap_df).write.parquet(snap_path)
-    spark.createDataFrame(mut_df).write.parquet(mut_path)
+    # no event-time column: the unwindowed replay needs none
+    spark.createDataFrame(snap_df.drop(columns="ts")).write.parquet(snap_path)
+    spark.createDataFrame(mut_df.drop(columns="ts")).write.parquet(mut_path)
     versions.to_parquet(ver_path)
 
     # queries: random times on days 1..9 (so a previous-day snapshot exists)
@@ -337,38 +353,8 @@ def wfixture(spark, fixture, tmp_path_factory):
     row last changed), which the reference's windowed mutation path
     requires (GroupBy.scala:225-231 inputDf time column)."""
     _, _, ver_path, q = fixture
-    versions = pd.read_parquet(ver_path)
+    snap_df, mut_df = _derive(pd.read_parquet(ver_path))
     base = tmp_path_factory.mktemp("wmut")
-    snaps = []
-    for d in range(N_DAYS):
-        eod = T0 + (d + 1) * DAY_MS
-        ds = pd.Timestamp(T0 + d * DAY_MS, unit="ms").strftime("%Y-%m-%d")
-        live = versions[(versions.valid_from < eod) & (versions.valid_to >= eod)]
-        for r in live.itertuples():
-            snaps.append((r.store_id, r.item_id, r.price, int(r.valid_from), ds))
-    snap_df = pd.DataFrame(
-        snaps, columns=["store_id", "item_id", "price", "ts", "ds"]
-    )
-    muts = []
-    for item, gv in versions.sort_values("valid_from").groupby("item_id"):
-        gvl = list(gv.itertuples())
-        for i, v in enumerate(gvl):
-            ds = pd.Timestamp(v.valid_from, unit="ms").strftime("%Y-%m-%d")
-            muts.append(
-                (v.store_id, v.item_id, v.price, int(v.valid_from),
-                 int(v.valid_from), False, ds)
-            )
-            if i > 0:
-                prev = gvl[i - 1]
-                muts.append(
-                    (prev.store_id, prev.item_id, prev.price,
-                     int(prev.valid_from), int(v.valid_from), True, ds)
-                )
-    mut_df = pd.DataFrame(
-        muts,
-        columns=["store_id", "item_id", "price", "ts", "mutation_ts",
-                 "is_before", "ds"],
-    )
     snap_path = str(base / "snap.parquet")
     mut_path = str(base / "mut.parquet")
     spark.createDataFrame(snap_df).write.parquet(snap_path)
@@ -727,3 +713,137 @@ def test_windowed_temporal_entities_through_join(spark, wfixture):
     assert np.allclose(
         m["wsp_price_sum_7d"].fillna(-1), m["price_sum_7d"].fillna(-1)
     )
+
+
+# ------------------------------------------- large-offset VARIANCE
+
+
+def _exact_variance(vals: list, signed: list):
+    """Population variance of a signed multiset, in exact rationals."""
+    from fractions import Fraction
+
+    terms = [(1, Fraction(v)) for v in vals] + [(sg, Fraction(v)) for sg, v in signed]
+    n = sum(sg for sg, _ in terms)
+    if n == 0:
+        return None
+    mean = sum(sg * v for sg, v in terms) / n
+    return float(sum(sg * v * v for sg, v in terms) / n - mean * mean)
+
+
+def test_variance_replay_at_a_large_offset(spark, tmp_path):
+    """values = 1e9 + N(0, 1): the replayed VARIANCE, unwindowed and over
+    a 3-day window, matches an exact rational reference at rel 1e-6.
+    Raw power sums cancel at this offset (Σx² ~ n·1e18 against a
+    variance of ~1); sums about the key's offset K do not."""
+    from chronon_spark.api.types import Window, tail_hop_millis
+
+    rng = np.random.RandomState(5)
+    rows = []
+    for item in range(60):
+        n_v = rng.randint(1, 5)
+        starts = [T0] + sorted(
+            rng.randint(T0 + DAY_MS, T0 + N_DAYS * DAY_MS, n_v - 1).tolist()
+        )
+        for vi, vf in enumerate(starts):
+            vt = starts[vi + 1] if vi + 1 < len(starts) else FAR
+            rows.append((item % 6, item, 1e9 + rng.normal(), vf, vt))
+    versions = pd.DataFrame(
+        rows, columns=["store_id", "item_id", "price", "valid_from", "valid_to"]
+    )
+    snap_df, mut_df = _derive(versions)
+    snap_path, mut_path = str(tmp_path / "snap"), str(tmp_path / "mut")
+    spark.createDataFrame(snap_df).write.parquet(snap_path)
+    spark.createDataFrame(mut_df).write.parquet(mut_path)
+    W = Window.days(3)
+    gb = _w_gb(
+        snap_path, mut_path,
+        (
+            Aggregation("price", Operation.VARIANCE),
+            Aggregation("price", Operation.VARIANCE, windows=(W,)),
+        ),
+    )
+    q = pd.DataFrame({
+        "store_id": rng.randint(0, 6, 150),
+        "ts": rng.randint(T0 + DAY_MS, T0 + N_DAYS * DAY_MS, 150),
+    })
+    got = (
+        temporal_entities(spark, gb, spark.createDataFrame(q))
+        .toPandas()
+        .set_index(["store_id", "ts"])
+    )
+    checked = 0
+    for key, qt in set(zip(q.store_id, q.ts)):
+        live = versions[
+            (versions.store_id == key) & (versions.valid_from < qt) & (qt <= versions.valid_to)
+        ].price.tolist()
+        windowed = _py_windowed(snap_df, mut_df, key, qt, W.millis, tail_hop_millis(W))
+        row = got.loc[(key, qt)]
+        for col, exp in (
+            ("price_variance", _exact_variance(live, [])),
+            ("price_variance_3d", _exact_variance(*windowed)),
+        ):
+            if exp is None:
+                assert pd.isna(row[col]), (key, qt, col)
+            else:
+                assert row[col] == pytest.approx(exp, rel=1e-6, abs=1e-6), (key, qt, col)
+                checked += 1
+    assert checked >= 200
+
+
+# ------------------------------------------- typed guards
+
+
+def test_entity_guards_raise_value_errors(spark, fixture, tmp_path):
+    """The entity-path guards raise ValueError (they hold under python -O)."""
+    from dataclasses import replace
+
+    from chronon_spark.plans.entity_serving import (
+        fetch_temporal_entities,
+        upload_temporal_entities,
+    )
+
+    snap_path, mut_path, _, q = fixture
+    selects = {c: c for c in ("store_id", "price", "ds", "mutation_ts", "is_before")}
+    gb = GroupBy(
+        sources=(
+            EntitySource(
+                snapshot_table=snap_path,
+                mutation_table=mut_path,
+                query=Query(selects=selects, partition_column="ds"),
+            ),
+        ),
+        key_columns=("store_id",),
+        aggregations=(Aggregation("price", Operation.SUM),),
+        name="guards",
+    )
+    queries = spark.createDataFrame(q)
+    batch_end = T0 + 5 * DAY_MS
+
+    no_mutations = replace(gb, sources=(replace(gb.sources[0], mutation_table=None),))
+    with pytest.raises(ValueError, match="needs an EntitySource with a mutation_table"):
+        temporal_entities(spark, no_mutations, queries)
+
+    src = gb.sources[0]
+    no_reversal = replace(
+        gb,
+        sources=(
+            replace(
+                src,
+                query=replace(
+                    src.query,
+                    selects={a: e for a, e in selects.items() if a != "is_before"},
+                ),
+            ),
+        ),
+    )
+    with pytest.raises(ValueError, match=r"mutation scan lacks \['is_before'\]"):
+        temporal_entities(spark, no_reversal, queries)
+
+    with pytest.raises(ValueError, match="batch end must be a UTC midnight"):
+        upload_temporal_entities(spark, gb, batch_end + 1, str(tmp_path / "up"))
+    with pytest.raises(ValueError, match="batch end must be a UTC midnight"):
+        fetch_temporal_entities(spark, gb, queries, batch_end + 1, str(tmp_path / "up"))
+
+    requests = spark.createDataFrame(pd.DataFrame({"store_id": [1], "ts": [batch_end + 1]}))
+    with pytest.raises(ValueError, match="pass upload_dir or batch_irs"):
+        fetch_temporal_entities(spark, gb, requests, batch_end)

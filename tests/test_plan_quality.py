@@ -8,7 +8,6 @@ wide exchange per side.
 
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
 from chronon_spark.api.types import (
@@ -160,6 +159,47 @@ def test_auto_mode_routes_hot_keys_to_hopped_plan(spark, sf_dir):
         compute_join_part(spark, gb, q, mode="auto", hot_key_bound=10**12)
     )
     assert "FlatMapGroupsInPandas" in cold
+
+
+def test_auto_mode_routes_on_a_rewritten_table(spark, tmp_path):
+    """The mode="auto" skew pre-check reads the table as it is now: after
+    the table at the same path is rewritten with a hot key, the same
+    GroupBy routes to the hopped plan (no answer from an earlier scan)."""
+    import datetime as dt
+
+    from chronon_spark.operators.asof_join import compute_join_part
+
+    path = str(tmp_path / "events.parquet")
+    t0 = dt.datetime(2024, 1, 1)
+
+    def write(rows):
+        spark.createDataFrame(
+            [(u, float(i), t0 + dt.timedelta(hours=i)) for i, u in enumerate(rows)],
+            "user_id long, value double, ts timestamp",
+        ).write.mode("overwrite").parquet(path)
+
+    gb = GroupBy(
+        sources=(
+            EventSource(
+                table=path,
+                query=Query(
+                    selects={"user_id": "user_id", "value": "value"},
+                    time_column=millis_expr("ts"),
+                ),
+            ),
+        ),
+        key_columns=("user_id",),
+        aggregations=(Aggregation("value", Operation.SUM, windows=(Window.days(7),)),),
+        name="rewritten",
+    )
+    q = spark.createDataFrame([(0, 1_704_200_000_000)], "user_id long, ts long")
+
+    write([0, 1, 2, 3])  # one event per key: cold
+    cold = plan_of(compute_join_part(spark, gb, q, mode="auto", hot_key_bound=3))
+    assert "FlatMapGroupsInPandas" in cold
+    write([0] * 8 + [1])  # key 0 now holds 8 events: hot
+    hot = plan_of(compute_join_part(spark, gb, q, mode="auto", hot_key_bound=3))
+    assert "FlatMapGroupsInPandas" not in hot
 
 
 def test_hopped_plan_reuses_event_exchange(spark, sf_dir):

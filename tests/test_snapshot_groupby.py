@@ -97,3 +97,69 @@ def test_snapshot_group_by_vs_duckdb(spark, sf_dir):
     ).fetchone()[0]
     mine = got[(got.user_id == 0) & (got.ds == END)]["value_last3_7d"].iloc[0]
     assert list(mine) == pytest.approx(lk)
+
+
+def test_snapshot_variance_at_a_large_offset(spark, tmp_path):
+    """values = 1e9 + N(0, 1): the daily VARIANCE, unwindowed and over a
+    3-day window, matches an exact rational reference at rel 1e-6. Raw
+    power sums cancel at this offset; day IRs merged about the key's
+    offset K do not."""
+    import datetime as dt
+    import statistics
+    from fractions import Fraction
+
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.RandomState(3)
+    t0 = 1_704_067_200_000  # 2024-01-01
+    n = 400
+    ev = pd.DataFrame({
+        "user_id": rng.randint(0, 4, n),
+        "value": 1e9 + rng.normal(size=n),
+        "ts_ms": rng.randint(t0, t0 + 12 * DAY_MS, n),
+    })
+    ev["ts"] = pd.to_datetime(ev.ts_ms, unit="ms")
+    path = str(tmp_path / "events.parquet")
+    spark.createDataFrame(ev[["user_id", "value", "ts"]]).write.parquet(path)
+    gb = GroupBy(
+        sources=(
+            EventSource(
+                table=path,
+                query=Query(
+                    selects={"user_id": "user_id", "value": "value"},
+                    time_column=millis_expr("ts"),
+                ),
+            ),
+        ),
+        key_columns=("user_id",),
+        aggregations=(
+            Aggregation("value", Operation.VARIANCE, windows=(Window.days(3),)),
+            Aggregation("value", Operation.VARIANCE),
+        ),
+        name="big",
+    )
+    start, end = "2024-01-04", "2024-01-12"
+    got = snapshot_group_by(spark, gb, start, end).toPandas().set_index(["user_id", "ds"])
+
+    def exact(vals):
+        return float(statistics.pvariance([Fraction(v) for v in vals])) if vals else None
+
+    checked = 0
+    day = dt.date.fromisoformat(start)
+    while day <= dt.date.fromisoformat(end):
+        eod = int(pd.Timestamp(day).value // 1_000_000) + DAY_MS
+        for u in range(4):
+            seen = ev[(ev.user_id == u) & (ev.ts_ms < eod)]
+            for col, vals in (
+                ("value_variance", seen.value.tolist()),
+                ("value_variance_3d", seen[seen.ts_ms >= eod - 3 * DAY_MS].value.tolist()),
+            ):
+                want, have = exact(vals), got.loc[(u, day.isoformat()), col]
+                if want is None:
+                    assert pd.isna(have), (u, day, col)
+                else:
+                    assert have == pytest.approx(want, rel=1e-6, abs=1e-6), (u, day, col)
+                    checked += 1
+        day += dt.timedelta(days=1)
+    assert checked == 2 * 4 * 9

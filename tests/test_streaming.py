@@ -112,8 +112,8 @@ def test_incremental_checkpoint_resume(spark, sf_dir, tmp_path):
     half2.write.mode("append").parquet(src)
     r2 = drain("inc_b")
     exp = stream_tile_aggregate(ev, GB).toPandas()
-    assert r1["ir_cnt_value"].sum() == half1.count()
-    assert r2["ir_cnt_value"].sum() == ev.count()
+    assert r1["i_cnt_value"].sum() == half1.count()
+    assert r2["i_cnt_value"].sum() == ev.count()
     m = r2.sort_values(["user_id", "tile_start"]).reset_index(drop=True)[sorted(r2.columns)]
     e = exp.sort_values(["user_id", "tile_start"]).reset_index(drop=True)[sorted(exp.columns)]
     assert m.equals(e)
