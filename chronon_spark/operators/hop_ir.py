@@ -49,6 +49,8 @@ from pyspark.sql import functions as F
 from chronon_spark.api.types import Operation
 from chronon_spark.sources.scan import TS
 
+DAY_MS = 86_400_000
+
 # ops whose IRs are (count, sum[, higher central sums])
 MOMENT_OPS = (
     Operation.COUNT,
@@ -258,23 +260,31 @@ def with_offsets(df: DataFrame, keys: list, inputs: list) -> DataFrame:
 
 
 def merge(
-    kind: str, c: str, over: Optional[W] = None, offset_form: bool = False
+    kind: str,
+    c: str,
+    over: Optional[W] = None,
+    offset_form: bool = False,
+    prefix: str = "i",
 ) -> Column:
-    """The merge of IR column ``i_{kind}_{c}``: an aggregate, or with
-    ``over`` the same merge as a window over that frame. Moment kinds
+    """The merge of IR column ``{prefix}_{kind}_{c}``: an aggregate, or
+    with ``over`` the same merge as a window over that frame. Moment kinds
     merge to sums about ``__k_{c}`` (recenter them after); offset-form
-    IRs (a signed :func:`update_aggs`) already are, and just add."""
+    IRs (a signed :func:`update_aggs`, or IRs already merged about K)
+    just add."""
 
     def agg(a: Column) -> Column:
         return a if over is None else a.over(over)
 
-    ir = F.col(f"i_{kind}_{c}")
+    ir = F.col(f"{prefix}_{kind}_{c}")
     if kind in ("cnt", "sum") or (offset_form and kind in MOMENTS):
         return agg(F.sum(ir))
     if kind in MOMENTS:
         i = MOMENTS.index(kind)
-        ms = [F.col(f"i_{m}_{c}") if j <= i else None for j, m in enumerate(MOMENTS)]
-        n, s = F.col(f"i_cnt_{c}"), F.col(f"i_sum_{c}")
+        ms = [
+            F.col(f"{prefix}_{m}_{c}") if j <= i else None
+            for j, m in enumerate(MOMENTS)
+        ]
+        n, s = F.col(f"{prefix}_cnt_{c}"), F.col(f"{prefix}_sum_{c}")
         return agg(F.sum(shift(n, s, *ms, F.col(f"__k_{c}"))[i]))
     if kind in ("min", "first"):
         return agg(F.min(ir))

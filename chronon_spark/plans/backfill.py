@@ -27,7 +27,7 @@ import time
 from dataclasses import dataclass
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from chronon_spark.plans.partition_range import PartitionRange, missing_ranges
@@ -48,10 +48,11 @@ def require_utc_session(spark: SparkSession) -> None:
     would drop left rows near midnight between the two. Fail fast instead
     (chronon_spark.session.build_session sets UTC)."""
     tz = spark.conf.get("spark.sql.session.timeZone", "")
-    assert tz in ("UTC", "Etc/UTC", "GMT", "Z"), (
-        f"backfill requires spark.sql.session.timeZone=UTC (got {tz!r}); "
-        "ds partition strings and ts_range bounds must agree"
-    )
+    if tz not in ("UTC", "Etc/UTC", "GMT", "Z"):
+        raise ValueError(
+            f"backfill requires spark.sql.session.timeZone=UTC (got {tz!r}); "
+            "ds partition strings and ts_range bounds must agree"
+        )
 
 
 _DOTTED_TABLE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)+$")
@@ -143,6 +144,28 @@ def read_lineage(spark: SparkSession, output_path: str) -> Optional[DataFrame]:
     return spark.read.parquet(lp) if fs.exists(p) else None
 
 
+LINEAGE_SCHEMA = (
+    "ds string, job_name string, rows long, bytes long, wall_sec_step double,"
+    " step_start string, step_end string, conf_hash string, written_at double"
+)
+
+
+def write_lineage(spark: SparkSession, output_path: str, rows: list) -> None:
+    """Append lineage rows (dicts in ``LINEAGE_SCHEMA`` order) to the
+    ``<output>__lineage`` side table. The rows go in as one pandas frame,
+    which ``createDataFrame`` ships through Arrow: no Python RDD."""
+    import pandas as pd
+
+    names = [f.split()[0] for f in LINEAGE_SCHEMA.split(",")]
+    lin_df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=names), schema=LINEAGE_SCHEMA
+    )
+    if is_table_name(output_path):
+        lin_df.write.mode("append").saveAsTable(lineage_path(output_path))
+    else:
+        lin_df.write.mode("append").parquet(lineage_path(output_path))
+
+
 def _stored_conf_hash(spark: SparkSession, output_path: str) -> Optional[str]:
     lin = read_lineage(spark, output_path)
     if lin is None:
@@ -165,7 +188,8 @@ def backfill(
 ) -> BackfillResult:
     """Fill ``output_path`` for ``date_range``, skipping checkpointed
     partitions; each step-range computes, writes with dynamic partition
-    overwrite, and appends one lineage row per written partition.
+    overwrite, and appends one lineage row per written partition, its row
+    count observed by the write itself (no read-back job).
 
     ``compute(spark, sub_range)`` must return a DataFrame containing
     ``partition_col``. With ``repartition_by_range`` the output is
@@ -228,12 +252,24 @@ def backfill(
         for step in hole.steps(step_days):
             t0 = time.time()
             df = compute(spark, step)
-            assert partition_col in df.columns, f"compute() must emit {partition_col}"
+            if partition_col not in df.columns:
+                raise ValueError(f"compute() must emit {partition_col}")
             df = df.where(
                 (F.col(partition_col) >= step.start) & (F.col(partition_col) <= step.end)
             )
             if repartition_by_range:
                 df = df.repartitionByRange(max(step.days, 1), partition_col)
+            # per-partition row counts, observed by the write itself (above
+            # the range exchange, so its sampling pass is not counted)
+            days = list(step.partitions())
+            seen = Observation(f"{job_name}:{step.start}")
+            df = df.observe(
+                seen,
+                *[
+                    F.count_if(F.col(partition_col) == ds).alias(f"rows_{i}")
+                    for i, ds in enumerate(days)
+                ],
+            )
             as_table = is_table_name(output_path)
             if as_table:
                 from chronon_spark.catalog.format import write_partitioned
@@ -256,43 +292,29 @@ def backfill(
                 from chronon_spark.catalog.format import HiveFormat, resolve_format
 
                 if isinstance(resolve_format(spark, output_path), HiveFormat):
-                    for ds in step.partitions():
+                    for ds in days:
                         spark.sql(
                             f"ALTER TABLE {output_path} ADD IF NOT EXISTS "
                             f"PARTITION ({partition_col}='{ds}')"
                         )
             else:
                 fs, _, jvm = _hadoop_fs(spark, output_path)
-                for ds in step.partitions():
+                for ds in days:
                     pdir = jvm.org.apache.hadoop.fs.Path(
                         f"{output_path}/{partition_col}={ds}"
                     )
                     if not fs.exists(pdir):
                         fs.mkdirs(pdir)
-            # per-partition metrics from the files just written (footer-only
-            # count; bytes from the filesystem) — emitted even for empty
-            # partitions inside the step range.
-            out_df = (
-                spark.table(output_path) if as_table else spark.read.parquet(output_path)
-            )
-            written = (
-                out_df
-                # partition-type inference reads ds=2024-01-02 back as DATE;
-                # normalize to the string form used everywhere else
-                .withColumn(partition_col, F.col(partition_col).cast("string"))
-                .where((F.col(partition_col) >= step.start) & (F.col(partition_col) <= step.end))
-                .groupBy(partition_col)
-                .count()
-                .collect()
-            )
-            counts = {r[0]: r[1] for r in written}
+            # one lineage row per partition of the step, empty ones too;
+            # bytes from the filesystem
+            counts = seen.get
             now = time.time()
-            for ds in step.partitions():
+            for i, ds in enumerate(days):
                 lineage_rows.append(
                     {
                         "ds": ds,
                         "job_name": job_name,
-                        "rows": int(counts.get(ds, 0)),
+                        "rows": int(counts.get(f"rows_{i}") or 0),
                         "bytes": partition_bytes(spark, output_path, ds, partition_col),
                         "wall_sec_step": round(wall, 3),
                         "step_start": step.start,
@@ -304,14 +326,6 @@ def backfill(
             computed.append(step)
 
     if lineage_rows:
-        lin_df = spark.createDataFrame(
-            [tuple(r.values()) for r in lineage_rows],
-            schema="ds string, job_name string, rows long, bytes long, wall_sec_step double,"
-            " step_start string, step_end string, conf_hash string, written_at double",
-        )
-        if is_table_name(output_path):
-            lin_df.write.mode("append").saveAsTable(lineage_path(output_path))
-        else:
-            lin_df.write.mode("append").parquet(lineage_path(output_path))
+        write_lineage(spark, output_path, lineage_rows)
 
     return BackfillResult(computed, skipped, len(lineage_rows))

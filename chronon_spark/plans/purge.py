@@ -44,7 +44,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronon_spark.plans.backfill import DS, _hadoop_fs, lineage_path, partition_bytes
+from chronon_spark.plans.backfill import DS, _hadoop_fs, partition_bytes, write_lineage
 
 __all__ = ["purge", "PurgeResult"]
 
@@ -127,25 +127,24 @@ def purge(
 
     # 3. lineage rows, same sidecar schema as backfill
     now = time.time()
-    lin_df = spark.createDataFrame(
+    write_lineage(
+        spark,
+        corpus_path,
         [
-            (
-                ds,
-                job_name,
-                int(after.get(ds, 0)),
-                partition_bytes(spark, corpus_path, ds, partition_col),
-                round(wall, 3),
-                ds,
-                ds,
-                "",
-                now,
-            )
+            {
+                "ds": ds,
+                "job_name": job_name,
+                "rows": int(after.get(ds, 0)),
+                "bytes": partition_bytes(spark, corpus_path, ds, partition_col),
+                "wall_sec_step": round(wall, 3),
+                "step_start": ds,
+                "step_end": ds,
+                "conf_hash": "",
+                "written_at": now,
+            }
             for ds in affected
         ],
-        schema="ds string, job_name string, rows long, bytes long, wall_sec_step double,"
-        " step_start string, step_end string, conf_hash string, written_at double",
     )
-    lin_df.write.mode("append").parquet(lineage_path(corpus_path))
 
     report = {ds: (before.get(ds, 0), after.get(ds, 0)) for ds in affected}
     deleted = sum(b - a for b, a in report.values())

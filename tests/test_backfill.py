@@ -191,7 +191,7 @@ def test_require_utc_session_guards_backfill_join(spark):
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
-        with pytest.raises(AssertionError, match="timeZone"):
+        with pytest.raises(ValueError, match="timeZone"):
             require_utc_session(spark)
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
