@@ -10,18 +10,18 @@ ops with whole-stage codegen end to end — no Python anywhere:
    problem dissolves here: a hot domain's events spread over its hops, and
    Spark's map-side partial aggregation absorbs per-partition repeats —
    this is "salting by time", the skew story the north rule asks for.
-2. **tail merge**: per key, window frames over hop index merge the
-   ``w_hops`` hop IRs preceding the query's hop — ``hop_ir.merge`` as a
-   window, the same merge the upload and compaction run as an aggregate.
-   Whole-day windows over sub-day hops merge in tiers (start-day suffix,
-   day tier, query-day prefix; see ``_tails``); other windows use one
-   ``rangeBetween(-w_hops, -1)`` frame. Rows per
+2. **tail merge**: per key, a RANGE window frame over hop index merges the
+   ``w_hops`` hop IRs preceding the query's hop
+   (``rangeBetween(-w_hops, -1)``) — ``hop_ir.merge`` as a window, the
+   same merge the upload and compaction run as an aggregate. Rows per
    key = #hops (bounded by range/hop), so the per-key window partition is
    tiny regardless of how hot the key is. Query hops with no events get
    rows via union (null-padded), the same trick as the main union kernel.
 3. **exact head**: events of the query's own hop with ``e.ts <= q.ts``,
    aggregated per query via a (keys, hop) equi-join — the join is balanced
    because a single hop of even the hottest key is |key events|/#hops.
+   The head and the hop partials read one events exchange on (keys, hop),
+   whatever the ops: the events are scanned and shuffled once.
 4. **combine**: tail ⊕ head per IR kind, ``hop_ir.plus`` (sums add, min/max fold,
    last/first compare (ts, v) structs, central moments ``hop_ir.shift``
    to the per-key offset and add), then ``hop_ir.finalize`` — the same
@@ -106,114 +106,17 @@ def _frame(keys: list, w_hops: Optional[int]) -> W:
     return w.rangeBetween(-w_hops, -1)
 
 
-def _day_hops(w_hops: Optional[int], hop_ms: int) -> Optional[int]:
-    """Hops per day when a window's tail merges in tiers, else None: the
-    window is a whole number of days (at least one) and whole hops tile a
-    day. Day-sized hops gain nothing from tiers — the hop frame already
-    spans at most one row per day."""
-    if w_hops is None or hop_ms >= hop_ir.DAY_MS or hop_ir.DAY_MS % hop_ms:
-        return None
-    per_day = hop_ir.DAY_MS // hop_ms
-    return per_day if w_hops % per_day == 0 else None
-
-
-def _pad_hops(parts: list, hop_ms: int) -> list:
-    """Window lengths (in hops) of the tiered tails: each query hop gets a
-    null-padded grid row that many hops back, where its window starts."""
-    ws = {w for c, w in hop_ir.windowed_ir_columns(parts, hop_ms).values()}
-    return sorted(w for w in ws if _day_hops(w, hop_ms))
-
-
-def _tails(grid: DataFrame, parts: list, keys: list, hop_ms: int) -> DataFrame:
-    """Tail-merged IR columns ``t_{kind}_{sfx}`` per grid row, one per
-    (kind, input, window) of ``hop_ir.windowed_ir_columns``; moment kinds
-    hold sums about the per-key offset ``__k_{c}``, which rides along for
-    the finalize. Rows: every query hop (``__isq`` = 1), maybe others.
-
-    A window under a day, not a whole number of days, or unbounded merges
-    its ``w_hops`` preceding hops in one RANGE frame per key. A window of
-    ``Wd`` whole days over sub-day hops (``_day_hops``) splits its tail
-    ``[qhop - w_hops, qhop - 1]`` into three tiers joined by
-    ``hop_ir.plus``:
-
-    - the start day's suffix: a reverse running frame per (key, day), read
-      at the null-padded row at hop ``qhop - w_hops`` (``_pad_hops``)
-      through a one-hop RANGE frame;
-    - the query day's prefix: a running frame per (key, day);
-    - the day tier: each day's total (the suffix at its first row) merged
-      by ``rangeBetween(-(Wd - 1), -1)`` over the key's days, on the rows
-      left once only first rows and query hops are kept.
-
-    The suffix and prefix frames are computed once per IR column and
-    shared by every tiered window. Every frame partitions by the keys
-    first, so the grid's one exchange on the keys serves them all."""
-    flat, tiered = {}, {}
+def _tail_cols(parts: list, keys: list, hop_ms: int) -> list:
+    """Tail-merged IR columns over the hop window frames, deduped across
+    parts by (input, window): ``t_{kind}_{sfx}`` is the IR's merge
+    (``hop_ir.merge``) as a window; moment kinds hold sums about the
+    per-key offset ``__k_{c}``, which rides along for the finalize."""
+    out: dict = {}
     for (kind, sfx), (c, w) in hop_ir.windowed_ir_columns(parts, hop_ms).items():
-        name = f"t_{kind}_{sfx}"
-        if _day_hops(w, hop_ms):
-            tiered[name] = (kind, c, w)
-        else:
-            flat[name] = hop_ir.merge(kind, c, _frame(keys, w))
-    out = [*keys, "__hop", "__isq"]
-    moments = [F.col(f"__k_{c}") for c in hop_ir.moment_inputs(parts)]
-    if not tiered:
-        return grid.select(*out, *[v.alias(n) for n, v in flat.items()], *moments)
-
-    per_day = hop_ir.DAY_MS // hop_ms
-    cols = list(dict.fromkeys((k, c) for k, c, _ in tiered.values()))
-    starts = sorted({w for _, _, w in tiered.values()})
-    by_day = W.partitionBy(*keys, "__day")
-    # each hop's suffix within its day: its own and the later hops
-    desc = by_day.orderBy(F.col("__hop").desc()).rowsBetween(W.unboundedPreceding, 0)
-    grid = (
-        grid.repartition(*keys)
-        .withColumn("__day", F.floor(F.col("__hop") / per_day))
-        .select(
-            "*", *[hop_ir.merge(k, c, desc).alias(f"__s_{k}_{c}") for k, c in cols]
-        )
-    )
-    # per key over hops: the flat frames, and each window's start-day
-    # suffix, read at its padded start row one hop frame back
-    per_hop = W.partitionBy(*keys).orderBy("__hop")
-    suffix = F.struct(*[F.col(f"__s_{k}_{c}").alias(f"{k}_{c}") for k, c in cols])
-    grid = grid.select(
-        "*",
-        *[v.alias(n) for n, v in flat.items()],
-        *[F.first(suffix).over(per_hop.rangeBetween(-w, -w)).alias(f"__ss{w}") for w in starts],
-    )
-    # the query day's prefix: its hops before the row's own; a row with an
-    # empty prefix is its day's first, where the suffix is the day's total
-    asc = by_day.orderBy("__hop").rowsBetween(W.unboundedPreceding, -1)
-    grid = grid.select(
-        "*",
-        *[hop_ir.merge(k, c, asc).alias(f"__p_{k}_{c}") for k, c in cols],
-        (F.count(F.lit(1)).over(asc) == 0).alias("__first"),
-    )
-    # the day tier, over the day totals of the first rows; the query hops
-    # read it off the same frame
-    multi_day = {n: v for n, v in tiered.items() if v[2] > per_day}
-    grid = grid.where((F.col("__isq") == 1) | F.col("__first")).select(
-        *out,
-        "__day",
-        *flat,
-        *moments,
-        *[f"__ss{w}" for w in starts],
-        *[f"__p_{k}_{c}" for k, c in cols],
-        *[
-            F.when(F.col("__first"), F.col(f"__s_{k}_{c}")).alias(f"__d_{k}_{c}")
-            for k, c in cols
-        ],
-    )
-    per_days = W.partitionBy(*keys).orderBy("__day")
-
-    def tier(n: str, kind: str, c: str, w: int) -> Column:
-        t = hop_ir.plus(kind, F.col(f"__ss{w}")[f"{kind}_{c}"], F.col(f"__p_{kind}_{c}"))
-        if n in multi_day:
-            days = per_days.rangeBetween(-(w // per_day - 1), -1)
-            t = hop_ir.plus(kind, t, hop_ir.merge(kind, c, days, True, prefix="__d"))
-        return t.alias(n)
-
-    return grid.select(*out, *flat, *[tier(n, *v) for n, v in tiered.items()], *moments)
+        out[f"t_{kind}_{sfx}"] = hop_ir.merge(kind, c, _frame(keys, w))
+        if kind == "m2":
+            out[f"__k_{c}"] = F.col(f"__k_{c}")
+    return [col.alias(name) for name, col in out.items()]
 
 
 _ZERO_IS_EMPTY = {
@@ -326,7 +229,9 @@ def hop_irs_for(events: DataFrame, group_by: GroupBy, hop_ms: int) -> DataFrame:
     lambda architecture (reference GroupByUpload FinalBatchIr tail hops)."""
     keys = list(group_by.key_columns)
     ev = events.withColumn("__hop", (F.col(TS) / hop_ms).cast("long"))
-    return ev.groupBy(*keys, "__hop").agg(*hop_ir.update_aggs(group_by.unpack()))
+    return ev.groupBy(*keys, "__hop").agg(
+        *hop_ir.update_aggs(group_by.unpack(), frame=ev)
+    )
 
 
 def group_by_asof_hopped(
@@ -430,18 +335,18 @@ def group_by_asof_hopped(
     events = null_out_nans(events, list({p.input_column for p in parts}))
     # Same upfront null-key/ts drop as q: a null-key event groups under a
     # key no query can match, a null-ts event has no hop — both contribute
-    # nothing. The explicit ``__hop IS NOT NULL`` is the predicate the
+    # nothing. The explicit ``hop IS NOT NULL`` is the predicate the
     # exact-head join would otherwise infer on its own branch only; stated
-    # here, both branches push the same filters below the repartition, so
-    # its exchange is planned once and REUSED. Reuse needs the two
-    # subtrees to match after column pruning too: it holds when the head
-    # reads every column the hop IRs read (a LAST/FIRST part reads ts), and
-    # not when the hop-IR branch prunes ts away (COUNT/SUM/MAX only), which
-    # then scans the events a second time.
+    # here, both branches push the same filters below the repartition.
+    # The repartition hashes the hop expression over ts and ``__hop`` is
+    # derived above it, so ts sits below the exchange on both branches
+    # (the head reads it, the hop IRs of COUNT/SUM/MAX parts do not): the
+    # subtrees match after column pruning for every op set, and the
+    # exchange is planned once and REUSED.
     for _c in list(keys) + [TS]:
         events = events.where(F.col(_c).isNotNull())
-    events = events.withColumn("__hop", (F.col(TS) / hop_ms).cast("long"))
-    events = events.where(F.col("__hop").isNotNull())
+    hop = (F.col(TS) / hop_ms).cast("long")
+    events = events.where(hop.isNotNull())
     # ONE shuffle of the big side: repartition on (keys, hop) satisfies the
     # distribution requirement of BOTH consumers — the hop-IR aggregation
     # (map-side combine still applies within partitions) and the exact-head
@@ -454,10 +359,13 @@ def group_by_asof_hopped(
     # bucketed, EnsureRequirements re-inserts the exchange — results are
     # identical either way (pinned in tests/test_clustered.py).
     if not events_clustered:
-        events = events.repartition(*keys, "__hop")
+        events = events.repartition(*keys, hop)
+    events = events.withColumn("__hop", hop)
 
     # 1. hop partial IRs (+ precomputed batch IRs for the lambda merge)
-    hop_irs = events.groupBy(*keys, "__hop").agg(*hop_ir.update_aggs(parts))
+    hop_irs = events.groupBy(*keys, "__hop").agg(
+        *hop_ir.update_aggs(parts, frame=events)
+    )
     if extra_hop_irs is not None:
         # enforce the disjointness contract loudly: overlapping hop ranges
         # would double-count (each (key, hop) must come from exactly one
@@ -477,26 +385,21 @@ def group_by_asof_hopped(
         hop_irs = hop_irs.unionByName(extra_hop_irs)
 
     # 2. union query hops (null IRs) so every query hop has a tail row,
-    #    plus the null-padded start rows of the tiered windows, then the
-    #    per-key windows merge preceding hops (``_tails``).
+    #    then the per-key RANGE window merges preceding hops.
     ir_cols = [c for c in hop_irs.columns if c.startswith("i_")]
-    marks = [F.struct(F.col("__hop").alias("h"), F.lit(1).alias("q"))] + [
-        F.struct((F.col("__hop") - w).alias("h"), F.lit(0).alias("q"))
-        for w in _pad_hops(parts, hop_ms)
-    ]
+    q_hops = q.select(*keys, "__hop").distinct()
     # tag the query hops through the full join so the post-window filter to
     # query hops is a free predicate instead of a second (re-shuffling)
     # semi join of the whole tails set
-    q_hops = (
-        q.select(*keys, F.explode(F.array(*marks)).alias("__m"))
-        .groupBy(*keys, F.col("__m.h").alias("__hop"))
-        .agg(F.max("__m.q").alias("__isq"))
+    hop_grid = hop_irs.join(
+        q_hops.withColumn("__isq", F.lit(1)), on=keys + ["__hop"], how="full"
     )
-    hop_grid = hop_irs.join(q_hops, on=keys + ["__hop"], how="full")
     # per-key moment offset K, from the hop IRs themselves (same shuffle as
     # the tail window, no extra pass over raw events)
     hop_grid = hop_ir.with_offsets(hop_grid, keys, hop_ir.moment_inputs(parts))
-    tails = _tails(hop_grid, parts, keys, hop_ms)
+    tails = hop_grid.select(
+        *keys, "__hop", F.col("__isq"), *_tail_cols(parts, keys, hop_ms)
+    )
     # only query hops are needed downstream — the tag filter costs nothing
     tails = tails.where(F.col("__isq") == 1).drop("__isq")
 
@@ -525,7 +428,7 @@ def group_by_asof_hopped(
         *[F.col(f"__e.{c}") for c in head_needed],
     )
     heads = head_join.groupBy(*keys, "__qts", "__hop").agg(
-        F.count(F.col(TS)).alias("__h_n"), *hop_ir.update_aggs(parts)
+        F.count(F.col(TS)).alias("__h_n"), *hop_ir.update_aggs(parts, frame=head_join)
     )
     # no-event query rows must expose NULL head IRs (identical to the old
     # inner-join shape where the row was simply absent) — an empty

@@ -120,7 +120,22 @@ def windowed_ir_columns(parts: list, hop_ms: int) -> dict:
     return out
 
 
-def _update(kind: str, c: str) -> Column:
+def _hll_input(c: str, dtype: Optional[str]) -> Column:
+    """The input of an ``hll`` update: ``hll_sketch_agg`` takes INT,
+    BIGINT, STRING and BINARY only. Other types map one-to-one onto
+    those, keeping the kernel's notion of distinct: -0.0 and 0.0 are one
+    floating value, and a boolean counts as 0/1."""
+    x = F.col(c)
+    if dtype in ("double", "float"):
+        return F.when(x == 0, F.lit(0.0).cast(dtype)).otherwise(x).cast("string")
+    if dtype is not None and dtype.startswith("decimal"):
+        return x.cast("string")
+    if dtype in ("boolean", "tinyint", "smallint"):
+        return x.cast("int")
+    return x
+
+
+def _update(kind: str, c: str, dtype: Optional[str] = None) -> Column:
     x = F.col(c).cast("double")
     if kind == "cnt":
         return F.count(c)
@@ -154,11 +169,14 @@ def _update(kind: str, c: str) -> Column:
         )
     if kind == "set":
         return F.collect_set(c)
-    return F.hll_sketch_agg(c)
+    return F.hll_sketch_agg(_hll_input(c, dtype))
 
 
-def update_aggs(parts: list, sign: Optional[Column] = None) -> list:
-    """The update: partial-IR aggregate columns over raw events.
+def update_aggs(
+    parts: list, sign: Optional[Column] = None, frame: Optional[DataFrame] = None
+) -> list:
+    """The update: partial-IR aggregate columns over raw events (the rows
+    of ``frame``, whose input types the ``hll`` update needs).
 
     With ``sign`` (+1 insert, -1 delete; deletable ops only) the update is
     written in offset form: every IR column is a sum of each row's
@@ -168,7 +186,10 @@ def update_aggs(parts: list, sign: Optional[Column] = None) -> list:
     delete of rows an update added sums them back out: delete∘update = id.
     """
     if sign is None:
-        return [_update(k, c).alias(f"i_{k}_{c}") for k, c in ir_columns(parts)]
+        cols = ir_columns(parts)
+        hll = frame is not None and any(k == "hll" for k, _ in cols)
+        types = dict(frame.dtypes) if hll else {}
+        return [_update(k, c, types.get(c)).alias(f"i_{k}_{c}") for k, c in cols]
     out = []
     for kind, c in ir_columns(parts):
         x = F.col(c).cast("double")
@@ -260,31 +281,23 @@ def with_offsets(df: DataFrame, keys: list, inputs: list) -> DataFrame:
 
 
 def merge(
-    kind: str,
-    c: str,
-    over: Optional[W] = None,
-    offset_form: bool = False,
-    prefix: str = "i",
+    kind: str, c: str, over: Optional[W] = None, offset_form: bool = False
 ) -> Column:
-    """The merge of IR column ``{prefix}_{kind}_{c}``: an aggregate, or
-    with ``over`` the same merge as a window over that frame. Moment kinds
+    """The merge of IR column ``i_{kind}_{c}``: an aggregate, or with
+    ``over`` the same merge as a window over that frame. Moment kinds
     merge to sums about ``__k_{c}`` (recenter them after); offset-form
-    IRs (a signed :func:`update_aggs`, or IRs already merged about K)
-    just add."""
+    IRs (a signed :func:`update_aggs`) already are, and just add."""
 
     def agg(a: Column) -> Column:
         return a if over is None else a.over(over)
 
-    ir = F.col(f"{prefix}_{kind}_{c}")
+    ir = F.col(f"i_{kind}_{c}")
     if kind in ("cnt", "sum") or (offset_form and kind in MOMENTS):
         return agg(F.sum(ir))
     if kind in MOMENTS:
         i = MOMENTS.index(kind)
-        ms = [
-            F.col(f"{prefix}_{m}_{c}") if j <= i else None
-            for j, m in enumerate(MOMENTS)
-        ]
-        n, s = F.col(f"{prefix}_cnt_{c}"), F.col(f"{prefix}_sum_{c}")
+        ms = [F.col(f"i_{m}_{c}") if j <= i else None for j, m in enumerate(MOMENTS)]
+        n, s = F.col(f"i_cnt_{c}"), F.col(f"i_sum_{c}")
         return agg(F.sum(shift(n, s, *ms, F.col(f"__k_{c}"))[i]))
     if kind in ("min", "first"):
         return agg(F.min(ir))

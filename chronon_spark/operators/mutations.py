@@ -84,9 +84,9 @@ from chronon_spark.api.types import (
     validate_identifier,
 )
 from chronon_spark.operators import hop_ir
+from chronon_spark.operators.hop_ir import DAY_MS
 from chronon_spark.sources.scan import TS, apply_query, load_table
 
-DAY_MS = 86_400_000
 # The full abelian-group subset of the Operation enum (reference
 # thrift/api.thrift:195-227 splits deletable vs non-deletable exactly this
 # way; VARIANCE deletes via signed sums about the key's offset K

@@ -34,10 +34,10 @@ from pyspark.sql import Window as W
 from chronon_spark.api.types import AggregationPart, GroupBy, Operation, TimeUnit
 from chronon_spark.operators import hop_ir
 from chronon_spark.operators.asof_join import events_df_for_group_by
+from chronon_spark.operators.hop_ir import DAY_MS
 from chronon_spark.plans.klist_serving import _asc, _entry, _merge
 from chronon_spark.sources.scan import TS
 
-DAY_MS = 86_400_000
 # k-list ops ride klist_serving's exact k-bounded lists; the rest are
 # hop_ir's scalar IRs
 _KLIST_MODES = {Operation.LAST_K: "last_k", Operation.FIRST_K: "first_k"}
@@ -111,7 +111,7 @@ def snapshot_group_by(
     scalar = [p for p in parts if p.operation not in _KLIST_MODES]
     klists = {_klist_column(p): p for p in parts if p.operation in _KLIST_MODES}
     daily = ev.groupBy(*keys, "day_num").agg(
-        *hop_ir.update_aggs(scalar),
+        *hop_ir.update_aggs(scalar, frame=ev),
         *[_klist_update(p).alias(name) for name, p in klists.items()],
     )
 

@@ -293,7 +293,7 @@ def _serve_hop_irs(
     requests = requests.select(*keys, F.col(TS).cast("long").alias(TS)).dropna()
 
     def head(rows: DataFrame) -> DataFrame:
-        return rows.groupBy(*keys, "__qts").agg(*hop_ir.update_aggs(parts))
+        return rows.groupBy(*keys, "__qts").agg(*hop_ir.update_aggs(parts, frame=rows))
 
     def merge(contrib: DataFrame) -> DataFrame:
         contrib = hop_ir.with_offsets(

@@ -206,7 +206,7 @@ def stream_hop_irs(
         wet = wet.withWatermark("__event_time", watermark)
     agg = wet.groupBy(
         F.window("__event_time", f"{hop_ms} milliseconds").alias("__w"), *keys
-    ).agg(*hop_ir.update_aggs(group_by.unpack()))
+    ).agg(*hop_ir.update_aggs(group_by.unpack(), frame=wet))
     return agg.select(
         *keys,
         (F.unix_millis(F.col("__w.start")) / hop_ms).cast("long").alias("__hop"),

@@ -16,7 +16,11 @@ from chronon_spark.api.types import (
     Query,
     Window,
 )
-from chronon_spark.operators.asof_hopped import group_by_asof_hopped, supports_hopped
+from chronon_spark.operators.asof_hopped import (
+    HOPPED_OPS,
+    group_by_asof_hopped,
+    supports_hopped,
+)
 from chronon_spark.operators.asof_join import group_by_asof
 from chronon_spark.sources.scan import millis_expr
 
@@ -467,3 +471,120 @@ def test_moments_stable_at_extreme_magnitude(spark, tmp_path):
     m4_naive = s4_ / n - 4 * mu * s3_ / n + 6 * mu**2 * s2_ / n - 3 * mu**4
     kurt_naive = m4_naive / (m2 ** 2) - 3.0
     assert abs(kurt_naive - true_kurt) > 1.0  # catastrophically wrong
+
+
+def _assert_matches_kernel(got: pd.DataFrame, exp: pd.DataFrame) -> None:
+    """Column by column: exact for integer and integer-valued results,
+    the moment tolerances of test_hopped_equals_kernel_sawtooth for the
+    rest."""
+    assert list(got.columns) == list(exp.columns)
+    for col in got.columns:
+        g, e = got[col], exp[col]
+        if g.dtype.kind == "f" or e.dtype.kind == "f":
+            tol = 1e-6 if ("skew" in col or "kurtosis" in col) else 1e-9
+            assert ((g.isna() & e.isna()) | (abs(g - e) <= tol + tol * abs(e))).all(), col
+        else:
+            assert g.equals(e), col
+
+
+FIVE_MIN = 5 * 60_000
+T0 = 1_704_067_200_000  # 2024-01-01 00:00 UTC
+
+
+def test_hopped_five_minute_hops_match_kernel_over_day_windows(spark, tmp_path):
+    """The benchmark's hop shape: 5-minute hops under 1h, 1d, 7d, 30d,
+    90d and unbounded windows, every hopped op, against the kernel.
+
+    Boundary cases: for the query at day 100 + 6h, events exactly at the
+    start of each window's first hop (``qhop - w_hops``, in) and a
+    millisecond before it (out); events at midnight and at 23:55; a query
+    in the first hop of a day; a key whose hops are sparse (one event
+    every 9 days); a key with no events before its queries."""
+    import numpy as np
+
+    day, hour = DAY_MS, HOUR_MS
+    rng = np.random.RandomState(11)
+    n = 400
+    rows = [
+        (1, int(t), int(v))
+        for t, v in zip(rng.randint(T0, T0 + 101 * day, n), rng.randint(-40, 300, n))
+    ]
+    q_main = T0 + 100 * day + 6 * hour + 2 * 60_000
+    qhop = q_main // FIVE_MIN
+    for w in (hour, day, 7 * day, 30 * day, 90 * day):
+        start = (qhop - w // FIVE_MIN) * FIVE_MIN
+        rows += [(2, start, 7), (2, start + 60_000, 11), (2, start - 1, 13)]
+    for d in range(60, 101, 10):
+        rows += [(2, T0 + d * day, 17), (2, T0 + d * day - FIVE_MIN, 19)]  # 00:00, 23:55
+    rows += [(3, T0 + d * day + 3 * hour, d) for d in range(0, 101, 9)]  # sparse hops
+    rows += [(4, T0 + 100 * day + 7 * hour, 5), (4, T0 + 100 * day + 8 * hour, 6)]
+    d = str(tmp_path / "ev")
+    spark.createDataFrame(pd.DataFrame(rows, columns=["k", "ts", "v"])).write.parquet(d)
+
+    queries = [(k, q_main) for k in (1, 2, 3, 4)]
+    queries += [(k, T0 + 100 * day + 90_000) for k in (1, 2, 3)]  # first hop of a day
+    queries += [(1, T0 + 100 * day), (2, T0 + 90 * day), (3, T0 + 99 * day + 23 * hour)]
+    queries += [(k, T0 + 100 * day + 23 * hour + 58 * 60_000) for k in (1, 2)]
+    q = spark.createDataFrame(pd.DataFrame(queries, columns=["k", "ts"]))
+
+    windows = (
+        Window.hours(1), Window.days(1), Window.days(7), Window.days(30), Window.days(90), None,
+    )
+    aggs = tuple(
+        Aggregation("v", op, windows=None if w is None else (w,))
+        for op in sorted(HOPPED_OPS, key=lambda op: op.value)
+        for w in windows
+    )
+    src = EventSource(table=d, query=Query(selects={"k": "k", "v": "v"}, time_column="ts"))
+    gb = GroupBy((src,), ("k",), aggs, name="five_min")
+    assert supports_hopped(gb, FIVE_MIN)
+    got = _norm2(group_by_asof_hopped(spark, gb, q, FIVE_MIN).toPandas())
+    exp = _norm2(group_by_asof(spark, gb, q, tail_hop_ms=FIVE_MIN).toPandas())
+    assert len(got) == len(exp) == len(queries)
+    _assert_matches_kernel(got, exp)
+    # the window-start events count in, the one a millisecond earlier not
+    main = got[(got.k == 2) & (got.ts == q_main)].iloc[0]
+    assert main["v_count_1h"] == 2 and main["v_sum_1h"] == 18
+
+
+def test_hopped_approx_unique_count_over_doubles_matches_kernel(spark, tmp_path):
+    """APPROX_UNIQUE_COUNT over a DOUBLE input (which hll_sketch_agg does
+    not take raw) counts like the kernel's distinct count: 0.0 and -0.0
+    are one value, repeats count once."""
+    m = 60_000
+    ev = pd.DataFrame(
+        [
+            (1, 1 * m, 0.0), (1, 2 * m, -0.0), (1, 5 * m + 10, 1.5),
+            (1, 5 * m + 20, 1.5), (1, 5 * m + 30, 0.0),  # head: 1.5, 0.0
+            (2, 1 * m, 2.25), (2, 3 * m, 2.25), (2, 4 * m, -3.5),
+        ],
+        columns=["k", "ts", "v"],
+    )
+    d = str(tmp_path / "ev")
+    spark.createDataFrame(ev).write.parquet(d)
+    src = EventSource(table=d, query=Query(selects={"k": "k", "v": "v"}, time_column="ts"))
+    gb = GroupBy(
+        (src,), ("k",),
+        (Aggregation("v", Operation.APPROX_UNIQUE_COUNT, windows=(Window.minutes(3),)),
+         Aggregation("v", Operation.APPROX_UNIQUE_COUNT)),
+        name="approx_double",
+    )
+    q = spark.createDataFrame(pd.DataFrame({"k": [1, 2], "ts": [5 * m + 500] * 2}))
+    a = _norm2(group_by_asof_hopped(spark, gb, q, hop_ms=m).toPandas())
+    b = _norm2(group_by_asof(spark, gb, q, tail_hop_ms=m).toPandas())
+    assert a.equals(b)
+    windowed, unbounded = (p.output_column for p in gb.unpack())
+    assert a[windowed].tolist() == [2, 2]
+    assert a[unbounded].tolist() == [2, 2]
+
+
+def test_hopped_guards_raise_value_errors(spark, sf_dir):
+    gb = _gb(sf_dir, (Aggregation("value", Operation.LAST_K, {"k": 3}),))
+    q = _queries(spark, sf_dir)
+    with pytest.raises(ValueError, match="unsupported op/window for hopped path"):
+        group_by_asof_hopped(spark, gb, q, DAY_MS)
+    bucketed = _gb(
+        sf_dir, (Aggregation("value", Operation.SUM, buckets=("user_id",)),)
+    )
+    with pytest.raises(ValueError, match="bucketed parts not supported"):
+        group_by_asof_hopped(spark, bucketed, q, DAY_MS, events_df=q)

@@ -233,3 +233,80 @@ def test_empty_day_checkpointed_via_lineage(spark, sf_dir, tmp_path):
     calls.clear()
     res = backfill(spark, compute, t, rng, step_days=10, conf="c", job_name="t")
     assert calls == [] and res.skipped_partitions == 3
+
+
+def _gapped_compute(sf_dir, calls, gap):
+    """Daily per-user event counts, with no rows at all on day ``gap``."""
+    inner = _compute_factory(None, sf_dir, calls)
+
+    def compute(spark_, rng):
+        return inner(spark_, rng).where(F.col("ds") != gap)
+
+    return compute
+
+
+def test_lineage_rows_match_a_read_back_count(spark, sf_dir, tmp_path):
+    """Lineage row counts come from the write itself; they equal a count
+    read back from the written output, for a path and a catalog table,
+    over two steps with an empty day (0 rows). A resume then skips every
+    checkpointed day."""
+    rng = PartitionRange("2024-01-02", "2024-01-05")
+    spark.sql("CREATE DATABASE IF NOT EXISTS bf_db")
+    t = "bf_db.read_back"
+    try:
+        for target in (str(tmp_path / "out"), t):
+            calls = []
+            compute = _gapped_compute(sf_dir, calls, "2024-01-03")
+            backfill(spark, compute, target, rng, step_days=2, conf="c", job_name="t")
+            assert len(calls) == 2
+            out = spark.table(target) if target == t else spark.read.parquet(target)
+            read_back = {
+                r[0]: r[1]
+                for r in out.groupBy(F.col("ds").cast("string")).count().collect()
+            }
+            lin = read_lineage(spark, target).toPandas()
+            assert sorted(lin["ds"]) == list(rng.partitions())
+            assert {ds: read_back.get(ds, 0) for ds in lin["ds"]} == dict(
+                zip(lin["ds"], lin["rows"])
+            )
+            assert lin.set_index("ds")["rows"]["2024-01-03"] == 0
+            assert min(read_back.values()) > 0
+
+            calls.clear()
+            res = backfill(spark, compute, target, rng, step_days=2, conf="c", job_name="t")
+            assert calls == [] and res.skipped_partitions == 4
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        spark.sql(f"DROP TABLE IF EXISTS {lineage_path(t)}")
+
+
+def test_backfill_runs_one_lineage_job(spark, sf_dir, tmp_path):
+    """Beyond the jobs of its step writes, a two-step backfill runs ONE
+    job: the lineage append. No step reads its output back to count it."""
+    sc = spark.sparkContext
+    rng = PartitionRange("2024-01-02", "2024-01-05")
+    compute = _compute_factory(spark, sf_dir, [])
+
+    sc.setJobGroup("bf_lineage_backfill", "backfill")
+    backfill(spark, compute, str(tmp_path / "bf"), rng, step_days=2, conf="c")
+    sc.setJobGroup("bf_lineage_writes", "the same writes, no lineage")
+    for step in rng.steps(2):
+        df = compute(spark, step).where(
+            (F.col("ds") >= step.start) & (F.col("ds") <= step.end)
+        )
+        df.repartitionByRange(step.days, "ds").write.mode("overwrite").partitionBy(
+            "ds"
+        ).parquet(str(tmp_path / "plain"))
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = len(tracker.getJobIdsForGroup("bf_lineage_backfill"))
+    writes = len(tracker.getJobIdsForGroup("bf_lineage_writes"))
+    assert writes > 0 and jobs - writes == 1, (jobs, writes)
+
+
+def test_backfill_requires_the_partition_column(spark, tmp_path):
+    def compute(s, r):
+        return s.range(3)
+
+    with pytest.raises(ValueError, match="compute\\(\\) must emit ds"):
+        backfill(spark, compute, str(tmp_path / "o"), PartitionRange("2024-01-02", "2024-01-02"))

@@ -4,8 +4,6 @@ column_hashing.py)."""
 
 import json
 
-import pytest
-
 from chronon_spark.api import compile as C
 from chronon_spark.api.types import (
     Aggregation,

@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from chronon_spark.operators.ddsketch import (
-    DEFAULT_ALPHA,
     bucket_expr,
     merge_sketches,
     quantiles_from_sketch,

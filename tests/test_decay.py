@@ -3,7 +3,6 @@
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from chronon_spark.operators.decay import decayed_sum_asof
 

@@ -5,9 +5,6 @@ eval time with a structured FAILURE (not a stack trace hours into a
 backfill), and for a healthy conf the sampled executed schema equals the
 static derivation."""
 
-import pytest
-from pyspark.sql import functions as F
-
 from chronon_spark.api.types import (
     Aggregation,
     EventSource,

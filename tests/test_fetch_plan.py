@@ -246,7 +246,7 @@ def test_service_part_missing_key_still_fails(spark, tables):
 
 
 def test_hopped_tails_shared_per_input_and_window(spark):
-    from chronon_spark.operators.asof_hopped import _tails
+    from chronon_spark.operators.asof_hopped import _tail_cols
 
     windows = (Window.hours(1), Window.days(1), Window.days(7))
     gb = GroupBy(
@@ -257,11 +257,6 @@ def test_hopped_tails_shared_per_input_and_window(spark):
             for op in (Operation.COUNT, Operation.SUM, Operation.AVERAGE)
         ),
     )
-    grid = spark.createDataFrame(
-        [("a", 0, 1, 1, 2.0)], "k string, __hop long, __isq int, i_cnt_v long, i_sum_v double"
-    )
-    # the 1h window takes the flat frame, the 1d and 7d windows the tiers
-    tails = _tails(grid, gb.unpack(), ["k"], 5 * 60_000)
-    cols = [c for c in tails.columns if c.startswith("t_")]
+    cols = _tail_cols(gb.unpack(), ["k"], 5 * 60_000)
     # one sliding (count, sum) pair per window, not one per part
     assert len(cols) == 2 * len(windows)

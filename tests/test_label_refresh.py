@@ -8,7 +8,6 @@ the range end are IMMATURE until the label source lands those days.
 Re-running the same backfill with recompute_days >= offset refreshes
 exactly the trailing partitions and converges to the full recompute."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from chronon_spark.operators.label_join import label_join_snapshot

@@ -13,9 +13,6 @@ recomputed them, the perturbation would vanish.
 
 import json
 
-import pytest
-from pyspark.sql import functions as F
-
 from chronon_spark.api.types import (
     Aggregation,
     EventSource,

@@ -5,7 +5,6 @@ thrift/api.thrift:188-193, 599-610)."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from chronon_spark.api.types import (
     Aggregation,

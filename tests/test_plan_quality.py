@@ -203,24 +203,32 @@ def test_auto_mode_routes_on_a_rewritten_table(spark, tmp_path):
 
 
 def test_hopped_plan_reuses_event_exchange(spark, sf_dir):
-    """The hop-IR and exact-head branches read ONE events repartition: a
-    LAST part reads ts on both branches, so after the explicit
-    ``__hop IS NOT NULL`` the two subtrees match and the executed plan
-    reuses the exchange instead of scanning and shuffling the events
-    twice."""
-    gb = GroupBy(
-        sources=(_src(sf_dir),),
-        key_columns=("user_id",),
-        aggregations=(Aggregation("value", Operation.LAST),),
-        name="last_only",
-    )
-    join = Join(left=_src(sf_dir), join_parts=(JoinPart(gb),), name="reuse")
-    out = join_asof(spark, join, mode="sawtooth", tail_hop_ms=86_400_000)
-    out.collect()
-    plan = plan_of(out)
-    assert re.search(
-        r"ReusedExchange \[[^\]]*\], Exchange hashpartitioning\(user_id#\d+L?, __hop", plan
-    ), plan[:4000]
+    """The hop-IR and exact-head branches read ONE events repartition for
+    every op set: the repartition hashes the hop expression over ts, so
+    ts sits below the exchange on both branches whether the hop IRs read
+    it (a LAST part) or not (COUNT and MAX only), the two subtrees match
+    and the executed plan reuses the exchange instead of scanning and
+    shuffling the events twice."""
+    op_sets = {
+        "last_only": (Aggregation("value", Operation.LAST),),
+        "count_max": (
+            Aggregation("value", Operation.COUNT, windows=(Window.days(7),)),
+            Aggregation("value", Operation.MAX),
+        ),
+    }
+    for name, aggs in op_sets.items():
+        gb = GroupBy(
+            sources=(_src(sf_dir),), key_columns=("user_id",), aggregations=aggs, name=name
+        )
+        join = Join(left=_src(sf_dir), join_parts=(JoinPart(gb),), name="reuse")
+        out = join_asof(spark, join, mode="sawtooth", tail_hop_ms=86_400_000)
+        out.collect()
+        plan = plan_of(out)
+        assert re.search(
+            r"ReusedExchange \[[^\]]*\], Exchange hashpartitioning\(user_id#\d+L?, "
+            r"cast\(\(cast\(ts#",
+            plan,
+        ), (name, plan[:4000])
 
 
 def test_digest_invariants_flagship_and_groupby(spark, tmp_path_factory):

@@ -19,7 +19,6 @@ from chronon_spark.api.types import (
 )
 from chronon_spark.operators.snapshot_join import join_snapshot, snapshot_entities
 from chronon_spark.operators.staging_query import render, run_staging_query
-from chronon_spark.plans.partition_range import PartitionRange
 from chronon_spark.sources.scan import millis_expr
 
 DAY_MS = 86_400_000
